@@ -50,8 +50,13 @@ QUERY_DATA_SEED = 20240101
 QUERY_DRAW = 8             # queries per pass, one per cost stratum
 QUERY_MAX_COST_S = 0.8     # the sub-second majority; keeps a pass steady across seeds
 
+# -XX:+AlwaysPreTouch touches the whole heap before main. Without it the
+# cold unit is the first to touch most heap pages, and on a virtual machine
+# that hands freed pages back to its host each first touch is a host page
+# fault whose cost follows the host's load; pre-touched, that cost lands
+# before set-up and every run's cold unit starts with the same heap.
 JVM_FLAGS = [
-    "-Xms3g", "-Xmx3g", "-XX:ReservedCodeCacheSize=512m",
+    "-Xms3g", "-Xmx3g", "-XX:+AlwaysPreTouch", "-XX:ReservedCodeCacheSize=512m",
     "-Duser.timezone=UTC", "-Dspark.ui.enabled=false",
 ] + [f for p in (
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -367,7 +372,7 @@ def main():
               "host": res["host"], "gen_s": gen_s, "setup_rounds_s": res["setup_rounds_s"],
               "jvm_first_ready_s": res["jvm_first_ready_s"], "exhausted": res["exhausted"],
               "cold_ops": res["cold_ops"],
-              "ops": [{k: v for k, v in o.items() if k in ("i", "lat_s", "cleanup_s", "ok", "error", "id", "docs")}
+              "ops": [{k: v for k, v in o.items() if k in ("i", "lat_s", "cleanup_s", "cpu_s", "ok", "error", "id", "docs")}
                       for o in res["ops"]]}
     if a.trace:
         record["spans"] = res["spans"]

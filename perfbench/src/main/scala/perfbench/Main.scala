@@ -11,7 +11,7 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
 /** The outcome of one op. `detail` holds what the output check needs. */
-final case class OpRecord(i: Int, latS: Double, cleanupS: Double, ok: Boolean,
+final case class OpRecord(i: Int, latS: Double, cleanupS: Double, cpuS: Double, ok: Boolean,
     error: String, detail: Map[String, Any])
 
 /** A closed-loop workload with one client: ops run one after another. */
@@ -106,16 +106,28 @@ object Main {
     (if (f.length > 7) f(7) else 0L, f.take(8).sum)
   }
 
+  /** CPU seconds this process has used, all threads together. */
+  def processCpuS(): Double =
+    ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
+
   def gcSeconds(): Double =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
 
-  /** Heap in use after full collections. The pauses let Spark's
-    * ContextCleaner drop the blocks of broadcasts and RDDs the first
-    * collection found unreachable, so the reading does not depend on how
-    * far that asynchronous cleanup had got. */
-  def heapAfterFullGcMb(): Double = {
-    (1 to 2).foreach { _ => System.gc(); Thread.sleep(200) }
-    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+  /** Heap in use after full collections, once the listener bus is empty.
+    * The pauses let Spark's ContextCleaner drop the blocks of broadcasts
+    * and RDDs a collection found unreachable; collections repeat until two
+    * readings agree, so the reading does not depend on how far that
+    * asynchronous cleanup had got. */
+  def heapAfterFullGcMb(sc: org.apache.spark.SparkContext): Double = {
+    SparkLayer.drain(sc)
+    def used(): Double = {
+      System.gc(); Thread.sleep(200)
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    }
+    var prev = used(); var cur = used(); var n = 2
+    while (math.abs(cur - prev) > 1.0 && n < 6) { prev = cur; cur = used(); n += 1 }
+    cur
   }
 
   def main(args: Array[String]): Unit = {
@@ -161,11 +173,13 @@ object Main {
       if (!wl.prepare(spark, i)) return false
       tracer.trace = i + 1
       val w0 = System.currentTimeMillis()
+      val c0 = processCpuS()
       val t0 = System.nanoTime()
       val (out, err) =
         try (wl.run(spark, i), "")
         catch { case e: Throwable => (Map.empty[String, Any], s"${e.getClass.getName}: ${e.getMessage}".take(400)) }
       val t1 = System.nanoTime()
+      val c1 = processCpuS()
       val w1 = System.currentTimeMillis()
       wl.cleanup(spark)
       val t2 = System.nanoTime()
@@ -173,7 +187,7 @@ object Main {
         if (err.nonEmpty) (Seq(err), Map.empty[String, Any])
         else try wl.check(spark, i, out)
         catch { case e: Throwable => (Seq(s"check failed: ${e.getMessage}".take(400)), Map.empty[String, Any]) }
-      ops += OpRecord(i, (t1 - t0) / 1e9, (t2 - t1) / 1e9, mismatches.isEmpty,
+      ops += OpRecord(i, (t1 - t0) / 1e9, (t2 - t1) / 1e9, c1 - c0, mismatches.isEmpty,
         mismatches.take(5).mkString("; "), detail)
       System.err.println(f"[perfbench] op $i%d ${(t1 - t0) / 1e9}%.3f s ok=${mismatches.isEmpty} " +
         detail.getOrElse("id", ""))
@@ -191,7 +205,12 @@ object Main {
     // scheduled job pays JIT, codegen and footer reads
     val maxOps = cfg.getOrElse("max_ops", Int.MaxValue).toString.toInt
     val coldOps = wl.coldOps
+    // every run starts its cold unit from the same state: the set-up's
+    // events delivered, its garbage collected, its cleanup done
+    heapAfterFullGcMb(spark.sparkContext)
+    val (coldSteal0, coldTotal0) = cpuTicks()
     (0 until coldOps).foreach(one)
+    val (coldSteal1, coldTotal1) = cpuTicks()
     tracer.timedFrom = coldOps + 1
     val probeBefore = cpuProbeS()
     val (steal0, total0) = cpuTicks()
@@ -211,7 +230,7 @@ object Main {
     val heapUsedMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
     val liveRdds = spark.sparkContext.getPersistentRDDs.size
     val storageMemMb = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / 1048576.0
-    val heapRetainedMb = heapAfterFullGcMb()
+    val heapRetainedMb = heapAfterFullGcMb(spark.sparkContext)
     val probeAfter = cpuProbeS()
 
     val timed = ops.filter(_.i >= coldOps)
@@ -240,11 +259,13 @@ object Main {
       "jvm_first_ready_s" -> firstReadyS,
       "exhausted" -> exhausted,
       "ops" -> ops.toSeq.map(o => Map("i" -> o.i, "lat_s" -> o.latS,
-        "cleanup_s" -> o.cleanupS, "ok" -> o.ok, "error" -> o.error) ++ o.detail),
+        "cleanup_s" -> o.cleanupS, "cpu_s" -> o.cpuS, "ok" -> o.ok, "error" -> o.error) ++ o.detail),
       "heap_retained_mb" -> heapRetainedMb,
       "host" -> Map("cpu_probe_before_s" -> probeBefore, "cpu_probe_after_s" -> probeAfter,
         "loadavg_before" -> load0, "loadavg_after" -> load1,
-        "steal_share" -> (if (total1 > total0) (steal1 - steal0).toDouble / (total1 - total0) else 0.0)),
+        "steal_share" -> (if (total1 > total0) (steal1 - steal0).toDouble / (total1 - total0) else 0.0),
+        "cold_steal_share" -> (if (coldTotal1 > coldTotal0)
+          (coldSteal1 - coldSteal0).toDouble / (coldTotal1 - coldTotal0) else 0.0)),
       "layers" -> layers,
       "spans" -> spans)
     json.writeValue(Paths.get(args(1)).toFile, result)

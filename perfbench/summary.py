@@ -105,7 +105,8 @@ def main():
             print(f"   host: cpu probe before {statistics.median(h['cpu_probe_before_s'] for h in host):.4f} s, "
                   f"after/before {min(drift):.3f}..{max(drift):.3f}; "
                   f"load1 {min(h['loadavg_before'][0] for h in host):.2f}..{max(h['loadavg_after'][0] for h in host):.2f}; "
-                  f"steal {max(h['steal_share'] for h in host):.4f} max")
+                  f"steal {max(h['steal_share'] for h in host):.4f} max, "
+                  f"over the cold unit {max(h.get('cold_steal_share', 0.0) for h in host):.4f} max")
         if traced:
             self_s, count, ops, wall = self_table(traced)
             n = max(1, ops)

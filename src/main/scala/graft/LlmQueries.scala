@@ -1,414 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
-
-/** LLM training-data pipeline queries (q29-q40) + their DuckDB oracles.
-  *
-  * The oracle SQL mirrors every Spark expression 1:1 — same tokenizer
-  * regex, same mod-every-step rolling hash, same rounded thresholds — so
-  * the driver's hash compare is exact. The longer oracles (MinHash LSH,
-  * hyperplane ANN) are generated programmatically from the same parameter
-  * sets the Scala operators use.
+/** Stable name for the MinHash-LSH pair CTE chain, which the perfbench
+  * ingest workload writes out next to its run records.
   */
 object LlmQueries {
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  private[graft] val annQueryIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L)
-  private[graft] val annK = 5
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Token counting (whitespace/regex tokenizer) rolled up per language.
-    "q29_token_stats" -> ((s, dir) => {
-      docs(s, dir)
-        .select(col("lang"), TextOps.tokenCount(col("text")).as("n_tokens"),
-          col("n_chars"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_tokens").cast("long").as("total_tokens"),
-          round(avg("n_tokens"), 4).as("avg_tokens"),
-          round(avg("n_chars"), 4).as("avg_chars"))
-        .orderBy("lang")
-    }),
-
-    // Quality scoring (length/stopword/punctuation heuristics) per source.
-    "q30_quality" -> ((s, dir) => {
-      docs(s, dir)
-        .select(col("source"), TextOps.qualityScore(col("text")).as("q"),
-          round(TextOps.stopwordRatio(col("text")), 4).as("sr"),
-          round(TextOps.punctRatio(col("text")), 4).as("pr"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          round(avg("q"), 4).as("avg_quality"),
-          round(avg("sr"), 4).as("avg_stopword_ratio"),
-          round(avg("pr"), 4).as("avg_punct_ratio"))
-        .orderBy("source")
-    }),
-
-    // Language-ID confusion matrix: labeled lang × predicted lang —
-    // explode-once + broadcast marker join (one tokenizer pass per doc).
-    "q31_langid" -> ((s, dir) => TextOps.langIdConfusion(docs(s, dir))),
-
-    // Exact-dedup stats on the token-set md5 fingerprint.
-    "q32_fingerprint" -> ((s, dir) => Dedup.exactStats(docs(s, dir))),
-
-    // Pairwise bigram-Jaccard near-dups, blocked by source.
-    "q33_jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardPairs(docs(s, dir), "source", 0.5).orderBy("doc_a", "doc_b")),
-
-    // MinHash signatures → LSH bands → candidates → verified Jaccard.
-    "q34_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashNearDups(docs(s, dir)).orderBy("doc_a", "doc_b")),
-
-    // SimHash near-dup pairs (Hamming ≤ 3), blocked by source.
-    "q35_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(docs(s, dir), "source", 3).orderBy("doc_a", "doc_b")),
-
-    // Brute-force cosine top-k ANN baseline.
-    "q36_ann_bruteforce" -> ((s, dir) =>
-      Similarity.bruteForceTopK(embs(s, dir), annQueryIds, annK)
-        .orderBy("query_id", "rank")),
-
-    // Hyperplane-LSH bucketed ANN (the scale path).
-    "q37_ann_lsh" -> ((s, dir) =>
-      Similarity.lshTopK(embs(s, dir), annQueryIds, annK)
-        .orderBy("query_id", "rank")),
-
-    // Embedding-cosine near-dup pairs within label blocks.
-    "q38_embedding_neardup" -> ((s, dir) =>
-      Similarity.nearDupPairs(embs(s, dir), "label", 0.45)
-        .orderBy("vec_a", "vec_b")),
-
-    // Multimodal plumbing: binary payloads + stub decode → per-mime rollup.
-    "q39_multimodal" -> ((s, dir) =>
-      Multimodal.featureSummary(
-        Multimodal.extractFeatures(Multimodal.synthesizePayloads(docs(s, dir))))),
-
-    // Corpus stats after exact dedup (keep min doc_id per fingerprint).
-    "q40_dedup_kept" -> ((s, dir) =>
-      Dedup.dropExactDuplicates(docs(s, dir))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum("n_chars").cast("long").as("total_chars"))),
-
-    // IVF-bucketed ANN (deterministic centroid subset; single-probe).
-    "q42_ann_ivf" -> ((s, dir) =>
-      Similarity.ivfTopK(embs(s, dir), annQueryIds, annK, ivfCentroidIds)
-        .orderBy("query_id", "rank")),
-
-    // The approx-profile FIDELITY report: the sketch tier (HLL
-    // distincts, approx percentiles) graded in-plan against the exact
-    // order stats — value = exact (oracle-hashable), within_bound = the
-    // frozen-constant sketch check. Fully driver-green; the one-scan
-    // production approx tier itself stays numericProfile(exact=false),
-    // spec-pinned in ProfilerSpec.
-    "q43_profile_approx" -> ((s, dir) =>
-      graft.core.Profiler.approxFidelityProfile(
-        Tables.load(s, dir, "lineitem"))),
-
-    // The exact half of the approx profile: count/null/min/max/mean/std
-    // come from the same codegen moments aggregate in BOTH modes, so this
-    // slice of q43 hash-matches the exact oracle even with sketches on —
-    // only the sketch metrics (distincts, percentiles) stay rows-only.
-    // numericMoments runs JUST that aggregate (one scan, no sketch pass).
-    "q43a_approx_moments" -> ((s, dir) =>
-      graft.core.Profiler.numericMoments(Tables.load(s, dir, "lineitem"),
-        graft.core.ProfileConfig(exact = false))))
-
-  /** Fixed centroid subset for IVF (vec_ids guaranteed present at every
-    * fixture scale; a k-means trainer would replace this — see ivfAssign).
-    */
-  private val ivfCentroidIds: Seq[Long] = (0 until 16).map(i => i.toLong * 7)
-
-  // =====================================================================
-  // Oracle SQL (DuckDB) — shared fragments
-  // =====================================================================
-
-  private val M = TextOps.HashMod
-  private[graft] val tokSql = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-
-  /** Guarded bigram shingles from a token-list column `ws`. */
-  private[graft] val bigramsSql =
-    "CASE WHEN len(ws) < 2 THEN []::VARCHAR[] ELSE " +
-      "list_distinct(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])) END"
-
-  /** Mod-every-step rolling hash of string expression `e`. */
-  private[graft] def rollSql(e: String, init: Long = 0L, mod: Long = M): String =
-    s"list_reduce(list_prepend(CAST($init AS BIGINT), " +
-      s"list_transform(regexp_extract_all($e, '.'), ch -> CAST(ascii(ch) AS BIGINT))), " +
-      s"(a, b) -> (a * 31 + b) % $mod)"
-
-  private def jaccardSql(a: String, b: String): String =
-    s"CASE WHEN len(list_distinct($a || $b)) = 0 THEN 0.0 ELSE " +
-      s"round(len(list_intersect($a, $b))::DOUBLE / len(list_distinct($a || $b)), 4) END"
-
-  private[graft] val fingerprintSql =
-    s"md5(array_to_string(list_sort(list_distinct($tokSql)), ' '))"
-
-  private[graft] def langHitSql(markers: Seq[String]): String =
-    s"len(list_filter($tokSql, w -> list_contains(${markers.map(m => s"'$m'").mkString("[", ",", "]")}, w)))"
-
-  private def minhashSigSql: String = {
-    // sig exprs s0..s15 from the same (a,b) parameter list as the operator
-    Dedup.minhashParams(16).zipWithIndex.map { case ((a, b), i) =>
-      s"coalesce(list_min(list_transform(hs, x -> (x * $a + $b) % $M)), $M) AS s$i"
-    }.mkString(", ")
-  }
-
-  private[graft] def simhashSql: String = {
-    val terms = (0 until 32).map { b =>
-      s"(CASE WHEN list_sum(list_transform(hs, h -> ((h >> $b) & 1) * 2 - 1)) >= 0 " +
-        s"THEN (CAST(1 AS BIGINT) << $b) ELSE CAST(0 AS BIGINT) END)"
-    }
-    s"CASE WHEN len(hs) = 0 THEN 0 ELSE ${terms.mkString(" + ")} END"
-  }
-
-  private[graft] def planesValuesSql: String = {
-    val rows = for (p <- 0 until 6; j <- 0 until 64)
-      yield s"($p, ${j + 1}, ${Similarity.planeWeight(p, j)}.0)"
-    s"(VALUES ${rows.mkString(", ")}) AS planes(p, j, w)"
-  }
-
-  private val annIdsSql = annQueryIds.mkString("(", ", ", ")")
-
-  /** The CTE chain producing verified MinHash-LSH pairs as relation `j`
-    * — q34's body, shared with ExtQueries' duplicate-cluster oracle.
-    * With `maxBucketSize` set, band buckets holding more than that many
-    * docs are dropped before candidate generation — the exact SQL twin of
-    * [[graft.operators.Dedup.lshCandidates]]'s deterministic skew cap, so
-    * the capped production pipeline (q61) oracles exactly too.
-    */
-  def minhashPairsCtesCapped(maxBucketSize: Option[Long]): String = {
-    val bands = (0 until 4).map { bi =>
-      val key = (0 until 4).map(r => s"CAST(s${bi * 4 + r} AS VARCHAR)")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, $bi AS band_idx, $key AS band_key FROM sig"
-    }.mkString(" UNION ALL ")
-    // the cap is a deterministic filter (bucket size > cap), not a sketch:
-    // the same buckets drop on both engines
-    val (capCte, candSrc) = maxBucketSize match {
-      case Some(cap) => (
-        s"""hot AS (SELECT band_idx, band_key FROM bands
-           |  GROUP BY band_idx, band_key HAVING count(*) > $cap),
-           |banded AS (SELECT b.doc_id, b.band_idx, b.band_key FROM bands b
-           |  LEFT JOIN hot h ON b.band_idx = h.band_idx AND b.band_key = h.band_key
-           |  WHERE h.band_idx IS NULL),
-           |""".stripMargin, "banded")
-      case None => ("", "bands")
-    }
-    s"""t AS (SELECT doc_id, $tokSql AS ws FROM documents),
-       |sh AS (SELECT doc_id, $bigramsSql AS shingles FROM t),
-       |h AS (SELECT doc_id,
-       |  list_distinct(list_transform(shingles, s -> ${rollSql("s")})) AS hs FROM sh),
-       |sig AS (SELECT doc_id, $minhashSigSql FROM h),
-       |bands AS ($bands),
-       |${capCte}cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM $candSrc a JOIN $candSrc b ON a.band_idx = b.band_idx
-       |    AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-       |j AS (SELECT doc_a, doc_b, ${jaccardSql("x.hs", "y.hs")} AS jaccard
-       |  FROM cand JOIN h x ON x.doc_id = doc_a JOIN h y ON y.doc_id = doc_b)""".stripMargin
-  }
-
-  val minhashPairsCtes: String = minhashPairsCtesCapped(None)
-
-  val oracleSql: Map[String, String] = Map(
-    // The fidelity report's exact grid is q11's oracle verbatim; the
-    // sketch rows additionally carry within_bound = TRUE (the Spark side
-    // goes red — hash mismatch — the day a sketch breaches its frozen
-    // bound; moment rows carry NULL, they are exact in both modes).
-    "q43_profile_approx" -> {
-      val base = SparkEntry.numericProfileOracle("lineitem",
-        Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-          "l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-      s"""SELECT col_name, metric, value,
-         |  CASE WHEN metric IN ('distinct_count', 'p25', 'median', 'p75')
-         |    THEN TRUE END AS within_bound
-         |FROM ($base) ORDER BY col_name, metric""".stripMargin
-    },
-
-    "q29_token_stats" ->
-      s"""SELECT lang, count(*) AS n_docs,
-         |  CAST(sum(len($tokSql)) AS BIGINT) AS total_tokens,
-         |  round(avg(len($tokSql)), 4) AS avg_tokens,
-         |  round(avg(n_chars), 4) AS avg_chars
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q30_quality" ->
-      s"""WITH t AS (SELECT source, $tokSql AS ws, text FROM documents),
-         |s AS (SELECT source,
-         |  CASE WHEN len(ws) = 0 THEN 0.0 ELSE
-         |    len(list_filter(ws, w -> list_contains(${TextOps.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")}, w)))::DOUBLE / len(ws) END AS sr,
-         |  CASE WHEN length(text) = 0 THEN 0.0 ELSE
-         |    len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]'))::DOUBLE / length(text) END AS pr,
-         |  len(ws) AS ntok FROM t),
-         |q AS (SELECT source, round(sr, 4) AS sr4, round(pr, 4) AS pr4,
-         |  round((least(ntok::DOUBLE / 50.0, 1.0) + least(sr * 5.0, 1.0) +
-         |         greatest(1.0 - pr * 10.0, 0.0)) / 3.0, 4) AS quality FROM s)
-         |SELECT source, count(*) AS n_docs, round(avg(quality), 4) AS avg_quality,
-         |  round(avg(sr4), 4) AS avg_stopword_ratio,
-         |  round(avg(pr4), 4) AS avg_punct_ratio
-         |FROM q GROUP BY source ORDER BY source""".stripMargin,
-
-    "q31_langid" -> {
-      val hits = TextOps.LangMarkers.map { case (code, ms) =>
-        s"${langHitSql(ms)} AS h_$code"
-      }.mkString(", ")
-      val codes = TextOps.LangMarkers.map(_._1)
-      val greatest = s"greatest(${codes.map(c => s"h_$c").mkString(", ")})"
-      val caseChain = codes.map(c => s"WHEN h_$c = $greatest THEN '$c'").mkString(" ")
-      s"""WITH s AS (SELECT lang, $hits FROM documents),
-         |p AS (SELECT lang, CASE WHEN $greatest = 0 THEN 'und' $caseChain END AS predicted FROM s)
-         |SELECT lang, predicted, count(*) AS cnt FROM p
-         |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin
-    },
-
-    "q32_fingerprint" ->
-      s"""WITH fp AS (SELECT doc_id, $fingerprintSql AS f FROM documents),
-         |g AS (SELECT f, count(*) AS c FROM fp GROUP BY f)
-         |SELECT CAST(sum(c) AS BIGINT) AS total_docs,
-         |  CAST(count(*) AS BIGINT) AS unique_docs,
-         |  CAST(sum(c) - count(*) AS BIGINT) AS duplicate_docs,
-         |  CAST(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT) AS duplicate_groups
-         |FROM g""".stripMargin,
-
-    // hashed shingle sets (list_distinct of the rolling hash), mirroring
-    // the Spark side's HashedWordNgrams relation exactly
-    "q33_jaccard_pairs" ->
-      s"""WITH t AS (SELECT doc_id, source, $tokSql AS ws FROM documents),
-         |bg0 AS (SELECT doc_id, source, $bigramsSql AS sg FROM t),
-         |bg AS (SELECT doc_id, source,
-         |  list_distinct(list_transform(sg, s -> ${rollSql("s")})) AS sh FROM bg0)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  ${jaccardSql("a.sh", "b.sh")} AS jaccard
-         |FROM bg a JOIN bg b ON a.source = b.source AND a.doc_id < b.doc_id
-         |WHERE ${jaccardSql("a.sh", "b.sh")} >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q34_minhash_lsh" ->
-      s"""WITH $minhashPairsCtes
-         |SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q35_simhash" ->
-      s"""WITH t AS (SELECT doc_id, source, $tokSql AS ws FROM documents),
-         |hh AS (SELECT doc_id, source,
-         |  list_transform(ws, w -> ${rollSql("w")}) AS hs FROM t),
-         |sg AS (SELECT doc_id, source, $simhashSql AS sh FROM hh)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  bit_count(xor(a.sh, b.sh)) AS hamming
-         |FROM sg a JOIN sg b ON a.source = b.source AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.sh, b.sh)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q36_ann_bruteforce" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN $annIdsSql),
-         |s AS (SELECT query_id, vec_id,
-         |    round(list_cosine_similarity(qv, v), 4) AS cos_sim
-         |  FROM q, e WHERE vec_id <> query_id),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rank FROM s)
-         |SELECT query_id, vec_id, cos_sim, rank FROM r WHERE rank <= $annK
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q37_ann_lsh" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |d AS (SELECT vec_id, p, sum(v[j] * w) AS dot
-         |  FROM e, $planesValuesSql GROUP BY vec_id, p),
-         |bk AS (SELECT vec_id, CAST(sum(CASE WHEN dot >= 0
-         |    THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM d GROUP BY vec_id),
-         |eb AS (SELECT e.vec_id, v, bucket FROM e JOIN bk ON e.vec_id = bk.vec_id),
-         |q AS (SELECT vec_id AS query_id, v AS qv, xor(bucket, m) AS bucket
-         |  FROM eb, (VALUES (0), (1), (2), (4), (8), (16), (32)) AS probes(m)
-         |  WHERE vec_id IN $annIdsSql),
-         |s AS (SELECT query_id, eb.vec_id,
-         |    round(list_cosine_similarity(qv, v), 4) AS cos_sim
-         |  FROM q JOIN eb ON q.bucket = eb.bucket AND eb.vec_id <> q.query_id),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rank FROM s)
-         |SELECT query_id, vec_id, cos_sim, rank FROM r WHERE rank <= $annK
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q42_ann_ivf" -> {
-      val cidsSql = ivfCentroidIds.mkString("(", ", ", ")")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id IN $cidsSql),
-         |sc AS (SELECT e.vec_id,
-         |    round(list_cosine_similarity(e.v, c.cv), 4) AS ccos, c.cid
-         |  FROM e, c),
-         |asg AS (SELECT vec_id, cid AS cell FROM (SELECT *,
-         |    row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cid) AS rn FROM sc) WHERE rn = 1),
-         |eb AS (SELECT e.vec_id, e.v, asg.cell
-         |  FROM e JOIN asg ON e.vec_id = asg.vec_id),
-         |q AS (SELECT vec_id AS query_id, v AS qv, cell FROM eb
-         |  WHERE vec_id IN $annIdsSql),
-         |s AS (SELECT query_id, eb.vec_id,
-         |    round(list_cosine_similarity(qv, eb.v), 4) AS cos_sim
-         |  FROM q JOIN eb ON q.cell = eb.cell AND eb.vec_id <> q.query_id),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rank FROM s)
-         |SELECT query_id, vec_id, cos_sim, rank FROM r WHERE rank <= $annK
-         |ORDER BY query_id, rank""".stripMargin
-    },
-
-    "q38_embedding_neardup" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
-         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         |  round(list_cosine_similarity(a.v, b.v), 4) AS cos_sim
-         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-         |WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.45
-         |ORDER BY vec_a, vec_b""".stripMargin,
-
-    // NB: equivalence with the Spark side (which hashes UTF-8 BYTES via
-    // encode(text,'UTF-8')) relies on the fixture being pure ASCII — this
-    // oracle iterates per-character code points (ascii(c)) and character
-    // length(text), which diverge from bytes on any non-ASCII text. The
-    // fixture is verified ASCII-only at every SF (octet_length == length
-    // for all docs); DuckDB has no blob→byte-list primitive to make the
-    // oracle byte-based outright.
-    "q39_multimodal" ->
-      s"""WITH f AS (SELECT doc_id, 'image/' || source AS mime,
-         |  CAST(length(text) AS BIGINT) AS size_bytes,
-         |  list_transform(regexp_extract_all(text, '.'), c -> CAST(ascii(c) AS BIGINT)) AS codes
-         |  FROM documents),
-         |d AS (SELECT mime, size_bytes,
-         |  list_reduce(list_prepend(CAST(17 AS BIGINT), codes), (a, b) -> (a * 31 + b) % 1000003) AS hsh,
-         |  CASE WHEN len(codes) = 0 THEN 0.0 ELSE list_sum(codes)::DOUBLE / len(codes) END AS mean_byte
-         |  FROM f),
-         |g AS (SELECT mime, size_bytes, 64 + (hsh % 193) AS width,
-         |  64 + ((hsh // 193) % 129) AS height, mean_byte FROM d)
-         |SELECT mime, count(*) AS n_items, CAST(sum(size_bytes) AS BIGINT) AS total_bytes,
-         |  round(avg(mean_byte), 4) AS avg_mean_byte,
-         |  round(avg(width), 4) AS avg_width, round(avg(height), 4) AS avg_height
-         |FROM g GROUP BY mime ORDER BY mime""".stripMargin,
-
-    "q40_dedup_kept" ->
-      s"""WITH fp AS (SELECT doc_id, n_chars, $fingerprintSql AS f FROM documents),
-         |k AS (SELECT f, min(doc_id) AS keep FROM fp GROUP BY f)
-         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-         |FROM fp JOIN k ON fp.doc_id = k.keep""".stripMargin,
-
-    "q43a_approx_moments" -> {
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val blocks = cols.flatMap { c =>
-        val v = s"CAST($c AS DOUBLE)"
-        Seq(
-          ("count", s"CAST(count($v) AS DOUBLE)"),
-          ("null_count", s"CAST(sum(CASE WHEN $v IS NULL THEN 1 ELSE 0 END) AS DOUBLE)"),
-          ("min", s"round(min($v), 4)"),
-          ("max", s"round(max($v), 4)"),
-          ("mean", s"round(avg($v), 4)"),
-          ("stddev", s"round(stddev_samp($v), 4)"))
-          .map { case (m, e) =>
-            s"SELECT '$c' AS col_name, '$m' AS metric, $e AS value FROM lineitem" }
-      }
-      s"SELECT * FROM (${blocks.mkString(" UNION ALL ")}) ORDER BY col_name, metric"
-    })
+  def minhashPairsCtes: String = registry.DedupQueries.minhashPairsCtes
 }

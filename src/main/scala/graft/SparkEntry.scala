@@ -1,646 +1,60 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.catalog.CatalogMonitor
-import graft.core.{MetricSink, Profiler, ProfileConfig}
-import graft.state.ChangeDetection
-import graft.storage.StorageMonitor
-import graft.streaming.ContinuousMonitor
+import graft.core.{MetricSink, Profiler}
+import graft.registry._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry contract: the flagship [[entry]] run plus the query registry.
   *
-  * Every entry in [[queries]] is a thin wrapper over a library operator
-  * (graft.core / graft.catalog / graft.operators / ...); [[oracleSql]] holds
-  * the DuckDB-equivalent ANSI SQL for the driver's correctness gate.
-  * Column aliases are kept identical on both sides, results are
-  * deterministically ordered on both sides, and floating aggregates are
-  * rounded on both sides (sum/avg to 2-4 decimals) so double accumulation
-  * order can't flip the hash.
+  * Every query is declared once, as a [[QueryDef]] in the domain module
+  * that owns its concern; [[queries]], [[oracleSql]] and [[queriesMeta]]
+  * are views of that one registry. To add a query, add one `QueryDef` to
+  * one module.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Flagship: end-to-end monitor run (profile lineitem → metric rows). */
   def entry(spark: SparkSession): DataFrame = {
     val sink = MetricSink("entry-smoke")
-    val li = t(spark, "/root/testdata/sf0.001", "lineitem")
+    val li = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
     Profiler.profileTo(sink, "lineitem", li)
     sink.toDf(spark)
   }
 
-  // ---------------------------------------------------------------------
-  // Relational core (SURVEY §2.2-§2.5)
-  // ---------------------------------------------------------------------
+  val modules: Seq[QueryModule] = Seq(ProfilingQueries, MonitorQueries,
+    DriftQueries, DedupQueries, TextQueries, GraphQueries, StatsQueries,
+    TimeSeriesQueries, IngestQueries)
 
-  private val relational: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // A1/A7-A11: grouped multi-aggregate (TPC-H Q1 shape), one scan,
-    // partial agg map-side; 6 groups → no skew at any scale.
-    "q01_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // P1-P4 + L1: filter + projection + limit. Predicate and column set
-    // push down to the Parquet scan (PushedFilters / ReadSchema).
-    "q02_filter_project" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .filter(col("o_totalprice") > 200000 && col("o_orderstatus") === "F")
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        .orderBy("o_orderkey")
-        .limit(100)
-    }),
-
-    // J1/J2: two broadcast hash joins (dims are tiny at every scale —
-    // nation/region are bounded), then grouped rollup.
-    "q03_join_broadcast" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(count(lit(1)).as("cnt"), round(avg("c_acctbal"), 4).as("avg_bal"))
-        .orderBy("r_name")
-    }),
-
-    // J1 at fact scale: orders⋈lineitem shuffle join on the natural key;
-    // AQE picks SMJ/SHJ; aggregation is partial map-side.
-    "q04_join_agg" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-          count(lit(1)).as("cnt"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // W1/L1: top-k by aggregate — TakeOrderedAndProject, no global sort.
-    "q05_topk" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    // A12 argmax: deterministic row-of-max via max_by with a TOTAL
-    // ordering key (price desc, then unique (orderkey, linenumber) asc,
-    // encoded as negated components). One partial+final aggregation —
-    // no sort at all. The windowed formulation would partition by
-    // l_returnflag (3 values), sorting the whole fact table into 3
-    // tasks regardless of cluster size; per-group top-1 belongs in an
-    // aggregate, windows in the per-KEY top-n case (q07, where group
-    // count is high and partitions balance).
-    "q06_argmax" -> ((s, dir) => {
-      val ord = struct(col("l_extendedprice"),
-        -col("l_orderkey"), -col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(max_by(struct(col("l_extendedprice"), col("l_orderkey")), ord).as("m"))
-        .select(col("l_returnflag"),
-          col("m.l_extendedprice").as("l_extendedprice"),
-          col("m.l_orderkey").as("l_orderkey"))
-        .orderBy("l_returnflag")
-    }),
-
-    // W1: per-group top-1 (largest order per customer).
-    "q07_window_topn" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .orderBy("o_custkey")
-    }),
-
-    // A3/A4: distinct counts per group (exact here; approx_count_distinct
-    // is the 100 TB toggle in Profiler).
-    "q08_distinct_count" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("cnt"), count_distinct(col("l_partkey")).as("distinct_parts"))
-        .orderBy("l_returnflag")
-    }),
-
-    // S10: sampling. Spark .sample() is seed-dependent and can't match an
-    // external oracle, so the conformance query uses a deterministic
-    // hash-mod sample (same arithmetic both sides); the library also
-    // exposes df.sample(fraction) for production use.
-    "q09_sample_stats" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        // reduce mod 97 before multiplying: identical values ((k·c) mod 97
-        // = ((k mod 97)·c) mod 97) but no silent long overflow at the
-        // orderkey magnitudes a 100 TB TPC-H reaches
-        .filter(((col("l_orderkey") % 97) * lit(2654435761L)) % 97 < 2)
-        .agg(
-          count(lit(1)).as("cnt"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(min("l_extendedprice"), 2).as("min_price"),
-          round(max("l_extendedprice"), 2).as("max_price"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    // A6: per-column null/NaN counts, all columns, one pass.
-    "q10_null_counts" -> ((s, dir) => Profiler.nullCounts(t(s, dir, "lineitem"))),
-
-    // A15 (the dense profiling block): every numeric column's stats in one
-    // aggregation job, reshaped long.
-    "q11_numeric_profile" -> ((s, dir) => Profiler.numericProfile(t(s, dir, "lineitem"))),
-
-    // A14 numeric histogram: two jobs (bounds, then bucket counts).
-    "q12_histogram" -> ((s, dir) =>
-      Profiler.numericHistogram(t(s, dir, "lineitem"), "l_extendedprice", 10)),
-
-    // A14 categorical histogram.
-    "q13_cat_histogram" -> ((s, dir) =>
-      Profiler.categoricalHistogram(t(s, dir, "lineitem"), "l_returnflag", 50)
-        .withColumnRenamed("l_returnflag", "category")),
-
-    // A5: duplicate-record stats on a projected key set.
-    "q14_dupes" -> ((s, dir) =>
-      Profiler.duplicateStats(t(s, dir, "lineitem"), Seq("l_partkey", "l_suppkey"))),
-
-    // Rollup extension (SURVEY §2.4 note): DB-monitor + table-monitor
-    // rollups in one pass.
-    "q15_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("sum_qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("cnt"), col("sum_qty"))
-        .orderBy("flag", "status")
-    }),
-
-    // E1-adjacent: anti join (customers with no orders).
-    "q16_anti_join" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n_customers_no_orders"))
-    }),
-
-    // E2: unionByName fan-in then keyed aggregate.
-    "q17_union" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val high = o.filter(col("o_totalprice") > 300000).withColumn("tag", lit("high"))
-      val low = o.filter(col("o_totalprice") <= 100000).withColumn("tag", lit("low"))
-      high.unionByName(low)
-        .groupBy("tag")
-        .agg(count(lit(1)).as("cnt"), round(avg("o_totalprice"), 4).as("avg_price"))
-        .orderBy("tag")
-    }))
-
-  private val relationalOracle: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 4) AS avg_qty,
-        |  round(avg(l_extendedprice), 4) AS avg_price,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_project" ->
-      """SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
-        |WHERE o_totalprice > 200000 AND o_orderstatus = 'F'
-        |ORDER BY o_orderkey LIMIT 100""".stripMargin,
-    "q03_join_broadcast" ->
-      """SELECT r_name, count(*) AS cnt, round(avg(c_acctbal), 4) AS avg_bal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "q04_join_agg" ->
-      """SELECT o_orderpriority,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS cnt
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q05_topk" ->
-      """SELECT l_orderkey,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem GROUP BY l_orderkey
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q06_argmax" ->
-      """SELECT l_returnflag, l_extendedprice, l_orderkey FROM (
-        |  SELECT l_returnflag, l_extendedprice, l_orderkey,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem) WHERE rn = 1 ORDER BY l_returnflag""".stripMargin,
-    "q07_window_topn" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "q08_distinct_count" ->
-      """SELECT l_returnflag, count(*) AS cnt,
-        |  count(DISTINCT l_partkey) AS distinct_parts
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q09_sample_stats" ->
-      """SELECT count(*) AS cnt, round(avg(l_quantity), 4) AS avg_qty,
-        |  round(min(l_extendedprice), 2) AS min_price,
-        |  round(max(l_extendedprice), 2) AS max_price,
-        |  round(sum(l_extendedprice), 2) AS sum_price
-        |FROM lineitem WHERE ((l_orderkey % 97) * 2654435761) % 97 < 2""".stripMargin,
-    "q10_null_counts" -> {
-      val dbl = Set("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val ordered = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      val exprs = ordered.map { c =>
-        val cond = if (dbl(c)) s"$c IS NULL OR isnan($c)" else s"$c IS NULL"
-        s"CAST(sum(CASE WHEN $cond THEN 1 ELSE 0 END) AS BIGINT) AS null_$c"
-      }
-      s"SELECT ${exprs.mkString(", ")} FROM lineitem"
-    },
-    "q11_numeric_profile" -> numericProfileOracle("lineitem",
-      Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax")),
-    "q12_histogram" ->
-      """WITH b AS (SELECT min(l_extendedprice) AS lo, max(l_extendedprice) AS hi FROM lineitem)
-        |SELECT CASE WHEN hi = lo THEN 0 ELSE
-        |    CAST(least(floor((l_extendedprice - lo) / ((hi - lo) / 10)), 9) AS BIGINT) END AS bucket,
-        |  count(*) AS cnt
-        |FROM lineitem, b WHERE l_extendedprice IS NOT NULL
-        |GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q13_cat_histogram" ->
-      """SELECT l_returnflag AS category, count(*) AS cnt FROM lineitem
-        |GROUP BY category ORDER BY cnt DESC, category LIMIT 50""".stripMargin,
-    "q14_dupes" ->
-      """WITH g AS (SELECT l_partkey, l_suppkey, count(*) AS cnt
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey)
-        |SELECT CAST(sum(cnt) AS BIGINT) AS row_count,
-        |  CAST(count(*) AS BIGINT) AS distinct_count,
-        |  CAST(sum(cnt) - count(*) AS BIGINT) AS duplicate_count,
-        |  CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS duplicate_groups
-        |FROM g""".stripMargin,
-    "q15_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-        |  coalesce(l_linestatus, 'ALL') AS status,
-        |  count(*) AS cnt, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY flag, status""".stripMargin,
-    "q16_anti_join" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_customers_no_orders FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
-    "q17_union" ->
-      """SELECT tag, count(*) AS cnt, round(avg(o_totalprice), 4) AS avg_price
-        |FROM (
-        |  SELECT o_totalprice, 'high' AS tag FROM orders WHERE o_totalprice > 300000
-        |  UNION ALL
-        |  SELECT o_totalprice, 'low' AS tag FROM orders WHERE o_totalprice <= 100000)
-        |GROUP BY tag ORDER BY tag""".stripMargin)
-
-  // ---------------------------------------------------------------------
-  // Catalog / state / storage / streaming monitors (SURVEY §2.1, §2.7, §2.8)
-  // ---------------------------------------------------------------------
-
-  private val streamCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private val monitors: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // S5/S6: information_schema.tables analogue — per-table row counts.
-    "q18_catalog_rowcounts" -> ((s, dir) => CatalogMonitor.tableRowCounts(s, dir)),
-
-    // S4/S7 + A2/J2: table shapes (rows × columns) via broadcast left join.
-    "q19_table_shapes" -> ((s, dir) => CatalogMonitor.tableShapes(s, dir)),
-
-    // S4 exact relation shape: the `show columns` analogue, including the
-    // reference's autoincrement flag (NULL for Parquet — no such
-    // property), oracled against DuckDB's information_schema.
-    "q19a_catalog_columns" -> ((s, dir) => CatalogMonitor.tableColumns(s, dir)),
-
-    // The database-monitor metric block (A7-A9, A11, corrected min/max).
-    "q20_db_summary" -> ((s, dir) =>
-      CatalogMonitor.databaseSummary(CatalogMonitor.tableRowCounts(s, dir))),
-
-    // A12 argmax over the catalog: largest table.
-    "q21_largest_table" -> ((s, dir) =>
-      CatalogMonitor.largestTable(CatalogMonitor.tableRowCounts(s, dir))),
-
-    // S17 + D1: cross-run row-count delta (prev run simulated as a
-    // deterministic subset; semantics corrected to current - previous).
-    "q22_state_delta" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val prev = orders.filter(col("o_orderkey") % 7 =!= 0).count()
-      val cur = orders.count()
-      ChangeDetection.rowDelta("orders", prev, cur, s)
-    }),
-
-    // E1: schema drift — full symmetric difference of column sets.
-    "q23_schema_drift" -> ((s, dir) => {
-      val cols = t(s, dir, "lineitem").columns.toSeq
-      ChangeDetection.schemaDrift(cols.filterNot(_ == "l_tax"),
-        cols.filterNot(_ == "l_quantity"), s)
-    }),
-
-    // F12: JSON extraction from the events props column.
-    "q24_json_extract" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("cnt"), round(avg("k"), 4).as("avg_k"),
-          max("k").as("max_k"))
-        .orderBy("event_type")
-    }),
-
-    // Event-time tumbling window (batch form).
-    "q25_time_window" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("window_start"))
-        .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"),
-          round(avg("value"), 4).as("avg_value"))
-        .orderBy("window_start")
-    }),
-
-    // O4/§2.8: the SAME hourly aggregate as a Structured Streaming query,
-    // drained with Trigger.AvailableNow — streaming output must equal the
-    // batch oracle.
-    "q26_streaming_hourly" -> ((s, dir) => {
-      val streaming = ContinuousMonitor.hourlyEventCounts(s, Tables.path(dir, "events"))
-      val name = s"streaming_hourly_${streamCounter.incrementAndGet()}"
-      ContinuousMonitor.runToCompletion(s, streaming, name)
-        .orderBy("window_start", "event_type")
-    }),
-
-    // S12/S13: distributed object-store inventory over the fixture dir
-    // (path/size/mtime relation). No SQL oracle — DuckDB can't stat files;
-    // covered by StorageMonitorSpec + driver rows-only check.
-    "q27_storage_inventory" -> ((s, dir) => {
-      StorageMonitor.inventory(s, Seq(dir))
-        .select(col("file_name"), col("size_bytes"), col("content_type"),
-          col("storage_class"), col("parts_count"),
-          to_json(col("metadata")).as("metadata"))
-        .orderBy("file_name")
-    }),
-
-    // A17/A11/A12: the prefix-monitor aggregate block.
-    "q28_storage_summary" -> ((s, dir) => {
-      StorageMonitor.prefixSummary(StorageMonitor.inventory(s, Seq(dir)))
-        .select("num_objects", "total_bytes", "max_bytes", "avg_bytes", "largest_file")
-    }),
-
-    // A14 at log_dataframe scope: histograms of every numeric column —
-    // bounds ride the parquet FOOTER stats (exactness-gated, automatic
-    // agg fallback), so the whole report is ONE bucket-count job.
-    "q41_histograms_all" -> ((s, dir) =>
-      Profiler.numericHistograms(t(s, dir, "lineitem"), 10,
-        Some(Tables.path(dir, "lineitem")))))
-
-  private def catalogCountsCte: String =
-    "WITH counts(table_name, row_count) AS (" +
-      Tables.all.map(tn => s"SELECT '$tn', count(*) FROM $tn").mkString(" UNION ALL ") + ")"
-
-  /** The correctness gate always runs at sf0.01 (TESTDATA.md), so the
-    * storage oracles can stat the same files DuckDB-side via read_blob —
-    * the one oracle pair that inspects the filesystem rather than table
-    * contents. If the gate SF ever changes, these two paths change with it.
+  /** Indexes the modules' queries by id; a duplicate id fails here,
+    * named, instead of one definition silently replacing the other.
     */
-  // resolved per-run (Verify sets the property from its sfDir arg) so
-  // the file-metadata oracles track the fixture scale under test
-  private def storageOracleGlob =
-    sys.props.getOrElse("graft.sf.dir", "/root/testdata/sf0.01") +
-      "/*.parquet"
-
-  private val monitorsOracle: Map[String, String] = Map(
-    "q27_storage_inventory" ->
-      s"""SELECT parse_filename(filename) AS file_name,
-         |  CAST(size AS BIGINT) AS size_bytes,
-         |  CASE WHEN filename LIKE '%.parquet' THEN 'application/vnd.apache.parquet'
-         |       WHEN filename LIKE '%.json' THEN 'application/json'
-         |       WHEN filename LIKE '%.csv' THEN 'text/csv'
-         |       ELSE 'application/octet-stream' END AS content_type,
-         |  's3 standard' AS storage_class,
-         |  CAST(greatest(1, ceil(size / ${StorageMonitor.MultipartPartSizeBytes}.0))
-         |    AS INTEGER) AS parts_count,
-         |  '{}' AS metadata
-         |FROM read_blob('$storageOracleGlob')
-         |ORDER BY file_name""".stripMargin,
-    "q28_storage_summary" ->
-      s"""WITH inv AS (SELECT parse_filename(filename) AS file_name,
-         |    CAST(size AS BIGINT) AS size_bytes
-         |  FROM read_blob('$storageOracleGlob'))
-         |SELECT CAST(count(*) AS BIGINT) AS num_objects,
-         |  CAST(sum(size_bytes) AS BIGINT) AS total_bytes,
-         |  CAST(max(size_bytes) AS BIGINT) AS max_bytes,
-         |  round(avg(size_bytes), 4) AS avg_bytes,
-         |  (SELECT file_name FROM inv
-         |   ORDER BY size_bytes DESC, file_name DESC LIMIT 1) AS largest_file
-         |FROM inv""".stripMargin,
-    "q18_catalog_rowcounts" ->
-      s"$catalogCountsCte SELECT table_name, row_count FROM counts ORDER BY table_name",
-    "q19_table_shapes" ->
-      Tables.all.map(tn =>
-        s"SELECT '$tn' AS table_name, (SELECT count(*) FROM $tn) AS row_count, " +
-        s"(SELECT count(*) FROM (DESCRIBE $tn)) AS column_count")
-        .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY table_name"),
-    "q19a_catalog_columns" -> {
-      // DuckDB type names → Spark simpleString names for the fixture's
-      // type surface; both ordinals 0-based
-      val tablesIn = Tables.all.map(t => s"'$t'").mkString("(", ", ", ")")
-      s"""SELECT table_name, column_name,
-         |  CASE data_type WHEN 'INTEGER' THEN 'int' WHEN 'BIGINT' THEN 'bigint'
-         |    WHEN 'DOUBLE' THEN 'double' WHEN 'VARCHAR' THEN 'string'
-         |    WHEN 'TIMESTAMP' THEN 'timestamp' WHEN 'FLOAT[]' THEN 'array<float>'
-         |    ELSE lower(data_type) END AS data_type,
-         |  CAST(ordinal_position - 1 AS INTEGER) AS ordinal,
-         |  CAST(NULL AS BOOLEAN) AS autoincrement
-         |FROM information_schema.columns
-         |WHERE table_name IN $tablesIn
-         |ORDER BY table_name, ordinal""".stripMargin
-    },
-    "q20_db_summary" ->
-      s"""$catalogCountsCte, m AS (SELECT
-         |  CAST(count(*) AS DOUBLE) AS table_count,
-         |  CAST(sum(row_count) AS DOUBLE) AS total_rows,
-         |  CAST(max(row_count) AS DOUBLE) AS max_rows,
-         |  CAST(min(row_count) AS DOUBLE) AS min_rows,
-         |  round(avg(row_count), 4) AS avg_rows,
-         |  round(quantile_cont(CAST(row_count AS DOUBLE), 0.5), 4) AS median_rows
-         |FROM counts)
-         |SELECT metric, value FROM (
-         |  SELECT 'table_count' AS metric, table_count AS value FROM m
-         |  UNION ALL SELECT 'total_rows', total_rows FROM m
-         |  UNION ALL SELECT 'max_rows', max_rows FROM m
-         |  UNION ALL SELECT 'min_rows', min_rows FROM m
-         |  UNION ALL SELECT 'avg_rows', avg_rows FROM m
-         |  UNION ALL SELECT 'median_rows', median_rows FROM m)
-         |ORDER BY metric""".stripMargin,
-    "q21_largest_table" ->
-      s"$catalogCountsCte SELECT table_name, row_count FROM counts ORDER BY row_count DESC, table_name LIMIT 1",
-    "q22_state_delta" ->
-      """SELECT 'orders' AS entity,
-        |  (SELECT count(*) FROM orders WHERE o_orderkey % 7 <> 0) AS prev_count,
-        |  (SELECT count(*) FROM orders) AS cur_count,
-        |  (SELECT count(*) FROM orders)
-        |    - (SELECT count(*) FROM orders WHERE o_orderkey % 7 <> 0) AS delta""".stripMargin,
-    "q23_schema_drift" ->
-      """SELECT * FROM (VALUES ('added', 'l_tax'), ('removed', 'l_quantity'))
-        |  AS t(change, column_name) ORDER BY change, column_name""".stripMargin,
-    "q24_json_extract" ->
-      """SELECT event_type, count(*) AS cnt,
-        |  round(avg(CAST(props->>'k' AS INTEGER)), 4) AS avg_k,
-        |  max(CAST(props->>'k' AS INTEGER)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q25_time_window" ->
-      """SELECT date_trunc('hour', ts) AS window_start, count(*) AS cnt,
-        |  round(sum(value), 2) AS sum_value, round(avg(value), 4) AS avg_value
-        |FROM events GROUP BY window_start ORDER BY window_start""".stripMargin,
-    "q26_streaming_hourly" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-    "q41_histograms_all" -> {
-      val dbl = Set("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val blocks = cols.map { c =>
-        val v = if (dbl(c)) s"CASE WHEN isnan($c) THEN NULL ELSE CAST($c AS DOUBLE) END"
-          else s"CAST($c AS DOUBLE)"
-        s"""SELECT '$c' AS col_name,
-           |  CASE WHEN hi = lo THEN 0 ELSE
-           |    CAST(least(floor((v - lo) / ((hi - lo) / 10)), 9) AS BIGINT) END AS bucket,
-           |  count(*) AS cnt
-           |FROM (SELECT $v AS v FROM lineitem) x,
-           |  (SELECT min($v) AS lo, max($v) AS hi
-           |   FROM lineitem) b
-           |WHERE v IS NOT NULL GROUP BY col_name, bucket""".stripMargin
-      }
-      s"SELECT * FROM (${blocks.mkString(" UNION ALL ")}) ORDER BY col_name, bucket"
-    })
-
-  /** DuckDB oracle for Profiler.numericProfile: one UNION ALL block per
-    * (column, metric), deterministically ordered like the Spark output.
-    */
-  private[graft] def numericProfileOracle(table: String,
-      cols: Seq[String]): String = {
-    val blocks = cols.flatMap { c =>
-      val v = s"CAST($c AS DOUBLE)"
-      Seq(
-        ("count", s"CAST(count($v) AS DOUBLE)"),
-        ("null_count", s"CAST(sum(CASE WHEN $v IS NULL THEN 1 ELSE 0 END) AS DOUBLE)"),
-        ("distinct_count", s"CAST(count(DISTINCT $v) AS DOUBLE)"),
-        ("min", s"round(min($v), 4)"),
-        ("max", s"round(max($v), 4)"),
-        ("mean", s"round(avg($v), 4)"),
-        ("stddev", s"round(stddev_samp($v), 4)"),
-        ("p25", s"round(quantile_cont($v, 0.25), 4)"),
-        ("median", s"round(quantile_cont($v, 0.5), 4)"),
-        ("p75", s"round(quantile_cont($v, 0.75), 4)")
-      ).map { case (m, e) =>
-        s"SELECT '$c' AS col_name, '$m' AS metric, $e AS value FROM $table"
-      }
+  def index(modules: Seq[QueryModule]): Map[String, QueryDef] =
+    modules.flatMap(_.defs).foldLeft(Map.empty[String, QueryDef]) { (m, d) =>
+      require(!m.contains(d.id), s"duplicate query id ${d.id}")
+      m.updated(d.id, d)
     }
-    s"SELECT * FROM (${blocks.mkString(" UNION ALL ")}) ORDER BY col_name, metric"
-  }
 
-  /** One entry per implemented operator from SURVEY.md §2 + the LLM
-    * training-data extensions (LlmQueries) + round-2 extensions
-    * (ExtQueries: sessions, normalize, salted join, n-gram dedup). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    relational ++ monitors ++ LlmQueries.queries ++ ExtQueries.queries ++
-      Round3Queries.queries ++ Round4Queries.queries ++
-      Round5Queries.queries ++ Round5bQueries.queries ++
-      Round5cQueries.queries ++ Round5dQueries.queries ++
-      Round5eQueries.queries ++ Round5fQueries.queries ++
-      Round5gQueries.queries ++ Round5hQueries.queries ++
-      Round5iQueries.queries ++ Round6Queries.queries ++
-      Round6bQueries.queries ++ Round6cQueries.queries ++
-      Round6dQueries.queries ++ Round6eQueries.queries ++
-      Round6fQueries.queries ++ Round6gQueries.queries ++
-      Round6hQueries.queries ++ Round6iQueries.queries ++
-      Round6jQueries.queries ++ Round6kQueries.queries ++ Round6lQueries.queries ++ Round6mQueries.queries ++
-      Round6nQueries.queries ++ Round6oQueries.queries ++
-      Round6pQueries.queries ++ Round6qQueries.queries ++
-      Round6rQueries.queries ++ Round6sQueries.queries ++
-      Round6tQueries.queries ++ Round6uQueries.queries ++
-      Round6vQueries.queries ++ Round6wQueries.queries ++
-      Round6xQueries.queries ++ Round6yQueries.queries ++
-      Round6zQueries.queries ++ Round7Queries.queries ++
-      Round7bQueries.queries ++ Round7cQueries.queries ++
-      Round7dQueries.queries ++ Round7eQueries.queries ++
-      Round7fQueries.queries ++ Round7iQueries.queries ++
-      Round7jQueries.queries ++ Round7kQueries.queries ++
-      Round7lQueries.queries ++ Round7mQueries.queries ++
-      Round7nQueries.queries ++ Round7oQueries.queries ++ Round7pQueries.queries ++ Round7qQueries.queries ++ Round7rQueries.queries ++ Round7sQueries.queries ++ Round7tQueries.queries ++ Round7uQueries.queries ++ Round7vQueries.queries ++ Round7wQueries.queries ++ Round7zQueries.queries ++ Round8cQueries.queries ++ Round8dQueries.queries ++ Round8eQueries.queries ++ Round8fQueries.queries ++ Round8gQueries.queries ++ Round8hQueries.queries ++ Round8iQueries.queries ++ Round8jQueries.queries ++ Round8kQueries.queries ++ Round8lQueries.queries ++ Round8mQueries.queries ++ Round8nQueries.queries ++ Round8oQueries.queries ++ Round8pQueries.queries ++ Round8qQueries.queries ++
-      Round9Queries.queries ++ Round9dQueries.queries ++
-      Round9fQueries.queries ++ Round10Queries.queries ++
-      Round11Queries.queries ++ Round11bQueries.queries ++ Round11cQueries.queries ++
-      Round12Queries.queries
+  private lazy val registry: Map[String, QueryDef] = index(modules)
 
-  /** Validation metadata for the sketch-valued queries. Since round 9
-    * each emits an in-plan FIDELITY form — exact-twin values in the
-    * oracle-hashable columns plus a frozen-constant `within_bound`
-    * sketch check — so all three are fully driver-green (rows + schema
-    * + hash); a sketch breaching its bound flips within_bound and goes
-    * hash-red with no driver special-casing. Kept as documentation of
-    * the mechanism and the raw-sketch production twins. Dumped by
-    * [[Verify]] as `queries_meta.json` next to `oracle_sql.json`.
-    */
-  def queriesMeta: Map[String, String] = Map(
-    "q43_profile_approx" ->
-      ("fidelity_report: HLL/KLL sketch tier graded in-plan vs exact " +
-        "order stats (bounds: 3σ HLL band; ±0.01-quantile windows); " +
-        "raw production tier = Profiler.numericProfile(exact=false), " +
-        "moments twin q43a_approx_moments"),
-    "q58a_token_deciles_approx" ->
-      ("fidelity_report: approx-percentile boundaries graded in-plan " +
-        "vs exact per-source quantiles (±0.01-quantile windows); raw " +
-        "production tier = Deciles.report(exact=false), exact twin " +
-        "q58_token_deciles"),
-    "q153_sketch_rollup" ->
-      ("fidelity_report: HLL union rollup graded in-plan vs the exact " +
-        "weekly distincts (8%+10 band ≈ 5σ at lgConfigK=12); raw " +
-        "production tier = SketchRollup.weeklyDistinct, exact twin " +
-        "q153a_weekly_distinct_exact"))
+  /** One builder per query id, over a fixture directory. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (id, d) => id -> d.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables, rendered on every call.
+    */
   def oracleSql: Map[String, String] =
-    relationalOracle ++ monitorsOracle ++ LlmQueries.oracleSql ++
-      ExtQueries.oracleSql ++ Round3Queries.oracleSql ++
-      Round4Queries.oracleSql ++ Round5Queries.oracleSql ++
-      Round5bQueries.oracleSql ++ Round5cQueries.oracleSql ++
-      Round5dQueries.oracleSql ++ Round5eQueries.oracleSql ++
-      Round5fQueries.oracleSql ++ Round5gQueries.oracleSql ++
-      Round5hQueries.oracleSql ++ Round5iQueries.oracleSql ++
-      Round6Queries.oracleSql ++ Round6bQueries.oracleSql ++
-      Round6cQueries.oracleSql ++ Round6dQueries.oracleSql ++
-      Round6eQueries.oracleSql ++ Round6fQueries.oracleSql ++
-      Round6gQueries.oracleSql ++ Round6hQueries.oracleSql ++
-      Round6iQueries.oracleSql ++ Round6jQueries.oracleSql ++
-      Round6kQueries.oracleSql ++ Round6lQueries.oracleSql ++ Round6mQueries.oracleSql ++
-      Round6nQueries.oracleSql ++ Round6oQueries.oracleSql ++
-      Round6pQueries.oracleSql ++ Round6qQueries.oracleSql ++
-      Round6rQueries.oracleSql ++ Round6sQueries.oracleSql ++
-      Round6tQueries.oracleSql ++ Round6uQueries.oracleSql ++
-      Round6vQueries.oracleSql ++ Round6wQueries.oracleSql ++
-      Round6xQueries.oracleSql ++ Round6yQueries.oracleSql ++
-      Round6zQueries.oracleSql ++ Round7Queries.oracleSql ++
-      Round7bQueries.oracleSql ++ Round7cQueries.oracleSql ++
-      Round7dQueries.oracleSql ++ Round7eQueries.oracleSql ++
-      Round7fQueries.oracleSql ++ Round7iQueries.oracleSql ++
-      Round7jQueries.oracleSql ++ Round7kQueries.oracleSql ++
-      Round7lQueries.oracleSql ++ Round7mQueries.oracleSql ++
-      Round7nQueries.oracleSql ++ Round7oQueries.oracleSql ++ Round7pQueries.oracleSql ++ Round7qQueries.oracleSql ++ Round7rQueries.oracleSql ++ Round7sQueries.oracleSql ++ Round7tQueries.oracleSql ++ Round7uQueries.oracleSql ++ Round7vQueries.oracleSql ++ Round7wQueries.oracleSql ++ Round7zQueries.oracleSql ++ Round8cQueries.oracleSql ++ Round8dQueries.oracleSql ++ Round8eQueries.oracleSql ++ Round8fQueries.oracleSql ++ Round8gQueries.oracleSql ++ Round8hQueries.oracleSql ++ Round8iQueries.oracleSql ++ Round8jQueries.oracleSql ++ Round8kQueries.oracleSql ++ Round8lQueries.oracleSql ++ Round8mQueries.oracleSql ++ Round8nQueries.oracleSql ++ Round8oQueries.oracleSql ++ Round8pQueries.oracleSql ++ Round8qQueries.oracleSql ++
-      Round9Queries.oracleSql ++ Round9dQueries.oracleSql ++
-      Round9fQueries.oracleSql ++ Round10Queries.oracleSql ++
-      Round11Queries.oracleSql ++ Round11bQueries.oracleSql ++ Round11cQueries.oracleSql ++
-      Round12Queries.oracleSql
+    registry.map { case (id, d) => id -> d.oracle }
+
+  /** Validation metadata for the sketch-valued queries. Each emits an
+    * in-plan FIDELITY form — exact-twin values in the oracle-hashable
+    * columns plus a frozen-constant `within_bound` sketch check — so all
+    * hash against their oracles; a sketch breaching its bound flips
+    * within_bound and goes hash-red with no special-casing. Kept
+    * as documentation of the mechanism and the raw-sketch production
+    * twins. Dumped by [[Verify]] as `queries_meta.json`.
+    */
+  def queriesMeta: Map[String, String] =
+    registry.flatMap { case (id, d) => d.meta.map(id -> _) }
 }

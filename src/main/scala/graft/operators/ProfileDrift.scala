@@ -142,9 +142,14 @@ object ProfileDrift {
     // ONE merged census, not census(ref) FULL OUTER JOIN census(cur)
     // (round-15): a 0/1 side flag rides each value row and the (g, vm)
     // aggregate recovers both counts as exact integer sums — one
-    // exchange instead of two plus the join's sorts. Values identical:
-    // a (g, vm) present on only one side lands with the other side's
-    // count 0, exactly what the old join's na.fill produced.
+    // exchange instead of two plus the join's sorts. For non-null keys
+    // the counts equal the old join's: a (g, vm) present on only one
+    // side lands with the other side's count 0, as its na.fill did.
+    // Null keys differ: the group-by merges a null g or null vm from
+    // both sides into ONE row, where the join (null never equals null)
+    // kept one row per side. A null value is thus one tied smallest
+    // value in the CDF, so D no longer depends on how two tied null
+    // rows happened to order. Round6jSpec pins these semantics.
     def flagged(df: DataFrame, isRef: Int) = df
       .select(col(groupCol).as("g"),
         round(col(valCol).cast("double") * 1e6).cast("long").as("vm"),

@@ -215,9 +215,7 @@ object MonitorRunner {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val targets = if (args.length > 1) args(1).split(",").toSeq else Tables.warehouse
     val statePath = if (args.length > 2) args(2) else "/tmp/graft-state"
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local(Runtime.getRuntime.availableProcessors)
     spark.sparkContext.setLogLevel("WARN")
     val metrics = run(spark, dir, targets, statePath)
     metrics.show(200, truncate = false)

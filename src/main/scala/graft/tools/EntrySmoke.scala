@@ -1,15 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives SparkEntry.entry the way the driver's smoke check does. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(8)
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Post-AQE scan audit: runs each query to completion and reports the
   * FINAL adaptive plan's FileScan / ReusedExchange counts (the pre-AQE
   * `executedPlan` string can both over-count — AQE may reuse identical
@@ -17,13 +15,7 @@ object FinalPlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     args.tail.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -40,14 +40,7 @@ object IngestGrowthBench {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outPrefix = if (args.length > 1) args(1) else ""
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val growth = ingestGrowth(spark, sfDir)

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dump .explain("formatted") of named queries to <outDir>/<q>_<tag>.txt.
   * Usage: runMain graft.tools.PlanDump <tag> <sfDir> <q1> [q2...]
   * Output dir from $PLAN_DUMP_DIR (default plans/out), created if absent
@@ -10,11 +9,7 @@ object PlanDump {
     val tag = args(0); val sfDir = args(1); val names = args.drop(2)
     val outDir = sys.env.getOrElse("PLAN_DUMP_DIR", "plans/out")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -8,15 +8,11 @@ object QueryProbe {
     val sfDir = args.head
     val names = args.tail
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides for A/B probing: PROBE_CONF="k=v;k=v".
-    // builder.config is silently IGNORED when a session already exists
-    // in this JVM (ADVICE r14: an A/B probe would then report results
-    // for the wrong config) — fail loudly instead.
+    // ad-hoc conf overrides for A/B probing: PROBE_CONF="k=v;k=v", set as
+    // spark.* system properties, which SparkConf reads when the session is
+    // built (core and static confs included). They are silently IGNORED
+    // when a session already exists in this JVM (an A/B probe
+    // would then report results for the wrong config) — fail loudly instead.
     val probeConf = sys.env.get("PROBE_CONF").toSeq
       .flatMap(_.split(";").filter(_.contains("=")))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
@@ -24,9 +20,15 @@ object QueryProbe {
       SparkSession.getActiveSession.isEmpty &&
         SparkSession.getDefaultSession.isEmpty,
       "PROBE_CONF set but a SparkSession already exists in this JVM — " +
-        "its builder confs would be silently ignored")
-    probeConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+        "its confs would be silently ignored")
+    probeConf.foreach { case (k, v) => sys.props(k) = v }
+    val spark = graft.util.Sessions.local(cpus.toInt)
+    // the factory's own builder confs win over system properties: re-set
+    // runtime ones, and fail on any override that did not take effect
+    probeConf.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) spark.conf.set(k, v)
+      require(spark.conf.getOption(k).contains(v), s"PROBE_CONF $k=$v did not take effect")
+    }
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.all.foreach(t => graft.Tables.load(spark, sfDir, t).count())
     names.foreach { name =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B the ensure() repartition shapes on one table (round-15): plain
@@ -16,10 +15,7 @@ object RepartProbe {
     val sfDir = args(0)
     val table = if (args.length > 1) args(1) else "lineitem"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.Tables.load(spark, sfDir, table)
     df.count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev diagnostic: synthesize an sf1-scale BENCH dataset from sf0.1 by
@@ -37,9 +37,7 @@ object ScaleUp {
     val target = args.headOption.getOrElse("/tmp/sf1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local(8)
     spark.sparkContext.setLogLevel("WARN")
 
     val Off = 100_000_000_000L // far above any sf0.1 id

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage timing for one query: runs it N times and prints each run's
   * stages (duration, task time, GC time, name) — separates "a stage is
@@ -12,10 +11,7 @@ object StageProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "q34_minhash_lsh"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {

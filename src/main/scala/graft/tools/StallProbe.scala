@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Self-instrumenting stall hunter: runs a query repeatedly; a watchdog
   * thread samples all stacks mid-run, and samples of runs slower than the
   * threshold are printed — catches sporadic multi-second stalls whose
@@ -12,10 +10,7 @@ object StallProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "q34_minhash_lsh"
     val reps = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.all.foreach(t => graft.Tables.load(spark, sfDir, t).count())
     val fn = graft.SparkEntry.queries(name)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway spot-timer: times construction vs execution of the named
   * registry queries at the given SF dir, min-of-2, per-phase.
   * Usage: runMain graft.tools.TimeProbe <sfDir> <q1,q2,...>
@@ -10,14 +8,7 @@ object TimeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val qs = args(1).split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.all.foreach(t => graft.Tables.load(spark, sfDir, t).count())
     qs.foreach { q =>

@@ -168,7 +168,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("incrementalNearDups: equals the cross-membership slice of the full-corpus run") {
     val d = fixture
-    val mod = Round3Queries.BenchMod
+    val mod = registry.TextQueries.BenchMod
     val existing = d.filter(col("doc_id") % mod === 0)
     val incoming = d.filter(col("doc_id") % mod =!= 0)
     val crossPairs = Dedup.incrementalNearDups(incoming, existing)

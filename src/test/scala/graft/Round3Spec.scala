@@ -190,7 +190,7 @@ class Round3Spec extends AnyFunSuite {
   test("PQ encode: every vector gets M codes from the codebook range") {
     import graft.operators.ProductQuantization._
     val sub = subvectors(embs, 8)
-    val enc = encode(sub, codebookFromIds(sub, Round3Queries.PqCodebookIds))
+    val enc = encode(sub, codebookFromIds(sub, registry.DedupQueries.PqCodebookIds))
     val n = embs.count()
     assert(enc.count() == n * 8)
     val codes = enc.agg(min("code"), max("code")).head()
@@ -203,7 +203,7 @@ class Round3Spec extends AnyFunSuite {
 
   test("PQ ADC top-k approximates brute-force cosine neighbors (recall sanity)") {
     import graft.operators.ProductQuantization._
-    val pq = adcTopK(embs, Seq(0L, 1L, 2L), 10, Round3Queries.PqCodebookIds)
+    val pq = adcTopK(embs, Seq(0L, 1L, 2L), 10, registry.DedupQueries.PqCodebookIds)
       .select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val bf = graft.operators.Similarity.bruteForceTopK(embs, Seq(0L, 1L, 2L), 10)
       .select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -215,9 +215,9 @@ class Round3Spec extends AnyFunSuite {
     import graft.operators.ProductQuantization._
     val initial = {
       val sub = subvectors(embs, 8)
-      codebookFromIds(sub, Round3Queries.PqCodebookIds)
+      codebookFromIds(sub, registry.DedupQueries.PqCodebookIds)
     }
-    val trained = train(embs, Round3Queries.PqCodebookIds, iters = 2)
+    val trained = train(embs, registry.DedupQueries.PqCodebookIds, iters = 2)
     val e0 = quantizationError(embs, initial)
     val e2 = quantizationError(embs, trained)
     assert(e2 < e0, s"training should reduce error: $e0 -> $e2")
@@ -229,21 +229,23 @@ class Round3Spec extends AnyFunSuite {
 
   test("round-3 queries run non-empty on sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    for ((name, q) <- Round3Queries.queries) {
-      val n = q(spark, dir).count()
+    for (name <- Seq("q52_decontaminate", "q53_repetition", "q54_quota_sample",
+        "q55_mixture", "q56_top_tokens", "q57_pii_scrub", "q58_token_deciles",
+        "q59_group_topn", "q60_ann_pq")) {
+      val n = SparkEntry.queries(name)(spark, dir).count()
       assert(n > 0, s"$name returned 0 rows")
     }
   }
 
   test("q54 quota sample rows = sources x k on the fixture") {
-    val df = Round3Queries.queries("q54_quota_sample")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("q54_quota_sample")(spark, "/root/testdata/sf0.001")
     val sources = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select("source").distinct().count()
-    assert(df.count() == sources * Round3Queries.QuotaK)
+    assert(df.count() == sources * registry.TextQueries.QuotaK)
   }
 
   test("q58 deciles partition each source into 10 buckets covering all docs") {
-    val df = Round3Queries.queries("q58_token_deciles")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("q58_token_deciles")(spark, "/root/testdata/sf0.001")
       .collect()
     val bySource = df.groupBy(_.getString(0))
     bySource.foreach { case (_, rows) =>

@@ -69,7 +69,7 @@ class Round5Spec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.util.Caches.releaseAll()
     val capped = graft.operators.Dedup.minhashNearDups(d,
-        maxBucketSize = Some(Round4Queries.TightBucketCap))
+        maxBucketSize = Some(registry.DedupQueries.TightBucketCap))
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.util.Caches.releaseAll()
@@ -99,7 +99,7 @@ class Round5Spec extends AnyFunSuite {
   }
 
   test("chunking: fixture coverage — chunk counts and token accounting") {
-    val (w, s) = (Round5Queries.ChunkWindow, Round5Queries.ChunkStride)
+    val (w, s) = (registry.TextQueries.ChunkWindow, registry.TextQueries.ChunkStride)
     val d = Tables.load(spark, sf, "documents")
     val chunks = graft.operators.Chunk.chunkByTokens(d, w, s)
     val perDoc = chunks.groupBy("doc_id")

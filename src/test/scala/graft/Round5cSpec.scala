@@ -98,7 +98,7 @@ class Round5cSpec extends AnyFunSuite {
   test("leakageReport counts straddling pairs; leakage-safe split zeroes them") {
     val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val pairs = Dedup.minhashNearDups(d)
-    val w = Round4Queries.SplitWeights
+    val w = registry.DedupQueries.SplitWeights
     val plain = Split.leakageReport(pairs, w)
     val total = plain.agg(sum("n_pairs")).collect().head.getLong(0)
     assert(total == pairs.count())

@@ -117,7 +117,7 @@ class Round5dSpec extends AnyFunSuite {
   test("hybridTopK: ranks 1..k per query, rrf consistent with contributing ranks") {
     val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val out = Retrieval.hybridTopK(d, e, Round5dQueries.HybridSpecs, 10, 20)
+    val out = Retrieval.hybridTopK(d, e, registry.DedupQueries.HybridSpecs, 10, 20)
       .collect()
     val byQuery = out.groupBy(_.getInt(0))
     assert(byQuery.keySet == Set(1, 2, 3))

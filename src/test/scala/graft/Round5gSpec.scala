@@ -234,9 +234,9 @@ class Round5gSpec extends AnyFunSuite {
   test("ivfAdcTopK: single-probe results all live in the query's cell") {
     val sf = "/root/testdata/sf0.001"
     val embs = Tables.load(spark, sf, "embeddings")
-    val centroidIds = Round5gQueries.IvfCentroidIds
+    val centroidIds = registry.DedupQueries.IvfCentroidIds
     val got = ProductQuantization.ivfAdcTopK(embs, Seq(0L, 1L), 5,
-      centroidIds, Round3Queries.PqCodebookIds)
+      centroidIds, registry.DedupQueries.PqCodebookIds)
     val corpus = embs.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("nv", Similarity.norm(col("v")))

@@ -281,7 +281,7 @@ class Round5hSpec extends AnyFunSuite {
     val n = leaves(SparkEntry.queries("q118_fk_discovery")(
       spark, "/root/testdata/sf0.001").queryExecution.executedPlan)
       .count(_.startsWith("Scan parquet"))
-    assert(n == 2 * graft.Round5hQueries.FkCandidates.size,
+    assert(n == 2 * graft.registry.MonitorQueries.FkCandidates.size,
       s"expected 2 parquet leaves per candidate, got $n total")
   }
 }

@@ -17,7 +17,7 @@ class Round6Spec extends AnyFunSuite {
   private def docs = Tables.load(spark, sf, "documents")
 
   test("containmentPairs: capped survivors ⊆ uncapped, inter pointwise ≤") {
-    val tau = Round5eQueries.ContainmentTau
+    val tau = registry.DedupQueries.ContainmentTau
     val un = Dedup.containmentPairs(docs, "lang", tau)
       .select("doc_a", "doc_b", "inter").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -332,13 +332,13 @@ class Round6Spec extends AnyFunSuite {
   test("kmeansReport: census partitions the corpus; inertia falls across rounds") {
     import graft.operators.Similarity
     val e = Tables.load(spark, sf, "embeddings")
-    val r1 = Similarity.kmeansReport(e, Round6Queries.KmInitIds, 1).collect()
-    val r2 = Similarity.kmeansReport(e, Round6Queries.KmInitIds, 2).collect()
+    val r1 = Similarity.kmeansReport(e, registry.DedupQueries.KmInitIds, 1).collect()
+    val r2 = Similarity.kmeansReport(e, registry.DedupQueries.KmInitIds, 2).collect()
     val total = e.count()
     for (r <- Seq(r1, r2)) {
       assert(r.map(_.getLong(1)).sum == total, "cells must partition the corpus")
       assert(r.map(_.getLong(0)).toSet.subsetOf(
-        Round6Queries.KmInitIds.toSet), "cells keyed by init centroid ids")
+        registry.DedupQueries.KmInitIds.toSet), "cells keyed by init centroid ids")
     }
     val i1 = r1.map(_.getLong(2)).sum
     val i2 = r2.map(_.getLong(2)).sum

@@ -29,6 +29,32 @@ class Round6jSpec extends AnyFunSuite {
     assert(r1.getLong(4) == 2000000L) // first attained at ref's max value
   }
 
+  test("ksReport: a null group or null value merges across sides into " +
+    "one census row") {
+    import spark.implicits._
+    def df(rows: Seq[(Option[String], Option[Double])]) = rows.toDF("g", "v")
+    val ref = df(Seq(
+      (Some("a"), Some(1.0)), (Some("a"), None), (Some("a"), Some(2.0)),
+      (None, Some(1.0)), (None, None),
+      (Some("b"), None), (Some("b"), None)))
+    val cur = df(Seq(
+      (Some("a"), None), (Some("a"), Some(3.0)),
+      (None, Some(1.0)), (None, Some(2.0)),
+      (Some("b"), None), (Some("b"), Some(5.0))))
+    val rows = ProfileDrift.ksReport(ref, cur, "g", "v").collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2),
+        r.getLong(3), Option(r.get(4)), r.getDouble(5))).toSeq
+    // nulls sort first, as ONE tied value per side-merged key; argmax
+    // skips the null value (min over the tied maxima ignores nulls).
+    // Group b pins the merge: its null value is c_ref 2, c_cur 1 in one
+    // row (d = 2); two separate per-side null rows would have let
+    // d reach 4 or 2 depending on their order.
+    assert(rows == Seq(
+      (None, 2L, 2L, 2L, Some(1000000L), 0.5),
+      (Some("a"), 3L, 2L, 3L, Some(2000000L), 0.5),
+      (Some("b"), 2L, 2L, 2L, None, 0.5)))
+  }
+
   test("ksReport: hand-computed mixed case with the exact numerator") {
     // ref {1,2,3}, cur {2,3,4}: D attained at v=1: |1·3 − 0·3| = 3 →
     // D = 3/9 = 1/3 (ties at v∈{2,3} give the same 3)

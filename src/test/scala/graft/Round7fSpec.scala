@@ -47,8 +47,8 @@ class Round7fSpec extends AnyFunSuite {
 
   test("hardNegativesLsh: per-rank dominance vs exact, and the block binds") {
     val embs = Tables.load(spark, dir, "embeddings")
-    val ids = Round6oQueries.HardNegQueryIds
-    val k = Round6oQueries.HardNegK
+    val ids = registry.DedupQueries.HardNegQueryIds
+    val k = registry.DedupQueries.HardNegK
     val exact = Similarity.hardNegatives(embs, ids, k).collect()
       .map(r => (r.getLong(0), r.getInt(5)) -> (r.getLong(2), r.getDouble(4)))
       .toMap
@@ -70,8 +70,8 @@ class Round7fSpec extends AnyFunSuite {
 
   test("labelAgreementLsh: votes stay within k and the block binds") {
     val embs = Tables.load(spark, dir, "embeddings")
-    val ids = Round6sQueries.NoiseAnchorIds
-    val k = Round6sQueries.NoiseK
+    val ids = registry.DedupQueries.NoiseAnchorIds
+    val k = registry.DedupQueries.NoiseK
     val exact = Similarity.labelAgreement(embs, ids, k).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
     val lsh = Similarity.labelAgreementLsh(embs, ids, k).collect()

@@ -19,7 +19,7 @@ class Round7gSpec extends AnyFunSuite {
     // the q200 fixture split: ref = events before the PSI cutoff,
     // cur = events after it, streamed through a keyed value census
     val ev = Tables.load(spark, dir, "events")
-    val cut = lit(Round5fQueries.PsiCutoff).cast("timestamp")
+    val cut = lit(registry.DriftQueries.PsiCutoff).cast("timestamp")
     val ref = ev.filter(col("ts") < cut)
       .select("event_type", "value").cache()
     val cur = ev.filter(col("ts") >= cut)

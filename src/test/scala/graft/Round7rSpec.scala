@@ -25,12 +25,12 @@ class Round7rSpec extends AnyFunSuite {
   }
 
   test("kCoreReport: fixture rounds reach the peeling fixpoint") {
-    val e = Round6bQueries.coPurchase(spark, "/root/testdata/sf0.001")
-    val a = Graph.kCoreReport(e, Round7rQueries.CoreK,
-      Round7rQueries.CoreRounds).collect().map(_.toSeq).toSeq
+    val e = registry.GraphQueries.coPurchase(spark, "/root/testdata/sf0.001")
+    val a = Graph.kCoreReport(e, registry.GraphQueries.CoreK,
+      registry.GraphQueries.CoreRounds).collect().map(_.toSeq).toSeq
     graft.util.Caches.releaseAll()
-    val b = Graph.kCoreReport(e, Round7rQueries.CoreK,
-      Round7rQueries.CoreRounds + 1).collect().map(_.toSeq).toSeq
+    val b = Graph.kCoreReport(e, registry.GraphQueries.CoreK,
+      registry.GraphQueries.CoreRounds + 1).collect().map(_.toSeq).toSeq
     assert(a == b, "one more peel changed the core — raise CoreRounds")
     // and the peel BINDS: someone died
     assert(a.exists(r => r(2) == false))

@@ -35,8 +35,8 @@ class Round7xSpec extends AnyFunSuite {
 
   test("CorpusConfig routes kNN consumers by tier") {
     val embs = Tables.load(spark, dir, "embeddings")
-    val ids = Round6oQueries.HardNegQueryIds
-    val k = Round6oQueries.HardNegK
+    val ids = registry.DedupQueries.HardNegQueryIds
+    val k = registry.DedupQueries.HardNegK
     val exact = CorpusConfig.Exact.hardNegatives(embs, ids, k)
       .collect().map(_.toSeq).toSeq
     val direct = Similarity.hardNegatives(embs, ids, k)

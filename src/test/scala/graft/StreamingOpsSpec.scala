@@ -339,7 +339,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
-    val steps = graft.Round5gQueries.FunnelSteps
+    val steps = graft.registry.TimeSeriesQueries.FunnelSteps
     val all = ev.select("user_id", "ts", "event_type", "event_id", "value")
       .as[RawEv].collect().toSeq
     val input = MemoryStream[RawEv]

@@ -4,14 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (forked test JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.util.Sessions.local(4)
 
   /** Drain the async listener bus so metric-collecting specs see every
     * TaskEnd before removing their listener (the Bench.drainBus

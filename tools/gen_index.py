@@ -3,7 +3,7 @@
 
 For every public `object`/`class` under src/main/scala/graft, emit:
 its source file, the first sentence of its top-level Scaladoc, and the
-query ids (from the SparkEntry registry sources) that exercise it.
+query ids (from the registry modules) that exercise it.
 Run from the repo root:  python3 tools/gen_index.py
 """
 import os, re, glob, collections
@@ -45,10 +45,9 @@ def main():
         for d, doc in top_doc_and_objects(path):
             objects.setdefault(d, (rel, doc))
 
-    # 2) map object name -> query ids referencing it in registry sources;
-    #    registry objects themselves get the ids they DEFINE
-    registry_files = [p for p in glob.glob(SRC + "/*.scala")
-                      if re.search(r"(Queries|SparkEntry)\.scala$", p)]
+    # 2) map object name -> query ids referencing it in registry modules;
+    #    the modules themselves get the ids they DEFINE
+    registry_files = sorted(glob.glob(SRC + "/registry/*Queries.scala"))
     registry_objects = set()
     uses = collections.defaultdict(set)
     for path in registry_files:
@@ -56,18 +55,17 @@ def main():
             registry_objects.add(d)
     for path in registry_files:
         text = open(path).read()
-        defined = set(re.findall(r'"(q\d+[a-z]?_\w+)"\s*->', text))
+        defined = set(re.findall(r'QueryDef\("(q\d+[a-z]?_\w+)"', text))
         for d, _ in top_doc_and_objects(path):
             uses[d] = defined
-        # split into per-query chunks: "qID" -> ((s, dir) => ...body...)
-        entries = re.split(r'"(q\d+[a-z]?_\w+)"\s*->', text)
+        # split into per-query chunks: QueryDef("qID", build, oracle)
+        entries = re.split(r'QueryDef\("(q\d+[a-z]?_\w+)"', text)
         for i in range(1, len(entries) - 1, 2):
             qid, body = entries[i], entries[i + 1]
-            # stop each body at the next map key to avoid bleed
+            # each body stops at the next QueryDef, so symbols do not bleed
             for sym in re.findall(r"\b([A-Z]\w+)\s*[.(]", body):
                 if sym in objects and sym not in registry_objects:
                     uses[sym].add(qid)
-        # oracle-sql halves repeat ids; the set dedups
 
     # 3) render, grouped by package directory
     groups = collections.defaultdict(list)
@@ -81,7 +79,7 @@ def main():
     out = ["# Operator index",
            "",
            "Generated by `tools/gen_index.py` from the source tree and the",
-           "`SparkEntry` registry sources — regenerate after adding an",
+           "registry modules — regenerate after adding an",
            "operator or a query. One row per public object: what it is,",
            "where it lives, and which oracle-checked queries exercise it",
            "(see `COVERAGE.md` for the SURVEY §2 mapping and specs).",

@@ -151,6 +151,32 @@ object Bench {
       windowRatios.exists(_ <= ContentionThreshold)) "persists"
     else "unresolved_contention"
 
+  /** Whether a query's previous and current walls are worth a ratio:
+    * both at least 0.3 s (below that a ratio is mostly scheduler noise),
+    * or apart by 0.5 s or more, so a sub-0.3 s query that jumps (q237's
+    * 0.24 → 1.60 s) is still retried and listed as a mover.
+    */
+  private[graft] def comparableWalls(prev: Double, cur: Double): Boolean =
+    math.min(prev, cur) >= 0.3 || math.abs(cur - prev) >= 0.5
+
+  /** First-pass walls over 1.5× their previous wall, among comparable
+    * walls: the queries the mover retry rounds re-time.
+    */
+  private[graft] def retryCandidates(prev: collection.Map[String, Double],
+      firstPass: collection.Map[String, Double]): Seq[String] =
+    firstPass.collect { case (k, v) if prev.get(k).exists(p =>
+      comparableWalls(p, v) && v / p > 1.5) => k }.toSeq
+
+  /** (query, prev, cur, cur/prev) for every query with comparable walls:
+    * the population of the artifact's vs_prev median and movers.
+    */
+  private[graft] def comparableQueries(prev: collection.Map[String, Double],
+      results: collection.Map[String, Double]): Seq[(String, Double, Double, Double)] =
+    results.toSeq.collect {
+      case (k, v) if prev.get(k).exists(p => comparableWalls(p, v)) =>
+        (k, prev(k), v, v / prev(k))
+    }
+
   /** Bytes the trailing compact line may take. Only the last 2000 bytes
     * of Bench stdout are kept by the harness that parses it, and sbt's
     * 73-byte `[success]` trailer, the line's `[info] ` prefix and its
@@ -401,10 +427,7 @@ object Bench {
             effectiveWindowRatio(ioWindow(b), cpuWindow(b)))
       }.toSeq
     var round = 0
-    var candidates = firstPass.keys.filter { k =>
-      prev.get(k).exists(p =>
-        math.min(p, firstPass(k)) >= 0.3 && firstPass(k) / p > 1.5)
-    }.toSeq
+    var candidates = retryCandidates(prev, firstPass)
     while (round < MaxRetryRounds && candidates.nonEmpty) {
       val posBefore = cal.last._1
       candidates.foreach { k =>
@@ -469,11 +492,9 @@ object Bench {
         s""""peak_exec_mem_mb":${d(6) / mb}}"""
     }.mkString("{", ",", "}")
     // vs_prev: per-query ratio against the previous committed quiet run,
-    // movers (>1.5x either way at >=0.3s intrinsic) listed in-artifact
-    val comparable = results.toSeq.collect {
-      case (k, v) if prev.get(k).exists(p => math.min(p, v) >= 0.3) =>
-        (k, prev(k), v, v / prev(k))
-    }
+    // movers (>1.5x either way among comparableWalls) listed in-artifact;
+    // "common_ge_300ms" keeps its name but counts comparableQueries
+    val comparable = comparableQueries(prev, results)
     val vsPrev = if (comparable.isEmpty) "null" else {
       val ratios = comparable.map(_._4).sorted
       val med = ratios(ratios.size / 2)

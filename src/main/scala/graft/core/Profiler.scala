@@ -78,22 +78,16 @@ object Profiler {
     }
   }
 
-  /** Codegen-friendly moment stats for one numeric column. In approx mode
-    * the sketch aggregates (HLL distinct, approx percentiles) ride along in
-    * the same single-scan job; exact distinct/percentiles go to the melted
-    * job instead (see [[numericProfile]]).
+  /** Codegen-friendly moment stats of column `c`'s cleaned double value
+    * `v`, aliased `<c>__<metric>` for every metric in [[momentMetrics]].
     */
-  private def momentExprs(df: DataFrame, c: String, cfg: ProfileConfig): Seq[Column] = {
-    val v = cleaned(df, c).cast(DoubleType)
-    val base = Seq(
-      count(v).cast(DoubleType).as(s"${c}__count"),
-      sum(when(v.isNull, 1L).otherwise(0L)).cast(DoubleType).as(s"${c}__null_count"),
-      round(min(v), 4).as(s"${c}__min"),
-      round(max(v), 4).as(s"${c}__max"),
-      round(avg(v), 4).as(s"${c}__mean"),
-      round(stddev_samp(v), 4).as(s"${c}__stddev"))
-    base
-  }
+  private def momentExprs(v: Column, c: String): Seq[Column] = Seq(
+    count(v).cast(DoubleType).as(s"${c}__count"),
+    sum(when(v.isNull, 1L).otherwise(0L)).cast(DoubleType).as(s"${c}__null_count"),
+    round(min(v), 4).as(s"${c}__min"),
+    round(max(v), 4).as(s"${c}__max"),
+    round(avg(v), 4).as(s"${c}__mean"),
+    round(stddev_samp(v), 4).as(s"${c}__stddev"))
 
   /** SQL text of the cleaned double cast (for building `stack` melts). */
   private def cleanedSql(df: DataFrame, c: String): String =
@@ -102,6 +96,63 @@ object Profiler {
         s"CASE WHEN isnan(`$c`) THEN NULL ELSE CAST(`$c` AS DOUBLE) END"
       case _ => s"CAST(`$c` AS DOUBLE)"
     }
+
+  /** The numeric columns `cols` melted to (col_name, value): cleaned
+    * doubles, NULLs dropped. An Expand of width #cols, so one job sees
+    * every column.
+    */
+  private def melt(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val stackArgs = cols.map(c => s"'$c', ${cleanedSql(df, c)}").mkString(", ")
+    df.selectExpr(s"stack(${cols.length}, $stackArgs) as (col_name, value)")
+      .where(col("value").isNotNull)
+  }
+
+  /** Exact order statistics in histogram form: pre-aggregate the melted
+    * relation to (col_name, value, cnt) — a fully parallel partial+final
+    * hash aggregate across ALL cores — then sort only the DISTINCT values
+    * per column (a running-count window) and pick the interpolation
+    * endpoints (linear, pandas/DuckDB quantile_cont semantics) from the
+    * cumulative ranges with [[interp]]. Compared to ranking every raw row,
+    * the per-column sort shrinks by the duplication factor
+    * (flags/quantities/discounts collapse from millions of rows to dozens
+    * of values; the sort — the only #columns-bounded stage — sees orders
+    * of magnitude fewer rows), and the distinct count falls out of the
+    * same grouped relation for free. This also beats `percentile()` (a
+    * TypedImperativeAggregate building a value→count hashmap of the whole
+    * column per group) and two-phase count_distinct — and the hash
+    * aggregate spills gracefully at 100 TB.
+    *
+    * Values are distinct per column here, so the default RANGE frame
+    * equals ROWS and `cum` is an exact running row count. The per-column
+    * totals (row count n, distinct count dcv) come from a whole-partition
+    * window over the SAME (col_name) partitioning — NOT a separate
+    * `grouped.groupBy(col_name)` + broadcast join back: Catalyst plans
+    * that as a full second scan→melt→aggregate chain (exchange reuse does
+    * not fire across the two subtrees), doubling the query's heavy phase.
+    * The extra Window op shares the existing sort and adds no exchange.
+    * Group the result by col_name to aggregate [[pick]]/[[interp]].
+    */
+  private def census(melted: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val grouped = melted.groupBy("col_name", "value").agg(count(lit(1)).as("cnt"))
+    val byVal = Window.partitionBy("col_name").orderBy("value")
+    val byCol = Window.partitionBy("col_name")
+    grouped.select(col("col_name"), col("value"), col("cnt"),
+      sum("cnt").over(byVal).cast(DoubleType).as("cum"),
+      sum("cnt").over(byCol).cast(DoubleType).as("n"),
+      count(lit(1)).over(byCol).cast(DoubleType).as("dcv"))
+  }
+
+  // a distinct value covers 0-based positions [cum-cnt, cum-1]
+  private def pick(p: Double, end: Column => Column): Column =
+    min(when(end((col("n") - 1) * p) >= col("cum") - col("cnt") &&
+      end((col("n") - 1) * p) < col("cum"), col("value")))
+
+  private def interp(p: Double): Column = {
+    val pos = (first(col("n")) - 1) * p
+    val frac = pos - floor(pos)
+    round(pick(p, floor) + (pick(p, ceil) - pick(p, floor)) * frac, 4)
+  }
 
   /** Long-format numeric profile: (col_name, metric, value).
     *
@@ -142,11 +193,7 @@ object Profiler {
         // updates ONE KLL/HLL sketch (grouped by col_name) instead of
         // 3·N+N sketches per wide row — ~3× fewer sketch updates, and the
         // wide moments job stays pure codegen.
-        val stackArgs = cols.map(c => s"'$c', ${cleanedSql(df, c)}").mkString(", ")
-        val melted = df.selectExpr(
-          s"stack(${cols.length}, $stackArgs) as (col_name, value)")
-          .where(col("value").isNotNull)
-        val orderStats = melted.groupBy("col_name").agg(
+        val orderStats = melt(df, cols).groupBy("col_name").agg(
           percentile_approx(col("value"), array(lit(0.25), lit(0.5), lit(0.75)),
             lit(cfg.approxPercentileAccuracy)).as("pcts"),
           approx_count_distinct(col("value"), cfg.approxRsd)
@@ -159,52 +206,8 @@ object Profiler {
               |'p75', round(pcts[2], 4)) as (metric, value)""".stripMargin))
         momentsLong.unionByName(orderStats.select("col_name", "metric", "value"))
       } else {
-        // Exact order stats in histogram form: pre-aggregate the melted
-        // relation to (col_name, value, count) — a fully parallel
-        // partial+final hash aggregate across ALL cores — then sort only
-        // the DISTINCT values per column (a running-count window) and pick
-        // the interpolation endpoints (linear, pandas/DuckDB quantile_cont
-        // semantics) from the cumulative ranges. Compared to ranking every
-        // raw row, the per-column sort shrinks by the duplication factor
-        // (flags/quantities/discounts collapse from millions of rows to
-        // dozens of values; the sort — the only #columns-bounded stage —
-        // sees orders of magnitude fewer rows), and the distinct count
-        // falls out of the same grouped relation for free. This also beats
-        // `percentile()` (a TypedImperativeAggregate building a
-        // value→count hashmap of the whole column per group) and
-        // two-phase count_distinct — and the hash aggregate spills
-        // gracefully at 100 TB.
-        import org.apache.spark.sql.expressions.Window
-        val stackArgs = cols.map(c => s"'$c', ${cleanedSql(df, c)}").mkString(", ")
-        val melted = df.selectExpr(
-          s"stack(${cols.length}, $stackArgs) as (col_name, value)")
-          .where(col("value").isNotNull)
-        val grouped = melted.groupBy("col_name", "value").agg(count(lit(1)).as("cnt"))
-        // values are distinct per column here, so the default RANGE frame
-        // equals ROWS and `cum` is an exact running row count. The
-        // per-column totals (row count n, distinct count dcv) come from a
-        // whole-partition window over the SAME (col_name) partitioning —
-        // NOT a separate `grouped.groupBy(col_name)` + broadcast join
-        // back: Catalyst plans that as a full second scan→melt→aggregate
-        // chain (exchange reuse does not fire across the two subtrees),
-        // doubling the query's heavy phase. The extra Window op shares
-        // the existing sort and adds no exchange.
-        val byVal = Window.partitionBy("col_name").orderBy("value")
-        val byCol = Window.partitionBy("col_name")
-        val cum = grouped.select(col("col_name"), col("value"), col("cnt"),
-            sum("cnt").over(byVal).cast(DoubleType).as("cum"),
-            sum("cnt").over(byCol).cast(DoubleType).as("n"),
-            count(lit(1)).over(byCol).cast(DoubleType).as("dcv"))
-        // a distinct value covers 0-based positions [cum-cnt, cum-1]
-        def pick(p: Double, end: Column => Column) =
-          min(when(end((col("n") - 1) * p) >= col("cum") - col("cnt") &&
-            end((col("n") - 1) * p) < col("cum"), col("value")))
-        def interp(p: Double): Column = {
-          val pos = (first(col("n")) - 1) * p
-          val frac = pos - floor(pos)
-          round(pick(p, floor) + (pick(p, ceil) - pick(p, floor)) * frac, 4)
-        }
-        val orderStats = cum.groupBy("col_name").agg(
+        // Exact order stats from the distinct-value census (see [[census]])
+        val orderStats = census(melt(df, cols)).groupBy("col_name").agg(
           first(col("dcv")).as("dc"),
           interp(0.25).as("p25v"), interp(0.5).as("medianv"), interp(0.75).as("p75v"))
           .select(col("col_name"), expr(
@@ -255,41 +258,20 @@ object Profiler {
     val df = graft.util.Parallelism.ensure(df0)
     val spark = df.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val cols = numericColumns(df)
     require(cols.nonEmpty, "no numeric columns to profile")
     val momentsLong = momentsLongOf(df, cols, cfg)
       .withColumn("within_bound", lit(null).cast("boolean"))
-    val stackArgs = cols.map(c => s"'$c', ${cleanedSql(df, c)}").mkString(", ")
     // two independent melt subtrees (sketch agg + exact census), same
     // trade as numericProfile's exact mode: re-scanning beats caching
     // the full-width melt
-    def melted = df.selectExpr(
-      s"stack(${cols.length}, $stackArgs) as (col_name, value)")
-      .where(col("value").isNotNull)
-    val approx = melted.groupBy("col_name").agg(
+    val approx = melt(df, cols).groupBy("col_name").agg(
       percentile_approx(col("value"), array(lit(0.25), lit(0.5), lit(0.75)),
         lit(cfg.approxPercentileAccuracy)).as("apcts"),
       approx_count_distinct(col("value"), cfg.approxRsd)
         .cast(DoubleType).as("adc"))
-    val grouped = melted.groupBy("col_name", "value")
-      .agg(count(lit(1)).as("cnt"))
-    val byVal = Window.partitionBy("col_name").orderBy("value")
-    val byCol = Window.partitionBy("col_name")
-    val cum = grouped.select(col("col_name"), col("value"), col("cnt"),
-      sum("cnt").over(byVal).cast(DoubleType).as("cum"),
-      sum("cnt").over(byCol).cast(DoubleType).as("n"),
-      count(lit(1)).over(byCol).cast(DoubleType).as("dcv"))
-    def pick(p: Double, end: Column => Column) =
-      min(when(end((col("n") - 1) * p) >= col("cum") - col("cnt") &&
-        end((col("n") - 1) * p) < col("cum"), col("value")))
-    def interp(p: Double): Column = {
-      val pos = (first(col("n")) - 1) * p
-      val frac = pos - floor(pos)
-      round(pick(p, floor) + (pick(p, ceil) - pick(p, floor)) * frac, 4)
-    }
     val qw = 0.01
-    val ex = cum.groupBy("col_name").agg(
+    val ex = census(melt(df, cols)).groupBy("col_name").agg(
       first(col("dcv")).as("dc"),
       interp(0.25).as("p25v"), interp(0.5).as("medianv"),
       interp(0.75).as("p75v"),
@@ -335,8 +317,8 @@ object Profiler {
   private def momentsLongOf(df: DataFrame, cols: Seq[String],
       cfg: ProfileConfig): DataFrame =
     cols.grouped(cfg.statColumnsPerJob).toSeq.map { batch =>
-      val wide = df.agg(momentExprs(df, batch.head, cfg).head,
-        batch.flatMap(c => momentExprs(df, c, cfg)).tail: _*)
+      val exprs = batch.flatMap(c => momentExprs(cleaned(df, c).cast(DoubleType), c))
+      val wide = df.agg(exprs.head, exprs.tail: _*)
       val stackArgs = batch.flatMap { c =>
         momentMetrics.map(m => s"'$c', '$m', `${c}__$m`")
       }.mkString(", ")
@@ -362,19 +344,95 @@ object Profiler {
       .orderBy("col_name", "metric")
   }
 
+  /** What the table monitor reports of one table: the NULL-or-NaN count of
+    * every column, in column order, and the non-NULL [[monitorMetrics]] of
+    * every numeric column as (column, metric, value), sorted by column and
+    * metric.
+    */
+  final case class MonitorProfile(nullCounts: Seq[(String, Long)],
+      stats: Seq[(String, String, Double)])
+
+  /** The statistics the table monitor reports per numeric column. */
+  val monitorMetrics: Seq[String] = Seq("max", "mean", "median", "min", "stddev")
+
+  /** The table monitor's profile in two aggregate queries:
+    *
+    *  - ONE wide aggregate (per `statColumnsPerJob` columns) holds every
+    *    column's null count, as [[nullCounts]] computes it, next to the
+    *    [[momentExprs]] of every numeric column. It reads the scan as it
+    *    is, without [[graft.util.Parallelism.ensure]]: its partial phase
+    *    is a codegen'd sum in the scan stage, cheaper than the round-robin
+    *    shuffle of every column that ensure would add as one more job;
+    *  - the median comes from the melted [[census]] alone (approx mode:
+    *    [[numericProfile]]'s `percentile_approx` sketch), with no metric
+    *    grid join and no sort.
+    *
+    * Its values are those of [[nullCounts]] over `df0` and of
+    * [[numericProfile]] over `df0.sample(false, sampleFraction, 42)` (all of
+    * `df0` at 1.0). Below 1.0 the null counts still cover the whole table,
+    * and the moments see the sampled rows through a `rand(42) <
+    * sampleFraction` flag set on the scan's own partitions: `df.sample`
+    * draws from the same generator with the same per-partition seed, once
+    * per row, so the flag keeps exactly the rows the sample keeps.
+    */
+  def monitorProfile(df0: DataFrame, sampleFraction: Double = 1.0,
+      cfg: ProfileConfig = ProfileConfig()): MonitorProfile = {
+    val sampled = sampleFraction < 1.0
+    val seed = 42L
+    val flag = "__graft_in_sample"
+    val df = if (sampled) df0.withColumn(flag, rand(seed) < sampleFraction) else df0
+    val fields = df0.schema.fields.toSeq
+    val perBatch = fields.grouped(cfg.statColumnsPerJob).toSeq.map { batch =>
+      val numeric = batch.filter(isNumeric).map(_.name)
+      val moments = numeric.flatMap { c =>
+        val v = cleaned(df, c).cast(DoubleType)
+        momentExprs(if (sampled) when(col(flag), v) else v, c)
+      }
+      val exprs = batch.map(nullCountExpr) ++ moments
+      val r = df.agg(exprs.head, exprs.tail: _*).collect().head
+      val nulls = batch.indices.map(i =>
+        batch(i).name -> (if (r.isNullAt(i)) 0L else r.getLong(i)))
+      val stats = for {
+        (c, j) <- numeric.zipWithIndex
+        (m, k) <- momentMetrics.zipWithIndex
+        i = batch.size + j * momentMetrics.size + k
+        if monitorMetrics.contains(m) && !r.isNullAt(i)
+      } yield (c, m, r.getDouble(i))
+      (nulls, stats)
+    }
+    val numeric = numericColumns(df0)
+    val medians = if (numeric.isEmpty) Nil else {
+      val melted = melt(graft.util.Parallelism.ensure(
+        if (sampled) df0.sample(withReplacement = false, sampleFraction, seed) else df0),
+        numeric)
+      val median =
+        if (cfg.exact) census(melted).groupBy("col_name").agg(interp(0.5))
+        else melted.groupBy("col_name").agg(round(percentile_approx(col("value"),
+          array(lit(0.25), lit(0.5), lit(0.75)), lit(cfg.approxPercentileAccuracy))(1), 4))
+      median.collect().toSeq.collect {
+        case r if !r.isNullAt(1) => (r.getString(0), "median", r.getDouble(1))
+      }
+    }
+    MonitorProfile(perBatch.flatMap(_._1),
+      (perBatch.flatMap(_._2) ++ medians).sortBy(s => (s._1, s._2)))
+  }
+
   /** Per-column null counts over ALL columns in one pass (SURVEY A6).
     * Returns a single wide row `null_<col>` per column.
     */
   def nullCounts(df0: DataFrame): DataFrame = {
     val df = graft.util.Parallelism.ensure(df0)
-    val exprs = df.schema.fields.toSeq.map { f =>
-      val isMissing = f.dataType match {
-        case DoubleType | FloatType => col(f.name).isNull || isnan(col(f.name))
-        case _ => col(f.name).isNull
-      }
-      sum(when(isMissing, 1L).otherwise(0L)).as(s"null_${f.name}")
-    }
+    val exprs = df.schema.fields.toSeq.map(f => nullCountExpr(f).as(s"null_${f.name}"))
     df.agg(exprs.head, exprs.tail: _*)
+  }
+
+  /** NULL-or-NaN count of one column (NULL over an empty input). */
+  private def nullCountExpr(f: StructField): Column = {
+    val isMissing = f.dataType match {
+      case DoubleType | FloatType => col(f.name).isNull || isnan(col(f.name))
+      case _ => col(f.name).isNull
+    }
+    sum(when(isMissing, 1L).otherwise(0L))
   }
 
   /** Duplicate-record count (SURVEY A5):
@@ -454,10 +512,7 @@ object Profiler {
           Option(b.getAs[java.lang.Double](s"${c}__hi")).map(_.toDouble))
       }.toMap
     }
-    val stackArgs = cols.map(c => s"'$c', ${cleanedSql(df, c)}").mkString(", ")
-    val melted = df.selectExpr(
-      s"stack(${cols.length}, $stackArgs) as (col_name, value)")
-      .where(col("value").isNotNull)
+    val melted = melt(df, cols)
     val bucket = cols.foldLeft(lit(-1L)) { (acc, c) =>
       bounds(c) match {
         case (Some(lo), Some(hi)) =>

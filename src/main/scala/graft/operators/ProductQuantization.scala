@@ -92,7 +92,12 @@ object ProductQuantization {
       vecCol: String = "embedding"): DataFrame = {
     // ONE cached subvector relation feeds codebook, encode AND the
     // query table (round-15: each consumer re-derived the full
-    // scan→slice-explode pipeline — the r14 graph-family pathology)
+    // scan→slice-explode pipeline — the r14 graph-family pathology).
+    // Footprint: the cache holds every vector's M subvector rows, i.e.
+    // about the whole embeddings corpus (plus a vec_id and m per
+    // subvector) at Dataset.cache()'s MEMORY_AND_DISK — compressed
+    // columnar batches, spilling to local disk past storage memory,
+    // kept until Caches.releaseAll.
     val sub = graft.util.Caches.cached(
       subvectors(embeddings, m, idCol, vecCol))
     val codebook = codebookFromIds(sub, codebookIds)

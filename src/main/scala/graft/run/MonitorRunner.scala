@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.catalog.CatalogMonitor
 import graft.core.{MetricSink, ProfileConfig, Profiler}
-import graft.state.StateStore
+import graft.state.{ChangeDetection, StateStore}
 import graft.storage.StorageMonitor
 
 /** End-to-end monitor entry points — one per reference template — each
@@ -87,31 +87,23 @@ object Monitors {
     Profiler.schemaReport(df).foreach { case (c, t, _) =>
       sink.logString(s"$table.schema.$c", t)
     }
-    Profiler.nullCounts(df).collect().headOption.foreach { r =>
-      df.columns.zipWithIndex.foreach { case (c, i) =>
-        sink.log(s"$table.null_count.$c", r.getLong(i).toDouble)
-      }
+    val profile = Profiler.monitorProfile(df, sampleFraction, cfg)
+    profile.nullCounts.foreach { case (c, n) =>
+      sink.log(s"$table.null_count.$c", n.toDouble)
     }
-    val sampled = if (sampleFraction >= 1.0) df
-      else df.sample(withReplacement = false, sampleFraction, seed = 42)
-    if (Profiler.numericColumns(sampled).nonEmpty)
-      Profiler.numericProfile(sampled, cfg).collect().foreach { r =>
-        if (!r.isNullAt(2) &&
-            Seq("min", "max", "mean", "median", "stddev").contains(r.getString(1)))
-          sink.log(s"$table.${r.getString(0)}.${r.getString(1)}", r.getDouble(2))
-      }
+    profile.stats.foreach { case (c, m, v) => sink.log(s"$table.$c.$m", v) }
     // state: delta + drift vs previous run (snowflake_table_monitor.py:97-113;
-    // delta corrected to current - previous per SURVEY §7.4)
+    // delta corrected to current - previous per SURVEY §7.4); both gets
+    // answer from the store's in-memory snapshot
     val prevCount = state.get(spark, table, "record_count").map(_.toLong)
     prevCount.foreach(p => sink.log(s"$table.record_delta", (recordCount - p).toDouble))
     val prevCols = state.get(spark, table, "columns").map(_.split(",").toSeq)
     prevCols.foreach { pc =>
-      val drift = graft.state.ChangeDetection.schemaDrift(pc, df.columns.toSeq, spark)
-        .collect()
+      val drift = ChangeDetection.schemaChanges(pc, df.columns.toSeq)
       sink.log(s"$table.columns_changed", if (drift.nonEmpty) 1.0 else 0.0)
-      drift.foreach(r => sink.logString(s"$table.column_${r.getString(0)}", r.getString(1)))
+      drift.foreach { case (change, c) => sink.logString(s"$table.column_$change", c) }
     }
-    // one snapshot rewrite for both keys (puts are serialized store-wide)
+    // one snapshot write for both keys (writes are serialized store-wide)
     state.putAll(spark, Seq(
       (table, "record_count", recordCount.toString),
       (table, "columns", df.columns.mkString(","))))
@@ -178,13 +170,14 @@ object MonitorRunner {
     val state = new StateStore(statePath)
     // Concurrent fan-out, like the reference's parallel Airflow tasks
     // (`snowflake_table_monitor.py:162-178`): each monitor is mostly
-    // blocking on its own Spark jobs, so driver threads keep the
-    // cluster saturated across targets (FAIR-friendly). Default 8 =
-    // one thread per warehouse table; the A/B at sf0.1 measured the
-    // full fan-out (q276) at ~0.55× the 4-thread wall time — the
-    // per-table jobs are small enough that 4 threads left the
-    // scheduler underfed. MetricSink is synchronized; StateStore
-    // serializes its snapshot rewrites.
+    // blocking on its own Spark jobs (about a dozen small ones per
+    // table), so driver threads keep the cluster saturated across
+    // targets (FAIR-friendly). Default 8 = one thread per warehouse
+    // table; the A/B at sf0.1 measured the full fan-out (q276) at
+    // ~0.55× the 4-thread wall time — the per-table jobs are small
+    // enough that 4 threads left the scheduler underfed. MetricSink is
+    // synchronized; the StateStore answers gets from its in-memory
+    // snapshot and serializes only its one-job snapshot writes.
     if (parallelism <= 1 || targets.size <= 1)
       targets.foreach(t => Monitors.tableMonitor(spark, dir, t, sink, state))
     else {

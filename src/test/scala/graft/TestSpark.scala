@@ -24,4 +24,20 @@ object TestSpark {
       case scala.util.control.NonFatal(_) => Thread.sleep(1500)
     }
   }
+
+  /** Spark jobs started while `body` runs, counted by a listener after
+    * the bus has drained on both sides.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    drainListenerBus()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drainListenerBus() }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
 }

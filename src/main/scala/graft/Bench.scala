@@ -29,7 +29,7 @@ object Bench {
     val shufRead = new AtomicLong; val shufWrite = new AtomicLong
     val spillMem = new AtomicLong; val spillDisk = new AtomicLong
     val gcMs = new AtomicLong; val taskMs = new AtomicLong
-    val peakMem = new AtomicLong; val events = new AtomicLong
+    val peakMem = new AtomicLong
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       if (m != null) {
@@ -40,33 +40,11 @@ object Bench {
         gcMs.addAndGet(m.jvmGCTime)
         taskMs.addAndGet(m.executorRunTime)
         peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        events.incrementAndGet()
         ()
       }
     }
     def snap(): Seq[Long] = Seq(shufRead.get, shufWrite.get,
       spillMem.get, spillDisk.get, gcMs.get, taskMs.get)
-  }
-
-  /** Drain the async listener bus so per-query metric deltas attribute
-    * to the query that produced them. `LiveListenerBus.waitUntilEmpty`
-    * is private[spark] (public in bytecode — reflection reaches it);
-    * the fallback polls the event counter until stable.
-    */
-  private def drainBus(spark: SparkSession, l: MetricsListener): Unit = {
-    val sc = spark.sparkContext
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      ()
-    } catch {
-      case NonFatal(_) =>
-        var last = -1L
-        var spins = 0
-        while (spins < 20 && l.events.get != last) {
-          last = l.events.get; Thread.sleep(15); spins += 1
-        }
-    }
   }
 
   /** Minimal extractor for the previous artifact's "queries" block —
@@ -374,10 +352,10 @@ object Bench {
     val telem = scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
     names.zipWithIndex.foreach { case ((name, fn), i) =>
       val t1 = timeOnce(fn)
-      drainBus(spark, ml)
+      graft.util.Sessions.drainListenerBus(spark)
       val before = ml.snap(); ml.peakMem.set(0L)
       val t2 = timeOnce(fn)
-      drainBus(spark, ml)
+      graft.util.Sessions.drainListenerBus(spark)
       val d = ml.snap().zip(before).map { case (a, b) => a - b }
       tries += name -> (t1, t2)
       qpos += name -> i

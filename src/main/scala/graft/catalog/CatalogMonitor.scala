@@ -22,11 +22,6 @@ import graft.Tables
   */
 object CatalogMonitor {
 
-  /** Session flag: "false" forces count jobs; "true" or unset take the
-    * metadata-only footer path (with automatic count fallback).
-    */
-  val FooterCountsKey = "graft.catalog.footerCounts"
-
   /** Spark's hidden-path convention: any path segment starting with
     * '_' or '.' is invisible to the file index (in-progress staging
     * files like `._part-*.parquet`, markers like `_SUCCESS`).
@@ -115,8 +110,8 @@ object CatalogMonitor {
     *    Arrow C++) skip NaN when computing FP stats, which matches the
     *    profiler's NaN→NULL `cleaned` contract exactly. A NaN that a
     *    legacy writer folded into a FINITE wrong bound is undetectable
-    *    here — callers who profile legacy-written FP data disable the
-    *    footer path via the config flag on the caller.
+    *    here — callers who profile legacy-written FP data pass
+    *    `tablePath = None` to `Profiler.numericHistograms`.
     *
     * Min/max convert to double monotonically (long→double rounding is
     * monotone, so double(min long) = min(double longs) — same value the
@@ -202,10 +197,9 @@ object CatalogMonitor {
     * catalog's `row_count` instead of scanning). Any table the footer
     * path can't answer — no visible parquet files, unreadable footer —
     * automatically falls back to a `count()` job for THAT table.
-    * Setting [[FooterCountsKey]] to "false" forces count jobs
-    * everywhere; values are identical by construction (both read the
-    * same footer counts), so the q18 oracle hash is flag-independent —
-    * Round10dSpec pins both that and the fallback edges.
+    * Values equal `Tables.load(…).count()` by construction (both read
+    * the same footer counts) — Round10dSpec pins that and the fallback
+    * edges.
     */
   def tableRowCounts(spark: SparkSession, dir: String,
       tables: Seq[String] = Tables.all): DataFrame = {
@@ -213,17 +207,13 @@ object CatalogMonitor {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val forceJobs =
-      spark.conf.getOption(FooterCountsKey).contains("false")
     // per-table work submitted concurrently so the cluster (or, on the
     // footer path, the filesystem) pipelines it — FAIR-scheduler
     // friendly at 1000-table scale
     val counts = Await.result(
       Future.traverse(tables) { t =>
-        Future((t,
-          (if (forceJobs) None
-           else footerRowCount(spark, Tables.path(dir, t)))
-            .getOrElse(Tables.load(spark, dir, t).count())))
+        Future((t, footerRowCount(spark, Tables.path(dir, t))
+          .getOrElse(Tables.load(spark, dir, t).count())))
       },
       Duration.Inf)
     counts.toDF("table_name", "row_count").orderBy("table_name")

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Mergeable moment profiles — the exact-statistics counterpart of
@@ -31,26 +31,38 @@ object MomentState {
     val df = graft.util.Parallelism.ensure(df0)
     val cols = Profiler.numericColumns(df)
     require(cols.nonEmpty, "no numeric columns to profile")
+    val a = aggs(cols)
+    df.agg(a.head, a.tail: _*).select(melt(cols)).select("r.*")
+  }
+
+  /** The six sufficient-statistic aggregates of each of `cols`, as
+    * `<c>__n`, `<c>__nn`, `<c>__mn`, `<c>__mx`, `<c>__s`, `<c>__ss`
+    * (shared with [[graft.streaming.StreamingOps.momentStateStream]]).
+    */
+  private[graft] def aggs(cols: Seq[String]): Seq[Column] = {
     def v(c: String) = {
       val d = col(c).cast("double")
       when(isnan(d), lit(null)).otherwise(d)
     }
     def vm(c: String) = round(v(c) * 1e6).cast("long")
-    val aggs = cols.flatMap { c =>
+    cols.flatMap { c =>
       Seq(count(v(c)).as(s"${c}__n"),
         sum(when(v(c).isNull, 1L).otherwise(0L)).as(s"${c}__nn"),
         min(vm(c)).as(s"${c}__mn"), max(vm(c)).as(s"${c}__mx"),
         sum(vm(c).cast(dec)).as(s"${c}__s"),
         sum((vm(c).cast(dec) * vm(c).cast(dec))).as(s"${c}__ss"))
     }
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(explode(array(cols.map(c => struct(
-        lit(c).as("col_name"), col(s"${c}__n").as("n"),
-        col(s"${c}__nn").as("n_null"), col(s"${c}__mn").as("min_micro"),
-        col(s"${c}__mx").as("max_micro"), col(s"${c}__s").as("sum_micro"),
-        col(s"${c}__ss").as("sum_sq"))): _*)).as("r"))
-      .select("r.*")
   }
+
+  /** [[aggs]]' wide row melted to one `r` struct per column: (col_name,
+    * n, n_null, min_micro, max_micro, sum_micro, sum_sq).
+    */
+  private[graft] def melt(cols: Seq[String]): Column =
+    explode(array(cols.map(c => struct(
+      lit(c).as("col_name"), col(s"${c}__n").as("n"),
+      col(s"${c}__nn").as("n_null"), col(s"${c}__mn").as("min_micro"),
+      col(s"${c}__mx").as("max_micro"), col(s"${c}__s").as("sum_micro"),
+      col(s"${c}__ss").as("sum_sq"))): _*)).as("r")
 
   /** Union-merge of state relations — exact, order-independent,
     * stat-grain (one row per column per input).

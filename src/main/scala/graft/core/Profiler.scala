@@ -46,13 +46,6 @@ case class ProfileConfig(
   */
 object Profiler {
 
-  /** Session flag: "false" forces the histogram bounds aggregation job
-    * even when a tablePath is supplied (the catalog footerCounts
-    * convention — e.g. legacy-written FP parquet whose NaN handling
-    * predates exact statistics).
-    */
-  val FooterBoundsKey = "graft.profiler.footerBounds"
-
   /** Statistic names emitted per numeric column, in emission order. */
   val numericMetrics: Seq[String] =
     Seq("count", "null_count", "distinct_count", "min", "max", "mean",
@@ -493,14 +486,13 @@ object Profiler {
     // the histogram is ONE job at any scale. footerNumericBounds
     // returns None unless every column's bounds are provably exact
     // (type/annotation/NaN/all-null rules in its scaladoc), so this is
-    // never a silent approximation; FooterBoundsKey="false" forces the
-    // agg job (the footerCounts convention).
-    val footer = tablePath.filterNot(_ =>
-      df.sparkSession.conf.getOption(FooterBoundsKey).contains("false"))
-      .flatMap { p =>
-        graft.catalog.CatalogMonitor.footerNumericBounds(
-          df.sparkSession, p, cols.map(c => c -> df.schema(c).dataType))
-      }
+    // never a silent approximation; `tablePath = None` takes the agg job
+    // (e.g. for legacy-written FP parquet whose NaN handling predates
+    // exact statistics).
+    val footer = tablePath.flatMap { p =>
+      graft.catalog.CatalogMonitor.footerNumericBounds(
+        df.sparkSession, p, cols.map(c => c -> df.schema(c).dataType))
+    }
     val bounds = footer.getOrElse {
       val boundExprs = cols.flatMap { c =>
         val v = cleaned(df, c).cast(DoubleType)

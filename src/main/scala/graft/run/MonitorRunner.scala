@@ -74,11 +74,8 @@ object Monitors {
     // footer row count, count() fallback (round-15, guide §6): same
     // convention as CatalogMonitor.tableRowCounts (q18) — parquet footer
     // counts are exact by format contract, so this removes one full-scan
-    // job per monitored table with a value identical by construction;
-    // FooterCountsKey="false" forces the count job as everywhere else
-    val recordCount = (if (spark.conf.getOption(CatalogMonitor.FooterCountsKey)
-        .contains("false")) None
-      else CatalogMonitor.footerRowCount(spark, Tables.path(dir, table)))
+    // job per monitored table with a value identical by construction
+    val recordCount = CatalogMonitor.footerRowCount(spark, Tables.path(dir, table))
       .getOrElse(df.count())
     sink.log(s"$table.record_count", recordCount.toDouble)
     sink.log(s"$table.duplicate_count",

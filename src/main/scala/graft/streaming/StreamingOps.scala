@@ -719,31 +719,12 @@ object StreamingOps {
       watermarkDelay: String, cols: Seq[String],
       tsCol: String = "ts"): DataFrame = {
     require(cols.nonEmpty, "no columns to profile")
-    val dec = "decimal(38,0)"
-    def v(c: String) = {
-      val d = col(c).cast("double")
-      when(isnan(d), lit(null)).otherwise(d)
-    }
-    def vm(c: String) = round(v(c) * 1e6).cast("long")
-    val aggs = cols.flatMap { c =>
-      Seq(count(v(c)).as(s"${c}__n"),
-        sum(when(v(c).isNull, 1L).otherwise(0L)).as(s"${c}__nn"),
-        min(vm(c)).as(s"${c}__mn"), max(vm(c)).as(s"${c}__mx"),
-        sum(vm(c).cast(dec)).as(s"${c}__s"),
-        sum((vm(c).cast(dec) * vm(c).cast(dec))).as(s"${c}__ss"))
-    }
+    val aggs = graft.core.MomentState.aggs(cols)
     events.withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowLen))
       .agg(aggs.head, aggs.tail: _*)
       .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        explode(array(cols.map(c => struct(
-          lit(c).as("col_name"), col(s"${c}__n").as("n"),
-          col(s"${c}__nn").as("n_null"),
-          col(s"${c}__mn").as("min_micro"),
-          col(s"${c}__mx").as("max_micro"),
-          col(s"${c}__s").as("sum_micro"),
-          col(s"${c}__ss").as("sum_sq"))): _*)).as("r"))
+        col("window.end").as("window_end"), graft.core.MomentState.melt(cols))
       .select(col("window_start"), col("window_end"), col("r.*"))
   }
 

@@ -31,11 +31,11 @@ object Parallelism {
     * deterministic whole-row hash key — `pmod(xxhash64(all cols),
     * 100·n)` — instead of round-robin, to skip round-robin's local
     * sort-before-repartition. An ISOLATED scan→repartition→noop probe
-    * (tools/RepartProbe, lineitem sf0.1) read the hash leg 1.67×
-    * faster, but IN-QUERY the verdict inverts: evaluating xxhash64
-    * over every column of a WIDE row (16 lineitem columns, or a
-    * documents row whose text is KBs) costs far more than the sort it
-    * replaces — interleaved StageProbe on q14_dupes put the 3-task
+    * (lineitem sf0.1) read the hash leg 1.67× faster, but IN-QUERY the
+    * verdict inverts: evaluating xxhash64 over every column of a WIDE
+    * row (16 lineitem columns, or a documents row whose text is KBs)
+    * costs far more than the sort it replaces — interleaved per-stage
+    * timing (`tools.Probe stages`) on q14_dupes put the 3-task
     * guard stage at 456–496 ms hashed vs 99–105 ms round-robin, and
     * the full-bench A/B read q10_null_counts +78% / q14_dupes +120%
     * with NO end-to-end win on any other query (q11 exactly flat: the

@@ -17,4 +17,22 @@ object Sessions {
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Drain the async listener bus, so a listener has seen every event
+    * of the actions that already returned before it is read or removed
+    * (a fixed sleep drops late events under load and lets per-query
+    * deltas leak into the next query). The bus's own drain is
+    * private[spark] but public in bytecode, so reflection reaches it;
+    * if it is unreachable or times out, wait a fixed 1.5 s instead.
+    */
+  def drainListenerBus(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      ()
+    } catch {
+      case scala.util.control.NonFatal(_) => Thread.sleep(1500)
+    }
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.plans.PlanLeaves
 import graft.sources.Sinks
 
 /** Physical-plan assertions: the plans the 100 TB design story depends on
@@ -19,25 +20,8 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
-  /** Leaf nodeName → count, by TREE traversal: the string form reprints
-    * cached-relation fill plans under every InMemoryTableScan, so
-    * substring counting over-reports scans for cache-backed plans.
-    */
-  private def leafCounts(name: String): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
-    leaves(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
-  }
-
-  private def parquetLeaves(m: Map[String, Int]): Int =
-    m.collect { case (k, v) if k.startsWith("Scan parquet") => v }.sum
+  private def leafCounts(name: String): Map[String, Int] =
+    PlanLeaves.counts(SparkEntry.queries(name)(spark, sf))
 
   test("q02: predicate and projection push down to the parquet scan") {
     val p = plan("q02_filter_project")
@@ -241,7 +225,7 @@ class PlanSpec extends AnyFunSuite {
     // accounting ran the membership join AND the kept-set derivation
     // as separate lineages (4 scans)
     val ls = leafCounts("q67_incremental_dedup")
-    assert(parquetLeaves(ls) == 2,
+    assert(PlanLeaves.parquetScans(ls) == 2,
       s"expected exactly incoming+existing scans: $ls\n$p")
     assert(!p.contains("CartesianProduct"), s"membership join regressed:\n$p")
   }
@@ -439,7 +423,7 @@ class PlanSpec extends AnyFunSuite {
     val ls = leafCounts("q99_rolling_activity")
     assert(ls.getOrElse("InMemoryTableScan", 0) >= 3,
       s"a consumer bypassed the day-user cache: $ls\n$p")
-    assert(parquetLeaves(ls) == 0,
+    assert(PlanLeaves.parquetScans(ls) == 0,
       s"a consumer re-scanned events past the cache: $ls\n$p")
   }
 
@@ -523,7 +507,7 @@ class PlanSpec extends AnyFunSuite {
     // relation broadcasts.
     val p = plan("q167_assoc_rules")
     val ls = leafCounts("q167_assoc_rules")
-    assert(parquetLeaves(ls) == 0,
+    assert(PlanLeaves.parquetScans(ls) == 0,
       s"a rule stage re-scanned lineitem past the basket cache: $ls\n$p")
     assert(ls.getOrElse("InMemoryTableScan", 0) >= 3,
       s"expected the basket/item caches to feed every stage: $ls\n$p")

@@ -6,27 +6,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.catalog.CatalogMonitor
 
 /** Round-10 part four: the parquet-footer row-count fast path.
-  * SURVEY §4.2's metadata-only option for plain counts, now real: the
-  * flag flips `tableRowCounts` from one count job per table to direct
-  * footer sums. The spec pins (a) value equality with the count-job
-  * path — so the q18 oracle hash is flag-independent — and (b) that the
-  * footer path performs ZERO file-input IO on the executors: no task
-  * reads a byte or a record from any data file.
+  * SURVEY §4.2's metadata-only option for plain counts, now real:
+  * `tableRowCounts` answers from direct footer sums instead of one count
+  * job per table. The spec pins (a) value equality with
+  * `Tables.load(…).count()` per table — so the q18 oracle hash is
+  * path-independent — and (b) that the footer path performs ZERO
+  * file-input IO on the executors: no task reads a byte or a record
+  * from any data file.
   */
 class Round10dSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def withFooterFlag[T](on: Boolean)(body: => T): T = {
-    val key = CatalogMonitor.FooterCountsKey
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, on.toString)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** The reference relation: one count job per table. */
+  private def countJobs(): Seq[(String, Long)] =
+    Tables.all.sorted.map(t => t -> Tables.load(spark, sf, t).count())
+
+  private def footerCounts(): Seq[(String, Long)] =
+    CatalogMonitor.tableRowCounts(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
 
   /** (input bytes, input records, tasks) across all tasks in `body`. */
   private def taskInput(body: => Unit): (Long, Long, Long) = {
@@ -51,14 +49,8 @@ class Round10dSpec extends AnyFunSuite {
   }
 
   test("footer path returns exactly the count-job path's relation") {
-    val jobs = withFooterFlag(on = false) {
-      CatalogMonitor.tableRowCounts(spark, sf).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toSeq
-    }
-    val footers = withFooterFlag(on = true) {
-      CatalogMonitor.tableRowCounts(spark, sf).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toSeq
-    }
+    val jobs = countJobs()
+    val footers = footerCounts()
     assert(jobs.nonEmpty && footers === jobs, s"jobs=$jobs footers=$footers")
   }
 
@@ -66,9 +58,7 @@ class Round10dSpec extends AnyFunSuite {
     "executors (metadata-only, q18 shape)") {
     var rows: Long = 0L
     val (bytes, recs, _) = taskInput {
-      rows = withFooterFlag(on = true) {
-        CatalogMonitor.tableRowCounts(spark, sf).collect().length.toLong
-      }
+      rows = CatalogMonitor.tableRowCounts(spark, sf).collect().length.toLong
     }
     assert(rows === Tables.all.size.toLong)
     assert(bytes === 0L && recs === 0L,
@@ -77,33 +67,17 @@ class Round10dSpec extends AnyFunSuite {
 
   test("count-job control: the forced-jobs path DOES schedule scan " +
     "tasks (the contrast that makes the zero-IO assertion meaningful)") {
-    val (_, _, tasks) = taskInput {
-      withFooterFlag(on = false) {
-        CatalogMonitor.tableRowCounts(spark, sf).collect()
-      }
-    }
+    val (_, _, tasks) = taskInput { countJobs() }
     assert(tasks > 0L, "expected at least one task on the count-job path")
   }
 
   test("footer path is the DEFAULT: flag unset performs zero executor " +
     "file IO and matches the forced-jobs relation") {
-    val key = CatalogMonitor.FooterCountsKey
-    val old = spark.conf.getOption(key)
-    spark.conf.unset(key)
-    try {
-      var rel: Seq[(String, Long)] = Nil
-      val (bytes, recs, _) = taskInput {
-        rel = CatalogMonitor.tableRowCounts(spark, sf).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toSeq
-      }
-      assert(bytes === 0L && recs === 0L,
-        s"default path must be metadata-only: bytes=$bytes recs=$recs")
-      val jobs = withFooterFlag(on = false) {
-        CatalogMonitor.tableRowCounts(spark, sf).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toSeq
-      }
-      assert(rel === jobs)
-    } finally old.foreach(spark.conf.set(key, _))
+    var rel: Seq[(String, Long)] = Nil
+    val (bytes, recs, _) = taskInput { rel = footerCounts() }
+    assert(bytes === 0L && recs === 0L,
+      s"default path must be metadata-only: bytes=$bytes recs=$recs")
+    assert(rel === countJobs())
   }
 
   test("footer path sees Spark's file set on a PARTITIONED layout: " +

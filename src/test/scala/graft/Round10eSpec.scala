@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.PlanLeaves
+
 /** Round-10 scan-shape gates: the Round7h/8f/9e net extended to EVERY
   * query at or above 0.5 s in the committed quiet bench — plan creep of
   * the q215 class (an extra scan appearing through a refactor) is now
   * caught at spec time for the whole heavy tail instead of two rounds
-  * late by bench drift. Each bound is the audited FinalPlanProbe count
+  * late by bench drift. Each bound is the audited final-plan leaf count
   * at the time of freezing: tree-traversed final adaptive plans (string
   * forms double-count under AQE/caches), one parquet leaf per distinct
   * input table unless the operator deliberately takes a second pass
@@ -18,25 +20,13 @@ class Round10eSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def leafCounts(name: String): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect() // finalize AQE
-    val m = leaves(df.queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
+    val m = PlanLeaves.counts(df)
     graft.util.Caches.releaseAll()
     spark.sharedState.cacheManager.clearCache()
     m
   }
-
-  private def parquet(m: Map[String, Int]): Int =
-    m.collect { case (k, v) if k.startsWith("Scan parquet") => v }.sum
 
   private val gates: Seq[(String, Int)] = Seq(
     // iterative graph/clustering: census cached, rounds checkpointed
@@ -115,7 +105,7 @@ class Round10eSpec extends AnyFunSuite {
     // RDD/write-jobs; the returned relation is local)
     "q275_compaction_execute" -> 0,
     // round-11: the 13 queries that crossed 0.5 s on the r11 host,
-    // each frozen at its audited FinalPlanProbe count
+    // each frozen at its audited final-plan leaf count
     "q171_conversion_latency" -> 0,  // event census cached (3 IMR scans)
     "q73_unigram_lm" -> 2,           // corpus + heldout side, exch reused
     "q79_corpus_diff" -> 2,          // one pass per compared slice
@@ -141,7 +131,7 @@ class Round10eSpec extends AnyFunSuite {
   gates.foreach { case (name, maxLeaves) =>
     test(s"$name: ≤ $maxLeaves parquet leaves in the final plan") {
       val ls = leafCounts(name)
-      val n = parquet(ls)
+      val n = PlanLeaves.parquetScans(ls)
       assert(n <= maxLeaves,
         s"$name grew a re-scan: $n parquet leaves (max $maxLeaves) in $ls")
     }

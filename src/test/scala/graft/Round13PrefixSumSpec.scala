@@ -94,49 +94,32 @@ class Round13PrefixSumSpec extends AnyFunSuite {
   test("construction runs at most ONE Spark job — the probe — and the " +
     "pinned bucket path runs ZERO (the amortization contract)") {
     import spark.implicits._
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val cen = (0L until 1000L).map(v => v -> 1L).toDF("v", "c")
-    spark.sparkContext.addSparkListener(listener)
     try {
-      TestSpark.drainListenerBus()
-      val before = jobs.get()
-      val out = PrefixSum.cumBefore(cen, "v", "c", "cb",
+      lazy val out = PrefixSum.cumBefore(cen, "v", "c", "cb",
         "Round13PrefixSumSpec")
-      out.queryExecution.optimizedPlan // force analysis+optimization too
-      TestSpark.drainListenerBus()
+      // force analysis+optimization too
+      val jobs = TestSpark.jobsDuring { out.queryExecution.optimizedPlan }
       // the probe is ONE action; through the internal census cache the
       // CollectLimit may scan in two incremental partition batches
       // (cache fill + remainder), so allow 2 driver-side jobs — the
       // r12 design's floor was 2 FULL census aggregations plus a cache
       // fill, so this still strictly dominates
-      assert(jobs.get() <= before + 2,
+      assert(jobs <= 2,
         "hybrid cumBefore construction costs at most the one probe " +
-          s"action (saw ${jobs.get() - before} jobs)")
+          s"action (saw $jobs jobs)")
       // and the stat-path plan still computes the right thing
       val got = out.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
       assert(got === (0L until 1000L).map(v => v -> v).toMap)
 
-      TestSpark.drainListenerBus()
-      val beforeLazy = jobs.get()
-      val lazyOut = PrefixSum.cumBefore(cen, "v", "c", "cb",
+      lazy val lazyOut = PrefixSum.cumBefore(cen, "v", "c", "cb",
         "Round13PrefixSumSpec", buckets = 8)
-      lazyOut.queryExecution.optimizedPlan
-      TestSpark.drainListenerBus()
-      assert(jobs.get() === beforeLazy,
+      assert(TestSpark.jobsDuring { lazyOut.queryExecution.optimizedPlan } === 0,
         "the pinned bucket path must be fully lazy — zero driver actions")
       val gotLazy = lazyOut.collect()
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
       assert(gotLazy === (0L until 1000L).map(v => v -> v).toMap)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      graft.util.Caches.releaseAll()
-    }
+    } finally graft.util.Caches.releaseAll()
   }
 
   test("cumBeforeBy: per-group exclusive prefix sums, one probe, " +

@@ -24,9 +24,7 @@ class Round14Spec extends AnyFunSuite {
 
   private def histBoth(df: DataFrame, path: String): (Seq[String], Seq[String]) = {
     val footer = sortedRows(Profiler.numericHistograms(df, 10, Some(path)))
-    spark.conf.set(Profiler.FooterBoundsKey, "false")
-    val agg = try sortedRows(Profiler.numericHistograms(df, 10, Some(path)))
-      finally spark.conf.unset(Profiler.FooterBoundsKey)
+    val agg = sortedRows(Profiler.numericHistograms(df, 10, None))
     (footer, agg)
   }
 
@@ -38,24 +36,10 @@ class Round14Spec extends AnyFunSuite {
     assert(footer === agg)
     assert(footer.nonEmpty)
     // job-count proof: the footer path must not run the bounds job
-    def jobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { body; TestSpark.drainListenerBus() }
-      finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
-    val withFooter = jobs {
+    val withFooter = TestSpark.jobsDuring {
       Profiler.numericHistograms(df, 10, Some(path)).collect() }
-    spark.conf.set(Profiler.FooterBoundsKey, "false")
-    val withAgg = try jobs {
-      Profiler.numericHistograms(df, 10, Some(path)).collect() }
-      finally spark.conf.unset(Profiler.FooterBoundsKey)
+    val withAgg = TestSpark.jobsDuring {
+      Profiler.numericHistograms(df, 10, None).collect() }
     assert(withFooter < withAgg,
       s"footer path ran $withFooter jobs, agg path $withAgg")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Anomaly, Constraints}
+import graft.plans.PlanLeaves
 
 /** Part-eight operators — the data-observability judgement layer:
   * declarative constraint suites, referential-integrity audits, and
@@ -270,17 +271,8 @@ class Round5hSpec extends AnyFunSuite {
   test("q118: exactly one scan per side per candidate (tree-counted)") {
     // 5 candidates × (1 child + 1 parent) = 10 parquet leaves; the
     // parent's row/key totals ride its key relation, no second lineage
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
-    val n = leaves(SparkEntry.queries("q118_fk_discovery")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan)
-      .count(_.startsWith("Scan parquet"))
+    val n = PlanLeaves.parquetScans(PlanLeaves.counts(SparkEntry.queries(
+      "q118_fk_discovery")(spark, "/root/testdata/sf0.001")))
     assert(n == 2 * graft.registry.MonitorQueries.FkCandidates.size,
       s"expected 2 parquet leaves per candidate, got $n total")
   }

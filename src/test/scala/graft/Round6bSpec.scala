@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Correlate, Evaluation, Graph, Privacy, TimeSeries}
+import graft.plans.PlanLeaves
 
 /** Round-6 part three: graph analytics, evaluation, privacy, MI, trend.
   * Hand-computed toys pin every closed-form core; plan gates hold the
@@ -179,29 +180,16 @@ class Round6bSpec extends AnyFunSuite {
 
   // ------------------------------------------------------------ plan gates
 
-  private def leafCounts(name: String): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
-    leaves(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
-  }
-
-  private def parquetLeaves(m: Map[String, Int]): Int =
-    m.collect { case (k, v) if k.startsWith("Scan parquet") => v }.sum
+  private def leafCounts(name: String): Map[String, Int] =
+    PlanLeaves.counts(SparkEntry.queries(name)(spark, sf))
 
   test("plan gates: single-scan audits, two-scan frozen-bounds reports") {
     // one scan: the aggregate-only shapes
     for (q <- Seq("q131_k_anonymity", "q132_auc", "q134_mutual_information"))
-      assert(parquetLeaves(leafCounts(q)) == 1, s"$q scans != 1")
+      assert(PlanLeaves.parquetScans(leafCounts(q)) == 1, s"$q scans != 1")
     // two scans: main pass + the 1-row broadcast bounds relation
     for (q <- Seq("q133_calibration", "q135_trend"))
-      assert(parquetLeaves(leafCounts(q)) <= 2, s"$q scans > 2")
+      assert(PlanLeaves.parquetScans(leafCounts(q)) <= 2, s"$q scans > 2")
   }
 
   test("plan gates: no product joins in the graph queries") {

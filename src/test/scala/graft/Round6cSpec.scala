@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Cdc, Concentration, Correlate}
+import graft.plans.PlanLeaves
 
 /** Round-6 part four: chi-square independence, Gini concentration, CDC
   * latest-wins apply. Toys pin the closed forms (independence → 0,
@@ -118,27 +119,15 @@ class Round6cSpec extends AnyFunSuite {
   // ----------------------------------------------------------- plan gates
 
   private def leafCounts(name: String): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect()
-    leaves(df.queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
+    PlanLeaves.counts(df)
   }
 
-  private def parquetLeaves(m: Map[String, Int]): Int =
-    m.collect { case (k, v) if k.startsWith("Scan parquet") => v }.sum
-
   test("plan gates: q136 one cached census scan; q137 one scan; q138 two") {
-    assert(parquetLeaves(leafCounts("q136_chi_square")) <= 1)
-    assert(parquetLeaves(leafCounts("q137_gini")) == 1)
-    assert(parquetLeaves(leafCounts("q138_cdc_snapshot")) == 2)
+    assert(PlanLeaves.parquetScans(leafCounts("q136_chi_square")) <= 1)
+    assert(PlanLeaves.parquetScans(leafCounts("q137_gini")) == 1)
+    assert(PlanLeaves.parquetScans(leafCounts("q138_cdc_snapshot")) == 2)
     graft.util.Caches.releaseAll()
   }
 }

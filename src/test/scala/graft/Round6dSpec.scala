@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Graph, Similarity, Standardize}
+import graft.plans.PlanLeaves
 
 /** Round-6 part five: Gram-aggregate covariance, frontier BFS, quantile
   * normalization. The Gram aggregate gets a differential test against a
@@ -130,27 +131,15 @@ class Round6dSpec extends AnyFunSuite {
   // ----------------------------------------------------------- plan gates
 
   private def leafCounts(name: String): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect()
-    leaves(df.queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
+    PlanLeaves.counts(df)
   }
-
-  private def parquetLeaves(m: Map[String, Int]): Int =
-    m.collect { case (k, v) if k.startsWith("Scan parquet") => v }.sum
 
   test("plan gates: q140 one scan into one aggregate; q141 one cached scan") {
     val l140 = leafCounts("q140_embedding_cov")
-    assert(parquetLeaves(l140) == 1)
-    assert(parquetLeaves(leafCounts("q141_quantile_norm")) <= 1)
+    assert(PlanLeaves.parquetScans(l140) == 1)
+    assert(PlanLeaves.parquetScans(leafCounts("q141_quantile_norm")) <= 1)
     graft.util.Caches.releaseAll()
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.PlanLeaves
+
 /** Round-7 part three: tree-probe scan-shape gates over the post-audit
   * additions q188–q200 and the round-7 queries — extends PlanSpec's
   * regression net so none of these silently grows a re-scan. Counts
@@ -13,25 +15,13 @@ class Round7hSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def leafCounts(name: String): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect() // finalize AQE
-    val m = leaves(df.queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
+    val m = PlanLeaves.counts(df)
     graft.util.Caches.releaseAll()
     spark.sharedState.cacheManager.clearCache()
     m
   }
-
-  private def parquet(m: Map[String, Int]): Int =
-    m.collect { case (k, v) if k.startsWith("Scan parquet") => v }.sum
 
   /** (query, max parquet leaves, cache-backed allowed). The bound is
     * the count the operator's design needs — one leaf per distinct
@@ -84,7 +74,7 @@ class Round7hSpec extends AnyFunSuite {
   gates.foreach { case (name, maxLeaves) =>
     test(s"$name: ≤ $maxLeaves parquet leaves in the final plan") {
       val ls = leafCounts(name)
-      val n = parquet(ls)
+      val n = PlanLeaves.parquetScans(ls)
       assert(n <= maxLeaves,
         s"$name grew a re-scan: $n parquet leaves (max $maxLeaves) in $ls")
     }

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.PlanLeaves
+
 /** Round-8 scan-shape gates over q226–q237 — the Round7hSpec net
   * extended so none of the round-8 operators silently grows a
   * re-scan. Counts are TREE-traversed final adaptive plans.
@@ -11,25 +13,13 @@ class Round8fSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def leafCounts(name: String): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case l if l.children.isEmpty && l.subqueries.isEmpty => Seq(l.nodeName)
-      case n => (n.children ++ n.subqueries).flatMap(leaves)
-    }
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect() // finalize AQE
-    val m = leaves(df.queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
+    val m = PlanLeaves.counts(df)
     graft.util.Caches.releaseAll()
     spark.sharedState.cacheManager.clearCache()
     m
   }
-
-  private def parquet(m: Map[String, Int]): Int =
-    m.collect { case (k, v) if k.startsWith("Scan parquet") => v }.sum
 
   private val gates: Seq[(String, Int)] = Seq(
     "q226_winnowing" -> 0,            // selected-fingerprint cache
@@ -72,7 +62,7 @@ class Round8fSpec extends AnyFunSuite {
   gates.foreach { case (name, maxLeaves) =>
     test(s"$name: ≤ $maxLeaves parquet leaves in the final plan") {
       val ls = leafCounts(name)
-      val n = parquet(ls)
+      val n = PlanLeaves.parquetScans(ls)
       assert(n <= maxLeaves,
         s"$name grew a re-scan: $n parquet leaves (max $maxLeaves) in $ls")
     }

@@ -21,20 +21,24 @@ def first_sentence(doc: str) -> str:
     s = (m.group(1) if m else txt).strip()
     return s if len(s) <= 220 else s[:217] + "..."
 
+# one scaladoc block and the whitespace after it; the body never spans a
+# `*/`, so a block followed by code cannot pair with a later decl
+DOC = r"(?:/\*\*((?:(?!\*/).)*)\*/\s*)"
+
 def top_doc_and_objects(path: str):
     """[(name, one-liner)] for each top-level decl, each paired with the
     scaladoc block immediately preceding IT (files hold several objects)."""
     text = open(path).read()
     out = []
     for m in re.finditer(
-            r"(?:/\*\*(.*?)\*/\s*)?^(?:final\s+)?(?:case\s+)?"
-            r"(?:object|class|trait)\s+(\w+)",
+            DOC + r"?^(?:final\s+)?(?:case\s+)?(?:object|class|trait)\s+(\w+)",
             text, flags=re.S | re.M):
         doc = first_sentence(m.group(1)) if m.group(1) else ""
         out.append((m.group(2), doc))
     # an undocumented decl inherits the file's first doc block (the
     # common layout: one file-level scaladoc, several small objects)
-    file_doc = next((d for _, d in out if d), "")
+    first = re.search(DOC, text, flags=re.S)
+    file_doc = first_sentence(first.group(1)) if first else ""
     return [(n, d or file_doc) for n, d in out]
 
 def main():

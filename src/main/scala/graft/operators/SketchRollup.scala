@@ -37,7 +37,7 @@ object SketchRollup {
     * 100 TB path — exact weekly distincts must touch every event and
     * do not roll up from stored daily state; this is the
     * oracle-checkable reference (q153a) that pins the rollup's
-    * bucketing/accounting exactly and that SketchRollupSpec's accuracy
+    * bucketing/accounting exactly and that Round6hSpec's accuracy
     * band compares the estimate against.
     *
     * Output: (week_start, n_days, n_rows, distinct_exact).

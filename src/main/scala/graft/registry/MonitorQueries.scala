@@ -346,7 +346,7 @@ object MonitorQueries extends QueryModule {
 
     // S12/S13: distributed object-store inventory over the fixture dir
     // (path/size/mtime relation). No SQL oracle — DuckDB can't stat files;
-    // covered by StorageMonitorSpec + driver rows-only check.
+    // covered by MonitorsSpec + driver rows-only check.
     QueryDef("q27_storage_inventory", (s, dir) => {
       StorageMonitor.inventory(s, Seq(dir))
         .select(col("file_name"), col("size_bytes"), col("content_type"),

@@ -557,7 +557,7 @@ object TextQueries extends QueryModule {
 
     // PII scrub report: per-rule match totals + clean-doc counts. (The
     // fixture corpus is digit-/@-free so totals are 0 there — the rule
-    // behavior itself is pinned by ScrubSpec on synthetic PII rows; this
+    // behavior itself is pinned by Round3Spec on synthetic PII rows; this
     // query exercises the full scan-stage scrub plan and its oracle.)
     QueryDef("q57_pii_scrub", (s, dir) => Scrub.report(Tables.load(s, dir, "documents"), "source"), {
       val countSqls = Scrub.Rules.map { case (name, pat, _) =>

@@ -4,20 +4,21 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.MetricSink
-import graft.run.{Monitors, MonitorRunner}
+import graft.core.{MetricSink, Profiler}
+import graft.run.{MonitorRunner, Monitors}
 import graft.state.StateStore
 import graft.util.{Flatten, PathOps}
+import graft.util.TempDirs.withTempDir
+
+import TestSpark._
 
 /** Conformance: each monitor emits exactly the metric families its
   * reference README "Scope of Observability" documents (the only contract
   * the reference publishes — SURVEY §5.1).
   */
 class ConformanceSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val sf = "/root/testdata/sf0.001"
 
   test("database monitor: Redshift/Snowflake DB-monitor metric scope") {
     val sink = MetricSink("db-run")
@@ -43,23 +44,25 @@ class ConformanceSpec extends AnyFunSuite {
   }
 
   test("table monitor: record/dupe/null/stat metrics + cross-run delta and drift") {
-    val statePath = Files.createTempDirectory("graft-tm").toString + "/state"
-    val state = new StateStore(statePath)
-    val sink1 = MetricSink("run1")
-    Monitors.tableMonitor(spark, sf, "orders", sink1, state)
-    val k1 = sink1.keys.toSet
-    assert(k1.contains("orders.record_count"))
-    assert(k1.contains("orders.duplicate_count"))
-    assert(k1.exists(_.startsWith("orders.schema.")))
-    assert(k1.contains("orders.null_count.o_totalprice"))
-    for (stat <- Seq("min", "max", "mean", "median", "stddev"))
-      assert(k1.contains(s"orders.o_totalprice.$stat"), stat)
-    assert(!k1.contains("orders.record_delta")) // no previous run yet
+    withTempDir("graft-tm") { tmp =>
+      val statePath = tmp + "/state"
+      val state = new StateStore(statePath)
+      val sink1 = MetricSink("run1")
+      Monitors.tableMonitor(spark, sf, "orders", sink1, state)
+      val k1 = sink1.keys.toSet
+      assert(k1.contains("orders.record_count"))
+      assert(k1.contains("orders.duplicate_count"))
+      assert(k1.exists(_.startsWith("orders.schema.")))
+      assert(k1.contains("orders.null_count.o_totalprice"))
+      for (stat <- Seq("min", "max", "mean", "median", "stddev"))
+        assert(k1.contains(s"orders.o_totalprice.$stat"), stat)
+      assert(!k1.contains("orders.record_delta")) // no previous run yet
 
-    val sink2 = MetricSink("run2")
-    Monitors.tableMonitor(spark, sf, "orders", sink2, state)
-    assert(sink2.get("orders.record_delta").flatMap(_.valueDouble) == Some(0.0))
-    assert(sink2.get("orders.columns_changed").flatMap(_.valueDouble) == Some(0.0))
+      val sink2 = MetricSink("run2")
+      Monitors.tableMonitor(spark, sf, "orders", sink2, state)
+      assert(sink2.get("orders.record_delta").flatMap(_.valueDouble) == Some(0.0))
+      assert(sink2.get("orders.columns_changed").flatMap(_.valueDouble) == Some(0.0))
+    }
   }
 
   test("storage monitor: key + prefix + largest-of metric scope") {
@@ -99,15 +102,16 @@ class ConformanceSpec extends AnyFunSuite {
   }
 
   test("runner: fan-out over targets + fan-in means, metrics flushed") {
-    val tmp = Files.createTempDirectory("graft-runner").toString
-    val m = MonitorRunner.run(spark, sf, Seq("region", "nation"),
-      tmp + "/state", Some(tmp + "/metrics"))
-    val keys = m.select("key").as[String].collect().toSet
-    assert(keys.contains("region.record_count"))
-    assert(keys.contains("nation.record_count"))
-    assert(keys.contains("all_tables.mean_record_count"))
-    val persisted = spark.read.parquet(tmp + "/metrics")
-    assert(persisted.count() == m.count())
+    withTempDir("graft-runner") { tmp =>
+      val m = MonitorRunner.run(spark, sf, Seq("region", "nation"),
+        tmp + "/state", Some(tmp + "/metrics"))
+      val keys = m.select("key").as[String].collect().toSet
+      assert(keys.contains("region.record_count"))
+      assert(keys.contains("nation.record_count"))
+      assert(keys.contains("all_tables.mean_record_count"))
+      val persisted = spark.read.parquet(tmp + "/metrics")
+      assert(persisted.count() == m.count())
+    }
   }
 
   test("PathOps parses S3-style URIs like the reference") {
@@ -127,5 +131,110 @@ class ConformanceSpec extends AnyFunSuite {
 
     val env = Flatten.toEnv(Map("core" -> Map("databand_url" -> "http://x"), "flag" -> true))
     assert(env == Map("CORE_DATABAND_URL" -> "http://x", "FLAG" -> "true"))
+  }
+}
+
+/** End-to-end monitor conformance against the reference's ONLY
+  * contract — the README "Scope of Observability" lists — as EXACT
+  * key-set equality per monitor family, in one fixture-backed run
+  * each. The per-operator specs (MonitorsSpec/ConformanceSpec) pin
+  * values; this spec pins the full EMITTED SURFACE, so a key rename or
+  * a silently-dropped metric family fails here even when every
+  * individual operator stays green.
+  *
+  * Documented deviations from the reference (all SURVEY §7.4):
+  *  - `db.min_column_count`/`db.min_row_count` are TRUE minimums (the
+  *    reference logs `.max()` for its "Min table column count",
+  *    `redshift_database_monitor.py:100-103`).
+  *  - `db.largest_table` is emitted by the database monitor (the
+  *    Snowflake DAG computes it in its fan-in task;
+  *    `snowflake_table_monitor.py:143-150`) — same surface, one home.
+  *  - storage `key.*.metadata` is OMITTED: the Hadoop FS API carries
+  *    no user metadata (SURVEY §2.1 S11); `content_type`/
+  *    `storage_class`/`parts_count` are extension-derived models. The
+  *    inventory RELATION carries metadata/parts_count columns; the
+  *    metric sink emits the reference's logged key metrics.
+  *  - record delta is `current − previous` (the reference's
+  *    `previous − current` reads inverted, SURVEY §7.4).
+  */
+class Round11ConformanceSpec extends AnyFunSuite {
+
+  test("databaseMonitor: exact key set (Snowflake+Redshift DB scope — " +
+    "table count, per-table shapes, min/max/mean/median of row and " +
+    "column counts, largest table, disk block)") {
+    val sink = MetricSink()
+    Monitors.databaseMonitor(spark, sf, sink)
+    val expected =
+      Set("db.table_count", "db.largest_table") ++
+        Tables.warehouse.flatMap(t =>
+          Seq(s"db.$t.row_count", s"db.$t.column_count")) ++
+        Seq("max", "min", "mean", "median").flatMap(s =>
+          Seq(s"db.${s}_row_count", s"db.${s}_column_count")) ++
+        Seq("disk.capacity_gb", "disk.used_gb", "disk.free_gb",
+          "disk.used_pct")
+    assert(sink.keys.toSet === expected)
+  }
+
+  test("tableMonitor: exact key set across two runs (record/duplicate " +
+    "counts, schema, per-column nulls, numeric sample stats; delta + " +
+    "drift keys appear only once state exists)") {
+    val table = "orders"
+    withTempDir("graft-conf-state") { statePath =>
+      val state = new StateStore(statePath)
+      val df = Tables.load(spark, sf, table)
+      val base: Set[String] =
+        Set(s"$table.record_count", s"$table.duplicate_count") ++
+          df.columns.flatMap(c =>
+            Seq(s"$table.schema.$c", s"$table.null_count.$c")) ++
+          Profiler.numericColumns(df).flatMap(c =>
+            Seq("min", "max", "mean", "median", "stddev")
+              .map(s => s"$table.$c.$s"))
+      val run1 = MetricSink()
+      Monitors.tableMonitor(spark, sf, table, run1, state)
+      assert(run1.keys.toSet === base,
+        "first run (no prior state) must emit exactly the base scope")
+      val run2 = MetricSink()
+      Monitors.tableMonitor(spark, sf, table, run2, state)
+      assert(run2.keys.toSet ===
+        base + s"$table.record_delta" + s"$table.columns_changed",
+        "second run must add exactly the delta + drift keys " +
+          "(no column_* keys without actual drift)")
+    }
+  }
+
+  test("storageMonitor: exact key set (S3 key+prefix scope — per-key " +
+    "size/content-type/storage-class/last-modified, per-prefix " +
+    "aggregates, cross-prefix argmaxes)") {
+    val sink = MetricSink()
+    Monitors.storageMonitor(spark, Seq(sf), sink)
+    val files = new java.io.File(sf).listFiles().filter(_.isFile)
+      .map(_.getName).toSeq
+    val expected =
+      files.flatMap(f => Seq(s"key.$f.size_mb", s"key.$f.content_type",
+        s"key.$f.storage_class", s"key.$f.last_modified")).toSet ++
+        Seq(s"prefix.$sf.num_objects", s"prefix.$sf.total_size_mb",
+          s"prefix.$sf.max_size_mb", s"prefix.$sf.largest_key",
+          "largest_prefix_by_count", "largest_prefix_by_size")
+    assert(sink.keys.toSet === expected)
+  }
+
+  test("trackQuery: exact key set (DataFrame tracking template — " +
+    "rows, columns, schema, numeric stats, per-column nulls)") {
+    Tables.load(spark, sf, "nation").createOrReplaceTempView("nation_v")
+    val sink = MetricSink()
+    val res = Monitors.trackQuery(spark,
+      "SELECT n_nationkey, n_name FROM nation_v", "natq", sink)
+    // the full profile grid: the six moment metrics plus the four
+    // order/cardinality stats, per numeric column (profileTo emits the
+    // whole grid; the table monitor's five-stat filter is its own test)
+    val stats = Profiler.momentMetrics ++
+      Seq("distinct_count", "p25", "median", "p75")
+    val numericKeys = Profiler.numericColumns(res)
+      .flatMap(c => stats.map(s => s"natq.$c.$s")).toSet
+    val expected =
+      Set("natq.rows", "natq.columns") ++
+        res.columns.flatMap(c =>
+          Seq(s"natq.schema.$c", s"natq.$c.nulls")) ++ numericKeys
+    assert(sink.keys.toSet === expected)
   }
 }

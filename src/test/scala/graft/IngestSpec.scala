@@ -1,0 +1,948 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.{FormatRoundTrip, Sources}
+import graft.streaming.StreamingIngest
+import graft.streaming.StreamingIngest.IngestPaths
+import graft.util.TempDirs.withTempDir
+
+import TestSpark._
+
+// Specs of the operators behind [[registry.IngestQueries]].
+//
+// Streaming and ingest: Structured Streaming drains, streaming
+// near-duplicate ingest, interval joins and file-format round trips.
+//
+// Each suite keeps its class name, so every test keeps the suite-qualified
+// name it is reported under; the suites are grouped here by domain.
+
+/** Round-11b: interchange-format round trips (q277–q279). The oracle
+  * grades the checksums against the parquet source; these specs pin
+  * the parts the oracle cannot see — byte-level fidelity per row
+  * across each format, the non-vacuity of the hostile suffixes, and
+  * the PERMISSIVE corrupt capture actually firing on malformed input.
+  */
+class Round11bSpec extends AnyFunSuite {
+
+  /** Tiny corpus that exercises every hostile class (doc_id 0..7). */
+  private def docs() = {
+    import spark.implicits._
+    (0L until 8L).map(i => (i, s"doc $i body", if (i % 2 == 0) "en" else "de"))
+      .toDF("doc_id", "text", "lang")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().head
+
+  test("jsonl round trip: checksum equals the source relation's, zero corrupt") {
+    withTempDir("graft-rt-spec") { dir =>
+      val got = rows(FormatRoundTrip.jsonlRoundTrip(spark, docs(), s"$dir/j"))
+      assert(got.getAs[Long]("n_rows") === 8L)
+      assert(got.getAs[Long]("n_corrupt") === 0L)
+      assert(got.getAs[Long]("n_multiline") === 2L) // doc_id 0, 4
+      assert(got.getAs[Long]("n_distinct") === 8L)
+    }
+  }
+
+  test("csv round trip == jsonl round trip checksum (same relation " +
+    "through both dialects, trailing tab and unicode included)") {
+    withTempDir("graft-rt-spec") { dir =>
+      val j = rows(FormatRoundTrip.jsonlRoundTrip(spark, docs(), s"$dir/j"))
+      val c = rows(FormatRoundTrip.csvRoundTrip(spark, docs(), s"$dir/c"))
+      Seq("n_rows", "n_corrupt", "total_chars", "n_distinct",
+        "n_multiline", "row_xor", "md5_min").foreach { col =>
+        assert(j.getAs[Any](col) === c.getAs[Any](col), col)
+      }
+    }
+  }
+
+  test("csv round trip is byte-exact per row (text2 survives newline, " +
+    "quote, backslash, tab, non-ASCII)") {
+    withTempDir("graft-rt-spec") { dir =>
+      val src = FormatRoundTrip.hostileDocs(docs())
+      src.write.mode("overwrite")
+        .option("header", "true").option("escape", "\"")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .csv(s"$dir/c")
+      val back = spark.read.format("csv")
+        .schema(new StructType()
+          .add("doc_id", LongType).add("text2", StringType).add("lang", StringType))
+        .option("header", "true").option("escape", "\"")
+        .option("multiLine", "true")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .load(s"$dir/c")
+      val want = src.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val got = back.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got === want)
+      // the hostile classes are actually present post-trip
+      assert(got.values.count(_.contains("\n")) === 2)
+      assert(got.values.count(_.contains("\\slash\t")) === 2)
+      assert(got.values.count(_.contains("\u20ac\u4e2d\u00e9")) === 2)
+      assert(got.values.count(_.contains("\"quoted\"")) === 2)
+    }
+  }
+
+  test("permissive corrupt capture fires: a malformed jsonl line lands " +
+    "in n_corrupt, clean rows still count") {
+    withTempDir("graft-rt-spec") { dir =>
+      FormatRoundTrip.hostileDocs(docs()).coalesce(1)
+        .write.mode("overwrite").json(s"$dir/j")
+      // append a malformed line to the single part file
+      val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/j"))
+        .filter(p => p.getFileName.toString.startsWith("part-")).findFirst().get()
+      java.nio.file.Files.writeString(part,
+        "\n{\"doc_id\": 99, \"text2\": unquoted}\n",
+        java.nio.file.StandardOpenOption.APPEND)
+      // drop the LocalFileSystem checksum sidecar the raw append broke
+      java.nio.file.Files.deleteIfExists(
+        part.resolveSibling("." + part.getFileName.toString + ".crc"))
+      val got = rows(FormatRoundTrip.jsonlRoundTripRead(spark, s"$dir/j"))
+      assert(got.getAs[Long]("n_corrupt") === 1L)
+      assert(got.getAs[Long]("n_rows") === 9L) // 8 clean + 1 corrupt row
+    }
+  }
+
+  test("orc round trip: typed checksum equals the parquet-direct one " +
+    "(timestamp seconds and half-even cents exact)") {
+    import spark.implicits._
+    withTempDir("graft-rt-spec") { dir =>
+      val ev = Seq(
+        (1L, java.sql.Timestamp.valueOf("2025-01-02 03:04:05.678"), 10L, "click", 1.005, "{\"a\":1}"),
+        (2L, java.sql.Timestamp.valueOf("2025-06-07 08:09:10.999"), 11L, "view", 2.675, "{}"),
+        (3L, java.sql.Timestamp.valueOf("2025-12-31 23:59:59.001"), 12L, "click", -0.125, "x"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      val viaOrc = rows(FormatRoundTrip.orcRoundTrip(spark, ev, s"$dir/o"))
+      // same checksum computed directly (no format hop)
+      val direct = rows(FormatRoundTrip.eventChecksum(ev))
+      Seq("n_rows", "id_sum", "ts_epoch_sum", "value_cents", "n_types",
+        "row_xor").foreach { c =>
+        assert(viaOrc.getAs[Any](c) === direct.getAs[Any](c), c)
+      }
+      assert(viaOrc.getAs[Long]("n_rows") === 3L)
+      // rint half-even: 1.005*100 = 100.49999... -> 100; 2.675*100 is
+      // EXACTLY 267.5 -> 268 (to even); -0.125*100 = -12.5 -> -12 (to even)
+      assert(viaOrc.getAs[Long]("value_cents") === (100L + 268L - 12L))
+    }
+  }
+}
+
+/** Continuous corpus ingest (q280): the pieces the oracle can't grade —
+  * the streaming wrapper's checkpoint resume (consumed files are never
+  * reprocessed across restarts), replay stability at the corpus-row
+  * level, the store-exclusion law that prevents the two-sink replay
+  * loss, and verbatim quarantine capture.
+  */
+class Round11cSpec extends AnyFunSuite {
+
+  private val schema = new StructType()
+    .add("doc_id", LongType).add("text", StringType).add("lang", StringType)
+
+  private def jsonl(path: String, lines: String*): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path).getParent)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      lines.mkString("", "\n", "\n"))
+    ()
+  }
+
+  /** The file stream source orders by modification time with an
+    * unspecified tie-break; deliveries written in the same millisecond
+    * need explicit stamps for a deterministic batch order.
+    */
+  private def stamp(path: String, secondsAgo: Long): Unit = {
+    java.nio.file.Files.setLastModifiedTime(
+      java.nio.file.Paths.get(path),
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - secondsAgo * 1000))
+    ()
+  }
+
+  private def doc(id: Long, text: String, lang: String = "en"): String =
+    s"""{"doc_id": $id, "text": "$text", "lang": "$lang"}"""
+
+  private def corpusIds(paths: IngestPaths): Set[Long] =
+    StreamingIngest.corpus(spark, paths)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("streaming drain + restart: consumed files never reprocess, new " +
+    "files dedup against the store") {
+    withTempDir("graft-rt-spec") { dir =>
+      val in = s"$dir/in"
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      jsonl(s"$in/d0.json", doc(1, "alpha beta"), doc(2, "gamma delta"))
+      jsonl(s"$in/d1.json", doc(3, "alpha beta"), doc(4, "epsilon zeta"))
+      stamp(s"$in/d0.json", 10); stamp(s"$in/d1.json", 5)
+      val q1 = StreamingIngest.ingestAvailable(spark, in, schema, paths,
+        s"$dir/ckpt", maxFilesPerTrigger = 1)
+      q1.awaitTermination()
+      // doc 3 duplicates doc 1's token set across deliveries
+      assert(corpusIds(paths) === Set(1L, 2L, 4L))
+
+      jsonl(s"$in/d2.json", doc(5, "gamma delta"), doc(6, "eta theta"))
+      val q2 = StreamingIngest.ingestAvailable(spark, in, schema, paths,
+        s"$dir/ckpt", maxFilesPerTrigger = 1)
+      q2.awaitTermination()
+      // restart with the same checkpoint: d0/d1 not reprocessed (their
+      // batch partitions would otherwise be overwritten empty-of-new or
+      // duplicated under fresh ids), doc 5 deduped against the store
+      assert(corpusIds(paths) === Set(1L, 2L, 4L, 6L))
+      val batches = StreamingIngest.corpus(spark, paths)
+        .select("ingest_batch").distinct().count()
+      assert(batches === 3L) // d0, d1, d2 — one partition each
+    }
+  }
+
+  test("replay of a batch is row-identical (two-sink crash recovery)") {
+    withTempDir("graft-rt-spec") { dir =>
+      val in = s"$dir/in"
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      jsonl(s"$in/d0.json", doc(1, "alpha beta"), doc(2, "gamma delta"))
+      jsonl(s"$in/d1.json", doc(3, "alpha beta"), doc(4, "iota kappa"),
+        doc(5, "iota kappa"))
+      def batch(file: String) = Sources.readValidated(spark, s"$in/$file", schema, "json")
+      StreamingIngest.processBatch(batch("d0.json"), 0, paths)
+      StreamingIngest.processBatch(batch("d1.json"), 1, paths)
+      val before = StreamingIngest.corpus(spark, paths)
+        .collect().map(_.toString).sorted.toSeq
+      // replay batch 1 — same input, same id, store already contains
+      // batch 1's fingerprints; the before-batch exclusion must make
+      // the survivor set identical instead of empty
+      StreamingIngest.processBatch(batch("d1.json"), 1, paths)
+      val after = StreamingIngest.corpus(spark, paths)
+        .collect().map(_.toString).sorted.toSeq
+      assert(after === before)
+      assert(corpusIds(paths) === Set(1L, 2L, 4L)) // 3 dup-of-1, 5 dup-of-4 in-batch
+      // store stays one row per corpus doc
+      assert(StreamingIngest.storeFingerprints(spark, paths.store).count() === 3L)
+    }
+  }
+
+  test("storeFingerprints(beforeBatch) excludes the replaying batch's " +
+    "own partition — the law that prevents replay loss") {
+    withTempDir("graft-rt-spec") { dir =>
+      val in = s"$dir/in"
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      jsonl(s"$in/d0.json", doc(1, "alpha beta"))
+      jsonl(s"$in/d1.json", doc(2, "gamma delta"))
+      def batch(file: String) = Sources.readValidated(spark, s"$in/$file", schema, "json")
+      StreamingIngest.processBatch(batch("d0.json"), 0, paths)
+      StreamingIngest.processBatch(batch("d1.json"), 1, paths)
+      assert(StreamingIngest.storeFingerprints(spark, paths.store, beforeBatch = 1L)
+        .count() === 1L)
+      assert(StreamingIngest.storeFingerprints(spark, paths.store).count() === 2L)
+      // empty store: well-typed empty relation, not an error
+      assert(StreamingIngest.storeFingerprints(spark, s"$dir/nope").count() === 0L)
+    }
+  }
+
+  test("near-dup ingest: store drop, within-batch drop, novel kept — " +
+    "and the one-step chain law (a~b, b~c, a!~c retires BOTH b and c)") {
+    withTempDir("graft-ingest-spec") { dir =>
+      val in = s"$dir/in"
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      // sliding 10-word windows over a 14-word sequence: J(a,b)=7/11,
+      // J(b,c)=7/11 (both >= 0.5), J(a,c)=5/13 (< 0.5)
+      val ws = (1 to 14).map(i => s"w$i")
+      def win(from: Int) = ws.slice(from, from + 10).mkString(" ")
+      val a = win(0); val b = win(2); val c = win(4)
+      jsonl(s"$in/d0.json", doc(1, a), doc(2, "totally different words here"))
+      // batch 1: 3 = store-dup of doc 1 (identical text), 4 novel,
+      // 5 = within-dup of 4 (identical), plus the chain b(6)~a-store?
+      jsonl(s"$in/d1.json", doc(3, a), doc(4, "unrelated novel content"),
+        doc(5, "unrelated novel content"), doc(6, b), doc(7, c))
+      def batch(f: String) = Sources.readValidated(spark, s"$in/$f", schema, "json")
+      // rowsPerBand = 1 (16 single-row bands): candidate recall at
+      // J >= 0.5 is effectively total, so the LAW is what's under test,
+      // not the banding luck of a 5-doc fixture (q281 exercises the
+      // production 4-row banding at corpus scale)
+      def run(f: String, id: Long) = StreamingIngest.processBatchNearDup(
+        batch(f), id, paths, rowsPerBand = 1).collect().head
+      val r0 = run("d0.json", 0)
+      assert(r0.getAs[Long]("n_kept") === 2L)
+      val r1 = run("d1.json", 1)
+      // 3 drops against the STORE (identical to survivor 1 = text a);
+      // 5 drops WITHIN (identical to lower-id 4); 6 (= b) drops against
+      // store-survivor a (J = 7/11); 7 (= c) drops within against
+      // lower-id 6 EVEN THOUGH 6 itself dropped — the one-step law
+      assert(r1.getAs[Long]("n_dropped_store") >= 2L,  // 3 and 6
+        r1.toString)
+      assert(r1.getAs[Long]("n_kept") === 1L, r1.toString) // only 4
+      assert(corpusIds(paths) === Set(1L, 2L, 4L))
+      // replay of batch 1 is row-identical (three-sink crash recovery)
+      val r1b = run("d1.json", 1)
+      assert(r1b.toSeq === r1.toSeq)
+      assert(corpusIds(paths) === Set(1L, 2L, 4L))
+    }
+  }
+
+  test("near-dup streaming wrapper drains deliveries under the same " +
+    "checkpoint contract; hot-bucket cap thins candidates but the store " +
+    "keeps full signatures") {
+    withTempDir("graft-rt-spec") { dir =>
+      val in = s"$dir/in"
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      jsonl(s"$in/d0.json", doc(1, "alpha beta gamma"), doc(2, "delta epsilon"))
+      jsonl(s"$in/d1.json", doc(3, "alpha beta gamma"), doc(4, "zeta eta"))
+      stamp(s"$in/d0.json", 10); stamp(s"$in/d1.json", 5)
+      val q = StreamingIngest.ingestAvailableNearDup(spark, in, schema, paths,
+        s"$dir/ckpt", maxFilesPerTrigger = 1)
+      q.awaitTermination()
+      assert(corpusIds(paths) === Set(1L, 2L, 4L)) // 3 identical to 1
+      // store carries full band sets for every survivor: 4 bands each
+      val bands = spark.read.option("basePath", s"$dir/s/bands")
+        .parquet(s"$dir/s/bands")
+      assert(bands.count() === 3L * 4L)
+      // cap = 0 drops every candidate bucket: nothing can collide, so
+      // an identical re-delivery is KEPT (recall loss is the documented
+      // cost) — while its full signature still lands in the store
+      val d2 = s"$dir/in2"
+      jsonl(s"$d2/d.json", doc(5, "alpha beta gamma"))
+      val r = StreamingIngest.processBatchNearDup(
+        Sources.readValidated(spark, d2, schema, "json"), 99, paths,
+        maxBucketSize = Some(0L)).collect().head
+      assert(r.getAs[Long]("n_kept") === 1L)
+      assert(r.getAs[Long]("n_dropped_store") === 0L)
+      val bandsAfter = spark.read.option("basePath", s"$dir/s/bands")
+        .parquet(s"$dir/s/bands").filter(col("ingest_batch") === 99)
+      assert(bandsAfter.count() === 4L)
+    }
+  }
+
+  test("malformed lines quarantine verbatim and never reach the corpus") {
+    withTempDir("graft-rt-spec") { dir =>
+      val in = s"$dir/in"
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      val bad = """{"doc_id": 9, "text": unquoted}"""
+      jsonl(s"$in/d0.json", doc(1, "alpha beta"), bad)
+      StreamingIngest.processBatch(
+        Sources.readValidated(spark, in, schema, "json"), 0, paths)
+      assert(corpusIds(paths) === Set(1L))
+      val quar = StreamingIngest.quarantined(spark, paths).get
+        .select("raw_line").collect().map(_.getString(0)).toSeq
+      assert(quar === Seq(bad))
+    }
+  }
+}
+
+/** Round-12: store COMPACTION for long-running ingest — batches below
+  * the replay watermark merge into the base partition (ingest_batch =
+  * −1) with layout, bucketing, and dedup semantics unchanged.
+  *
+  *   1. row multisets identical pre/post compaction, file count drops;
+  *   2. the dedup law is UNCHANGED: post-compaction deliveries still
+  *      drop against survivors that now live in the base partition
+  *      (−1 < N for every later batch N);
+  *   3. crash-window duplicate tolerance: rows present in BOTH base
+  *      and a not-yet-dropped batch partition (the state a crash
+  *      between the base insert and the partition drops leaves) do not
+  *      change any delivery's outcome, and re-running the compaction
+  *      converges;
+  *   4. compaction is repeat-safe (second run with nothing new merges
+  *      nothing / changes nothing).
+  */
+class Round12CompactStoreSpec extends AnyFunSuite {
+
+  private def asBatch(rows: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+      .withColumn("_corrupt_record", lit(null).cast("string"))
+  }
+
+  private val base = "the quick brown fox jumps over the lazy dog and " +
+    "then runs far away into the deep dark forest tonight"
+
+  private def bandRows(tmp: String) =
+    spark.table(StreamingIngest.storeTableName("bands", s"$tmp/store/bands"))
+
+  private def parquetFiles(dir: String): Long =
+    graft.sources.FormatRoundTrip.dataFileCount(spark, dir)
+
+  test("near-dup store compaction: identical rows, fewer files, drop " +
+    "law preserved, repeat-safe") {
+    withTempDir("graft-r12-compact") { tmp =>
+      val paths = IngestPaths(s"$tmp/corpus", s"$tmp/store", s"$tmp/quarantine")
+      (0 until 4).foreach { k =>
+        StreamingIngest.processBatchNearDup(asBatch(Seq(
+          (100L * k + 1, s"wholly distinct content number $k about " +
+            s"topic ${('a' + k).toChar} with no shared phrasing"),
+          (100L * k + 2, base + s" variant $k"))), k.toLong, paths)
+      }
+      val before = bandRows(tmp)
+        .select("doc_id", "band_idx", "band_key")
+        .collect().map(_.toSeq).sortBy(_.toString)
+      val filesBefore = parquetFiles(s"$tmp/store/bands")
+
+      // merge batches 0..2; batch 3 stays replayable
+      val rep = StreamingIngest.compactStores(spark, paths, beforeBatch = 3L)
+        .collect().map(r => r.getString(0) ->
+          (r.getLong(1), r.getLong(2))).toMap
+      assert(rep.keySet === Set("bands", "ngrams"),
+        s"near-dup run compacts bands+ngrams only: $rep")
+      assert(rep("bands")._1 === 3L, s"three band partitions merged: $rep")
+
+      val after = bandRows(tmp)
+        .select("doc_id", "band_idx", "band_key")
+        .collect().map(_.toSeq).sortBy(_.toString)
+      assert(after.toSeq === before.toSeq,
+        "compaction must not change the band row multiset")
+      val partsAfter = bandRows(tmp).select("ingest_batch").distinct()
+        .collect().map(_.getLong(0)).toSet
+      assert(partsAfter === Set(-1L, 3L), s"base + live batch: $partsAfter")
+      assert(parquetFiles(s"$tmp/store/bands") < filesBefore,
+        "compaction must reduce the file count")
+
+      // the drop law reads through the base partition: a near-dup of a
+      // batch-0 survivor (now in base) still drops
+      val r4 = StreamingIngest.processBatchNearDup(asBatch(Seq(
+        (900L, base + " variant 0 almost"),
+        (901L, "entirely novel text mentioning compaction and nothing " +
+          "else from any earlier delivery whatsoever"))), 4L, paths)
+        .collect().head
+      assert(r4.getLong(3) >= 1L && r4.getLong(5) <= 1L,
+        s"base-partition survivor must still block near-dups: $r4")
+
+      // repeat-safe: nothing below the watermark left to merge
+      val rep2 = StreamingIngest.compactStores(spark, paths, 3L)
+      assert(rep2.filter(col("store") === "bands").count() === 0L)
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+
+  test("exact-tier compaction + crash-window duplicates: outcomes " +
+    "unchanged, re-run converges") {
+    withTempDir("graft-r12-compact-fps") { tmp =>
+      val paths = IngestPaths(s"$tmp/corpus", s"$tmp/store", s"$tmp/quarantine")
+      StreamingIngest.processBatch(asBatch(Seq(
+        (1L, "alpha beta"), (2L, "gamma delta"))), 0L, paths)
+      StreamingIngest.processBatch(asBatch(Seq(
+        (3L, "epsilon zeta"))), 1L, paths)
+      val fpsBefore = StreamingIngest.storeFingerprints(spark, paths.store)
+        .collect().map(_.getString(0)).sorted.toSeq
+
+      StreamingIngest.compactStores(spark, paths, beforeBatch = 2L)
+      val fpsAfter = StreamingIngest.storeFingerprints(spark, paths.store)
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(fpsAfter === fpsBefore, "fingerprint set unchanged")
+
+      // crash-window state: base rows ALSO present in a stale batch
+      // partition (as if the post-insert drops never ran) — duplicate
+      // fingerprints must not change any later delivery's outcome
+      val t = StreamingIngest.storeTableName("fps", paths.store)
+      spark.table(t).filter(col("ingest_batch") === -1L)
+        .select("fingerprint").limit(1)
+        .createOrReplaceTempView("__r12_dup_fp")
+      spark.sql(s"INSERT INTO $t PARTITION (ingest_batch=0) " +
+        "SELECT * FROM __r12_dup_fp")
+      StreamingIngest.processBatch(asBatch(Seq(
+        (10L, "alpha beta"), (11L, "fresh eta theta"))), 2L, paths)
+      val ids = StreamingIngest.corpus(spark, paths)
+        .filter(col("ingest_batch") === 2L)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids === Set(11L),
+        s"duplicated store fingerprints must not change outcomes: $ids")
+
+      // re-running the compaction absorbs the stale partition and its
+      // duplicate: raw row count == distinct count afterwards
+      StreamingIngest.compactStores(spark, paths, beforeBatch = 2L)
+      val raw = spark.table(t).count()
+      val dis = spark.table(t).select("fingerprint").distinct().count()
+      assert(raw === dis,
+        s"compaction re-run converges to a duplicate-free store ($raw/$dis)")
+      assert(StreamingIngest.storeFingerprints(spark, paths.store, 2L)
+        .collect().map(_.getString(0)).sorted.toSeq === fpsBefore,
+        "pre-watermark fingerprint set unchanged by the re-run")
+      val parts = spark.table(t).select("ingest_batch").distinct()
+        .collect().map(_.getLong(0)).toSet
+      assert(parts === Set(-1L, 2L), s"stale partition absorbed: $parts")
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+}
+
+/** Round-12: COMPRESSED deliveries through the ingest loop — the codec
+  * axis (q282) meeting the continuous-ingest surface (q280/q281). Real
+  * feeds arrive as `.json.gz`; Spark's file sources decompress by
+  * extension, so the whole quarantine/dedup/replay machinery must work
+  * unchanged on gzipped JSONL — including a malformed line INSIDE a
+  * gzipped member (the corrupt capture runs post-decompression) and a
+  * mixed plain+gzip directory, which is what a feed migration looks
+  * like mid-cutover.
+  */
+class Round12GzipIngestSpec extends AnyFunSuite {
+
+  private val schema = new StructType()
+    .add("doc_id", LongType).add("text", StringType).add("lang", StringType)
+
+  private def gz(path: String, lines: String*): Unit = {
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(path).getParent)
+    val out = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path)))
+    out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    out.close()
+  }
+
+  private def plain(path: String, lines: String*): Unit = {
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(path).getParent)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path), lines.mkString("\n") + "\n")
+    ()
+  }
+
+  private def doc(id: Long, text: String): String =
+    s"""{"doc_id": $id, "text": "$text", "lang": "en"}"""
+
+  private def readValidated(in: String) =
+    graft.sources.Sources.readValidated(spark, in, schema, "json")
+
+  test("gzipped JSONL deliveries: dedup across batches, malformed line " +
+    "inside the gzip member quarantines, replay is row-identical") {
+    withTempDir("graft-gz-ingest") { dir =>
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      gz(s"$dir/in0/d0.json.gz",
+        doc(1, "alpha beta"), doc(2, "gamma delta"),
+        """{"doc_id": 99, "text": unquoted}""")
+      StreamingIngest.processBatch(readValidated(s"$dir/in0"), 0L, paths)
+      // batch 1 arrives PLAIN (mid-cutover mix) with a cross-batch dup
+      plain(s"$dir/in1/d1.json",
+        doc(3, "alpha beta"), doc(4, "epsilon zeta"))
+      StreamingIngest.processBatch(readValidated(s"$dir/in1"), 1L, paths)
+      // replay batch 1 (two-sink crash recovery) on the same input
+      StreamingIngest.processBatch(readValidated(s"$dir/in1"), 1L, paths)
+
+      val ids = StreamingIngest.corpus(spark, paths)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids === Set(1L, 2L, 4L),
+        "doc 3 dups doc 1 across the gzip boundary; malformed never lands")
+      val quarantined = StreamingIngest.quarantined(spark, paths)
+        .map(_.select("raw_line").collect().map(_.getString(0)).toSeq)
+        .getOrElse(Nil)
+      assert(quarantined === Seq("""{"doc_id": 99, "text": unquoted}"""),
+        "the malformed line inside the gzip member quarantines verbatim")
+    }
+  }
+
+  test("gzipped deliveries through the NEAR-dup tier: store drop law " +
+    "holds across compressed batches") {
+    withTempDir("graft-gz-neardup") { dir =>
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      val base = "the quick brown fox jumps over the lazy dog and then " +
+        "runs far away into the deep dark forest tonight"
+      gz(s"$dir/in0/d0.json.gz", doc(1, base))
+      val r0 = StreamingIngest.processBatchNearDup(
+        readValidated(s"$dir/in0"), 0L, paths).collect().head
+      assert(r0.getLong(5) === 1L)
+      gz(s"$dir/in1/d1.json.gz",
+        doc(10, base.replace("tonight", "today")),
+        doc(11, "wholly different content with no shared bigrams at all " +
+          "describing compressed delivery handling in the ingest loop"))
+      val r1 = StreamingIngest.processBatchNearDup(
+        readValidated(s"$dir/in1"), 1L, paths).collect().head
+      assert(r1.getLong(3) === 1L && r1.getLong(5) === 1L,
+        s"near-dup of the gzipped batch-0 survivor drops: $r1")
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+}
+
+/** Round-12: the near-dup ingest store is a BUCKETED external table —
+  * the r11 verdict's task 4. Checks, on a real two-delivery run:
+  *
+  *   1. drop semantics across the store boundary survive the layout
+  *      change (a batch-1 near-dup of a batch-0 survivor drops as
+  *      n_dropped_store), and a batch replay is bit-stable;
+  *   2. the candidate probe's physical plan reads the store side
+  *      WITHOUT an Exchange (bucket layout == join key) while the
+  *      delivery side carries the only shuffle — the whole point of
+  *      bucketing: per-delivery cost never re-shuffles the
+  *      accumulated store;
+  *   3. the ngram verification join likewise streams the ngram store
+  *      shuffle-free on its doc_id bucketing.
+  */
+class Round12IngestStoreSpec extends AnyFunSuite {
+
+  private def doc(id: Long, text: String): (Long, String) = (id, text)
+
+  private def asBatch(rows: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+      .withColumn("_corrupt_record", lit(null).cast("string"))
+  }
+
+  private val base = "the quick brown fox jumps over the lazy dog " +
+    "and then runs far away into the deep dark forest tonight"
+
+  test("store-backed near-dup drop law and replay stability on the " +
+    "bucketed table layout") {
+    withTempDir("graft-r12-store") { tmp =>
+      val paths = IngestPaths(s"$tmp/corpus", s"$tmp/store", s"$tmp/quarantine")
+      val b0 = asBatch(Seq(
+        doc(1L, base),
+        doc(2L, "completely unrelated content about spark bucketing " +
+          "and sorted store layouts for incremental ingest pipelines")))
+      val r0 = StreamingIngest.processBatchNearDup(b0, 0L, paths)
+        .collect().head
+      assert(r0.getLong(5) === 2L, s"batch 0 keeps both docs: $r0")
+      // batch 1: doc 10 near-dups doc 1 (one word changed), doc 11 fresh
+      val b1 = asBatch(Seq(
+        doc(10L, base.replace("tonight", "today")),
+        doc(11L, "a third totally distinct document mentioning neither " +
+          "foxes nor bucket layouts just to survive the filter stage")))
+      val r1 = StreamingIngest.processBatchNearDup(b1, 1L, paths)
+        .collect().head
+      assert(r1.getLong(3) === 1L, s"batch 1 store-drop expected: $r1")
+      assert(r1.getLong(5) === 1L, s"batch 1 keeps one doc: $r1")
+      // replay batch 1 (crash-recovery): identical report, store stable
+      val r1b = StreamingIngest.processBatchNearDup(b1, 1L, paths)
+        .collect().head
+      assert(r1.toSeq === r1b.toSeq, "replay must be bit-stable")
+      val bandsTable = StreamingIngest
+        .storeTableName("bands", s"$tmp/store/bands")
+      val perBatch = spark.table(bandsTable)
+        .groupBy("ingest_batch").count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(perBatch.keySet === Set(0L, 1L),
+        s"one store partition per delivery: $perBatch")
+      // survivors only: batch 1 persisted exactly one doc's bands
+      val docsB1 = spark.table(bandsTable)
+        .filter(col("ingest_batch") === 1L)
+        .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+      assert(docsB1 === Set(11L), s"batch 1 persists only survivors: $docsB1")
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+
+  /** No Exchange anywhere above the store table's scan: collect every
+    * shuffle in the (initial) physical plan and assert none of their
+    * subtrees reach a file scan rooted under `storeDirFragment`.
+    * With `requireBucketed` the scan must additionally BE bucketed —
+    * the shuffle-free-by-layout regime (sort-merge path); without it
+    * the planner may legitimately stream the store through a
+    * BroadcastHashJoin and skip bucketed reading entirely.
+    */
+  private def assertStoreSideShuffleFree(df: DataFrame,
+      storeDirFragment: String, requireBucketed: Boolean): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    def scansUnder(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case f: FileSourceScanExec => f
+    }
+    val plan = unwrap(df.queryExecution.executedPlan)
+    val storeScans = scansUnder(plan).filter(f =>
+      f.relation.location.rootPaths.exists(_.toString.contains(storeDirFragment)))
+    assert(storeScans.nonEmpty, s"no store scan in plan:\n$plan")
+    if (requireBucketed)
+      assert(storeScans.forall(_.bucketedScan),
+        s"store scan not bucketed:\n$plan")
+    val shuffles = plan.collect {
+      case e: ShuffleExchangeLike
+          if scansUnder(e.asInstanceOf[SparkPlan]).exists(f =>
+            f.relation.location.rootPaths.exists(
+              _.toString.contains(storeDirFragment))) =>
+        e.nodeName
+    }
+    assert(shuffles.isEmpty,
+      s"store side under $storeDirFragment must not shuffle, " +
+        s"found $shuffles in:\n$plan")
+  }
+
+  test("EXACT-tier fingerprint store: anti-join reads the store side " +
+    "without an Exchange (distinct included)") {
+    withTempDir("graft-r12-fps") { tmp =>
+      val paths = IngestPaths(s"$tmp/corpus", s"$tmp/store", s"$tmp/quarantine")
+      StreamingIngest.processBatch(asBatch(
+        (1L to 30L).map(i => doc(i, s"alpha document $i"))), 0L, paths)
+      StreamingIngest.processBatch(asBatch(
+        (100L to 120L).map(i => doc(i, s"beta document $i"))), 1L, paths)
+      // cross-batch dup law survives the table layout
+      StreamingIngest.processBatch(asBatch(Seq(
+        doc(500L, "alpha document 1"), doc(501L, "novel gamma text"))),
+        2L, paths)
+      val ids = StreamingIngest.corpus(spark, paths)
+        .filter(col("ingest_batch") === 2L)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids === Set(501L), s"dup of batch-0 doc must drop: $ids")
+
+      import spark.implicits._
+      val known = StreamingIngest.storeFingerprints(spark, paths.store, 3L)
+      def anti = Seq((900L, "zz")).toDF("doc_id", "__fp")
+        .join(known, col("__fp") === col("fingerprint"), "left_anti")
+      assertStoreSideShuffleFree(anti, "store", requireBucketed = false)
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        assertStoreSideShuffleFree(anti, "store", requireBucketed = true)
+      }
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+
+  test("candidate probe and ngram verification read the store side " +
+    "without an Exchange") {
+    withTempDir("graft-r12-plan") { tmp =>
+      val paths = IngestPaths(s"$tmp/corpus", s"$tmp/store", s"$tmp/quarantine")
+      val b0 = asBatch((1L to 40L).map(i =>
+        doc(i, s"document number $i with shared vocabulary " + base)))
+      StreamingIngest.processBatchNearDup(b0, 0L, paths)
+      val b1 = asBatch((100L to 120L).map(i =>
+        doc(i, s"fresh delivery $i probing the persistent store " + base)))
+      StreamingIngest.processBatchNearDup(b1, 1L, paths)
+
+      import graft.operators.Dedup
+      val bandsNew = Dedup.bandExplode(
+        Dedup.minhashSignatures(asBatch(Seq(doc(500L, base + " anew"))), 16))
+      val bandsTable = StreamingIngest
+        .storeTableName("bands", s"$tmp/store/bands")
+      val storeBands = spark.table(bandsTable)
+        .filter(col("ingest_batch") < 2L)
+        .select(col("doc_id").as("store_id"), col("band_idx"), col("band_key"))
+      // the operator's candidate probe up to the join (its distinct()
+      // shuffles JOIN OUTPUT, which is expected and not under test)
+      def probe = bandsNew
+        .join(storeBands, Seq("band_idx", "band_key"))
+        .select("doc_id", "store_id")
+      val ngramsTable = StreamingIngest
+        .storeTableName("ngrams", s"$tmp/store/ngrams")
+      val storeNg = spark.table(ngramsTable)
+        .filter(col("ingest_batch") < 2L)
+        .select(col("doc_id").as("store_id"), col("hs").as("hb"))
+      import spark.implicits._
+      def verify = Seq((500L, 1L), (500L, 2L)).toDF("doc_id", "store_id")
+        .join(storeNg, "store_id")
+
+      // regime 1 (default): small delivery broadcasts, store STREAMS
+      assertStoreSideShuffleFree(probe, "store/bands",
+        requireBucketed = false)
+      assertStoreSideShuffleFree(verify, "store/ngrams",
+        requireBucketed = false)
+      // regime 2 (large delivery — broadcast off): sort-merge path,
+      // where the BUCKET layout is what saves the store-side Exchange
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        assertStoreSideShuffleFree(probe, "store/bands",
+          requireBucketed = true)
+        assertStoreSideShuffleFree(verify, "store/ngrams",
+          requireBucketed = true)
+      }
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+}
+
+/** Round-13 verdict task 6: compaction WIRED INTO the ingest loop.
+  *
+  * 1. A 10-delivery near-dup ingest with `compactEvery = Some(4)`
+  *    (compaction fires inside the loop after batches 4 and 8) produces
+  *    a corpus BIT-IDENTICAL to the uncompacted twin run — per (doc_id,
+  *    ingest_batch) — while the band store ends with the base partition
+  *    plus only the post-watermark batches, in fewer files.
+  * 2. The drop law reads through the compacted base: a late delivery's
+  *    near-dup of a batch-0 survivor (whose signatures now live in
+  *    ingest_batch = −1) still drops.
+  * 3. Round-12 ADVICE: the eager localCheckpoints inside the batch
+  *    functions no longer leak — the persistent-RDD set is unchanged
+  *    after a batch completes.
+  */
+class Round13IngestLoopSpec extends AnyFunSuite {
+
+  private val schema = new StructType()
+    .add("doc_id", LongType).add("text", StringType).add("lang", StringType)
+
+  private def jsonl(path: String, lines: String*): Unit = {
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(path).getParent)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      lines.mkString("", "\n", "\n"))
+    ()
+  }
+
+  private def stamp(path: String, secondsAgo: Long): Unit = {
+    java.nio.file.Files.setLastModifiedTime(
+      java.nio.file.Paths.get(path),
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - secondsAgo * 1000))
+    ()
+  }
+
+  private def doc(id: Long, text: String): String =
+    s"""{"doc_id": $id, "text": "$text", "lang": "en"}"""
+
+  private val base = "the quick brown fox jumps over the lazy dog and " +
+    "then runs far away into the deep dark forest tonight under stars"
+
+  /** 10 deliveries: per batch k one wholly-unique doc (100k+1) and one
+    * near-dup of the batch-0 base variant (100k+2) that must drop from
+    * batch 1 on.
+    */
+  private def writeDeliveries(in: String): Unit =
+    (0 until 10).foreach { k =>
+      jsonl(s"$in/d$k.json",
+        doc(100L * k + 1, s"wholly distinct content number $k about " +
+          s"subject ${('a' + k).toChar} with completely unshared phrasing " +
+          s"item$k widget$k gadget$k"),
+        doc(100L * k + 2, base + s" tail$k"))
+      stamp(s"$in/d$k.json", 100 - k)
+    }
+
+  private def corpusPairs(paths: IngestPaths): Set[(Long, Long)] =
+    StreamingIngest.corpus(spark, paths)
+      // partition discovery types ingest_batch as INT on the raw read
+      .select(col("doc_id"), col("ingest_batch").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def parquetFiles(dir: String): Long =
+    graft.sources.FormatRoundTrip.dataFileCount(spark, dir)
+
+  test("10 deliveries with in-loop compactEvery=4: corpus bit-identical " +
+    "to the uncompacted twin, store collapsed to base + live batches") {
+    withTempDir("graft-r13-loop") { tmp =>
+      val inA = s"$tmp/inA"; val inB = s"$tmp/inB"
+      writeDeliveries(inA); writeDeliveries(inB)
+      val pA = IngestPaths(s"$tmp/ca", s"$tmp/sa", s"$tmp/qa")
+      val pB = IngestPaths(s"$tmp/cb", s"$tmp/sb", s"$tmp/qb")
+
+      StreamingIngest.ingestAvailableNearDup(spark, inA, schema, pA,
+        s"$tmp/ckA", maxFilesPerTrigger = 1, compactEvery = Some(4))
+        .awaitTermination()
+      StreamingIngest.ingestAvailableNearDup(spark, inB, schema, pB,
+        s"$tmp/ckB", maxFilesPerTrigger = 1)
+        .awaitTermination()
+
+      val a = corpusPairs(pA); val b = corpusPairs(pB)
+      assert(a === b, "in-loop compaction must not change any outcome")
+      // expected law: batch 0 keeps both docs; batches 1-9 keep only
+      // the unique doc (their base variant near-dups batch 0's)
+      val expected = Set((1L, 0L), (2L, 0L)) ++
+        (1 until 10).map(k => (100L * k + 1, k.toLong)).toSet
+      assert(a === expected, s"drop law: $a")
+
+      // compaction fired at batches 4 and 8: bands hold base + 8,9 only
+      val bandParts = spark.table(
+        StreamingIngest.storeTableName("bands", s"${pA.store}/bands"))
+        .select("ingest_batch").distinct().collect()
+        .map(_.getLong(0)).toSet
+      assert(bandParts === Set(-1L, 8L, 9L),
+        s"compacted store partitions: $bandParts")
+      assert(parquetFiles(s"${pA.store}/bands") <
+        parquetFiles(s"${pB.store}/bands"),
+        "compaction must reduce the band store file count")
+
+      // row multisets identical between the twins (layout differs only)
+      def bandRows(p: IngestPaths) = spark.table(
+        StreamingIngest.storeTableName("bands", s"${p.store}/bands"))
+        .select("doc_id", "band_idx", "band_key").collect()
+        .map(_.toSeq).sortBy(_.toString).toSeq
+      assert(bandRows(pA) === bandRows(pB),
+        "band signatures must be unaffected by compaction")
+
+      StreamingIngest.dropStoreTables(spark, pA)
+      StreamingIngest.dropStoreTables(spark, pB)
+    }
+  }
+
+  test("day-zero bootstrap: the FIRST streaming delivery (batch 0) " +
+    "dedups against the bootstrapped store and cannot overwrite it") {
+    withTempDir("graft-r13-boot") { tmp =>
+      import spark.implicits._
+      val in = s"$tmp/in"
+      val paths = IngestPaths(s"$tmp/c", s"$tmp/s", s"$tmp/q")
+      // existing corpus: one doc whose near-dups must drop from day one
+      StreamingIngest.bootstrapNearDupStore(spark,
+        Seq((5000L, base)).toDF("doc_id", "text"), paths)
+      jsonl(s"$in/d0.json",
+        doc(1L, base + " tailX"), // near-dup of the bootstrapped doc
+        doc(2L, "entirely novel content about day zero bootstrap " +
+          "semantics and nothing else whatsoever"))
+      StreamingIngest.ingestAvailableNearDup(spark, in, schema, paths,
+        s"$tmp/ck", maxFilesPerTrigger = 1).awaitTermination()
+      // streaming numbers its first batch 0: the bootstrap partition
+      // must be BELOW it (ingest_batch = -1), visible and untouched
+      assert(corpusPairs(paths) === Set((2L, 0L)),
+        "batch 0 must drop the bootstrap near-dup and keep the novel doc")
+      val bootRows = spark.table(
+        StreamingIngest.storeTableName("bands", s"${paths.store}/bands"))
+        .filter(col("ingest_batch") === -1L)
+        .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+      assert(bootRows === Set(5000L),
+        s"bootstrap partition must survive the first delivery: $bootRows")
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+
+  test("restart boundary: a second drain under the same checkpoint " +
+    "resumes past compacted history and keeps deduping against it") {
+    withTempDir("graft-r13-restart") { tmp =>
+      val in = s"$tmp/in"
+      val paths = IngestPaths(s"$tmp/c", s"$tmp/s", s"$tmp/q")
+      // phase 1: 5 deliveries, compaction fires in-loop after batch 4
+      (0 until 5).foreach { k =>
+        jsonl(s"$in/d$k.json",
+          doc(100L * k + 1, s"unique phase one text $k alpha$k beta$k " +
+            s"gamma$k"),
+          doc(100L * k + 2, base + s" tail$k"))
+        stamp(s"$in/d$k.json", 200 - k)
+      }
+      StreamingIngest.ingestAvailableNearDup(spark, in, schema, paths,
+        s"$tmp/ck", maxFilesPerTrigger = 1, compactEvery = Some(4))
+        .awaitTermination()
+      val partsMid = spark.table(
+        StreamingIngest.storeTableName("bands", s"${paths.store}/bands"))
+        .select("ingest_batch").distinct().collect()
+        .map(_.getLong(0)).toSet
+      assert(partsMid === Set(-1L, 4L), s"phase-1 store layout: $partsMid")
+
+      // phase 2 ("restart"): 3 more deliveries under the SAME
+      // checkpoint — consumed files must not reprocess, and the new
+      // batches dedup against survivors now living in the BASE partition
+      (5 until 8).foreach { k =>
+        jsonl(s"$in/d$k.json",
+          doc(100L * k + 1, s"unique phase two text $k delta$k eps$k " +
+            s"zeta$k"),
+          doc(100L * k + 2, base + s" tail$k"))
+        stamp(s"$in/d$k.json", 200 - k)
+      }
+      StreamingIngest.ingestAvailableNearDup(spark, in, schema, paths,
+        s"$tmp/ck", maxFilesPerTrigger = 1, compactEvery = Some(4))
+        .awaitTermination()
+      val expected = Set((1L, 0L), (2L, 0L)) ++
+        (1 until 8).map(k => (100L * k + 1, k.toLong)).toSet
+      assert(corpusPairs(paths) === expected,
+        "restart must resume at batch 5 and dedup against compacted " +
+          s"history: ${corpusPairs(paths)}")
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+
+  test("localCheckpoint blocks release after each batch (ADVICE: no " +
+    "persistent-RDD accumulation in a long-running loop)") {
+    withTempDir("graft-r13-ckpt") { tmp =>
+      import spark.implicits._
+      val paths = IngestPaths(s"$tmp/c", s"$tmp/s", s"$tmp/q")
+      def batch(k: Long) = Seq(
+        (100L * k + 1, s"unique payload number $k entirely fresh " +
+          s"wording alpha$k beta$k"),
+        (100L * k + 2, base + s" suffix$k"))
+        .toDF("doc_id", "text")
+        .withColumn("_corrupt_record", lit(null).cast("string"))
+      val before = spark.sparkContext.getPersistentRDDs.size
+      (0L until 3L).foreach { k =>
+        StreamingIngest.processBatchNearDup(batch(k), k, paths)
+        StreamingIngest.processBatch(batch(k + 10L), k + 100L,
+          IngestPaths(s"$tmp/c2", s"$tmp/s2", s"$tmp/q2"))
+      }
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after <= before,
+        s"checkpoint blocks must release batch-by-batch: $before -> $after")
+      StreamingIngest.dropStoreTables(spark, paths)
+      StreamingIngest.dropStoreTables(spark,
+        IngestPaths(s"$tmp/c2", s"$tmp/s2", s"$tmp/q2"))
+    }
+  }
+}

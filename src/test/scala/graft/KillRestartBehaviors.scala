@@ -1,13 +1,16 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, Row}
+import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.MomentState
 import graft.streaming.StreamingOps
+import graft.util.TempDirs.withTempDir
+
+import TestSpark._
 
 /** Checkpoint KILL-RESTART durability for EVERY stateful stream,
   * parameterized over the STATE-STORE PROVIDER — the matrix axis a
@@ -28,15 +31,13 @@ import graft.streaming.StreamingOps
   * @param axis display tag for the provider under test
   * @param providerClass None = Spark's default (HDFSBackedStateStore);
   *   Some(fqcn) is set on the session for the duration of each test
-  * @param includeMomentState the Round8bSpec moment-state shape is
-  *   already covered on the default axis there; non-default axes set
-  *   this to run all 8 stateful shapes in one matrix row
+  * @param includeMomentState the moment-state shape is already covered
+  *   on the default axis by Round8bSpec; non-default axes set this
+  *   to run all 8 stateful shapes in one matrix row
   */
 abstract class KillRestartBehaviors(axis: String,
     providerClass: Option[String],
     includeMomentState: Boolean) extends AnyFunSuite {
-  protected lazy val spark = TestSpark.spark
-
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** Pin the state-store provider for the whole test body (both query
@@ -45,21 +46,14 @@ abstract class KillRestartBehaviors(axis: String,
     */
   private def withProvider[T](body: => T): T = providerClass match {
     case None => body
-    case Some(p) =>
-      val old = spark.conf.getOption(ProviderKey)
-      spark.conf.set(ProviderKey, p)
-      try body
-      finally old match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
-      }
+    case Some(p) => withConf(ProviderKey -> p)(body)
   }
 
   private val flushTs = java.sql.Timestamp.valueOf("2044-01-01 00:00:00")
   private val flushCut = java.sql.Date.valueOf("2043-12-01")
 
   private def fixture(): DataFrame =
-    Tables.load(spark, "/root/testdata/sf0.001", "events")
+    Tables.load(spark, sf, "events")
       .select(col("ts"), col("user_id"), col("event_type"), col("value"))
 
   /** Streamed-with-restart output of `transform`, drained and flushed. */
@@ -71,29 +65,29 @@ abstract class KillRestartBehaviors(axis: String,
       .as[(java.sql.Timestamp, Long, String, Double)].collect()
       .sortBy(_._1.getTime).toSeq
     val (firstHalf, secondHalf) = all.splitAt(all.size / 2)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("kr_out").toString
-    val cpDir = java.nio.file.Files
-      .createTempDirectory("kr_cp").toString
-    val input = MemoryStream[(java.sql.Timestamp, Long, String, Double)]
-    val out = transform(
-      input.toDS().toDF("ts", "user_id", "event_type", "value"))
-    def start() = out.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    // phase 1: half the stream, then KILL — state straddles the split
-    val q1 = start()
-    try { input.addData(firstHalf); q1.processAllAvailable() }
-    finally q1.stop()
-    // phase 2: restart from checkpoint, rest of the stream + flush
-    val q2 = start()
-    try {
-      input.addData(secondHalf)
-      q2.processAllAvailable()
-      input.addData(Seq((flushTs, -1L, "flush", 0.0)))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    spark.read.parquet(outDir)
+    withTempDir("kr") { tmp =>
+      val outDir = tmp + "/out"
+      val cpDir = tmp + "/cp"
+      val input = MemoryStream[(java.sql.Timestamp, Long, String, Double)]
+      val out = transform(
+        input.toDS().toDF("ts", "user_id", "event_type", "value"))
+      def start() = out.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", cpDir)
+        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      // phase 1: half the stream, then KILL — state straddles the split
+      val q1 = start()
+      try { input.addData(firstHalf); q1.processAllAvailable() }
+      finally q1.stop()
+      // phase 2: restart from checkpoint, rest of the stream + flush
+      val q2 = start()
+      try {
+        input.addData(secondHalf)
+        q2.processAllAvailable()
+        input.addData(Seq((flushTs, -1L, "flush", 0.0)))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      spark.read.parquet(outDir).localCheckpoint()
+    }
   }
 
   /** recovered ≡ batch, and zero double-emission across the restart. */
@@ -169,7 +163,7 @@ abstract class KillRestartBehaviors(axis: String,
     withProvider {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
-      val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
+      val ev = Tables.load(spark, sf, "events")
       val all = ev.select(col("user_id").cast("long"), col("ts"),
           col("event_type"), col("event_id").cast("long"),
           col("value").cast("double"))
@@ -180,43 +174,43 @@ abstract class KillRestartBehaviors(axis: String,
       // split lands mid-stream, leaving many users' latest-purchase state
       // open in the store at the kill
       val (firstHalf, secondHalf) = all.splitAt(all.size / 2)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("asof_out").toString
-      val cpDir = java.nio.file.Files
-        .createTempDirectory("asof_cp").toString
-      val input = MemoryStream[(Long, java.sql.Timestamp, String, Long,
-        Double)]
-      val out = StreamingOps.asofEnrichStream(
-        input.toDS().toDF("user_id", "ts", "event_type", "event_id",
-          "value"), "1 hour")
-      def start() = out.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      val q1 = start()
-      try { input.addData(firstHalf); q1.processAllAvailable() }
-      finally q1.stop()
-      val q2 = start()
-      try { input.addData(secondHalf); q2.processAllAvailable() }
-      finally q2.stop()
-      val got = spark.read.parquet(outDir)
-        .select("user_id", "event_id", "p_event", "p_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.get(2), r.get(3)))
-      assert(got.length == got.distinct.length,
-        "restart must not re-emit enriched clicks")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("user_id", "event_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts")
-        .agg(max("event_id").as("p_event"),
-          max_by(col("value"), col("event_id")).as("p_value"))
-      val expect = graft.operators.AsOfJoin.asofLast(clicks, purchases,
-          Seq("user_id"), "ts", "ts", Seq("p_event", "p_value"))
-        .select("user_id", "event_id", "p_event", "p_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.get(2), r.get(3))).toSet
-      assert(expect.nonEmpty && got.toSet == expect,
-        s"recovered ${got.length} != batch ${expect.size}")
+      withTempDir("asof") { tmp =>
+        val outDir = tmp + "/out"
+        val cpDir = tmp + "/cp"
+        val input = MemoryStream[(Long, java.sql.Timestamp, String, Long,
+          Double)]
+        val out = StreamingOps.asofEnrichStream(
+          input.toDS().toDF("user_id", "ts", "event_type", "event_id",
+            "value"), "1 hour")
+        def start() = out.writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", cpDir)
+          .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+        val q1 = start()
+        try { input.addData(firstHalf); q1.processAllAvailable() }
+        finally q1.stop()
+        val q2 = start()
+        try { input.addData(secondHalf); q2.processAllAvailable() }
+        finally q2.stop()
+        val got = spark.read.parquet(outDir)
+          .select("user_id", "event_id", "p_event", "p_value")
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.get(2), r.get(3)))
+        assert(got.length == got.distinct.length,
+          "restart must not re-emit enriched clicks")
+        val clicks = ev.filter(col("event_type") === "click")
+          .select("user_id", "event_id", "ts")
+        val purchases = ev.filter(col("event_type") === "purchase")
+          .groupBy("user_id", "ts")
+          .agg(max("event_id").as("p_event"),
+            max_by(col("value"), col("event_id")).as("p_value"))
+        val expect = graft.operators.AsOfJoin.asofLast(clicks, purchases,
+            Seq("user_id"), "ts", "ts", Seq("p_event", "p_value"))
+          .select("user_id", "event_id", "p_event", "p_value")
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.get(2), r.get(3))).toSet
+        assert(expect.nonEmpty && got.toSet == expect,
+          s"recovered ${got.length} != batch ${expect.size}")
+      }
     }
     graft.util.Caches.releaseAll()
   }
@@ -226,38 +220,38 @@ abstract class KillRestartBehaviors(axis: String,
     withProvider {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
-      val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
+      val ev = Tables.load(spark, sf, "events")
         .select(col("user_id").cast("long"), col("ts"), col("event_type"),
           col("event_id").cast("long"), col("value").cast("double"))
       val all = ev
         .as[(Long, java.sql.Timestamp, String, Long, Double)]
         .collect().sortBy(_._2.getTime).toSeq
       val (firstHalf, secondHalf) = all.splitAt(all.size / 2)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("ssj_out").toString
-      val cpDir = java.nio.file.Files
-        .createTempDirectory("ssj_cp").toString
-      val input = MemoryStream[(Long, java.sql.Timestamp, String, Long,
-        Double)]
-      val out = StreamingOps.intervalJoinStream(
-        input.toDS().toDF("user_id", "ts", "event_type", "event_id",
-          "value"), window = "1 hour")
-      def start() = out.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      // kill with purchases of in-flight intervals still in both-sided
-      // state; the restart must keep matching phase-2 clicks to phase-1
-      // purchases inside the hour
-      val q1 = start()
-      try { input.addData(firstHalf); q1.processAllAvailable() }
-      finally q1.stop()
-      val q2 = start()
-      try { input.addData(secondHalf); q2.processAllAvailable() }
-      finally q2.stop()
-      // batch twin: the SAME operator over the static relation
-      // (watermarks no-op in batch — no second implementation)
-      assertRecoveredEqualsBatch(spark.read.parquet(outDir),
-        StreamingOps.intervalJoinStream(ev, window = "1 hour"))
+      withTempDir("ssj") { tmp =>
+        val outDir = tmp + "/out"
+        val cpDir = tmp + "/cp"
+        val input = MemoryStream[(Long, java.sql.Timestamp, String, Long,
+          Double)]
+        val out = StreamingOps.intervalJoinStream(
+          input.toDS().toDF("user_id", "ts", "event_type", "event_id",
+            "value"), window = "1 hour")
+        def start() = out.writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", cpDir)
+          .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+        // kill with purchases of in-flight intervals still in both-sided
+        // state; the restart must keep matching phase-2 clicks to phase-1
+        // purchases inside the hour
+        val q1 = start()
+        try { input.addData(firstHalf); q1.processAllAvailable() }
+        finally q1.stop()
+        val q2 = start()
+        try { input.addData(secondHalf); q2.processAllAvailable() }
+        finally q2.stop()
+        // batch twin: the SAME operator over the static relation
+        // (watermarks no-op in batch — no second implementation)
+        assertRecoveredEqualsBatch(spark.read.parquet(outDir),
+          StreamingOps.intervalJoinStream(ev, window = "1 hour"))
+      }
     }
     graft.util.Caches.releaseAll()
   }
@@ -286,46 +280,68 @@ abstract class KillRestartBehaviors(axis: String,
       withProvider {
         implicit val sqlCtx = spark.sqlContext
         import spark.implicits._
-        val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
+        val ev = Tables.load(spark, sf, "events")
           .select(col("ts"), col("user_id"), col("value"))
         val all = ev.as[(java.sql.Timestamp, Long, Double)].collect()
           .sortBy(_._1.getTime).toSeq
         val (firstHalf, secondHalf) = all.splitAt(all.size / 2)
-        val outDir = java.nio.file.Files
-          .createTempDirectory("ms_out").toString
-        val cpDir = java.nio.file.Files
-          .createTempDirectory("ms_cp").toString
-        val input = MemoryStream[(java.sql.Timestamp, Long, Double)]
-        val states = StreamingOps.momentStateStream(
-          input.toDS().toDF("ts", "user_id", "value"),
-          "1 day", "0 seconds", Seq("user_id", "value"))
-        def start() = states.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", cpDir)
-          .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-        val q1 = start()
-        try { input.addData(firstHalf); q1.processAllAvailable() }
-        finally q1.stop()
-        val q2 = start()
-        try {
-          input.addData(secondHalf)
-          q2.processAllAvailable()
-          input.addData(Seq((flushTs, -1L, 0.0)))
-          q2.processAllAvailable()
-        } finally q2.stop()
-        val windows = spark.read.parquet(outDir)
-          .filter(col("window_start") < lit(flushCut))
-          .drop("window_start", "window_end")
-        assert(windows.count() > 10, "expected many daily windows")
-        val dups = windows.groupBy(windows.columns.map(col).toSeq: _*)
-          .count().filter(col("count") > 1).count()
-        assert(dups == 0, "restart must not re-emit closed windows")
-        val merged = MomentState.report(MomentState.merge(Seq(windows)))
-          .collect().map(_.toSeq).toSeq
-        val direct = MomentState.report(MomentState.state(
-          ev.select("user_id", "value"))).collect().map(_.toSeq).toSeq
-        assert(merged == direct,
-          "recovered + post-restart states must merge to the batch profile")
+        withTempDir("ms") { tmp =>
+          val outDir = tmp + "/out"
+          val cpDir = tmp + "/cp"
+          val input = MemoryStream[(java.sql.Timestamp, Long, Double)]
+          val states = StreamingOps.momentStateStream(
+            input.toDS().toDF("ts", "user_id", "value"),
+            "1 day", "0 seconds", Seq("user_id", "value"))
+          def start() = states.writeStream.format("parquet")
+            .option("path", outDir).option("checkpointLocation", cpDir)
+            .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+          val q1 = start()
+          try { input.addData(firstHalf); q1.processAllAvailable() }
+          finally q1.stop()
+          val q2 = start()
+          try {
+            input.addData(secondHalf)
+            q2.processAllAvailable()
+            input.addData(Seq((flushTs, -1L, 0.0)))
+            q2.processAllAvailable()
+          } finally q2.stop()
+          val windows = spark.read.parquet(outDir)
+            .filter(col("window_start") < lit(flushCut))
+            .drop("window_start", "window_end")
+          assert(windows.count() > 10, "expected many daily windows")
+          val dups = windows.groupBy(windows.columns.map(col).toSeq: _*)
+            .count().filter(col("count") > 1).count()
+          assert(dups == 0, "restart must not re-emit closed windows")
+          val merged = MomentState.report(MomentState.merge(Seq(windows)))
+            .collect().map(_.toSeq).toSeq
+          val direct = MomentState.report(MomentState.state(
+            ev.select("user_id", "value"))).collect().map(_.toSeq).toSeq
+          assert(merged == direct,
+            "recovered + post-restart states must merge to the batch profile")
+        }
       }
       graft.util.Caches.releaseAll()
     }
 }
+
+/** The kill-restart ≡ batch matrix on Spark's DEFAULT state-store
+  * provider (HDFS-backed in-memory map). The moment-state shape is
+  * covered on this axis by Round8bSpec (StreamingOpsSpec.scala).
+  */
+class Round9bSpec extends KillRestartBehaviors(
+  axis = "default-hdfs", providerClass = None,
+  includeMomentState = false)
+
+/** ALL 8 stateful kill-restart shapes on the ROCKSDB state-store
+  * provider — the config a 100 TB streaming deployment actually runs,
+  * where keyed state outgrows executor heap and lives in a RocksDB
+  * instance per state partition with its own checkpoint/changelog/
+  * recovery path. Green here means the durability story is
+  * provider-portable, not an artifact of the default in-memory store's
+  * snapshot format.
+  */
+class Round10bRocksDbSpec extends KillRestartBehaviors(
+  axis = "rocksdb",
+  providerClass = Some("org.apache.spark.sql.execution.streaming" +
+    ".state.RocksDBStateStoreProvider"),
+  includeMomentState = true)

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.CatalogMonitor
 import graft.core.{MetricSink, Profiler}
@@ -11,12 +9,12 @@ import graft.operators.Multimodal
 import graft.state.{ChangeDetection, StateStore}
 import graft.storage.StorageMonitor
 import graft.streaming.ContinuousMonitor
+import graft.util.TempDirs.withTempDir
+
+import TestSpark._
 
 class MonitorsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private val sf = "/root/testdata/sf0.001"
 
   test("catalog row counts cover all fixture tables with positive counts") {
     val counts = CatalogMonitor.tableRowCounts(spark, sf)
@@ -34,15 +32,17 @@ class MonitorsSpec extends AnyFunSuite {
   }
 
   test("state store: put/get/overwrite survives reopen") {
-    val dir = Files.createTempDirectory("graft-state").toString + "/state"
-    val store = new StateStore(dir)
-    store.put(spark, "orders", "row_count", "100")
-    store.put(spark, "orders", "row_count", "120")
-    store.put(spark, "lineitem", "row_count", "500")
-    assert(store.get(spark, "orders", "row_count") == Some("120"))
-    val reopened = new StateStore(dir)
-    assert(reopened.get(spark, "lineitem", "row_count") == Some("500"))
-    assert(reopened.read(spark).count() == 2)
+    withTempDir("graft-state") { tmp =>
+      val dir = tmp + "/state"
+      val store = new StateStore(dir)
+      store.put(spark, "orders", "row_count", "100")
+      store.put(spark, "orders", "row_count", "120")
+      store.put(spark, "lineitem", "row_count", "500")
+      assert(store.get(spark, "orders", "row_count") == Some("120"))
+      val reopened = new StateStore(dir)
+      assert(reopened.get(spark, "lineitem", "row_count") == Some("500"))
+      assert(reopened.read(spark).count() == 2)
+    }
   }
 
   test("change detection: corrected delta sign and symmetric drift") {
@@ -301,17 +301,19 @@ class MonitorsSpec extends AnyFunSuite {
   }
 
   test("sinks: partitioned parquet round-trip with partition pruning") {
-    val dir = Files.createTempDirectory("graft-sink").toString + "/out"
-    val df = Seq((1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0))
-      .toDF("id", "part", "v")
-    graft.sources.Sinks.parquet(df, dir, partitionCols = Seq("part"))
-    assert(new java.io.File(dir, "part=a").exists())
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 3)
-    assert(back.filter(col("part") === "a").count() == 2)
-    val csvDir = Files.createTempDirectory("graft-sink").toString + "/csv"
-    graft.sources.Sinks.csv(df, csvDir)
-    assert(graft.sources.Sources.file(spark, csvDir, "csv").count() == 3)
+    withTempDir("graft-sink") { tmp =>
+      val dir = tmp + "/out"
+      val df = Seq((1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0))
+        .toDF("id", "part", "v")
+      graft.sources.Sinks.parquet(df, dir, partitionCols = Seq("part"))
+      assert(new java.io.File(dir, "part=a").exists())
+      val back = spark.read.parquet(dir)
+      assert(back.count() == 3)
+      assert(back.filter(col("part") === "a").count() == 2)
+      val csvDir = tmp + "/csv"
+      graft.sources.Sinks.csv(df, csvDir)
+      assert(graft.sources.Sources.file(spark, csvDir, "csv").count() == 3)
+    }
   }
 
   test("metric sink buffers typed points and round-trips via DataFrame") {

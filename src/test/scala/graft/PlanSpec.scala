@@ -1,10 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.{AnyFunSuite, AnyFunSuiteLike}
 
-import graft.plans.PlanLeaves
+import graft.operators.Anomaly
+import graft.plans.{Lineage, PlanLeaves}
 import graft.sources.Sinks
+
+import TestSpark._
 
 /** Physical-plan assertions: the plans the 100 TB design story depends on
   * must actually materialize — filters reach the parquet scan, small dims
@@ -14,8 +18,6 @@ import graft.sources.Sinks
   * notices at fixture scale.
   */
 class PlanSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -112,9 +114,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join without a shuffle") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Sinks.bucketedTable(Tables.load(spark, sf, "orders")
         .select("o_orderkey", "o_orderpriority"), "b_orders", Seq("o_orderkey"), 4)
       Sinks.bucketedTable(Tables.load(spark, sf, "lineitem")
@@ -125,7 +125,6 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("Exchange"), s"bucketed join should not shuffle:\n$p")
       assert(j.count() == Tables.load(spark, sf, "lineitem").count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }
@@ -514,5 +513,976 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"),
       s"only the 1-row basket count may cross-join, broadcast:\n$p")
     graft.util.Caches.releaseAll()
+  }
+}
+
+/** The registry scan-shape gate: each query's final adaptive plan at sf
+  * holds at most its bound of parquet leaves. A suite mixes this in and
+  * registers one test per (query, bound) of its table with `scanGates`.
+  */
+trait ScanGates extends AnyFunSuiteLike {
+
+  /** TREE-counted leaves of `name`'s final adaptive plan (collected so
+    * AQE finalizes), with the query's caches released after.
+    */
+  protected def leafCounts(name: String): Map[String, Int] = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect() // finalize AQE
+    val m = PlanLeaves.counts(df)
+    graft.util.Caches.releaseAll()
+    spark.sharedState.cacheManager.clearCache()
+    m
+  }
+
+  protected def scanGates(gates: Seq[(String, Int)]): Unit =
+    gates.foreach { case (name, maxLeaves) =>
+      test(s"$name: ≤ $maxLeaves parquet leaves in the final plan") {
+        val ls = leafCounts(name)
+        val n = PlanLeaves.parquetScans(ls)
+        assert(n <= maxLeaves,
+          s"$name grew a re-scan: $n parquet leaves (max $maxLeaves) in $ls")
+      }
+    }
+}
+
+/** Round-7 part three: tree-probe scan-shape gates over the post-audit
+  * additions q188–q200 and the round-7 queries — extends PlanSpec's
+  * regression net so none of these silently grows a re-scan. Counts
+  * are TREE-traversed final adaptive plans (the string form reprints
+  * cached fill plans and inflates naive counts).
+  */
+class Round7hSpec extends AnyFunSuite with ScanGates {
+
+  /** (query, max parquet leaves, cache-backed allowed). The bound is
+    * the count the operator's design needs — one leaf per distinct
+    * input relation pass, 0 when a cache/checkpoint feeds the plan.
+    */
+  private val gates: Seq[(String, Int)] = Seq(
+    "q188_item_recs" -> 0,            // capped basket relation cached
+    "q189_trimmed_shift" -> 2,        // one melted scan per side
+    "q190_random_negatives" -> 2,     // corpus (id,label) + anchor pick
+    "q191_dedup_survivorship" -> 0,   // shingle relation cached
+    "q192_best_split" -> 1,           // census off one scan
+    "q193_proportion_z" -> 1,         // union reuses the unit exchange
+    "q194_did" -> 1,                  // one conditional aggregate
+    "q195_source_influence" -> 1,     // group cores off one scan
+    "q196_mde" -> 1,
+    "q197_pairwise_welch" -> 1,       // G stat rows, pair stage reuses
+    "q198_hhi" -> 1,
+    "q199_ess" -> 1,
+    "q200_range_contract" -> 2,       // ref snapshot + current side
+    "q153a_weekly_distinct_exact" -> 1,
+    "q155a_passage_fingerprint" -> 0, // passage census cached
+    "q169a_hard_negatives_lsh" -> 2,  // bucketed corpus + anchor pick
+    "q179a_label_noise_lsh" -> 2,
+    "q201_join_size" -> 2,            // one census per side, reused
+    "q203_group_sequential" -> 1,
+    "q204_uplift_bins" -> 0,          // unit relation cached
+    "q205_t_closeness" -> 0,          // QI×value census cached
+    "q206_log_rank" -> 0,             // user-grain relation cached
+    "q160_kaplan_meier" -> 0,         // same shape, same cache
+    "q207_mp4_metadata" -> 0,         // synthesized RDD payloads
+    "q208_chow_break" -> 0,           // daily census cached
+    "q209_conformal" -> 0,            // split base cached
+    "q210_linkage_em" -> 0,           // pair relation cached
+    "q211_audience_overlap" -> 0,     // (user, label) relation cached
+    "q212_profile_merge" -> 2,        // pre + post slice states
+    "q213_session_paths" -> 1,
+    "q214_chat_turns" -> 0,           // synthesized RDD payloads
+    "q215_top_eigen" -> 0,            // cov + vector relations cached
+    "q216_kcore" -> 0,                // peel rounds checkpoint-backed
+    "q217_spearman" -> 0,             // cell census cached
+    "q218_seasonal_residuals" -> 0,   // daily census cached
+    "q219_capture_recapture" -> 0,    // both pair stages cache-backed
+    "q220_cross_correlation" -> 0,    // daily census cached
+    "q221_weighted_median" -> 1,
+    "q222_best_break" -> 1,
+    "q223_heaps_fit" -> 0,         // token relation cached
+    "q224_good_turing" -> 1,
+    "q225_cohens_kappa" -> 0)      // label census cached
+
+  scanGates(gates)
+
+  test("q193/q197: the self-union rides a ReusedExchange, not a re-scan") {
+    assert(leafCounts("q193_proportion_z").getOrElse("ReusedExchange", 0) >= 1)
+    assert(leafCounts("q197_pairwise_welch").getOrElse("ReusedExchange", 0) >= 1)
+  }
+}
+
+/** Round-7 part fourteen: seasonal residual anomalies + column-level
+  * lineage introspection.
+  */
+class Round7sSpec extends AnyFunSuite {
+
+
+  test("seasonalResidualReport: weekly rhythm is baseline, not anomaly") {
+    import spark.implicits._
+    // two weeks: weekdays 10 events, Sundays 2 events — perfectly
+    // seasonal, so nothing flags; then a 30-event weekday spike does
+    val days = (1 to 14).map(d => f"2024-01-$d%02d") // Jan 1 2024 = Monday
+    val ev = days.zipWithIndex.flatMap { case (d, i) =>
+      val dow = (i + 1) % 7 // Jan 7 and 14 are Sundays
+      val base = if (dow == 0) 2 else 10
+      val n = if (d == "2024-01-10") 40 else base
+      (1 to n).map(k => (1L, ts(s"$d 12:00:00"), "click"))
+    }.toDF("user_id", "ts", "event_type")
+    val r = Anomaly.seasonalResidualReport(ev, "event_type",
+        thresholdPermille = 500L)
+      .collect().map(x => x.getDate(1).toString ->
+        (x.getLong(3), x.getLong(5), x.getBoolean(6))).toMap
+    // Sundays sit exactly on their weekday mean: residual 0, unflagged
+    assert(r("2024-01-07") == (2L, 0L, false))
+    assert(r("2024-01-14") == (2L, 0L, false))
+    // the spike day flags, and it drags its weekday-mate (Jan 3) out
+    // of band too: mean of (10, 40) = 25, both 15 away > 12.5
+    assert(r("2024-01-10")._3 && r("2024-01-03")._3)
+    // a normal weekday against a clean mean does not flag
+    assert(!r("2024-01-01")._3 && !r("2024-01-08")._3)
+  }
+
+  test("columnLineage: outputs trace to their true source columns") {
+    val lin1 = Lineage.columnLineage(
+      SparkEntry.queries("q01_pricing_summary")(spark, sf)).toMap
+    assert(lin1("sum_qty") == Set("lineitem.l_quantity"))
+    assert(lin1("sum_disc_price") ==
+      Set("lineitem.l_extendedprice", "lineitem.l_discount"))
+    assert(lin1("count_order") == Set.empty)
+    val lin3 = Lineage.columnLineage(
+      SparkEntry.queries("q03_join_broadcast")(spark, sf)).toMap
+    assert(lin3("r_name") == Set("region.r_name"))
+    assert(lin3("avg_bal") == Set("customer.c_acctbal"))
+    // grouping passthrough keeps identity lineage
+    assert(lin1("l_returnflag") == Set("lineitem.l_returnflag"))
+  }
+
+  test("columnLineage: union fan-in reports EVERY branch's sources") {
+    // the engine's own O2 fan-in idiom: reduce(_ unionByName _) over
+    // per-source monitors — a Union's output reuses the FIRST child's
+    // exprIds, so without the Union case branches 2..n vanish
+    val a = Tables.load(spark, sf, "orders")
+      .select(col("o_custkey").as("k"), col("o_totalprice").as("v"))
+    val b = Tables.load(spark, sf, "customer")
+      .select(col("c_custkey").as("k"), col("c_acctbal").as("v"))
+    val c = Tables.load(spark, sf, "supplier")
+      .select(col("s_suppkey").as("k"), col("s_acctbal").as("v"))
+    val lin = Lineage.columnLineage(
+      Seq(a, b, c).reduce(_ unionByName _)).toMap
+    assert(lin("k") == Set("orders.o_custkey", "customer.c_custkey",
+      "supplier.s_suppkey"), s"all three branches must appear: $lin")
+    assert(lin("v") == Set("orders.o_totalprice", "customer.c_acctbal",
+      "supplier.s_acctbal"), s"all three branches must appear: $lin")
+    // downstream of the union, derived columns keep the merged set
+    val agg = Seq(a, b).reduce(_ unionByName _)
+      .groupBy("k").agg(sum("v").as("total"))
+    val lin2 = Lineage.columnLineage(agg).toMap
+    assert(lin2("total") ==
+      Set("orders.o_totalprice", "customer.c_acctbal"))
+  }
+
+  test("columnLineage: Intersect merges branches, Except stays left") {
+    val a = Tables.load(spark, sf, "orders")
+      .select(col("o_custkey").as("k"))
+    val b = Tables.load(spark, sf, "customer")
+      .select(col("c_custkey").as("k"))
+    // Intersect output values exist in BOTH children → positional union
+    val li = Lineage.columnLineage(a.intersect(b)).toMap
+    assert(li("k") == Set("orders.o_custkey", "customer.c_custkey"))
+    // Except values flow from the left only; the right side is a row
+    // filter, and filter predicates are routing by convention
+    val le = Lineage.columnLineage(a.except(b)).toMap
+    assert(le("k") == Set("orders.o_custkey"))
+  }
+
+  test("columnLineage: explode and window columns trace through") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val df = Seq((1L, Seq("a", "b"))).toDF("id", "xs")
+      .select(col("id"), explode(col("xs")).as("x"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("id").orderBy("x")))
+    val lin = Lineage.columnLineage(df).toMap
+    // the local fixture's leaf attributes are the tuple fields _1/_2
+    assert(lin("x") == Set("localrelation._2"))
+    assert(lin("rn") == Set("localrelation._1", "localrelation._2"))
+  }
+}
+
+/** Round-8 scan-shape gates over q226–q237 — the Round7hSpec net
+  * extended so none of the round-8 operators silently grows a
+  * re-scan. Counts are TREE-traversed final adaptive plans.
+  */
+class Round8fSpec extends AnyFunSuite with ScanGates {
+
+  private val gates: Seq[(String, Int)] = Seq(
+    "q226_winnowing" -> 0,            // selected-fingerprint cache
+    "q227_kneser_ney" -> 1,           // docs re-enter the final left join
+    "q228_label_propagation" -> 0,    // labels checkpoint-backed
+    "q229_brier" -> 0,                // row relation cached
+    "q230_removal_effect" -> 0,       // journey + matrix caches
+    "q231_followed_by" -> 0,          // (key, state) stats cached
+    "q232_shapley_attribution" -> 1,  // touched cache + coalition range
+    "q233_adamic_adar" -> 0,          // edge relation cached
+    "q233a_adamic_adar_capped" -> 0,  // same cache, capped centers
+    "q234_seq_triples" -> 0,          // position + stat caches
+    "q235_ipw_ate" -> 0,              // unit relation cached
+    "q236_neyman_allocation" -> 1,    // one stratum census scan
+    "q237_average_precision" -> 1,    // one value-domain census scan
+    "q238_rake_keywords" -> 0,        // phrase relation cached
+    "q239_dp_histogram" -> 1,         // one key census scan
+    "q240_kruskal_wallis" -> 0,       // K-row driver finish
+    "q241_brown_forsythe" -> 0,       // K-row driver finish
+    "q242_fdr_welch" -> 1,            // one group-stats scan, reused
+    "q243_page_hinkley" -> 1,         // one daily census scan
+    "q244_bradley_terry" -> 0,        // K-row driver MM finish
+    "q245_mcnemar" -> 1,              // one paired aggregate scan
+    "q246_fleiss_kappa" -> 1,         // one panel census scan
+    "q247_win_rate_wilson" -> 0,      // matchup census cached
+    "q248_isotonic_calibration" -> 0, // bin census cached
+    "q249_dsir_importance" -> 0,      // tf relation cached
+    "q250_cochran_armitage" -> 1,     // one decile census scan
+    "q251_krippendorff_alpha" -> 0,   // panel census cached
+    "q252_mantel_haenszel" -> 1,      // one stratum census scan
+    "q253_wasserstein" -> 2,          // the two half-window scans
+    "q254_dunn_pairs" -> 0,           // rank census cached
+    "q255_rake_weights" -> 0,         // cell census cached
+    "q256_weight_ess" -> 0,           // same cached census
+    "q257_jonckheere" -> 0,           // value census cached
+    "q258_ann_recall" -> 2,           // exact + LSH embedding scans
+    "q259_sprt" -> 1,                 // one ordered event scan
+    "q260_cronbach_alpha" -> 0)       // complete-case panel cached
+
+  scanGates(gates)
+}
+
+/** Round-9 part three: column lineage through the S14 SQL entry point.
+  * `spark.sql` plans keep CTEs as WithCTE/CTERelationRef in the
+  * ANALYZED tree (inlining is an optimizer rule) and every `WITH`
+  * reference mints fresh exprIds, so the DataFrame-plan walk alone
+  * would lose the true table columns behind any CTE. These specs pin
+  * the SQL path end-to-end: CTEs (chained), subquery aliases, UNION
+  * ALL inside SQL, and a GraftExtensions native function in the
+  * projection.
+  */
+class Round9cSpec extends AnyFunSuite {
+
+  private def view(name: String): Unit =
+    Tables.load(spark, sf, name).createOrReplaceTempView(name)
+
+  test("SQL lineage: chained CTEs + subquery alias resolve to true " +
+    "table columns") {
+    view("orders"); view("customer")
+    val df = spark.sql(
+      """WITH big AS (
+        |  SELECT o_custkey AS k, o_totalprice AS v FROM orders
+        |  WHERE o_totalprice > 100
+        |), agg AS (
+        |  SELECT k, sum(v) AS sv FROM big GROUP BY k
+        |)
+        |SELECT sub.k AS cust, sub.sv AS spend, c.c_acctbal AS bal
+        |FROM (SELECT * FROM agg) sub
+        |JOIN customer c ON c.c_custkey = sub.k""".stripMargin)
+    val lin = Lineage.columnLineage(df).toMap
+    assert(lin("cust") == Set("orders.o_custkey"), lin.toString)
+    assert(lin("spend") == Set("orders.o_totalprice"), lin.toString)
+    assert(lin("bal") == Set("customer.c_acctbal"), lin.toString)
+  }
+
+  test("SQL lineage: UNION ALL inside SQL reports every branch, " +
+    "through a CTE") {
+    view("orders"); view("customer"); view("supplier")
+    val df = spark.sql(
+      """WITH fanin AS (
+        |  SELECT o_custkey AS k, o_totalprice AS v FROM orders
+        |  UNION ALL
+        |  SELECT c_custkey, c_acctbal FROM customer
+        |  UNION ALL
+        |  SELECT s_suppkey, s_acctbal FROM supplier
+        |)
+        |SELECT k, sum(v) AS total_v FROM fanin GROUP BY k""".stripMargin)
+    val lin = Lineage.columnLineage(df).toMap
+    assert(lin("k") == Set("orders.o_custkey", "customer.c_custkey",
+      "supplier.s_suppkey"), lin.toString)
+    assert(lin("total_v") == Set("orders.o_totalprice",
+      "customer.c_acctbal", "supplier.s_acctbal"), lin.toString)
+  }
+
+  test("SQL lineage: a CTE referenced twice keeps one source set; a " +
+    "CTE built on an earlier CTE chains") {
+    view("lineitem")
+    val df = spark.sql(
+      """WITH q AS (
+        |  SELECT l_orderkey AS ok, l_quantity AS qty FROM lineitem
+        |), q2 AS (
+        |  SELECT ok, qty * 2 AS dqty FROM q
+        |)
+        |SELECT a.ok AS left_ok, a.dqty AS left_d, b.dqty AS right_d
+        |FROM q2 a JOIN q2 b ON a.ok = b.ok""".stripMargin)
+    val lin = Lineage.columnLineage(df).toMap
+    assert(lin("left_ok") == Set("lineitem.l_orderkey"), lin.toString)
+    assert(lin("left_d") == Set("lineitem.l_quantity"), lin.toString)
+    assert(lin("right_d") == Set("lineitem.l_quantity"), lin.toString)
+  }
+
+  test("SQL lineage: GraftExtensions native functions trace their " +
+    "argument columns") {
+    graft.functions.GraftExtensions.register(spark)
+    view("documents")
+    val df = spark.sql(
+      """WITH t AS (
+        |  SELECT doc_id, graft_tokens(text) AS toks,
+        |    graft_poly_hash(text) AS h
+        |  FROM documents
+        |)
+        |SELECT doc_id, size(toks) AS n_tokens, h FROM t""".stripMargin)
+    val lin = Lineage.columnLineage(df).toMap
+    assert(lin("doc_id") == Set("documents.doc_id"), lin.toString)
+    assert(lin("n_tokens") == Set("documents.text"), lin.toString)
+    assert(lin("h") == Set("documents.text"), lin.toString)
+  }
+}
+
+/** Round-9 scan-shape gates — the Round8fSpec net extended over the
+  * fidelity-report rewrites (q43/q58a/q153), the ANN recall tiers
+  * (q261–q263), and the span-dedup family (q264–q266), so none of them
+  * silently grows a re-scan. Counts are TREE-traversed final adaptive
+  * plans (string forms double-count under AQE/caches).
+  */
+class Round9eSpec extends AnyFunSuite with ScanGates {
+
+  private val gates: Seq[(String, Int)] = Seq(
+    // fidelity reports: the exact twin is an intentional second pass;
+    // q43's two melts exchange-reuse down to ONE lineitem scan
+    "q43_profile_approx" -> 1,
+    "q58a_token_deciles_approx" -> 2,   // approx agg + exact census
+    "q153_sketch_rollup" -> 2,          // sketch rollup + exact twin
+    // recall graders: exact brute-force + the tier's own scans
+    "q261_ann_recall_ivf" -> 3,
+    "q262_ann_recall_pq" -> 2,
+    "q263_ann_recall_ivfpq" -> 4,
+    // span dedup: window census + occurrence join + doc sizes — the
+    // full-width window relation is deliberately NOT cached (larger
+    // than the corpus; the jaccardPairs trade, measured there)
+    "q264_dup_spans" -> 3,
+    "q265_span_dedup_report" -> 3,
+    "q266_span_scrub" -> 3,
+    "q267_conformal" -> 0,              // event relation cached
+    "q268_mmr_rerank" -> 0,             // driver greedy over stat rows
+    "q269_nelson_aalen" -> 0,           // user-grain relation cached
+    "q270_span_decontaminate" -> 3,     // corpus + reference + sizes
+    "q271_span_decon_scan" -> 1,        // ONE corpus scan, pure fold
+    "q272_interval_join" -> 2)          // the two event-side scans
+
+  scanGates(gates)
+}
+
+/** Round-10 scan-shape gates: the Round7h/8f/9e net extended to EVERY
+  * query at or above 0.5 s in the committed quiet bench — plan creep of
+  * the q215 class (an extra scan appearing through a refactor) is now
+  * caught at spec time for the whole heavy tail instead of two rounds
+  * late by bench drift. Each bound is the audited final-plan leaf count
+  * at the time of freezing: tree-traversed final adaptive plans (string
+  * forms double-count under AQE/caches), one parquet leaf per distinct
+  * input table unless the operator deliberately takes a second pass
+  * (fidelity twins, recall graders), 0 when cache/checkpoint-backed
+  * (iterative graph/EM/BPE families, streaming twins fed from memory).
+  */
+class Round10eSpec extends AnyFunSuite with ScanGates {
+
+  private val gates: Seq[(String, Int)] = Seq(
+    // iterative graph/clustering: census cached, rounds checkpointed
+    "q186_pagerank_personalized" -> 0,
+    "q129_pagerank" -> 0,
+    "q164_pagerank_weighted" -> 0,
+    "q139_khop_reach" -> 0,
+    "q177_assortativity" -> 0,
+    "q130_triangles" -> 2,              // degree census + wedge probe
+    "q120_cluster_reps" -> 1,
+    "q123_kmeans" -> 1,
+    // ANN tiers: code relation + query side per tier
+    "q102_ann_ivfpq" -> 4,
+    "q42_ann_ivf" -> 3,
+    "q60_ann_pq" -> 2,
+    "q150_random_projection" -> 1,
+    // profile/stat blocks: one pass per input table
+    "q11_numeric_profile" -> 1,
+    "q41_histograms_all" -> 1,
+    "q107_correlation" -> 1,
+    "q43a_approx_moments" -> 1,
+    "q104_cohort_retention" -> 0,       // event census cached
+    "q103_pivot_daily" -> 1,
+    "q105_sequence_funnel" -> 1,
+    "q99_rolling_activity" -> 0,
+    "q151_rolling_p95" -> 0,
+    "q163_rfm" -> 0,
+    "q168_inter_arrival" -> 1,
+    "q98_psi_drift" -> 3,               // split + baseline + current
+    "q187_psi_suite" -> 3,
+    "q184_ks_suite" -> 2,               // two-sample: one pass per side
+    "q159_kendall_tau" -> 0,
+    "q109_constraints" -> 1,
+    "q110_ref_integrity" -> 5,          // one leaf per checked FK edge
+    "q118_fk_discovery" -> 8,           // schema-wide candidate census
+    "q19_table_shapes" -> 2,            // catalog shapes: local relations
+    // dedup/text: corpus census cached where 2+ branches feed on it
+    "q50_dup_clusters" -> 0,
+    "q33_jaccard_pairs" -> 2,
+    "q34_minhash_lsh" -> 0,
+    "q35_simhash" -> 0,
+    "q47_trigram_jaccard" -> 2,
+    "q61_minhash_capped" -> 0,
+    "q61a_minhash_cap_bind" -> 0,
+    "q70_semantic_dedup" -> 2,
+    "q70a_semantic_dedup_lsh" -> 2,
+    "q155_passage_dedup" -> 0,
+    "q114_typo_variants" -> 0,
+    "q97_containment" -> 2,
+    "q97a_containment_capped" -> 3,
+    "q115_fuzzy_join" -> 2,
+    "q31_langid" -> 2,                  // corpus + ngram model side
+    "q48_tfidf_terms" -> 1,
+    "q83_bm25" -> 0,
+    "q84_collocations" -> 0,
+    "q87_token_kl" -> 0,
+    "q172_distinctive_terms" -> 0,
+    "q71_corpus_pipeline" -> 0,
+    "q106_padding_report" -> 1,
+    "q117_bpe_merges" -> 0,             // pair census driver-iterated
+    "q85_hybrid_rrf" -> 2,
+    "q88_embedding_drift" -> 2,
+    "q210a_linkage_em_sn" -> 0,
+    "q167_assoc_rules" -> 0,
+    // splits/joins
+    "q64a_split_leakage_safe" -> 1,
+    "q81_split_leakage" -> 0,
+    "q04_join_agg" -> 2,
+    "q46_salted_join" -> 2,
+    "q05_topk" -> 1,
+    "q26_streaming_hourly" -> 0,        // memory-stream fed
+    // round-10 additions (census cached / RDD-backed inventory)
+    "q273_cms_heavy_hitters" -> 0,
+    "q274_compaction_plan" -> 0,
+    // round-11: driver-finished manifest row (the staging/compact IO is
+    // RDD/write-jobs; the returned relation is local)
+    "q275_compaction_execute" -> 0,
+    // round-11: the 13 queries that crossed 0.5 s on the r11 host,
+    // each frozen at its audited final-plan leaf count
+    "q171_conversion_latency" -> 0,  // event census cached (3 IMR scans)
+    "q73_unigram_lm" -> 2,           // corpus + heldout side, exch reused
+    "q79_corpus_diff" -> 2,          // one pass per compared slice
+    "q158_ks_drift" -> 2,            // two-sample: one pass per side
+    "q19a_catalog_columns" -> 0,     // schema-derived local relation
+    "q148_autocorr" -> 0,            // series census cached (6 IMR scans)
+    "q40_dedup_kept" -> 1,
+    "q141_quantile_norm" -> 0,       // value censuses cached
+    "q65_pack_shards" -> 2,          // Pack's contract: subtotal pass +
+                                     // data pass re-read the projection
+    "q181_qq_drift" -> 2,            // two-sample + quantile Range probe
+    "q49_label_profile" -> 2,
+    "q03_join_broadcast" -> 3,       // three-table broadcast join
+    "q165_rank_sum" -> 2,
+    // round-11: runner metrics are a driver-side local relation
+    "q276_monitor_fanout_fanin" -> 0,
+    // round-11b/c: round-trip/ingest checksums are localCheckpoint'd
+    // one-row relations (the staging IO is write jobs, probed 0-leaf)
+    "q279_orc_roundtrip" -> 0,
+    "q280_stream_ingest_e2e" -> 0,
+    "q281_stream_neardup_ingest" -> 0)  // driver-built report relation
+
+  scanGates(gates)
+}
+
+/** Registry-wide CARTESIAN gate, the crossJoin sibling of
+  * Round11WindowGateSpec: a `CartesianProductExec` multiplies two
+  * NON-broadcast relations — if both sides are data grain that is a
+  * |A|·|B| blow-up no cluster survives, and nothing before this spec
+  * inspected for it (round 10's audit verified every `crossJoin`
+  * carries a `broadcast()` stat side BY HAND; this makes that audit
+  * standing). The engine's intended shape — `crossJoin(broadcast(tiny
+  * stat relation))` — plans as BroadcastNestedLoopJoin, which this
+  * gate deliberately permits: with a broadcast side of O(1)–O(K) stat
+  * rows it is a scan-stage enrichment, not a pair fan-out.
+  *
+  * Every query's physical plan (pre-execution initial plan, plus the
+  * plans cached under InMemoryRelations, plus subqueries) must plan
+  * ZERO CartesianProductExec nodes unless allow-listed with a grain
+  * justification proving BOTH sides are bounded stat relations.
+  */
+class Round11CartesianGateSpec extends AnyFunSuite {
+
+  /** query -> justification for every cartesian it plans. */
+  private val allowed: Map[String, String] = Map.empty
+
+  import org.apache.spark.sql.execution.SparkPlan
+
+  private def walkCartesians(p: SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.CartesianProductExec
+    p.collectWithSubqueries {
+      case c: CartesianProductExec =>
+        Seq(s"CartesianProduct(${c.left.nodeName} x ${c.right.nodeName})")
+      case a: AdaptiveSparkPlanExec => walkCartesians(a.executedPlan)
+      case q: QueryStageExec => walkCartesians(q.plan)
+      case s: InMemoryTableScanExec => walkCartesians(s.relation.cachedPlan)
+    }.flatten
+  }
+
+  private def cartesians(df: DataFrame): Seq[String] =
+    walkCartesians(df.queryExecution.executedPlan)
+
+  /** Round-12 second eye (the window gate's listener transposed):
+    * driver-finishing queries execute plans during CONSTRUCTION that
+    * the returned DataFrame never shows — a cartesian there would ship
+    * unseen. Records every CartesianProductExec of every plan executed
+    * while the query function runs.
+    */
+  private val constructed =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private lazy val constructionListener = {
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        walkCartesians(qe.executedPlan)
+          .foreach(c => constructed.add(s"$c [executed at construction]"))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    l
+  }
+
+  private def constructionCartesians(body: => Unit): Seq[String] = {
+    constructionListener
+    TestSpark.drainListenerBus()
+    constructed.clear()
+    body
+    TestSpark.drainListenerBus()
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    var s = constructed.poll()
+    while (s != null) { out += s; s = constructed.poll() }
+    out.distinct.toSeq
+  }
+
+  test("every registry query plans zero CartesianProduct nodes, or is " +
+    "allow-listed with a both-sides-stat-grain justification") {
+    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        var planCs = Seq.empty[String]
+        val execCs =
+          try constructionCartesians { planCs = cartesians(fn(spark, sf)) }
+          catch { case e: Throwable => Seq(s"probe error: ${e.getMessage}") }
+        val cs = planCs ++ execCs
+        graft.util.Caches.releaseAll()
+        spark.sharedState.cacheManager.clearCache()
+        if (cs.isEmpty || allowed.contains(name)) Nil
+        else Seq(s"$name: ${cs.mkString("; ")}")
+    }
+    assert(violations.isEmpty,
+      "cartesian products outside the allow-list:\n" +
+        violations.mkString("\n"))
+    val stale = allowed.keys.toSeq.sorted.filter { name =>
+      !SparkEntry.queries.contains(name) ||
+        cartesians(SparkEntry.queries(name)(spark, sf)).isEmpty
+    }
+    graft.util.Caches.releaseAll()
+    spark.sharedState.cacheManager.clearCache()
+    assert(stale.isEmpty, s"stale allow-list entries: $stale")
+  }
+}
+
+/** Registry-wide WINDOW-GRAIN gate: no query may ship an unpartitioned
+  * Window over a data-grain relation. An empty partition spec funnels
+  * the whole relation through ONE task — the single-task scale cliff
+  * the engine's conventions exist to prevent — yet nothing before this
+  * spec inspected Window partitioning, which is how four such windows
+  * shipped in rounds 8–10 despite the scan-shape gates.
+  *
+  * The gate walks every registry query's optimized logical plan (and
+  * the physical plans cached under InMemoryRelations, and all
+  * subqueries) at sf0.001 and fails on any Window whose partitionSpec
+  * is empty unless the QUERY is allow-listed below with a grain
+  * justification. The two tolerated grains, per the house convention:
+  *
+  *   - VALUE-DOMAIN CENSUS: the window rides one row per distinct
+  *     value (never per data row) — ECDF/quantile/calibration shapes;
+  *     bounded by the value domain, not the corpus.
+  *   - STAT ROWS: the relation is ≤ K rows by construction (top-k
+  *     candidates, per-bin/per-bucket summaries, date/hour grids).
+  *
+  * Everything else must re-express: orderBy().limit(k) for top-k, the
+  * Pack/compactionPlan two-level prefix sum for cumsums,
+  * Deciles.ntileExact for global tiles.
+  */
+class Round11WindowGateSpec extends AnyFunSuite {
+
+  /** Grain class of an allow-listed window input. The gate ENFORCES
+    * the typing: only `ValueBounded` and `StatK` entries are legal —
+    * an `EntityDerived` entry (census cardinality grows with rows:
+    * per-entity totals, micro-rounded continuous values) fails the
+    * gate with a pointer to the PrefixSum rebuild. Round 12 audited
+    * every entry with the one question "does the census cardinality
+    * grow with rows?" and rebuilt the five that did (q217 per-user
+    * spend ranks, q254 micro-value ranks, q163 per-user metric
+    * histograms, q267 micro-nonconformity census, q250 ntileExact
+    * offsets) on `PrefixSum.cumBefore` — they are gone from this list
+    * because their plans no longer hold ANY unpartitioned window.
+    */
+  private sealed trait Grain
+  private case object ValueBounded extends Grain // bounded value domain
+  private case object StatK extends Grain // <= K rows by construction
+  private case object EntityDerived extends Grain // ILLEGAL — rebuild
+
+  /** query -> (grain class, justification) for every unpartitioned
+    * window it plans. Each entry was audited at the source: the
+    * window's input relation is a VALUE-DOMAIN CENSUS over a BOUNDED
+    * domain (digit grids, day grids, n_chars/cents histograms —
+    * cardinality saturates at the domain size, independent of rows) or
+    * a ≤K-row STAT relation (top-k limits, per-group/bin/stage
+    * summaries). Adding a query here requires naming the census/stat
+    * relation, typing its grain, and saying why its cardinality is
+    * corpus-independent; the value-bounded operator sites additionally
+    * carry the Guards.boundedCensus runtime ceiling, so a drifted
+    * domain fails loudly in-plan, not just in this audit.
+    */
+  private val allowed: Map[String, (Grain, String)] = Map(
+    // top-k / limited stat rows
+    "q100_key_skew" ->
+      (StatK, "rank+cumshare over the limit(topN) key rows"),
+    "q157_zipf" -> (StatK, "rank over the limit(topK) vocabulary head"),
+    "q175_vocab_coverage" ->
+      (StatK, "cumulative mass over the limit(topK) vocab head"),
+    "q213_session_paths" ->
+      (StatK, "rank over the limit(topN) path census head"),
+    "q232_shapley_attribution" ->
+      (StatK, "channel index over the event-type vocabulary (<= 20)"),
+    // per-group / per-bin / per-stage summaries (groups are schema-,
+    // config- or category-bounded, never row-bounded)
+    "q145_anova" ->
+      (StatK, "grand-mean terms over the per-group summary rows"),
+    "q154_share_of_parent" ->
+      (StatK, "parent shares over the category census"),
+    "q195_source_influence" ->
+      (StatK, "LOO deltas over the per-source summary rows"),
+    "q203_group_sequential" ->
+      (StatK, "spending boundary over the stage grid rows"),
+    "q204_uplift_bins" ->
+      (StatK, "cum uplift over the fixed score-bin census"),
+    "q236_neyman_allocation" ->
+      (StatK, "largest-remainder ordering over the per-stratum rows"),
+    "q242_fdr_welch" ->
+      (StatK, "BH step-up over the per-test (metric-pair) rows"),
+    "q248_isotonic_calibration" ->
+      (StatK, "PAVA pool-adjacent over the fixed reliability-bin census"),
+    "q255_rake_weights" ->
+      (StatK, "margin scaling over the lang x source cell census"),
+    "q256_weight_ess" ->
+      (StatK, "ESS terms over the lang x source cell census"),
+    "q220_cross_correlation" ->
+      (StatK, "alignment over the bounded lag grid"),
+    // value-domain censuses over BOUNDED domains (ECDF /
+    // order-statistic / contingency shapes); each backing operator
+    // carries the boundedCensus runtime ceiling
+    "q111_volume_anomaly" ->
+      (ValueBounded, "rolling stats over the per-day census " +
+        "(calendar-bounded)"),
+    "q112_benford" ->
+      (ValueBounded, "digit shares over the 9-row leading-digit census"),
+    "q134_mutual_information" ->
+      (ValueBounded, "cell terms over the lang x source contingency " +
+        "census (schema-bounded categories)"),
+    "q136_chi_square" ->
+      (ValueBounded, "expected counts over the contingency census " +
+        "(schema-bounded categories)"),
+    "q141_quantile_norm" ->
+      (ValueBounded, "rank map over per-group n_chars censuses " +
+        "(saturates at max doc length; boundedCensus-guarded)"),
+    "q156_pr_curve" ->
+      (ValueBounded, "cum TP/FP over the n_chars threshold census " +
+        "(saturates at max doc length; boundedCensus-guarded)"),
+    "q160_kaplan_meier" ->
+      (ValueBounded, "at-risk cumsum over the DAY-grain lifetime " +
+        "census (calendar-bounded; boundedCensus-guarded)"),
+    "q192_best_split" ->
+      (ValueBounded, "split scan over the n_chars threshold census " +
+        "(saturates at max doc length; boundedCensus-guarded)"),
+    "q206_log_rank" ->
+      (ValueBounded, "at-risk cumsum over the DAY-grain lifetime " +
+        "census (calendar-bounded; boundedCensus-guarded)"),
+    "q237_average_precision" ->
+      (ValueBounded, "cum precision over the CENTS-grain score census " +
+        "(saturates at the bounded price domain; boundedCensus-guarded)"),
+    "q269_nelson_aalen" ->
+      (ValueBounded, "hazard cumsum over the DAY-grain lifetime " +
+        "census (calendar-bounded; boundedCensus-guarded)"))
+
+  import org.apache.spark.sql.execution.SparkPlan
+
+  /** Round-13 (verdict task 5): the gate VERIFIES the guards it cites.
+    * Every ValueBounded allow-list entry that justifies itself with
+    * "boundedCensus-guarded" must actually plan the guard — the
+    * `raise_error` filter `Guards.boundedCensus` threads in — in the
+    * query's own plans (optimized, cached, or construction-executed).
+    * Without this check a refactor could drop a guard silently while
+    * the justification text kept claiming it (round-12 verdict's
+    * "missing #5"). raise_error appears nowhere else in main
+    * (re-grepped round 13), so its presence IS the guard's.
+    */
+  private def exprHasRaise(
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+    e.exists {
+      case _: org.apache.spark.sql.catalyst.expressions.RaiseError => true
+      case _ => false
+    }
+
+  private def physHasGuard(p: SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p.collectWithSubqueries {
+      case n if n.expressions.exists(exprHasRaise) => true
+      case a: AdaptiveSparkPlanExec if physHasGuard(a.executedPlan) => true
+      case q: QueryStageExec if physHasGuard(q.plan) => true
+      case s: InMemoryTableScanExec
+        if physHasGuard(s.relation.cachedPlan) => true
+    }.nonEmpty
+  }
+
+  private def logicalHasGuard(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case n if n.expressions.exists(exprHasRaise) => true
+      case m: InMemoryRelation if physHasGuard(m.cachedPlan) => true
+    }.nonEmpty
+  }
+
+  /** Round-14 (verdict optional task 8): the guard walk ALSO asserts
+    * the guard's census relation is CACHED. `Guards.boundedCensus`
+    * computes its cardinality count as a second aggregate over the
+    * census — if the caller passed an uncached census, that count
+    * re-runs the whole upstream pipeline (the double-scan hazard the
+    * r12 verdict audited by hand). The count aggregate is identifiable
+    * by its `__census_n` output; its leaves must all be in-memory /
+    * local scans, never a file source.
+    */
+  private def physLeavesDeep(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p.collectLeaves().flatMap {
+      case a: AdaptiveSparkPlanExec => physLeavesDeep(a.executedPlan)
+      case q: QueryStageExec => physLeavesDeep(q.plan)
+      case r: ReusedExchangeExec => physLeavesDeep(r.child)
+      case l => Seq(l)
+    }
+  }
+
+  private def badGuardLeafPhys(p: SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec}
+    p.collectWithSubqueries {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+        if a.output.exists(_.name == "__census_n") =>
+        physLeavesDeep(a).collect {
+          case l if !(l.isInstanceOf[InMemoryTableScanExec] ||
+            l.isInstanceOf[LocalTableScanExec] ||
+            l.isInstanceOf[RDDScanExec]) => l.nodeName
+        }
+      case ad: AdaptiveSparkPlanExec => badGuardLeafPhys(ad.executedPlan)
+      case q: QueryStageExec => badGuardLeafPhys(q.plan)
+    }.flatten
+  }
+
+  private def badGuardLeafLogical(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case a: Aggregate if a.output.exists(_.name == "__census_n") =>
+        a.collectLeaves().collect {
+          case l if !(l.isInstanceOf[InMemoryRelation] ||
+            l.isInstanceOf[LocalRelation]) => l.nodeName
+        }
+      case m: InMemoryRelation => badGuardLeafPhys(m.cachedPlan)
+    }.flatten
+  }
+
+  private def physWindows(p: SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    p.collectWithSubqueries {
+      case w: WindowExec if w.partitionSpec.isEmpty =>
+        Seq(s"physical Window over ${w.child.nodeName}")
+      case a: AdaptiveSparkPlanExec => physWindows(a.executedPlan)
+      case q: QueryStageExec => physWindows(q.plan)
+      case s: InMemoryTableScanExec => physWindows(s.relation.cachedPlan)
+    }.flatten
+  }
+
+  private def emptySpecWindows(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case w: LWindow if w.partitionSpec.isEmpty =>
+        Seq(s"logical Window over ${w.child.nodeName}")
+      case m: InMemoryRelation => physWindows(m.cachedPlan)
+    }.flatten
+  }
+
+  /** The gate's round-12 second eye: queries that FINISH DRIVER-SIDE
+    * (countedCollect stat reductions, staging e2e runs) execute their
+    * window plans during CONSTRUCTION, so the returned DataFrame's
+    * plan never shows them — exactly how kruskalWallis's value-census
+    * window escaped rounds 8–11. A QueryExecutionListener records
+    * every unpartitioned physical Window of every plan executed while
+    * the query function runs.
+    */
+  private val constructed =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val constructedGuard =
+    new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val constructedUncachedGuard =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private lazy val constructionListener = {
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = {
+        physWindows(qe.executedPlan)
+          .foreach(w => constructed.add(s"$w [executed at construction]"))
+        if (physHasGuard(qe.executedPlan)) constructedGuard.set(true)
+        badGuardLeafPhys(qe.executedPlan)
+          .foreach(s => constructedUncachedGuard.add(s))
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    l
+  }
+
+  private def constructionWindows(body: => Unit): Seq[String] = {
+    constructionListener // ensure registered once
+    TestSpark.drainListenerBus()
+    constructed.clear()
+    constructedGuard.set(false)
+    body
+    TestSpark.drainListenerBus()
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    var s = constructed.poll()
+    while (s != null) { out += s; s = constructed.poll() }
+    out.distinct.toSeq
+  }
+
+  test("every registry query plans no unpartitioned Window, or is " +
+    "allow-listed with a grain justification — and every cited " +
+    "boundedCensus guard is PRESENT in that query's plans") {
+    val unguarded = scala.collection.mutable.ArrayBuffer[String]()
+    val uncachedCensus = scala.collection.mutable.ArrayBuffer[String]()
+    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        var planWs = Seq.empty[String]
+        var guardSeen = false
+        var badLeaves = Seq.empty[String]
+        constructedUncachedGuard.clear()
+        val execWs =
+          try constructionWindows {
+            val df = fn(spark, sf)
+            planWs = emptySpecWindows(df)
+            guardSeen = logicalHasGuard(df) || constructedGuard.get()
+            badLeaves = badGuardLeafLogical(df)
+          }
+          catch { case e: Throwable => Seq(s"probe error: ${e.getMessage}") }
+        guardSeen = guardSeen || constructedGuard.get()
+        var s = constructedUncachedGuard.poll()
+        while (s != null) { badLeaves :+= s; s = constructedUncachedGuard.poll() }
+        val ws = planWs ++ execWs
+        graft.util.Caches.releaseAll()
+        spark.sharedState.cacheManager.clearCache()
+        // verify the justification's claim: an allow-list entry citing
+        // the runtime guard must plan it, or the citation is stale
+        if (allowed.get(name).exists(_._2.contains("boundedCensus-guarded"))
+          && !guardSeen)
+          unguarded += name
+        // round-14: a planned guard whose census count re-scans a file
+        // source (instead of reading the cached census) is the
+        // double-scan hazard — permanent form of the r12 manual audit
+        if (badLeaves.nonEmpty)
+          uncachedCensus += s"$name: ${badLeaves.distinct.mkString(", ")}"
+        if (ws.isEmpty || allowed.contains(name)) Nil
+        else Seq(s"$name: ${ws.mkString("; ")}")
+    }
+    assert(violations.isEmpty,
+      "unpartitioned windows outside the allow-list:\n" +
+        violations.mkString("\n"))
+    assert(unguarded.isEmpty,
+      "allow-list entries cite a boundedCensus guard their plans do " +
+        s"not contain — the citation is stale: ${unguarded.mkString(", ")}")
+    assert(uncachedCensus.isEmpty,
+      "boundedCensus guards whose cardinality count re-scans a file " +
+        "source — pass a CACHED census so the count is a cache read:\n" +
+        uncachedCensus.mkString("\n"))
+    // ENFORCE the grain typing: entity-derived censuses are never a
+    // legal window input — rebuild them on PrefixSum.cumBefore
+    val entityDerived = allowed.collect {
+      case (name, (EntityDerived, why)) => s"$name ($why)"
+    }
+    assert(entityDerived.isEmpty,
+      "entity-derived censuses may not ride unpartitioned windows — " +
+        "rebuild on PrefixSum.cumBefore: " + entityDerived.mkString(", "))
+    // the allow-list must not go stale: every entry still plans at
+    // least one unpartitioned window (drop the entry when the shape
+    // is rebuilt) and still names a real query
+    val stale = allowed.keys.toSeq.sorted.filter { name =>
+      !SparkEntry.queries.contains(name) || {
+        var planWs = Seq.empty[String]
+        val execWs = constructionWindows {
+          planWs = emptySpecWindows(SparkEntry.queries(name)(spark, sf))
+        }
+        (planWs ++ execWs).isEmpty
+      }
+    }
+    graft.util.Caches.releaseAll()
+    spark.sharedState.cacheManager.clearCache()
+    assert(stale.isEmpty, s"stale allow-list entries: $stale")
+  }
+
+  test("guard detection red-test: removing the boundedCensus guard " +
+    "from a census plan flips the detector (so the gate WOULD fail)") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.{Window => W}
+    import org.apache.spark.sql.functions._
+    val census = (0L until 30L).map(v => v -> 1L).toDF("v", "c")
+    val w = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
+    val guarded = graft.util.Guards
+      .boundedCensus(census, "Round11WindowGateSpec.red", cap = 1000L)
+      .withColumn("cum", sum("c").over(w))
+    val bare = census.withColumn("cum", sum("c").over(w))
+    assert(logicalHasGuard(guarded),
+      "detector must see the raise_error filter in a guarded plan")
+    assert(!logicalHasGuard(bare),
+      "detector must NOT see a guard in the guard-removed twin — " +
+        "otherwise the presence check is vacuous")
+  }
+
+  test("uncached-census red-test: a boundedCensus guard over an " +
+    "UNCACHED file-backed census flips the detector; the cached twin " +
+    "is clean") {
+    import org.apache.spark.sql.functions._
+    val censusPlan = Tables.load(spark, sf, "nation")
+      .groupBy("n_regionkey").agg(count(lit(1)).as("c"))
+    val bare = graft.util.Guards
+      .boundedCensus(censusPlan, "Round11WindowGateSpec.uncached",
+        cap = 1000L)
+    assert(badGuardLeafLogical(bare).nonEmpty,
+      "detector must flag the guard count re-scanning the file source")
+    val cached = graft.util.Caches.cached(censusPlan)
+    val guarded = graft.util.Guards
+      .boundedCensus(cached, "Round11WindowGateSpec.cached", cap = 1000L)
+    assert(badGuardLeafLogical(guarded).isEmpty,
+      "detector must pass a guard whose count reads the cached census")
+    graft.util.Caches.releaseAll()
+    spark.sharedState.cacheManager.clearCache()
   }
 }

@@ -3,14 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.Probe
+import graft.util.TempDirs.withTempDir
+
+import TestSpark._
 
 /** Every `Probe` mode once on q02 at sf0.001, on the suite's shared
   * session — which the probe must leave running.
   */
 class ProbeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
   private val q = "q02_filter_project"
+
   private lazy val rows = SparkEntry.queries(q)(spark, sf).count()
 
   private def probe(mode: String, arg: String): Seq[String] = {
@@ -21,11 +23,13 @@ class ProbeSpec extends AnyFunSuite {
   }
 
   test("plan: writes the final plan's formatted explain and prints its leaf counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-probe")
-    val out = probe("plan", dir.toString)
-    assert(out.size === 1 && out.head.matches(s"=== $q: Scan parquet[^=]*=1"), out)
-    val explain = new String(java.nio.file.Files.readAllBytes(dir.resolve(s"$q.txt")), "UTF-8")
-    assert(explain.startsWith("== Physical Plan ==") && explain.contains("Scan parquet"), explain)
+    withTempDir("graft-probe") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val out = probe("plan", dir.toString)
+      assert(out.size === 1 && out.head.matches(s"=== $q: Scan parquet[^=]*=1"), out)
+      val explain = new String(java.nio.file.Files.readAllBytes(dir.resolve(s"$q.txt")), "UTF-8")
+      assert(explain.startsWith("== Physical Plan ==") && explain.contains("Scan parquet"), explain)
+    }
   }
 
   test("time: construct vs execute wall and the row count, once per rep") {

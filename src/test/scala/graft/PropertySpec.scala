@@ -1,12 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Profiler
-import graft.operators.{Dedup, TextOps}
+import graft.operators.{Dedup, PrefixSum, TextOps}
 import graft.state.ChangeDetection
+
+import TestSpark._
 
 /** Property-based invariants (SURVEY §5.2), using ScalaCheck generators
   * with a deterministic seeded sample loop (the scalatest-scalacheck
@@ -14,7 +16,6 @@ import graft.state.ChangeDetection
   * case round-trips through Spark jobs.
   */
 class PropertySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def samples[A](g: Gen[A], n: Int = 5): Seq[A] =
@@ -190,7 +191,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("ingestDelivery folded over deliveries ≡ whole-corpus exact dedup") {
     import org.apache.spark.sql.functions.col
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    val docs = Tables.load(spark, sf, "documents")
       .select("doc_id", "text")
     // three deliveries in rising-id order (the production id discipline)
     val deliveries = Seq(
@@ -229,6 +230,100 @@ class PropertySpec extends AnyFunSuite {
       val fps = df.select(TextOps.fingerprint(org.apache.spark.sql.functions.col("text")))
         .collect().map(_.getString(0))
       assert(fps(0) == fps(1))
+    }
+  }
+}
+
+/** Property check for the hybrid PrefixSum (SURVEY §5.2 style, seeded
+  * sample loop): random grouped censuses — nulls, negatives, ±extreme
+  * magnitudes, duplicate group keys — must produce the exact exclusive
+  * value-prefix sums of an independently computed driver reference, on
+  * BOTH regimes (stat path and the pinned bucket path).
+  */
+class Round13PrefixSumPropertySpec extends AnyFunSuite {
+
+  private def samples[A](g: Gen[A], n: Int = 4): Seq[A] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(97L + i)))
+
+  private val rowGen: Gen[(String, Option[Long], Long)] = for {
+    g <- Gen.oneOf("a", "b", "c")
+    v <- Gen.oneOf(
+      Gen.const(Option.empty[Long]),
+      Gen.chooseNum(-1000L, 1000L).map(Option(_)),
+      Gen.oneOf(Long.MinValue + 7, -(1L << 62), 1L << 62,
+        Long.MaxValue - 7).map(Option(_)))
+    c <- Gen.chooseNum(0L, 50L)
+  } yield (g, v, c)
+
+  /** distinct-value census per group with summed counts (the caller
+    * contract), plus the driver-side expected exclusive prefix.
+    */
+  private def censusAndExpected(rows: List[(String, Option[Long], Long)])
+      : (Seq[(String, Option[Long], Long)], Map[(String, Option[Long]), Long]) = {
+    val census = rows.groupBy(r => (r._1, r._2))
+      .map { case ((g, v), rs) => (g, v, rs.map(_._3).sum) }.toSeq
+    val expected = census.groupBy(_._1).flatMap { case (g, rs) =>
+      val sorted = rs.sortBy(r => (if (r._2.isEmpty) 0 else 1,
+        r._2.getOrElse(0L)))
+      var acc = 0L
+      sorted.map { r =>
+        val off = acc; acc += r._3; (g, r._2) -> off
+      }
+    }
+    (census, expected)
+  }
+
+  test("cumBeforeBy ≡ driver reference on random grouped censuses, " +
+    "both regimes") {
+    import spark.implicits._
+    for (rows <- samples(Gen.listOfN(40, rowGen)) if rows.nonEmpty) {
+      val (census, expected) = censusAndExpected(rows)
+      val df = census.map { case (g, v, c) =>
+        (g, v.map(java.lang.Long.valueOf).orNull, c)
+      }.toDF("g", "v", "c").repartition(3)
+      for (buckets <- Seq(0, 5)) {
+        val got = PrefixSum.cumBeforeBy(df, Seq("g"), "v", "c", "cb",
+          "Round13PrefixSumPropertySpec", buckets)
+          .collect()
+          .map(r => (r.getString(0),
+            if (r.isNullAt(1)) None else Some(r.getLong(1))) -> r.getLong(3))
+          .toMap
+        assert(got === expected, s"buckets=$buckets census=$census")
+        graft.util.Caches.releaseAll()
+      }
+    }
+  }
+
+  test("cumBeforeBy keeps NULL group keys on BOTH regimes (round-13 " +
+    "ADVICE: the bucket path's offset join must be null-safe like the " +
+    "stat path's)") {
+    import spark.implicits._
+    val gGen: Gen[Option[String]] =
+      Gen.oneOf(Option.empty[String], Some("a"), Some("b"))
+    val nullableRowGen = for {
+      g <- gGen; (_, v, c) <- rowGen
+    } yield (g, v, c)
+    for (rows <- samples(Gen.listOfN(40, nullableRowGen)) if rows.nonEmpty) {
+      // reuse the reference machinery by encoding null as a sentinel,
+      // then decode for the DataFrame so the engine sees REAL nulls
+      val enc = rows.map { case (g, v, c) => (g.getOrElse("\u0000"), v, c) }
+      val (census, expected0) = censusAndExpected(enc)
+      val expected = expected0.map { case ((g, v), off) =>
+        (if (g == "\u0000") None else Some(g), v) -> off }
+      val df = census.map { case (g, v, c) =>
+        (if (g == "\u0000") null else g,
+          v.map(java.lang.Long.valueOf).orNull, c)
+      }.toDF("g", "v", "c").repartition(3)
+      for (buckets <- Seq(0, 5)) {
+        val got = PrefixSum.cumBeforeBy(df, Seq("g"), "v", "c", "cb",
+          "Round13PrefixSumPropertySpec.nullBy", buckets)
+          .collect()
+          .map(r => (Option(r.getString(0)),
+            if (r.isNullAt(1)) None else Some(r.getLong(1))) -> r.getLong(3))
+          .toMap
+        assert(got === expected, s"buckets=$buckets census=$census")
+        graft.util.Caches.releaseAll()
+      }
     }
   }
 }

@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.registry.{QueryDef, QueryModule}
 
+import TestSpark._
+
 /** The query registry: every id is declared once with an oracle, a
   * duplicate id fails construction by name, and oracles that read
   * run-time settings read them when rendered.
   */
 class RegistrySpec extends AnyFunSuite {
-
   private def module(ids: String*): QueryModule = new QueryModule {
     val defs: Seq[QueryDef] =
       ids.map(id => QueryDef(id, (s, dir) => Tables.load(s, dir, "nation"),

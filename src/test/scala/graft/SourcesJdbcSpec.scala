@@ -2,10 +2,12 @@ package graft
 
 import java.sql.DriverManager
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Sources
+
+import TestSpark._
 
 /** S1's JDBC branch driven end-to-end against the embedded Derby engine
   * that ships in Spark's own jar directory — a real warehouse round-trip
@@ -15,7 +17,6 @@ import graft.sources.Sources
   * sandbox DOES carry a SQL engine, just an embedded one.
   */
 class SourcesJdbcSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private val url = "jdbc:derby:memory:graftjdbc;create=true"

@@ -1,14 +1,15 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{CountDelta, CountObs, StatefulDeltas}
+import graft.util.TempDirs.withTempDir
+
+import TestSpark._
 
 class StatefulDeltasSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   test("flatMapGroupsWithState emits per-entity deltas across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -34,21 +35,22 @@ class StatefulDeltasSpec extends AnyFunSuite {
   test("metricsStream appends batch-stamped metric rows to parquet") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ms").toString
-    val input = MemoryStream[CountObs]
-    val agg = input.toDS().toDF()
-      .groupBy("entity").agg(org.apache.spark.sql.functions.sum("cnt").as("total"))
-    val q = graft.streaming.ContinuousMonitor.metricsStream(
-      agg, tmp + "/metrics", tmp + "/ckpt", "run-1", intervalSeconds = 0)
-    try {
-      input.addData(CountObs("orders", 10), CountObs("orders", 5))
-      q.processAllAvailable()
-      val out = spark.read.parquet(tmp + "/metrics")
-      assert(out.columns.toSet ==
-        Set("entity", "total", "run_id", "batch_id", "emitted_ts"))
-      val r = out.filter($"entity" === "orders").orderBy($"batch_id".desc)
-        .select("total").collect().head.getLong(0)
-      assert(r == 15L)
-    } finally q.stop()
+    withTempDir("graft-ms") { tmp =>
+      val input = MemoryStream[CountObs]
+      val agg = input.toDS().toDF()
+        .groupBy("entity").agg(org.apache.spark.sql.functions.sum("cnt").as("total"))
+      val q = graft.streaming.ContinuousMonitor.metricsStream(
+        agg, tmp + "/metrics", tmp + "/ckpt", "run-1", intervalSeconds = 0)
+      try {
+        input.addData(CountObs("orders", 10), CountObs("orders", 5))
+        q.processAllAvailable()
+        val out = spark.read.parquet(tmp + "/metrics")
+        assert(out.columns.toSet ==
+          Set("entity", "total", "run_id", "batch_id", "emitted_ts"))
+        val r = out.filter($"entity" === "orders").orderBy($"batch_id".desc)
+          .select("total").collect().head.getLong(0)
+        assert(r == 15L)
+      } finally q.stop()
+    }
   }
 }

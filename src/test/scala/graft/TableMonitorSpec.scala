@@ -1,16 +1,17 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{MetricSink, ProfileConfig, Profiler}
 import graft.run.Monitors
 import graft.state.{ChangeDetection, StateStore}
+import graft.util.TempDirs.withTempDir
+
+import TestSpark._
 
 /** `Monitors.tableMonitor` computes its profile with
   * `Profiler.monitorProfile` (one fused aggregate plus a median census),
@@ -22,8 +23,6 @@ import graft.state.{ChangeDetection, StateStore}
   * jobs of one warm call.
   */
 class TableMonitorSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   private val schema = StructType.fromDDL(
     "id int, x double, z double, q long, f float, d decimal(10,2), " +
       "allnull double, s string")
@@ -42,15 +41,12 @@ class TableMonitorSpec extends AnyFunSuite {
       nul(3, s"w${i % 4}"))
   }
 
-  /** Writes `data` as a two-file parquet table `t` under a fresh lake
-    * directory (two files, so the scan has two partitions).
+  /** Writes `data` as a two-file parquet table `t` under the lake
+    * directory `dir` (two files, so the scan has two partitions).
     */
-  private def lake(data: Seq[Row]): String = {
-    val dir = Files.createTempDirectory("graft-tm-lake").toString
+  private def lake(dir: String, data: Seq[Row]): Unit =
     spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
       .repartition(2).write.parquet(Tables.path(dir, "t"))
-    dir
-  }
 
   /** (key, value) of every sink point, NaN-safe and order-free. */
   private def points(sink: MetricSink): Seq[(String, String)] =
@@ -97,51 +93,63 @@ class TableMonitorSpec extends AnyFunSuite {
        fraction <- Seq(1.0, 0.5))
     test(s"tableMonitor metrics equal the standalone profile: $variant table, " +
       s"sampleFraction $fraction") {
-      val dir = lake(data)
-      val df = Tables.load(spark, dir, "t")
-      val state = new StateStore(Files.createTempDirectory("graft-tm-state").toString + "/s")
-      // first run: no previous state
-      val first = MetricSink("first")
-      Monitors.tableMonitor(spark, dir, "t", first, state, sampleFraction = fraction)
-      assert(points(first) == expected(df, fraction, None, None))
-      // second run against a previous snapshot with other columns
-      state.putAll(spark, Seq(("t", "record_count", "7"),
-        ("t", "columns", "id,x,gone,s")))
-      val second = MetricSink("second")
-      Monitors.tableMonitor(spark, dir, "t", second, state, sampleFraction = fraction)
-      val exp = expected(df, fraction, Some(7L), Some(Seq("id", "x", "gone", "s")))
-      assert(points(second) == exp)
-      assert(exp.contains("t.column_removed" -> "gone"))
-      assert(exp.contains("t.column_added" -> "allnull"))
-      if (data.size > 1) {
-        assert(exp.exists { case (k, v) => k == "t.x.max" && v == "Infinity" })
-        assert(exp.exists { case (k, _) => k == "t.z.median" })
-        assert(!exp.exists { case (k, _) => k.startsWith("t.allnull.") })
-        assert(!exp.exists { case (k, _) => k.startsWith("t.s.") && !k.contains("null") })
+      withTempDir("graft-tm-lake") { dir =>
+        lake(dir, data)
+        val df = Tables.load(spark, dir, "t")
+        withTempDir("graft-tm-state") { tmp =>
+          val state = new StateStore(tmp + "/s")
+          // first run: no previous state
+          val first = MetricSink("first")
+          Monitors.tableMonitor(spark, dir, "t", first, state, sampleFraction = fraction)
+          assert(points(first) == expected(df, fraction, None, None))
+          // second run against a previous snapshot with other columns
+          state.putAll(spark, Seq(("t", "record_count", "7"),
+            ("t", "columns", "id,x,gone,s")))
+          val second = MetricSink("second")
+          Monitors.tableMonitor(spark, dir, "t", second, state, sampleFraction = fraction)
+          val exp = expected(df, fraction, Some(7L), Some(Seq("id", "x", "gone", "s")))
+          assert(points(second) == exp)
+          assert(exp.contains("t.column_removed" -> "gone"))
+          assert(exp.contains("t.column_added" -> "allnull"))
+          if (data.size > 1) {
+            assert(exp.exists { case (k, v) => k == "t.x.max" && v == "Infinity" })
+            assert(exp.exists { case (k, _) => k == "t.z.median" })
+            assert(!exp.exists { case (k, _) => k.startsWith("t.allnull.") })
+            assert(!exp.exists { case (k, _) => k.startsWith("t.s.") && !k.contains("null") })
+          }
+        }
       }
     }
 
   for (fraction <- Seq(1.0, 0.5))
     test(s"tableMonitor in approx mode keeps numericProfile's sketch median: " +
       s"sampleFraction $fraction") {
-      val dir = lake(rows(300))
-      val cfg = ProfileConfig(exact = false)
-      val state = new StateStore(Files.createTempDirectory("graft-tm-state").toString + "/s")
-      val sink = MetricSink("approx")
-      Monitors.tableMonitor(spark, dir, "t", sink, state, sampleFraction = fraction, cfg = cfg)
-      val exp = expected(Tables.load(spark, dir, "t"), fraction, None, None, cfg)
-      assert(points(sink) == exp)
-      assert(exp.exists { case (k, _) => k == "t.q.median" })
+      withTempDir("graft-tm-lake") { dir =>
+        lake(dir, rows(300))
+        val cfg = ProfileConfig(exact = false)
+        withTempDir("graft-tm-state") { tmp =>
+          val state = new StateStore(tmp + "/s")
+          val sink = MetricSink("approx")
+          Monitors.tableMonitor(spark, dir, "t", sink, state, sampleFraction = fraction, cfg = cfg)
+          val exp = expected(Tables.load(spark, dir, "t"), fraction, None, None, cfg)
+          assert(points(sink) == exp)
+          assert(exp.exists { case (k, _) => k == "t.q.median" })
+        }
+      }
     }
 
   test("one warm tableMonitor call runs at most 14 Spark jobs") {
-    val dir = lake(rows(300))
-    val state = new StateStore(Files.createTempDirectory("graft-tm-state").toString + "/s")
-    Monitors.tableMonitor(spark, dir, "t", MetricSink("cold"), state)
-    val jobs = TestSpark.jobsDuring(
-      Monitors.tableMonitor(spark, dir, "t", MetricSink("warm"), state))
-    info(s"$jobs Spark jobs")
-    assert(jobs > 0)
-    assert(jobs <= 14, s"$jobs jobs")
+    withTempDir("graft-tm-lake") { dir =>
+      lake(dir, rows(300))
+      withTempDir("graft-tm-state") { tmp =>
+        val state = new StateStore(tmp + "/s")
+        Monitors.tableMonitor(spark, dir, "t", MetricSink("cold"), state)
+        val jobs = TestSpark.jobsDuring(
+          Monitors.tableMonitor(spark, dir, "t", MetricSink("warm"), state))
+        info(s"$jobs Spark jobs")
+        assert(jobs > 0)
+        assert(jobs <= 14, s"$jobs jobs")
+      }
+    }
   }
 }

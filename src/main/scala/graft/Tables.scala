@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.catalog.CatalogMonitor
 
 /** Fixture-table registry.
   *
@@ -37,11 +40,48 @@ object Tables {
     */
   private val nanoTsCols: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
 
+  // the read confs every load guarantees, each written only when the
+  // session holds another value (so a monitor fan-out writes none), and
+  // the confs that also shape what parquet schema inference returns
+  private val readConfs = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+  private val inferenceConfs = Seq("spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.mergeSchema")
+
+  // per session (weakly held): table path -> (signature, raw schema)
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]()
+
+  /** Reads table `name` of `dir`, with `events.ts` normalized. The raw
+    * schema Spark infers (one job reading a footer) is memoized per
+    * session and table path under the table's listing signature
+    * ([[CatalogMonitor.signature]]): while it holds, the load reads with
+    * that schema and runs no job. Same name, size and mtime are taken to
+    * mean same bytes (the rsync quick check); an append or a rewrite
+    * changes the signature, and the next load infers again.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    normalizeNanoTs(spark.read.parquet(path(dir, name)), name)
+    readConfs.foreach { case (k, v) =>
+      if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v) }
+    normalizeNanoTs(read(spark, path(dir, name)), name)
   }
+
+  private def read(spark: SparkSession, p: String): DataFrame =
+    CatalogMonitor.parquetFiles(spark, p).filter(_.nonEmpty) match {
+      case None => spark.read.parquet(p)
+      case Some(files) =>
+        val sig = (inferenceConfs.map(spark.conf.getOption) :+
+          CatalogMonitor.signature(files)).mkString("\n")
+        val memo = schemas.synchronized(schemas.computeIfAbsent(spark,
+          _ => new java.util.concurrent.ConcurrentHashMap()))
+        Option(memo.get(p)).filter(_._1 == sig) match {
+          case Some((_, raw)) => spark.read.schema(raw).parquet(p)
+          case None =>
+            val df = spark.read.parquet(p)
+            memo.put(p, (sig, df.schema))
+            df
+        }
+    }
 
   /** Convert legacy-read nano-long / NTZ-inferred columns to TimestampType. */
   def normalizeNanoTs(df: DataFrame, name: String): DataFrame =
@@ -56,12 +96,6 @@ object Tables {
       }
     }
 
-  def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
-  def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
-  def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")
-  def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
-  def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def events(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "events")
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 }

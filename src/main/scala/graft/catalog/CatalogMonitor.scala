@@ -1,5 +1,8 @@
 package graft.catalog
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,32 +32,15 @@ object CatalogMonitor {
   private def isHiddenSegment(seg: String): Boolean =
     seg.startsWith("_") || seg.startsWith(".")
 
-  /** Parquet-FOOTER row count of one table: the sum of per-file footer
-    * block counts — no Spark job, no task, no data-column IO at all.
-    * This is the Spark-side analogue of the reference reading the
-    * catalog's `row_count` instead of scanning
-    * (`/root/reference/Snowflake/snowflake_table_monitor.py:57-62`):
-    * a plain count's answer lives entirely in table metadata.
-    *
-    * Sees exactly the file set Spark's own file index would scan:
-    * RECURSIVE listing (partitioned key=value layouts count correctly,
-    * not silently 0), hidden segments under the root skipped (an
-    * in-progress `._part` staging file never counts), `.parquet` files
-    * only. Returns None — "fall back to a count job" — when the table
-    * root holds no visible parquet files (a non-Parquet relation) or
-    * any footer read fails; the caller's count() is then the single
-    * source of truth rather than a silent divergence.
-    */
   /** The visible parquet file set under `tablePath` — exactly what
     * Spark's own file index would scan (recursive, hidden segments
-    * skipped, `.parquet` only). Empty seq = "not a parquet table here".
+    * skipped, `.parquet` only). Empty seq = "not a parquet table here";
+    * None = the path cannot be listed (a missing path, say).
     */
-  private def visibleParquetFiles(
-      conf: org.apache.hadoop.conf.Configuration,
-      tablePath: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
+  private[graft] def parquetFiles(spark: SparkSession,
+      tablePath: String): Option[Seq[FileStatus]] = try {
     val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val qualifiedRoot = fs.makeQualified(root)
     val rootStr = qualifiedRoot.toUri.getPath.stripSuffix("/")
     val rootStatus = fs.getFileStatus(qualifiedRoot)
@@ -69,23 +55,47 @@ object CatalogMonitor {
         if (st.isFile && !hidden &&
           st.getPath.getName.endsWith(".parquet")) buf += st
       }
-      buf.toSeq
-    } else Seq(rootStatus)
-  }
+      Some(buf.toSeq)
+    } else Some(Seq(rootStatus))
+  } catch { case NonFatal(_) => None }
 
+  /** The listing signature of a file set: sorted (path, length, mtime),
+    * one line per file. Equal signatures are taken to mean equal bytes,
+    * the quick check of rsync, make and `StateStore`'s own snapshot.
+    */
+  private[graft] def signature(files: Seq[FileStatus]): String =
+    files.map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted
+      .map { case (p, n, t) => s"$p\t$n\t$t" }.mkString("\n")
+
+  /** Parquet-FOOTER row count of one table: the sum of per-file footer
+    * block counts — no Spark job, no task, no data-column IO at all.
+    * This is the Spark-side analogue of the reference reading the
+    * catalog's `row_count` instead of scanning
+    * (`Snowflake/snowflake_table_monitor.py:57-62`):
+    * a plain count's answer lives entirely in table metadata.
+    *
+    * Sees exactly [[parquetFiles]]. Returns None — "fall back to a count
+    * job" — when the table root holds no visible parquet files (a
+    * non-Parquet relation) or any footer read fails; the caller's count()
+    * is then the single source of truth rather than a silent divergence.
+    */
   private[graft] def footerRowCount(spark: SparkSession,
-      tablePath: String): Option[Long] = {
+      tablePath: String): Option[Long] =
+    parquetFiles(spark, tablePath).flatMap(footerRowCount(spark, _))
+
+  /** [[footerRowCount]] over a listing the caller already holds. */
+  private[graft] def footerRowCount(spark: SparkSession,
+      statuses: Seq[FileStatus]): Option[Long] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     try {
       val conf = spark.sessionState.newHadoopConf()
-      val statuses = visibleParquetFiles(conf, tablePath)
       if (statuses.isEmpty) None
       else Some(statuses.map { s =>
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
         try r.getRecordCount finally r.close()
       }.sum)
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Parquet-FOOTER exact (min, max) per requested numeric column — the
@@ -139,7 +149,7 @@ object CatalogMonitor {
     }
     try {
       val conf = spark.sessionState.newHadoopConf()
-      val statuses = visibleParquetFiles(conf, tablePath)
+      val statuses = parquetFiles(spark, tablePath).getOrElse(Nil)
       if (statuses.isEmpty) return None
       statuses.foreach { s =>
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
@@ -186,7 +196,7 @@ object CatalogMonitor {
         } finally r.close()
       }
       Some(acc.toMap)
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** (table_name, row_count) — the `information_schema.tables` analogue.

@@ -27,16 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusStats {
 
-  /** Document frequency of each distinct bigram shingle: (s, df).
-    * [[TextOps.bigrams]] is distinct per document, so a plain count IS
-    * the number of distinct documents containing the shingle (the same
-    * trick [[Relevance.tfidf]] uses for terms).
-    */
-  def shingleDocFrequency(docs: DataFrame, textCol: String = "text"): DataFrame =
-    graft.util.Parallelism.ensure(docs)
-      .select(explode(TextOps.bigrams(col(textCol))).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("df"))
-
   /** Per-document boilerplate ratio: the fraction of the document's
     * distinct shingles that occur in at least `minDf` documents.
     * Returns idCol + carryCols + (n_shingles, n_frequent, boiler_ratio);

@@ -158,12 +158,6 @@ object TextOps {
       size(regexp_extract_all(text, lit("[^a-zA-Z0-9\\s]"), lit(0))).cast("double")
         / length(text))
 
-  def meanTokenLen(text: Column): Column = {
-    val ws = tokens(text)
-    when(size(ws) === 0, lit(0.0)).otherwise(
-      aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double") / size(ws))
-  }
-
   /** Composite quality score in [0,1]: long enough, words not too short /
     * too long, some (but not only) stopwords, little punctuation. A
     * heuristic filter in the C4/Gopher-rules tradition, deterministic and

@@ -556,19 +556,19 @@ object MonitorQueries extends QueryModule {
     // record counts plus the fan-in mean in CENTS — the sink stores
     // rint(mean*100)/100 and rint is half-even, which DuckDB states as
     // round_even; mean*100 = sum*100/8 is exact in doubles, so both
-    // engines round the identical value. Fresh temp state per call, so
-    // no delta keys; the key filter makes the projection deterministic
-    // under the runner's thread-ordering.
-    QueryDef("q276_monitor_fanout_fanin", (s, dir) => {
-      val statePath = java.nio.file.Files
-        .createTempDirectory("graft-q276").toFile.getAbsolutePath
-      MonitorRunner.run(s, dir, Tables.warehouse, statePath)
-        .filter(col("key").endsWith(".record_count") ||
-          col("key") === "all_tables.mean_record_count")
-        .select(col("key"),
-          round(col("valueDouble") * 100).cast("long").as("value_cents"))
-        .orderBy("key")
-    }, {
+    // engines round the identical value. Fresh temp state per call
+    // (removed once the result is checkpointed), so every table is
+    // profiled and no delta keys appear; the key filter makes the
+    // projection deterministic under the runner's thread-ordering.
+    QueryDef("q276_monitor_fanout_fanin", (s, dir) =>
+      graft.util.TempDirs.withTempDir("graft-q276") { tmp =>
+        MonitorRunner.run(s, dir, Tables.warehouse, s"$tmp/state")
+          .filter(col("key").endsWith(".record_count") ||
+            col("key") === "all_tables.mean_record_count")
+          .select(col("key"),
+            round(col("valueDouble") * 100).cast("long").as("value_cents"))
+          .orderBy("key").localCheckpoint()
+      }, {
       val unions = Tables.warehouse.map(t =>
         s"SELECT '$t' AS t, CAST(count(*) AS BIGINT) AS cnt FROM $t")
         .mkString("\nUNION ALL ")

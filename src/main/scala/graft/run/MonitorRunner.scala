@@ -60,50 +60,91 @@ object Monitors {
     shapes.unpersist()
   }
 
+  // a table monitor's emitted point (a number or a string), and the
+  // state keys of the replay
+  private type Point = (String, Either[Double, String])
+  private val SignatureKey = "listing_signature"
+  private val MetricsKey = "metrics"
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Points as a JSON array of [kind, key, value], doubles as raw bits so
+    * NaN, ±Inf and -0.0 come back bit-exact.
+    */
+  private def encode(points: Seq[Point]): String = json.writeValueAsString(points.map {
+    case (k, Left(d)) => Array("d", k, java.lang.Double.doubleToRawLongBits(d).toString)
+    case (k, Right(v)) => Array("s", k, v)
+  }.toArray)
+
+  private def decode(stored: String): Seq[Point] =
+    json.readValue(stored, classOf[Array[Array[String]]]).toSeq.map {
+      case Array("d", k, bits) => k -> Left(java.lang.Double.longBitsToDouble(bits.toLong))
+      case Array(_, k, v) => k -> Right(v)
+    }
+
   /** Table monitor (Snowflake/Redshift table-monitor parity:
     * `snowflake_table_monitor.py:73-131`,
     * `redshift_table_monitor.py:37-77`). Emits record count, duplicate
     * count, schema, per-column nulls, numeric stats over an optional
     * sample, and — via the state store — record delta + column drift
     * since the previous run.
+    *
+    * A table whose listing signature ([[CatalogMonitor.signature]], keyed
+    * by `sampleFraction` and `cfg`) equals the stored one re-emits the
+    * points stored with it and runs no Spark job: the rsync quick check,
+    * same name, size and mtime means same bytes. Delta and drift always
+    * come from the stored count and columns; the state is written only
+    * when a value changed. Returns false when the points were replayed.
     */
   def tableMonitor(spark: SparkSession, dir: String, table: String,
       sink: MetricSink, state: StateStore, sampleFraction: Double = 1.0,
-      cfg: ProfileConfig = ProfileConfig()): Unit = {
-    val df = Tables.load(spark, dir, table)
-    // footer row count, count() fallback (round-15, guide §6): same
-    // convention as CatalogMonitor.tableRowCounts (q18) — parquet footer
-    // counts are exact by format contract, so this removes one full-scan
-    // job per monitored table with a value identical by construction
-    val recordCount = CatalogMonitor.footerRowCount(spark, Tables.path(dir, table))
-      .getOrElse(df.count())
-    sink.log(s"$table.record_count", recordCount.toDouble)
-    sink.log(s"$table.duplicate_count",
-      Profiler.duplicateStats(df, df.columns.toSeq).collect().head
-        .getAs[Long]("duplicate_count").toDouble)
-    Profiler.schemaReport(df).foreach { case (c, t, _) =>
-      sink.logString(s"$table.schema.$c", t)
-    }
-    val profile = Profiler.monitorProfile(df, sampleFraction, cfg)
-    profile.nullCounts.foreach { case (c, n) =>
-      sink.log(s"$table.null_count.$c", n.toDouble)
-    }
-    profile.stats.foreach { case (c, m, v) => sink.log(s"$table.$c.$m", v) }
+      cfg: ProfileConfig = ProfileConfig()): Boolean = {
+    val files = CatalogMonitor.parquetFiles(spark, Tables.path(dir, table))
+    val signature = files.filter(_.nonEmpty)
+      .fold("")(fs => s"$sampleFraction $cfg\n${CatalogMonitor.signature(fs)}")
+    val prev = state.entries(spark, table) // one locked listing
+    val replay = prev.get(MetricsKey)
+      .filter(_ => signature.nonEmpty && prev.get(SignatureKey).contains(signature))
+    val points = replay.fold(profile(spark, dir, table, files, sampleFraction, cfg))(decode)
+    points.foreach { case (k, v) => v.fold(sink.log(k, _), sink.logString(k, _)) }
+    val recordCount = points.collectFirst {
+      case (k, Left(d)) if k == s"$table.record_count" => d.toLong }.get
+    val columns = points.collect {
+      case (k, _) if k.startsWith(s"$table.schema.") => k.stripPrefix(s"$table.schema.") }
     // state: delta + drift vs previous run (snowflake_table_monitor.py:97-113;
-    // delta corrected to current - previous per SURVEY §7.4); both gets
-    // answer from the store's in-memory snapshot
-    val prevCount = state.get(spark, table, "record_count").map(_.toLong)
-    prevCount.foreach(p => sink.log(s"$table.record_delta", (recordCount - p).toDouble))
-    val prevCols = state.get(spark, table, "columns").map(_.split(",").toSeq)
-    prevCols.foreach { pc =>
-      val drift = ChangeDetection.schemaChanges(pc, df.columns.toSeq)
+    // delta corrected to current - previous per SURVEY §7.4)
+    prev.get("record_count").foreach(p =>
+      sink.log(s"$table.record_delta", (recordCount - p.toLong).toDouble))
+    prev.get("columns").foreach { pc =>
+      val drift = ChangeDetection.schemaChanges(pc.split(",").toSeq, columns)
       sink.log(s"$table.columns_changed", if (drift.nonEmpty) 1.0 else 0.0)
       drift.foreach { case (change, c) => sink.logString(s"$table.column_$change", c) }
     }
-    // one snapshot write for both keys (writes are serialized store-wide)
-    state.putAll(spark, Seq(
-      (table, "record_count", recordCount.toString),
-      (table, "columns", df.columns.mkString(","))))
+    // one snapshot write (serialized store-wide) at most, none if unchanged
+    val changed = Seq("record_count" -> recordCount.toString,
+      "columns" -> columns.mkString(","), SignatureKey -> signature,
+      MetricsKey -> replay.getOrElse(encode(points)))
+      .filterNot { case (k, v) => prev.get(k).contains(v) }
+    if (changed.nonEmpty)
+      state.putAll(spark, changed.map { case (k, v) => (table, k, v) })
+    replay.isEmpty
+  }
+
+  /** The intrinsic points of one table, computed from its data. */
+  private def profile(spark: SparkSession, dir: String, table: String,
+      files: Option[Seq[org.apache.hadoop.fs.FileStatus]], sampleFraction: Double,
+      cfg: ProfileConfig): Seq[Point] = {
+    val df = Tables.load(spark, dir, table)
+    // footer row count, count() fallback, as CatalogMonitor.tableRowCounts
+    // (q18): exact by the parquet format contract, and no full-scan job
+    val recordCount = files.flatMap(CatalogMonitor.footerRowCount(spark, _))
+      .getOrElse(df.count())
+    val duplicates = Profiler.duplicateStats(df, df.columns.toSeq).collect().head
+    val profile = Profiler.monitorProfile(df, sampleFraction, cfg)
+    Seq[Point](s"$table.record_count" -> Left(recordCount.toDouble), s"$table.duplicate_count" ->
+      Left(duplicates.getAs[Long]("duplicate_count").toDouble)) ++
+      Profiler.schemaReport(df).map { case (c, t, _) => s"$table.schema.$c" -> Right(t) } ++
+      profile.nullCounts.map { case (c, n) => s"$table.null_count.$c" -> Left(n.toDouble) } ++
+      profile.stats.map { case (c, m, v) => s"$table.$c.$m" -> Left(v) }
   }
 
   /** Storage monitor (S3 key/prefix/bucket-monitor parity:
@@ -168,26 +209,28 @@ object MonitorRunner {
     // Concurrent fan-out, like the reference's parallel Airflow tasks
     // (`snowflake_table_monitor.py:162-178`): each monitor is mostly
     // blocking on its own Spark jobs (about a dozen small ones per
-    // table), so driver threads keep the cluster saturated across
-    // targets (FAIR-friendly). Default 8 = one thread per warehouse
-    // table; the A/B at sf0.1 measured the full fan-out (q276) at
-    // ~0.55× the 4-thread wall time — the per-table jobs are small
-    // enough that 4 threads left the scheduler underfed. MetricSink is
-    // synchronized; the StateStore answers gets from its in-memory
-    // snapshot and serializes only its one-job snapshot writes.
-    if (parallelism <= 1 || targets.size <= 1)
-      targets.foreach(t => Monitors.tableMonitor(spark, dir, t, sink, state))
+    // changed table, none for an unchanged one), so driver threads keep
+    // the cluster saturated across targets (FAIR-friendly). Default 8 =
+    // one thread per warehouse table; the A/B at sf0.1 measured the full
+    // fan-out (q276) at ~0.55× the 4-thread wall time — the per-table
+    // jobs are small enough that 4 threads left the scheduler underfed.
+    // MetricSink is synchronized; the StateStore answers reads from its
+    // in-memory snapshot and serializes only its one-job snapshot writes.
+    val profiled = if (parallelism <= 1 || targets.size <= 1)
+      targets.map(t => Monitors.tableMonitor(spark, dir, t, sink, state))
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(parallelism, targets.size))
       try {
         import scala.jdk.CollectionConverters._
-        val tasks: Seq[java.util.concurrent.Callable[Unit]] = targets.map { t =>
-          (() => Monitors.tableMonitor(spark, dir, t, sink, state)): java.util.concurrent.Callable[Unit]
+        val tasks = targets.map { t =>
+          (() => Monitors.tableMonitor(spark, dir, t, sink, state)): java.util.concurrent.Callable[Boolean]
         }
-        pool.invokeAll(tasks.asJava).asScala.foreach(_.get()) // propagate failures
+        pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get()) // propagate failures
       } finally pool.shutdown()
     }
+    sink.log("all_tables.tables_profiled", profiled.count(identity).toDouble)
+    sink.log("all_tables.tables_unchanged", profiled.count(!_).toDouble)
     val counts = targets.flatMap(t => sink.get(s"$t.record_count").flatMap(_.valueDouble))
     if (counts.nonEmpty)
       sink.log("all_tables.mean_record_count",

@@ -30,6 +30,11 @@ import org.apache.spark.sql.types.StructType
   *    shows as a mismatch, and the store reloads the snapshot (one job)
   *    before answering or merging.
   *
+  * `Monitors.tableMonitor` keeps here, per table, the reference's record
+  * count and columns plus the listing signature and the metrics it last
+  * emitted; a call that finds the same signature replays those metrics
+  * with no Spark job, and writes only when a value changed.
+  *
   * A process that dies between the delete and the rename leaves only a
   * complete `path.tmp` (one with `_SUCCESS`); [[read]] and the reload
   * recover the snapshot from it, and the next upsert completes the swap.
@@ -118,9 +123,13 @@ class StateStore(path: String) {
   }
 
   def get(spark: SparkSession, entity: String, key: String): Option[String] =
+    entries(spark, entity).get(key)
+
+  /** Every key of `entity` with its value, from one refresh under the lock. */
+  def entries(spark: SparkSession, entity: String): Map[String, String] =
     synchronized {
       refresh(spark, fs(spark))
-      snapshot.get((entity, key)).map(_.getString(2))
+      snapshot.collect { case ((e, k), r) if e == entity => k -> r.getString(2) }
     }
 
   def put(spark: SparkSession, entity: String, key: String, value: String): Unit =

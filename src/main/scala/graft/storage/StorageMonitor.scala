@@ -105,19 +105,6 @@ object StorageMonitor {
       .toDF("capacity_gb", "used_gb", "free_gb", "used_pct")
   }
 
-  /** Largest object per root with a deterministic tiebreak (path asc) —
-    * the fan-in argmax (`s3_key_monitor.py:179-184,209-220`).
-    */
-  def largestObjects(inventory: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("root")
-      .orderBy(col("size_bytes").desc, col("path").asc)
-    inventory.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("root", "path", "file_name", "size_bytes")
-      .orderBy("root")
-  }
-
   /** Small-files COMPACTION PLAN over an inventory relation
     * (file_name, size_bytes): files in deterministic name order pack
     * into ≈`targetBytes` bins by cumulative-sum bucketing — bin =

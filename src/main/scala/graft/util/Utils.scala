@@ -27,9 +27,6 @@ object PathOps {
       case Array(b) => ParsedUri(scheme, b, "")
     }
   }
-
-  /** Column-level basename (engine-side, over inventory DataFrames). */
-  def basenameCol(path: Column): Column = element_at(split(path, "/"), -1)
 }
 
 /** Nested-structure flattening (SURVEY F13): the reference recursively

@@ -60,6 +60,23 @@ class StateStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("entries reads every key of an entity from one listing, and sees another store's putAll") {
+    withTempDir("graft-state") { tmp =>
+      val path = tmp + "/state"
+      val a = new StateStore(path)
+      val b = new StateStore(path)
+      a.putAll(spark, Seq(("t", "record_count", "10"), ("t", "columns", "x,y"),
+        ("u", "record_count", "3")))
+      assert(b.entries(spark, "t") == Map("record_count" -> "10", "columns" -> "x,y"))
+      assert(TestSpark.jobsDuring {
+        (1 to 5).foreach(_ => assert(b.entries(spark, "u") == Map("record_count" -> "3")))
+      } == 0)
+      a.putAll(spark, Seq(("t", "record_count", "11")))
+      assert(b.entries(spark, "t") == Map("record_count" -> "11", "columns" -> "x,y"))
+      assert(b.entries(spark, "missing").isEmpty)
+    }
+  }
+
   test("8 threads each putAll-ing their own keys lose none") {
     withTempDir("graft-state") { tmp =>
       val path = tmp + "/state"

@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,6 +48,20 @@ class TableMonitorSpec extends AnyFunSuite {
   private def lake(dir: String, data: Seq[Row]): Unit =
     spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
       .repartition(2).write.parquet(Tables.path(dir, "t"))
+
+  /** The visible part files of table `t` under `dir`. */
+  private def partFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(Tables.path(dir, "t")).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+
+  /** Every sink point with doubles as raw bits: bit-exact, order-free. */
+  private def bits(sink: MetricSink): Seq[(String, Either[Long, String])] =
+    sink.toDf(spark).collect().toSeq.map { r =>
+      r.getAs[String]("key") -> Option(r.get(r.fieldIndex("valueDouble")))
+        .map(d => Left(java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double])))
+        .getOrElse(Right(r.getAs[String]("valueString")))
+    }.sortBy(_._1)
 
   /** (key, value) of every sink point, NaN-safe and order-free. */
   private def points(sink: MetricSink): Seq[(String, String)] =
@@ -144,12 +159,179 @@ class TableMonitorSpec extends AnyFunSuite {
       withTempDir("graft-tm-state") { tmp =>
         val state = new StateStore(tmp + "/s")
         Monitors.tableMonitor(spark, dir, "t", MetricSink("cold"), state)
+        // a new modification time: the warm call profiles, not replays
+        assert(partFiles(dir).head.setLastModified(System.currentTimeMillis() + 5000))
         val jobs = TestSpark.jobsDuring(
           Monitors.tableMonitor(spark, dir, "t", MetricSink("warm"), state))
         info(s"$jobs Spark jobs")
         assert(jobs > 0)
         assert(jobs <= 14, s"$jobs jobs")
       }
+    }
+  }
+
+  test("a warm call on an unchanged table replays its points and runs no Spark job") {
+    withTempDir("graft-tm-lake") { dir =>
+      lake(dir, rows(300))
+      withTempDir("graft-tm-state") { tmp =>
+        val state = new StateStore(tmp + "/s")
+        val cold = MetricSink("cold")
+        assert(Monitors.tableMonitor(spark, dir, "t", cold, state))
+        val warm = MetricSink("warm")
+        var profiled = true
+        val jobs = TestSpark.jobsDuring {
+          profiled = Monitors.tableMonitor(spark, dir, "t", warm, state)
+        }
+        assert(!profiled)
+        assert(jobs == 0, s"$jobs jobs")
+        // the replayed points plus delta and drift against the stored state
+        assert(bits(warm) == (bits(cold) ++ Seq("t.record_delta" -> Left(0L),
+          "t.columns_changed" -> Left(0L))).sortBy(_._1))
+      }
+    }
+  }
+
+  test("an appended file, a touched file, a column-changing rewrite, another " +
+    "sampleFraction and another ProfileConfig each re-profile") {
+    withTempDir("graft-tm-lake") { dir =>
+      lake(dir, rows(300))
+      withTempDir("graft-tm-state") { tmp =>
+        val state = new StateStore(tmp + "/s")
+        def monitor(fraction: Double = 1.0, cfg: ProfileConfig = ProfileConfig()): Boolean =
+          Monitors.tableMonitor(spark, dir, "t", MetricSink("m"), state, fraction, cfg)
+        assert(monitor())
+        assert(!monitor())
+        spark.createDataFrame(java.util.Arrays.asList(rows(20): _*), schema)
+          .coalesce(1).write.mode("append").parquet(Tables.path(dir, "t"))
+        assert(monitor(), "appended file")
+        assert(!monitor())
+        assert(partFiles(dir).head.setLastModified(System.currentTimeMillis() + 5000))
+        assert(monitor(), "touched file")
+        assert(!monitor())
+        spark.createDataFrame(java.util.Arrays.asList(rows(40): _*), schema)
+          .drop("q").coalesce(1).write.mode("overwrite").parquet(Tables.path(dir, "t"))
+        val sink = MetricSink("rewrite")
+        assert(Monitors.tableMonitor(spark, dir, "t", sink, state), "rewrite")
+        assert(sink.get("t.column_removed").flatMap(_.valueString).contains("q"))
+        assert(sink.get("t.record_count").flatMap(_.valueDouble).contains(40.0))
+        assert(!monitor())
+        assert(monitor(fraction = 0.5), "sampleFraction")
+        assert(!monitor(fraction = 0.5))
+        assert(monitor(fraction = 0.5, cfg = ProfileConfig(exact = false)), "ProfileConfig")
+        assert(!monitor(fraction = 0.5, cfg = ProfileConfig(exact = false)))
+      }
+    }
+  }
+
+  test("over a lake that grows and drifts for 12 cycles, every cycle emits the " +
+    "points of a full recompute, bit-exact") {
+    withTempDir("graft-tm-lake") { dir =>
+      withTempDir("graft-tm-state") { tmp =>
+        val base = rows(600)
+        val state = new StateStore(tmp + "/incremental")
+        var taken = 120
+        var tagged = false
+        def shaped(data: Seq[Row]): DataFrame = {
+          val df = spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+          if (tagged) df.withColumn("tag", col("id") * 3L) else df
+        }
+        shaped(base.take(taken)).repartition(2).write.parquet(Tables.path(dir, "t"))
+        var prev: Option[(String, String)] = None // (record_count, columns) of the last cycle
+        for (cycle <- 0 until 12) {
+          val change = if (cycle == 0) "initial" else cycle % 4 match {
+            case 1 => "rewrite"
+            case 3 => "none"
+            case _ => "append"
+          }
+          change match {
+            case "append" =>
+              shaped(base.slice(taken, taken + 37)).coalesce(1)
+                .write.mode("append").parquet(Tables.path(dir, "t"))
+              taken += 37
+            case "rewrite" =>
+              tagged = !tagged
+              shaped(base.take(taken)).repartition(2)
+                .write.mode("overwrite").parquet(Tables.path(dir, "t"))
+            case _ =>
+          }
+          val incremental = MetricSink(s"incremental-$cycle")
+          val profiled = Monitors.tableMonitor(spark, dir, "t", incremental, state)
+          assert(profiled == (change != "none"), s"cycle $cycle ($change)")
+          val fresh = new StateStore(s"$tmp/full-$cycle")
+          prev.foreach { case (n, cols) =>
+            fresh.putAll(spark, Seq(("t", "record_count", n), ("t", "columns", cols)))
+          }
+          val full = MetricSink(s"full-$cycle")
+          assert(Monitors.tableMonitor(spark, dir, "t", full, fresh))
+          assert(bits(incremental) == bits(full), s"cycle $cycle ($change)")
+          val cols = Tables.load(spark, dir, "t").columns.mkString(",")
+          assert(tagged == cols.endsWith(",tag"))
+          prev = Some((taken.toString, cols))
+        }
+      }
+    }
+  }
+}
+
+/** `Tables.load` memoizes each table's inferred schema per session, keyed
+  * by the table's listing signature: the schema must be the one a fresh
+  * inference gives, an unchanged table must load with no Spark job, any
+  * change to the listing must be seen, and concurrent loads must agree
+  * with sequential ones.
+  */
+class TablesLoadSpec extends AnyFunSuite {
+  private def fresh(dir: String, t: String): StructType =
+    Tables.normalizeNanoTs(spark.read.parquet(Tables.path(dir, t)), t).schema
+
+  test("Tables.load gives a fresh inference's schema for every fixture table, " +
+    "and a second load runs no Spark job") {
+    Tables.all.foreach { t =>
+      val first = Tables.load(spark, sf, t).schema
+      assert(first == fresh(sf, t), t)
+      var second: StructType = null
+      val jobs = TestSpark.jobsDuring { second = Tables.load(spark, sf, t).schema }
+      assert(jobs == 0, s"$t: $jobs jobs")
+      assert(second == first, t)
+    }
+    assert(Tables.load(spark, sf, "events").schema("ts").dataType == TimestampType)
+    val ts = Tables.load(spark, sf, "events").select("ts").orderBy("ts").collect().toSeq
+    assert(ts == Tables.normalizeNanoTs(spark.read.parquet(Tables.path(sf, "events")),
+      "events").select("ts").orderBy("ts").collect().toSeq)
+  }
+
+  test("Tables.load sees an appended file and a column-changing rewrite") {
+    withTempDir("graft-load") { dir =>
+      val p = Tables.path(dir, "t")
+      spark.range(10).toDF("id").coalesce(1).write.parquet(p)
+      assert(Tables.load(spark, dir, "t").count() == 10)
+      spark.range(10, 15).toDF("id").coalesce(1).write.mode("append").parquet(p)
+      assert(Tables.load(spark, dir, "t").count() == 15)
+      spark.range(3).toDF("id").withColumn("extra", lit("x"))
+        .coalesce(1).write.mode("overwrite").parquet(p)
+      val df = Tables.load(spark, dir, "t")
+      assert(df.columns.toSeq == Seq("id", "extra"))
+      assert(df.schema == fresh(dir, "t"))
+      assert(df.count() == 3)
+    }
+  }
+
+  test("8 threads loading the warehouse tables at once get the sequential schemas") {
+    withTempDir("graft-load") { dir =>
+      Tables.warehouse.foreach(t => java.nio.file.Files.copy(
+        java.nio.file.Paths.get(Tables.path(sf, t)), java.nio.file.Paths.get(Tables.path(dir, t))))
+      val sequential = Tables.warehouse.map(t => t -> Tables.load(spark, sf, t).schema).toMap
+      // both read confs start at the other value, so every thread may write them
+      val concurrent = withConf("spark.sql.legacy.parquet.nanosAsLong" -> "false",
+        "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true") {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+        try Tables.warehouse.map { t =>
+          t -> pool.submit(new java.util.concurrent.Callable[StructType] {
+            def call(): StructType = Tables.load(spark, dir, t).schema
+          })
+        }.map { case (t, f) => t -> f.get() }.toMap
+        finally pool.shutdown()
+      }
+      assert(concurrent == sequential)
     }
   }
 }

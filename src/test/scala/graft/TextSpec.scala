@@ -361,21 +361,24 @@ class ExtSpec extends AnyFunSuite {
     withTempDir("graft-incr") { tmp =>
       // copy two fixture tables into a mutable dir
       val src = sf
-      for (t <- Seq("nation", "region"))
+      val targets = Seq("nation", "region")
+      for (t <- targets)
         java.nio.file.Files.copy(
           java.nio.file.Paths.get(s"$src/$t.parquet"),
           java.nio.file.Paths.get(s"$tmp/$t.parquet"))
-      val state = new graft.state.StateStore(tmp + "/state")
-      val sink = graft.core.MetricSink("incr-test")
-      val first = graft.run.IncrementalMonitor.run(spark, tmp, Seq("nation", "region"), state, sink)
-      assert(first.toSet == Set("nation", "region"))
-      val second = graft.run.IncrementalMonitor.run(spark, tmp, Seq("nation", "region"), state, sink)
-      assert(second.isEmpty)
+      // (profiled, unchanged) as the runner's fan-in reports them
+      def run(): (Double, Double) = {
+        val m = graft.run.MonitorRunner.run(spark, tmp, targets, tmp + "/state")
+          .filter(col("key").startsWith("all_tables.tables_")).collect()
+          .map(r => r.getAs[String]("key") -> r.getAs[Double]("valueDouble")).toMap
+        (m("all_tables.tables_profiled"), m("all_tables.tables_unchanged"))
+      }
+      assert(run() == ((2.0, 0.0)))
+      assert(run() == ((0.0, 2.0)))
       // touch one table → only it is re-profiled
       val f = new java.io.File(s"$tmp/nation.parquet")
       assert(f.setLastModified(System.currentTimeMillis() + 5000))
-      val third = graft.run.IncrementalMonitor.run(spark, tmp, Seq("nation", "region"), state, sink)
-      assert(third == Seq("nation"))
+      assert(run() == ((1.0, 1.0)))
     }
   }
 

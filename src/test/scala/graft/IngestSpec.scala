@@ -946,3 +946,86 @@ class Round13IngestLoopSpec extends AnyFunSuite {
     }
   }
 }
+
+/** Near-dup ingest at the edges the fixtures never reach: a null text,
+  * an empty text, one-word texts (no bigram, so an empty shingle set and
+  * a signature of `HashMod` in every slot), a delivery of malformed lines
+  * only, and an empty delivery. Each report row, the corpus, the
+  * quarantine and both store relations are pinned row for row.
+  */
+class NearDupEdgeSpec extends AnyFunSuite {
+
+  private val schema = new StructType()
+    .add("doc_id", LongType).add("text", StringType).add("lang", StringType)
+
+  private def jsonl(path: String, lines: String*): Unit = {
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(path).getParent)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      lines.map(_ + "\n").mkString)
+    ()
+  }
+
+  private val M = graft.operators.TextOps.HashMod
+
+  test("edge deliveries: null, empty and one-word texts are kept with " +
+    "all-HashMod signatures; malformed-only and empty deliveries add " +
+    "no document") {
+    withTempDir("graft-neardup-edge") { dir =>
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      val bad = Seq("""{"doc_id": 9, "text": unquoted}""", "not json at all")
+      jsonl(s"$dir/in0/d.json", """{"doc_id": 1, "text": null, "lang": "en"}""")
+      jsonl(s"$dir/in1/d.json", """{"doc_id": 3, "text": "", "lang": "en"}""")
+      jsonl(s"$dir/in2/d.json",
+        """{"doc_id": 4, "text": "solitary", "lang": "en"}""",
+        """{"doc_id": 5, "text": "Lonely!", "lang": "de"}""")
+      jsonl(s"$dir/in3/d.json", bad: _*)
+      jsonl(s"$dir/in4/d.json")
+      val reports = (0 until 5).map { k =>
+        StreamingIngest.processBatchNearDup(
+          Sources.readValidated(spark, s"$dir/in$k", schema, "json"),
+          k.toLong, paths).collect().head.toSeq
+      }
+      // (ingest_batch, n_in, n_corrupt, n_dropped_store, n_dropped_within,
+      // n_kept): the empty and one-word docs band-collide with the store's
+      // null-text doc and with each other, but an empty shingle set
+      // verifies at Jaccard 0 (or null against a null set), so none drops
+      assert(reports === Seq(
+        Seq(0L, 1L, 0L, 0L, 0L, 1L),
+        Seq(1L, 1L, 0L, 0L, 0L, 1L),
+        Seq(2L, 2L, 0L, 0L, 0L, 2L),
+        Seq(3L, 0L, 2L, 0L, 0L, 0L),
+        Seq(4L, 0L, 0L, 0L, 0L, 0L)))
+
+      val corpus = StreamingIngest.corpus(spark, paths)
+        .select(col("doc_id"), col("text"), col("ingest_batch").cast("long"))
+        .collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2)))
+        .toSet
+      assert(corpus === Set((1L, None, 0L), (3L, Some(""), 1L),
+        (4L, Some("solitary"), 2L), (5L, Some("Lonely!"), 2L)))
+
+      val quarantine = StreamingIngest.quarantined(spark, paths).get
+        .select(col("raw_line"), col("ingest_batch").cast("long")).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(quarantine === bad.map(_ -> 3L).toSet)
+
+      val kept = Set((1L, 0L), (3L, 1L), (4L, 2L), (5L, 2L))
+      val bands = spark.table(
+        StreamingIngest.storeTableName("bands", s"${paths.store}/bands"))
+        .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("band_idx"),
+          r.getAs[String]("band_key"), r.getAs[Long]("ingest_batch"))).toSet
+      val allMod = Seq.fill(4)(M).mkString(",")
+      assert(bands === (for ((d, b) <- kept; i <- 0 until 4)
+        yield (d, i, allMod, b)))
+
+      val ngrams = spark.table(
+        StreamingIngest.storeTableName("ngrams", s"${paths.store}/ngrams"))
+        .collect().map(r => (r.getAs[Long]("doc_id"),
+          Option(r.getAs[scala.collection.Seq[Long]]("hs")).map(_.toSeq),
+          r.getAs[Long]("ingest_batch"))).toSet
+      assert(ngrams === Set((1L, None, 0L), (3L, Some(Nil), 1L),
+        (4L, Some(Nil), 2L), (5L, Some(Nil), 2L)))
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+}

@@ -304,6 +304,34 @@ object Dedup {
         array((0 until k).map(i => coalesce(col(s"s$i"), lit(HashMod))): _*).as("sig"))
   }
 
+  /** The MinHash signature of ONE row's hashed-shingle set `hs`
+    * ([[TextOps.hashedNgrams]] output), as a column: slot i is
+    * `coalesce(array_min(transform(hs, h -> (h*a_i + b_i) % p)), p)`,
+    * the oracle's per-row `sig` (`DedupQueries.minhashSigSql`). An empty
+    * or null set gets p in every slot, as in [[minhashSignatures]].
+    *
+    * Row-local: no explode and no shuffle. Pass `hs` as a column that an
+    * earlier projection computed; the k slots then share it. For a
+    * unique `doc_id` this equals [[minhashSignatures]]' grouped
+    * signature; for an id that repeats, each row keeps its own.
+    */
+  def minhashSig(hs: Column, k: Int = 16): Column =
+    array(minhashParams(k).map { case (a, b) =>
+      coalesce(array_min(transform(hs, h => (h * a + b) % HashMod)),
+        lit(HashMod))
+    }: _*)
+
+  /** (doc_id, band_idx, band_key): each signature exploded into its LSH
+    * band keys — the blocking relation both the self-join ([[lshCandidates]])
+    * and the cross-corpus join ([[incrementalNearDups]]) are built on.
+    */
+  def bandExplode(signatures: DataFrame, rowsPerBand: Int = 4): DataFrame =
+    signatures.select(col("doc_id"),
+      posexplode(transform(
+        sequence(lit(0), (size(col("sig")) / rowsPerBand).cast("int") - 1),
+        bIdx => array_join(slice(col("sig"), bIdx * rowsPerBand + 1, lit(rowsPerBand)), ","))))
+      .toDF("doc_id", "band_idx", "band_key")
+
   /** LSH candidate pairs: docs sharing at least one band of the signature.
     * Bands of `rowsPerBand` signature slots are hashed to a band key; the
     * (band_idx, band_key) self-join is the only shuffle, and its keys are
@@ -319,17 +347,6 @@ object Dedup {
     * [[DedupConfig.Production]] carries the recommended 100 TB caps;
     * DedupSpec measures the recall loss they cost.
     */
-  /** (doc_id, band_idx, band_key): each signature exploded into its LSH
-    * band keys — the blocking relation both the self-join ([[lshCandidates]])
-    * and the cross-corpus join ([[incrementalNearDups]]) are built on.
-    */
-  def bandExplode(signatures: DataFrame, rowsPerBand: Int = 4): DataFrame =
-    signatures.select(col("doc_id"),
-      posexplode(transform(
-        sequence(lit(0), (size(col("sig")) / rowsPerBand).cast("int") - 1),
-        bIdx => array_join(slice(col("sig"), bIdx * rowsPerBand + 1, lit(rowsPerBand)), ","))))
-      .toDF("doc_id", "band_idx", "band_key")
-
   def lshCandidates(signatures: DataFrame, rowsPerBand: Int = 4,
       maxBucketSize: Option[Long] = None): DataFrame = {
     // cached (release via graft.util.Caches.releaseAll): the self-join

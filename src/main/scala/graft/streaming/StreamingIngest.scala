@@ -174,15 +174,33 @@ object StreamingIngest {
     * in SQL (no recursive closure), so the whole multi-delivery run
     * oracles batch-by-batch.
     *
-    * Replay safety: identical to [[processBatch]] — all three writes
-    * (corpus, band store, ngram store) are batch-partitioned
+    * Shape: ONE per-row relation of the delivery — every line, its
+    * hashed bigrams `hs` and its MinHash signature `sig`
+    * ([[graft.operators.Dedup.minhashSig]], row-local, no shuffle) —
+    * feeds the drop computation, and the drop sets join back onto it as
+    * one fate per row (kept, dropped against the store, dropped within
+    * the batch, corrupt). That fated relation is checkpointed once; all
+    * five report counts come from one aggregate over it, and each sink
+    * is a filter and projection of it: the quarantine (corrupt lines),
+    * the corpus and the ngram store (kept rows), the band store (the
+    * kept rows' `sig` through `bandExplode`). No sink joins back to a
+    * survivor set.
+    *
+    * Rows are the unit: a `doc_id` delivered twice in one batch keeps
+    * one signature per row (the oracle's per-row `sig`), not one merged
+    * over both texts. The drop sets are ids, so every row of a dropped
+    * id drops, and the report counts rows.
+    *
+    * Replay safety: identical to [[processBatch]] — all four writes
+    * (quarantine, corpus, band store, ngram store) are batch-partitioned
     * overwrites, and both store reads exclude the replaying batch's
     * own partitions, so a crash between sinks replays to the
     * identical state.
     *
     * Returns the one-row delivery report
     * (ingest_batch, n_in, n_corrupt, n_dropped_store,
-    * n_dropped_within, n_kept), already materialized.
+    * n_dropped_within, n_kept) as a local relation (collecting it runs
+    * no Spark job).
     */
   def processBatchNearDup(batch: DataFrame, batchId: Long, paths: IngestPaths,
       idCol: String = "doc_id", textCol: String = "text",
@@ -190,154 +208,166 @@ object StreamingIngest {
       maxBucketSize: Option[Long] = None): DataFrame = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    val cached = batch.cache()
-    val scratch = scala.collection.mutable.ArrayBuffer[DataFrame](cached)
-    try {
-      val corrupt = cached.filter(col("_corrupt_record").isNotNull)
-        .select(col("_corrupt_record").as("raw_line"))
-      // ONE census job for n_corrupt AND n_in (round-14: these were two
-      // separate counts — per-batch job count is the e2e loop's main
-      // fixed cost at delivery grain)
-      val censusRow = cached.agg(
-        sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)),
-        sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L)))
-        .collect()(0)
-      val nCorrupt = if (censusRow.isNullAt(0)) 0L else censusRow.getLong(0)
-      val nIn = if (censusRow.isNullAt(1)) 0L else censusRow.getLong(1)
-      if (nCorrupt > 0)
-        corrupt.write.mode("overwrite")
-          .parquet(s"${paths.quarantine}/ingest_batch=$batchId")
-      val clean = cached.filter(col("_corrupt_record").isNull)
-        .drop("_corrupt_record")
-
-      val bandsAll = Dedup.bandExplode(
-        Dedup.minhashSignatures(clean, k, idCol, textCol), rowsPerBand).cache()
-      // hot-bucket cap, the q34/q61 skew guard transposed to ingest: a
-      // band key shared by d store docs × m delivery docs fans the
-      // candidate join out d·m rows, so one boilerplate bucket can
-      // dominate the whole delivery. The cap drops the delivery's OWN
-      // over-full buckets (deterministic — the store side is already
-      // survivor-thinned); recall for pairs that only collide in hot
-      // buckets is the documented cost, exactly as in
-      // [[graft.operators.Dedup.lshCandidates]] /
-      // [[graft.operators.DedupConfig.Production]].
-      val bandsNew = (maxBucketSize match {
-        case None => bandsAll
-        case Some(cap) =>
-          val hot = bandsAll.groupBy("band_idx", "band_key")
-            .agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
-            .select("band_idx", "band_key")
-          bandsAll.join(broadcast(hot), Seq("band_idx", "band_key"), "left_anti")
-      }).cache()
-      scratch += bandsAll
-      val ngramsNew = graft.util.Parallelism.ensure(clean)
-        .select(col(idCol).as("doc_id"),
-          graft.operators.TextOps.hashedNgrams(col(textCol)).as("hs")).cache()
-      scratch += bandsNew; scratch += ngramsNew
-      val jac = graft.functions.SortedLongJaccard
-        .sortedLongJaccard(col("ha"), col("hb"))
-
-      // (i) verified collision with an earlier-batch survivor. Both
-      // store reads come off the bucketed tables: the band probe and
-      // the ngram verification stream the store side shuffle-free
-      // (bucket layout == join key), and an empty store is an empty
-      // RELATION, so the first batch and the crash-between-sinks
-      // replay take the same code path.
-      val bandsTable = ensureStoreTable(spark, "bands",
-        s"${paths.store}/bands",
-        "doc_id BIGINT, band_idx INT, band_key STRING",
-        "band_idx, band_key")
-      val ngramsTable = ensureStoreTable(spark, "ngrams",
-        s"${paths.store}/ngrams",
-        "doc_id BIGINT, hs ARRAY<BIGINT>", "doc_id")
-      val storeBands = spark.table(bandsTable)
-        .filter(col("ingest_batch") < batchId)
-        .select(col("doc_id").as("store_id"), col("band_idx"),
-          col("band_key"))
-      val cands = bandsNew.join(storeBands, Seq("band_idx", "band_key"))
-        .select("doc_id", "store_id").distinct()
-      val storeNg = spark.table(ngramsTable)
-        .filter(col("ingest_batch") < batchId)
-        .select(col("doc_id").as("store_id"), col("hs").as("hb"))
-      val droppedStore = cands
-        .join(ngramsNew.withColumnRenamed("hs", "ha"), "doc_id")
-        .join(storeNg, "store_id")
-        .filter(jac >= threshold)
-        .select("doc_id").distinct()
-      // (ii) verified collision with a lower-id doc of the same batch
-      val within = bandsNew.as("a").join(bandsNew.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("doc_id"))
-        .distinct()
-      val droppedWithin = within
-        .join(ngramsNew.select(col("doc_id").as("id_a"), col("hs").as("ha")), "id_a")
-        .join(ngramsNew.select(col("doc_id"), col("hs").as("hb")), "doc_id")
-        .filter(jac >= threshold)
-        .select("doc_id").distinct()
-
-      // EAGER localCheckpoint (id-grain, tiny), not cache: the dropped
-      // sets' lineage reads the store tables, and the store INSERT
-      // OVERWRITE below may not read from the table it overwrites —
-      // the checkpoint cuts the plan at the materialized ids. ONE
-      // checkpoint for both drop sets (round-14): a `from_store` tag
-      // keeps the two report counts recoverable from the merged
-      // relation, halving the per-batch checkpoint jobs.
-      val droppedTagged = droppedStore.withColumn("__st", lit(1L))
-        .unionByName(droppedWithin.withColumn("__st", lit(0L)))
-        .groupBy("doc_id").agg(max(col("__st")).as("__st"))
+    val bandsTable = ensureStoreTable(spark, "bands",
+      s"${paths.store}/bands",
+      "doc_id BIGINT, band_idx INT, band_key STRING",
+      "band_idx, band_key")
+    val ngramsTable = ensureStoreTable(spark, "ngrams",
+      s"${paths.store}/ngrams",
+      "doc_id BIGINT, hs ARRAY<BIGINT>", "doc_id")
+    // the per-row relation, cached for the checkpoint job: the drop
+    // computation reads it several times and the fate join once more.
+    // `__hs` is its own projection, so the k signature slots share one
+    // shingle pass
+    val rows = graft.util.Parallelism.ensure(batch)
+      .withColumn("__hs", TextOps.hashedNgrams(col(textCol)))
+      .withColumn("__sig", Dedup.minhashSig(col("__hs"), k))
+      .cache()
+    // one fate per row. EAGER localCheckpoint, not cache: the fates'
+    // lineage reads the store tables, and the store INSERT OVERWRITEs
+    // below may not read from the table they overwrite — the checkpoint
+    // cuts the plan at the materialized rows
+    val fated = try {
+      val dropped = droppedIds(rows.filter(col("_corrupt_record").isNull),
+        batchId, bandsTable, ngramsTable, idCol, rowsPerBand, threshold,
+        maxBucketSize)
+      rows.join(broadcast(dropped), col(idCol) === col("__drop_id"), "left")
+        .withColumn("__fate",
+          when(col("_corrupt_record").isNotNull, lit(FateCorrupt))
+            .when(col("__st"), lit(FateDroppedStore))
+            .when(!col("__st"), lit(FateDroppedWithin))
+            .otherwise(lit(FateKept)))
+        .drop("__drop_id", "__st")
         .localCheckpoint()
-      val dropped = droppedTagged.select("doc_id")
-      val survivors = clean.join(dropped,
-        clean(idCol) === dropped("doc_id"), "left_anti").cache()
-      scratch += droppedTagged; scratch += survivors
-      val keepIds = survivors.select(col(idCol).as("doc_id"))
+    } finally { rows.unpersist(); () }
+
+    try {
+      val kept = fated.filter(col("__fate") === FateKept)
+      def n(fate: Int) = sum(when(col("__fate") === fate, 1L).otherwise(0L))
+      var counts: org.apache.spark.sql.Row = null
       // the store keeps survivors' FULL band sets (the cap thins the
       // candidate join, never the persisted signatures); static
       // partition INSERT OVERWRITE = the replay-safe batch-partitioned
-      // overwrite, now through the bucketed tables. The three sinks
-      // (corpus, bands, ngrams) overwrite disjoint paths and all read
-      // the same cached survivor relation — overlapped from a driver
-      // pool (round-15, guide §2.6; see writeSinksInParallel for the
-      // order-free replay argument)
+      // overwrite, through the bucketed tables. Every task reads the
+      // checkpoint and the sinks overwrite disjoint paths, so they run
+      // overlapped from a driver pool (round-15, guide §2.6; see
+      // writeSinksInParallel for the order-free replay argument)
       writeSinksInParallel(Seq(
-        () => survivors.write.mode("overwrite")
+        // the report counts, then the quarantine partition if the
+        // delivery has corrupt lines (none is written otherwise)
+        () => {
+          counts = fated.agg(n(FateCorrupt), n(FateDroppedStore),
+            n(FateDroppedWithin), n(FateKept)).collect()(0)
+          if (!counts.isNullAt(0) && counts.getLong(0) > 0)
+            fated.filter(col("__fate") === FateCorrupt)
+              .select(col("_corrupt_record").as("raw_line"))
+              .write.mode("overwrite")
+              .parquet(s"${paths.quarantine}/ingest_batch=$batchId")
+        },
+        () => kept.select(batch.columns.toSeq.filter(_ != "_corrupt_record").map(col): _*)
+          .write.mode("overwrite")
           .parquet(s"${paths.corpus}/ingest_batch=$batchId"),
         () => insertBatchPartition(spark, bandsTable, batchId,
-          bandsAll.join(keepIds, "doc_id")
+          Dedup.bandExplode(
+            kept.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
+            rowsPerBand)
             .select(col("doc_id").cast("long"), col("band_idx").cast("int"),
               col("band_key").cast("string"))
             .repartition(StoreBuckets, col("band_idx"), col("band_key"))),
         () => insertBatchPartition(spark, ngramsTable, batchId,
-          ngramsNew.join(keepIds, "doc_id")
-            .select(col("doc_id").cast("long"), col("hs"))
+          kept.select(col(idCol).cast("long").as("doc_id"), col("__hs").as("hs"))
             .repartition(StoreBuckets, col("doc_id")))))
 
-      // one job over the checkpointed drop census for both drop counts
-      // (n_in rode the corrupt census above; n_kept is the survivor
-      // cache materialization the store inserts consumed anyway)
-      val dropRow = droppedTagged.agg(
-        sum(col("__st")), count(lit(1))).collect()(0)
-      val nStore = if (dropRow.isNullAt(0)) 0L else dropRow.getLong(0)
-      val nWithin =
-        (if (dropRow.isNullAt(1)) 0L else dropRow.getLong(1)) - nStore
-      val nKept = survivors.count()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(
-          batchId, nIn, nCorrupt, nStore, nWithin, nKept)), 1),
-        NearDupReportSchema)
+      def c(i: Int) = if (counts.isNullAt(i)) 0L else counts.getLong(i)
+      val (nCorrupt, nStore, nWithin, nKept) = (c(0), c(1), c(2), c(3))
+      spark.createDataFrame(java.util.Collections.singletonList(
+        org.apache.spark.sql.Row(batchId, nStore + nWithin + nKept, nCorrupt,
+          nStore, nWithin, nKept)), NearDupReportSchema)
     } finally {
-      // report counts are materialized above; drop only this batch's
-      // caches AND checkpoint blocks (localCheckpoint survivors are not
-      // cache entries — round-12 ADVICE)
-      scratch.foreach { df =>
-        df.unpersist()
-        graft.util.Caches.releaseCheckpoint(df)
-      }
-      ()
+      // checkpoint blocks are not cache entries: release them explicitly
+      // (round-12 ADVICE)
+      graft.util.Caches.releaseCheckpoint(fated)
     }
   }
+
+  /** The delivery's dropped ids under [[processBatchNearDup]]'s drop law,
+    * one row per id: (`__drop_id`, `__st`), where `__st` is true when the
+    * id verifies against an earlier-batch survivor (an id dropped on both
+    * counts is a store drop) and false when only a lower-id doc of its
+    * own batch retires it. `clean` is the per-row relation without its
+    * corrupt lines.
+    */
+  private def droppedIds(clean: DataFrame, batchId: Long, bandsTable: String,
+      ngramsTable: String, idCol: String, rowsPerBand: Int,
+      threshold: Double, maxBucketSize: Option[Long]): DataFrame = {
+    import graft.operators.Dedup
+    val spark = clean.sparkSession
+    val bandsAll = Dedup.bandExplode(
+      clean.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
+      rowsPerBand)
+    // hot-bucket cap, the q34/q61 skew guard transposed to ingest: a
+    // band key shared by d store docs × m delivery docs fans the
+    // candidate join out d·m rows, so one boilerplate bucket can
+    // dominate the whole delivery. The cap drops the delivery's OWN
+    // over-full buckets (deterministic — the store side is already
+    // survivor-thinned); recall for pairs that only collide in hot
+    // buckets is the documented cost, exactly as in
+    // [[graft.operators.Dedup.lshCandidates]] /
+    // [[graft.operators.DedupConfig.Production]].
+    val bandsNew = maxBucketSize match {
+      case None => bandsAll
+      case Some(cap) =>
+        val hot = bandsAll.groupBy("band_idx", "band_key")
+          .agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
+          .select("band_idx", "band_key")
+        bandsAll.join(broadcast(hot), Seq("band_idx", "band_key"), "left_anti")
+    }
+    val ngramsNew = clean.select(col(idCol).as("doc_id"), col("__hs").as("hs"))
+    val jac = graft.functions.SortedLongJaccard
+      .sortedLongJaccard(col("ha"), col("hb"))
+
+    // (i) verified collision with an earlier-batch survivor. Both
+    // store reads come off the bucketed tables: the band probe and
+    // the ngram verification stream the store side shuffle-free
+    // (bucket layout == join key), and an empty store is an empty
+    // RELATION, so the first batch and the crash-between-sinks
+    // replay take the same code path.
+    val storeBands = spark.table(bandsTable)
+      .filter(col("ingest_batch") < batchId)
+      .select(col("doc_id").as("store_id"), col("band_idx"),
+        col("band_key"))
+    val cands = bandsNew.join(storeBands, Seq("band_idx", "band_key"))
+      .select("doc_id", "store_id").distinct()
+    val storeNg = spark.table(ngramsTable)
+      .filter(col("ingest_batch") < batchId)
+      .select(col("doc_id").as("store_id"), col("hs").as("hb"))
+    val droppedStore = cands
+      .join(ngramsNew.withColumnRenamed("hs", "ha"), "doc_id")
+      .join(storeNg, "store_id")
+      .filter(jac >= threshold)
+      .select("doc_id").distinct()
+    // (ii) verified collision with a lower-id doc of the same batch
+    val within = bandsNew.as("a").join(bandsNew.as("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+        col("a.band_key") === col("b.band_key") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("doc_id"))
+      .distinct()
+    val droppedWithin = within
+      .join(ngramsNew.select(col("doc_id").as("id_a"), col("hs").as("ha")), "id_a")
+      .join(ngramsNew.select(col("doc_id"), col("hs").as("hb")), "doc_id")
+      .filter(jac >= threshold)
+      .select("doc_id").distinct()
+    droppedStore.withColumn("__st", lit(true))
+      .unionByName(droppedWithin.withColumn("__st", lit(false)))
+      .groupBy(col("doc_id").as("__drop_id")).agg(max(col("__st")).as("__st"))
+  }
+
+  /** Row fates of [[processBatchNearDup]]'s per-row relation. */
+  private final val FateKept = 0
+  private final val FateDroppedStore = 1
+  private final val FateDroppedWithin = 2
+  private final val FateCorrupt = 3
 
   /** Bucket count of the near-dup store tables. Sized like a shuffle
     * partition count for the STORE's steady-state volume, not the
@@ -367,11 +397,13 @@ object StreamingIngest {
       paths: IngestPaths, batchId: Long = -1L, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 16, rowsPerBand: Int = 4): Unit = {
     import graft.operators.Dedup
-    val bands = Dedup.bandExplode(
-      Dedup.minhashSignatures(corpus, k, idCol, textCol), rowsPerBand)
+    // the delivery path's per-row signature, so bootstrap and delivery
+    // bands agree
     val ngrams = graft.util.Parallelism.ensure(corpus)
-      .select(col(idCol).as("doc_id"),
-        graft.operators.TextOps.hashedNgrams(col(textCol)).as("hs"))
+      .select(col(idCol).as("doc_id"), TextOps.hashedNgrams(col(textCol)).as("hs"))
+    val bands = Dedup.bandExplode(
+      ngrams.select(col("doc_id"), Dedup.minhashSig(col("hs"), k).as("sig")),
+      rowsPerBand)
     val bandsTable = ensureStoreTable(spark, "bands",
       s"${paths.store}/bands",
       "doc_id BIGINT, band_idx INT, band_key STRING",
@@ -563,17 +595,6 @@ object StreamingIngest {
     ()
   }
 
-  /** Distinct fingerprints of every batch strictly before `beforeBatch`
-    * (partition-pruned), or an empty relation when the store doesn't
-    * exist yet. `Long.MaxValue` reads the whole store.
-    *
-    * Table-backed since round 12: the store is an external table
-    * CLUSTERED BY (fingerprint), so both the distinct and the
-    * per-delivery anti-join consume the store WITHOUT an Exchange (the
-    * bucket layout already satisfies their clustering). The
-    * no-files-yet case stays a pure read (empty relation, no table or
-    * directory created as a side effect).
-    */
   /** Existence = direct `ingest_batch=` children: a recursive parquet
     * read at the store root would trip partition discovery when the
     * near-dup subtrees (`bands/`, `ngrams/`) share the root.
@@ -585,6 +606,17 @@ object StreamingIngest {
       .exists(_.getPath.getName.startsWith("ingest_batch="))
   }
 
+  /** Distinct fingerprints of every batch strictly before `beforeBatch`
+    * (partition-pruned), or an empty relation when the store doesn't
+    * exist yet. `Long.MaxValue` reads the whole store.
+    *
+    * Table-backed since round 12: the store is an external table
+    * CLUSTERED BY (fingerprint), so both the distinct and the
+    * per-delivery anti-join consume the store WITHOUT an Exchange (the
+    * bucket layout already satisfies their clustering). The
+    * no-files-yet case stays a pure read (empty relation, no table or
+    * directory created as a side effect).
+    */
   def storeFingerprints(spark: SparkSession, store: String,
       beforeBatch: Long = Long.MaxValue): DataFrame =
     if (!hasBatchDirs(spark, store))

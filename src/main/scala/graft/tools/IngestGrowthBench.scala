@@ -153,7 +153,7 @@ object IngestGrowthBench {
     */
   private def largeRegime(spark: SparkSession, sfDir: String): String =
     graft.util.TempDirs.withTempDir("graft-growth-large") { tmp =>
-      import graft.operators.Dedup
+      import graft.operators.{Dedup, TextOps}
       val paths = IngestPaths(s"$tmp/corpus", s"$tmp/store", s"$tmp/quarantine")
       val docs = Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
@@ -170,8 +170,9 @@ object IngestGrowthBench {
       val preRows = spark.table(bandsTable).count()
 
       def probe(bid: Long, delivery: org.apache.spark.sql.DataFrame) = {
-        val bandsNew = Dedup.bandExplode(
-          Dedup.minhashSignatures(delivery, 16, "doc_id", "text"), 4)
+        val bandsNew = Dedup.bandExplode(delivery
+          .select(col("doc_id"), TextOps.hashedNgrams(col("text")).as("hs"))
+          .select(col("doc_id"), Dedup.minhashSig(col("hs"), 16).as("sig")), 4)
         val storeBands = spark.table(bandsTable)
           .filter(col("ingest_batch") < bid)
           .select(col("doc_id").as("store_id"), col("band_idx"),

@@ -1028,4 +1028,95 @@ class NearDupEdgeSpec extends AnyFunSuite {
       StreamingIngest.dropStoreTables(spark, paths)
     }
   }
+
+  test("a doc_id repeated within one delivery: each row gets its own " +
+    "signature, and every row of a dropped id drops") {
+    withTempDir("graft-neardup-dupid") { dir =>
+      import spark.implicits._
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      def batch(rows: (Long, String)*): DataFrame = rows.toDF("doc_id", "text")
+        .withColumn("_corrupt_record", lit(null).cast("string"))
+      val a = "the quick brown fox jumps over the lazy dog tonight"
+      val b = "seventeen entirely separate words describe nothing at all " +
+        "about foxes dogs or any animal whatsoever in this long sentence"
+      val c = "a third text about bucketed stores and ingest pipelines"
+      val d = "mountains rivers valleys and plains under open skies"
+      val e = "compilers parse tokens into trees then emit machine code"
+      StreamingIngest.processBatchNearDup(batch(1L -> a), 0L, paths).collect()
+      val r = StreamingIngest.processBatchNearDup(
+        batch(7L -> a, 7L -> b, 8L -> c, 9L -> d, 9L -> e), 1L, paths)
+        .collect().head.toSeq
+      // row (7, a) repeats store doc 1, so id 7 drops against the store,
+      // and with it its other row (7, b); counts are rows
+      assert(r === Seq(1L, 5L, 0L, 2L, 0L, 3L))
+      val corpus = StreamingIngest.corpus(spark, paths)
+        .filter(col("ingest_batch") === 1)
+        .select("doc_id", "text").as[(Long, String)].collect().sorted.toSeq
+      assert(corpus === Seq(8L -> c, 9L -> d, 9L -> e).sorted)
+
+      // the store holds each kept row's own bands and shingles: those of
+      // the same text delivered alone
+      import graft.operators.{Dedup, TextOps}
+      def alone(id: Long, t: String) = Seq(id -> t).toDF("doc_id", "text")
+      val kept = Seq(8L -> c, 9L -> d, 9L -> e)
+      val expectBands = kept.flatMap { case (id, t) =>
+        Dedup.bandExplode(Dedup.minhashSignatures(alone(id, t)))
+          .as[(Long, Int, String)].collect().toSeq }.sorted
+      val bands = spark.table(
+        StreamingIngest.storeTableName("bands", s"${paths.store}/bands"))
+        .filter(col("ingest_batch") === 1L)
+        .select("doc_id", "band_idx", "band_key").as[(Long, Int, String)]
+        .collect().sorted.toSeq
+      assert(bands === expectBands)
+      val expectNgrams = kept.map { case (id, t) =>
+        id -> alone(id, t).select(TextOps.hashedNgrams(col("text")))
+          .as[Seq[Long]].head() }.sortBy(_.toString)
+      val ngrams = spark.table(
+        StreamingIngest.storeTableName("ngrams", s"${paths.store}/ngrams"))
+        .filter(col("ingest_batch") === 1L)
+        .select("doc_id", "hs").as[(Long, Seq[Long])].collect()
+        .toSeq.sortBy(_.toString)
+      assert(ngrams === expectNgrams)
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+}
+
+/** The Spark-job cost of one near-dup delivery. A delivery's fixed cost is
+  * its job count (each job pays scheduling and a driver round trip), so a
+  * change that adds an action to the delivery path fails here.
+  */
+class NearDupJobBudgetSpec extends AnyFunSuite {
+
+  test("a warm near-dup delivery into an existing store runs at most " +
+    "27 Spark jobs") {
+    withTempDir("graft-neardup-jobs") { dir =>
+      import spark.implicits._
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      val base = "the quick brown fox jumps over the lazy dog and then " +
+        "runs far away into the deep dark forest tonight"
+      def batch(k: Long): DataFrame = Seq(
+        (100L * k + 1, s"wholly distinct content number $k alpha$k beta$k"),
+        (100L * k + 2, base + s" tail$k"),
+        (100L * k + 3, s"wholly distinct content number $k alpha$k beta$k"),
+        (100L * k + 4, null))
+        .toDF("doc_id", "text")
+        .withColumn("_corrupt_record", lit(null).cast("string"))
+        .union(Seq((-1L, null: String, "{broken")).toDF("doc_id", "text",
+          "_corrupt_record"))
+      (0L until 2L).foreach { k =>
+        StreamingIngest.processBatchNearDup(batch(k), k, paths).collect() }
+      var report: Seq[Any] = Nil
+      val jobs = jobsDuring {
+        report = StreamingIngest.processBatchNearDup(batch(2L), 2L, paths)
+          .collect().head.toSeq
+      }
+      // 4 clean rows: 202 drops against the store (it near-dups 2), 203
+      // within (it repeats 201), 201 and the null-text 204 are kept; and
+      // 1 corrupt line
+      assert(report === Seq(2L, 4L, 1L, 1L, 1L, 2L))
+      assert(jobs <= 27, s"jobs: $jobs")
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
 }

@@ -338,3 +338,68 @@ class MonitorsSpec extends AnyFunSuite {
     assert(keys.contains("t.b.nulls"))
   }
 }
+
+/** The database and storage monitors at the edges of their inputs: no
+  * tables, a zero-row table, and an empty storage root.
+  */
+class MonitorEdgeSpec extends AnyFunSuite {
+  import java.nio.file.{Files, Paths}
+  import spark.implicits._
+  import graft.run.Monitors
+
+  private val stats = for (s <- Seq("max", "min", "mean", "median");
+    d <- Seq("row", "column")) yield s"db.${s}_${d}_count"
+
+  private def num(sink: MetricSink, k: String): Option[Double] =
+    sink.get(k).flatMap(_.valueDouble)
+
+  test("databaseMonitor over no tables: table_count 0, every stat 0.0, " +
+    "no largest table") {
+    val sink = MetricSink()
+    Monitors.databaseMonitor(spark, sf, sink, tables = Nil)
+    assert(num(sink, "db.table_count") === Some(0.0))
+    stats.foreach(k => assert(num(sink, k) === Some(0.0), k))
+    assert(sink.keys.toSet === Set("db.table_count") ++ stats ++
+      Seq("capacity_gb", "used_gb", "free_gb", "used_pct").map("disk." + _))
+  }
+
+  test("databaseMonitor with a zero-row parquet table: its row count is " +
+    "0 and it is not the largest") {
+    withTempDir("graft-db-edge") { dir =>
+      Seq.empty[(Long, String, Double)].toDF("a", "b", "c")
+        .write.parquet(Tables.path(dir, "empty"))
+      Seq((1L, "x"), (2L, "y")).toDF("a", "b")
+        .write.parquet(Tables.path(dir, "small"))
+      val sink = MetricSink()
+      Monitors.databaseMonitor(spark, dir, sink, tables = Seq("small", "empty"))
+      val expected = Map("db.table_count" -> 2.0,
+        "db.empty.row_count" -> 0.0, "db.empty.column_count" -> 3.0,
+        "db.small.row_count" -> 2.0, "db.small.column_count" -> 2.0,
+        "db.max_row_count" -> 2.0, "db.min_row_count" -> 0.0,
+        "db.mean_row_count" -> 1.0, "db.median_row_count" -> 1.0,
+        "db.max_column_count" -> 3.0, "db.min_column_count" -> 2.0,
+        "db.mean_column_count" -> 2.5, "db.median_column_count" -> 2.5)
+      expected.foreach { case (k, v) => assert(num(sink, k) === Some(v), k) }
+      assert(sink.get("db.largest_table").flatMap(_.valueString) === Some("small"))
+    }
+  }
+
+  test("storageMonitor over an empty root and a non-empty root: the " +
+    "empty root emits no prefix keys") {
+    withTempDir("graft-storage-edge") { dir =>
+      val empty = s"$dir/empty"
+      val full = s"$dir/full"
+      Seq(empty, full).foreach(d => Files.createDirectories(Paths.get(d)))
+      Files.write(Paths.get(s"$full/a.json"), Array.fill[Byte](30)(1))
+      Files.write(Paths.get(s"$full/b.csv"), Array.fill[Byte](20)(1))
+      val sink = MetricSink()
+      Monitors.storageMonitor(spark, Seq(empty, full), sink)
+      assert(!sink.keys.exists(_.startsWith(s"prefix.$empty.")))
+      assert(num(sink, s"prefix.$full.num_objects") === Some(2.0))
+      assert(sink.get(s"prefix.$full.largest_key").flatMap(_.valueString) ===
+        Some("a.json"))
+      Seq("largest_prefix_by_count", "largest_prefix_by_size").foreach(k =>
+        assert(sink.get(k).flatMap(_.valueString) === Some(full), k))
+    }
+  }
+}

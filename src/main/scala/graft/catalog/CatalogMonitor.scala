@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 
@@ -15,13 +16,14 @@ import graft.Tables
   * (`/root/reference/Snowflake/snowflake_database_monitor.py:38-49`) and
   * Redshift `svv_tables ⋈ svv_table_info` / `pg_table_def`
   * (`/root/reference/AWS_Redshift/redshift_database_monitor.py:30-57`) — as
-  * DataFrames synthesized from Spark schemas + cheap count jobs.
+  * relations built on the driver from table metadata.
   *
-  * Scale note: `row_count` uses `df.count()` over Parquet, which scans no
-  * column data (row-group row counts only); on a real lakehouse catalog the
-  * same API would read table-level statistics. Counts for the N tables are
-  * independent jobs — at 1000-table scale they would be submitted
-  * concurrently (the driver loop here is over table *names*, never rows).
+  * Scale note: `row_count` is the sum of the parquet footers' row counts
+  * ([[footerRowCount]]), read on the driver with no Spark job; only a
+  * table without readable footers falls back to a `count()` job. On a
+  * real lakehouse catalog the same API would read table-level statistics.
+  * The N tables are read concurrently, and the driver loop is over table
+  * *names*, never rows.
   */
 object CatalogMonitor {
 
@@ -200,33 +202,33 @@ object CatalogMonitor {
   }
 
   /** (table_name, row_count) — the `information_schema.tables` analogue.
-    *
-    * DEFAULT path: footer counts — zero jobs, zero tasks, the right
-    * call at 1000-table catalog scale where even empty-projection count
-    * scans queue up (the reference's whole point is reading the
-    * catalog's `row_count` instead of scanning). Any table the footer
-    * path can't answer — no visible parquet files, unreadable footer —
-    * automatically falls back to a `count()` job for THAT table.
-    * Values equal `Tables.load(…).count()` by construction (both read
-    * the same footer counts) — Round10dSpec pins that and the fallback
-    * edges.
+    * Footer counts read no data, the right call at 1000-table catalog
+    * scale, and equal `Tables.load(…).count()` by construction
+    * (Round10dSpec pins that and the fallback edges). A table the footers
+    * can't answer (no visible parquet files, an unreadable footer) falls
+    * back to a `count()` job.
     */
   def tableRowCounts(spark: SparkSession, dir: String,
       tables: Seq[String] = Tables.all): DataFrame = {
     import spark.implicits._
+    perTable(tables)(t => (t, rowCount(spark, dir, t)))
+      .toDF("table_name", "row_count").orderBy("table_name")
+  }
+
+  /** One table's [[footerRowCount]], else a `count()` job. */
+  private def rowCount(spark: SparkSession, dir: String, table: String): Long =
+    footerRowCount(spark, Tables.path(dir, table))
+      .getOrElse(Tables.load(spark, dir, table).count())
+
+  /** `f` over every table, submitted concurrently so the cluster (or, on
+    * the footer path, the filesystem) pipelines it: FAIR-scheduler
+    * friendly at 1000-table scale. Results keep the order of `tables`.
+    */
+  private def perTable[A](tables: Seq[String])(f: String => A): Seq[A] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // per-table work submitted concurrently so the cluster (or, on the
-    // footer path, the filesystem) pipelines it — FAIR-scheduler
-    // friendly at 1000-table scale
-    val counts = Await.result(
-      Future.traverse(tables) { t =>
-        Future((t, footerRowCount(spark, Tables.path(dir, t))
-          .getOrElse(Tables.load(spark, dir, t).count())))
-      },
-      Duration.Inf)
-    counts.toDF("table_name", "row_count").orderBy("table_name")
+    Await.result(Future.traverse(tables)(t => Future(f(t))), Duration.Inf)
   }
 
   /** (table_name, column_name, data_type, ordinal, autoincrement) —
@@ -256,20 +258,29 @@ object CatalogMonitor {
       .orderBy("table_name", "ordinal")
   }
 
-  /** (table_name, row_count, column_count) — the joined shape relation the
-    * Redshift monitor builds by mapping row counts onto a per-table column
-    * aggregate (`/root/reference/AWS_Redshift/redshift_database_monitor.py:85-91`):
-    * a broadcast-hash left join at any scale.
+  /** Spark's order on strings (unsigned UTF-8 bytes), for driver-side
+    * sorts and tie-breaks that must agree with `orderBy`. */
+  private[graft] val nameOrder: Ordering[String] =
+    Ordering.by[String, UTF8String](UTF8String.fromString)
+
+  /** (table_name, row_count, column_count) per table, sorted by name: the
+    * Redshift monitor's row counts mapped onto per-table column counts
+    * (`/root/reference/AWS_Redshift/redshift_database_monitor.py:85-91`),
+    * from [[tableRowCounts]]'s counts and the distinct column names of
+    * each table's memoized schema.
     */
+  private[graft] def shapes(spark: SparkSession, dir: String,
+      tables: Seq[String]): Seq[(String, Long, Long)] =
+    perTable(tables) { t =>
+      (t, rowCount(spark, dir, t),
+        Tables.load(spark, dir, t).schema.fieldNames.distinct.length.toLong)
+    }.sortBy(_._1)(nameOrder)
+
+  /** [[shapes]] as a local relation (table_name, row_count, column_count). */
   def tableShapes(spark: SparkSession, dir: String,
       tables: Seq[String] = Tables.all): DataFrame = {
-    val colCounts = tableColumns(spark, dir, tables)
-      .groupBy("table_name")
-      .agg(count_distinct(col("column_name")).as("column_count"))
-    tableRowCounts(spark, dir, tables)
-      .join(broadcast(colCounts), Seq("table_name"), "left")
-      .na.fill(0, Seq("column_count"))
-      .orderBy("table_name")
+    import spark.implicits._
+    shapes(spark, dir, tables).toDF("table_name", "row_count", "column_count")
   }
 
   /** The database-monitor metric block

@@ -270,7 +270,8 @@ object MonitorQueries extends QueryModule {
     QueryDef("q18_catalog_rowcounts", (s, dir) => CatalogMonitor.tableRowCounts(s, dir),
       s"$catalogCountsCte SELECT table_name, row_count FROM counts ORDER BY table_name"),
 
-    // S4/S7 + A2/J2: table shapes (rows × columns) via broadcast left join.
+    // S4/S7 + A2/J2: table shapes (rows × columns), one local relation
+    // built on the driver from footer row counts and schemas.
     QueryDef("q19_table_shapes", (s, dir) => CatalogMonitor.tableShapes(s, dir),
       Tables.all.map(tn =>
         s"SELECT '$tn' AS table_name, (SELECT count(*) FROM $tn) AS row_count, " +

@@ -1,7 +1,8 @@
 package graft.run
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.catalog.CatalogMonitor
@@ -18,10 +19,16 @@ import graft.storage.StorageMonitor
   * `/root/reference/AWS_S3/s3_key_monitor.py:223-275`). Here each target
   * produces metric rows into a shared sink in-process (each monitor's heavy
   * work is Spark jobs, so parallelism comes from the cluster, not from
-  * worker processes), and the fan-in aggregate is a DataFrame groupBy over
-  * the union — no message passing.
+  * worker processes), and the fan-in aggregate reads the shared sink on
+  * the driver — no message passing.
   */
 object Monitors {
+
+  // an emitted point: a number or a string
+  private[graft] type Point = (String, Either[Double, String])
+
+  private def emit(sink: MetricSink, points: Seq[Point]): Unit =
+    points.foreach { case (k, v) => v.fold(sink.log(k, _), sink.logString(k, _)) }
 
   /** Database monitor (Snowflake/Redshift database-monitor parity:
     * `snowflake_database_monitor.py:56-95`,
@@ -29,40 +36,49 @@ object Monitors {
     * shapes, min/max/mean/median of row AND column counts (the reference
     * logs `.max()` for its "Min table column count" — SURVEY §7.4; we emit
     * true mins), largest table, and disk stats.
+    *
+    * Every value comes from the driver-side shape list
+    * ([[CatalogMonitor.shapes]]), as the reference aggregates one catalog
+    * query in pandas: no Spark job once the schemas are memoized.
     */
   def databaseMonitor(spark: SparkSession, dir: String, sink: MetricSink,
       tables: Seq[String] = Tables.warehouse): Unit = {
-    val shapes = CatalogMonitor.tableShapes(spark, dir, tables).cache()
-    sink.log("db.table_count", shapes.count().toDouble)
-    shapes.collect().foreach { r =>
-      sink.log(s"db.${r.getString(0)}.row_count", r.getLong(1).toDouble)
-      sink.log(s"db.${r.getString(0)}.column_count", r.getLong(2).toDouble)
-    }
-    val stats = shapes.agg(
-      max("row_count"), min("row_count"), round(avg("row_count"), 2),
-      round(median(col("row_count").cast("double")), 2),
-      max("column_count"), min("column_count"), round(avg("column_count"), 2),
-      round(median(col("column_count").cast("double")), 2)).collect().head
-    Seq("db.max_row_count", "db.min_row_count", "db.mean_row_count",
-      "db.median_row_count", "db.max_column_count", "db.min_column_count",
-      "db.mean_column_count", "db.median_column_count")
-      .zipWithIndex.foreach { case (k, i) =>
-        sink.log(k, Option(stats.get(i)).map(_.toString.toDouble).getOrElse(0.0))
-      }
-    CatalogMonitor.largestTable(shapes.select("table_name", "row_count"))
-      .collect().headOption.foreach(r => sink.logString("db.largest_table", r.getString(0)))
-    StorageMonitor.diskStats(spark, dir).collect().headOption.foreach { d =>
-      sink.log("disk.capacity_gb", d.getDouble(0))
-      sink.log("disk.used_gb", d.getDouble(1))
-      sink.log("disk.free_gb", d.getDouble(2))
-      sink.log("disk.used_pct", d.getDouble(3))
-    }
-    shapes.unpersist()
+    emit(sink, databasePoints(CatalogMonitor.shapes(spark, dir, tables)))
+    StorageMonitor.diskStats(spark, dir).foreach { case (k, v) => sink.log(s"disk.$k", v) }
   }
 
-  // a table monitor's emitted point (a number or a string), and the
-  // state keys of the replay
-  private type Point = (String, Either[Double, String])
+  /** Table count, per-table shapes, the eight statistics (0.0 without
+    * tables) and the largest table (ties to the least name) of
+    * (table, row_count, column_count) shapes.
+    */
+  private[graft] def databasePoints(shapes: Seq[(String, Long, Long)]): Seq[Point] = {
+    def num(k: String, v: Double): Point = k -> Left(v)
+    val stats = for ((dim, xs) <- Seq("row" -> shapes.map(_._2.toDouble),
+        "column" -> shapes.map(_._3.toDouble));
+      (stat, v) <- Seq("max" -> xs.maxOption, "min" -> xs.minOption,
+        "mean" -> Option.when(xs.nonEmpty)(xs.sum / xs.size).map(round2),
+        "median" -> median(xs).map(round2)))
+      yield num(s"db.${stat}_${dim}_count", v.getOrElse(0.0))
+    (num("db.table_count", shapes.size.toDouble) +: shapes.flatMap { case (t, rows, cols) =>
+      Seq(num(s"db.$t.row_count", rows.toDouble), num(s"db.$t.column_count", cols.toDouble))
+    }) ++
+      stats ++ shapes.minByOption(s => (s._2, s._1))(
+        Ordering.Tuple2(Ordering.Long.reverse, CatalogMonitor.nameOrder))
+        .map(s => "db.largest_table" -> Right(s._1))
+  }
+
+  /** Spark's `round(x, 2)` on a double: HALF_UP on its decimal form. */
+  private def round2(x: Double): Double =
+    BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Spark's `median`: the sorted values at (n - 1) / 2, interpolated. */
+  private def median(xs: Seq[Double]): Option[Double] = Option.when(xs.nonEmpty) {
+    val (s, pos) = (xs.sorted, (xs.size - 1) * 0.5)
+    val (lo, hi) = (pos.floor.toInt, pos.ceil.toInt)
+    if (s(lo) == s(hi)) s(lo) else (hi - pos) * s(lo) + (pos - lo) * s(hi)
+  }
+
+  // the state keys of a table monitor's replay
   private val SignatureKey = "listing_signature"
   private val MetricsKey = "metrics"
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -105,7 +121,7 @@ object Monitors {
     val replay = prev.get(MetricsKey)
       .filter(_ => signature.nonEmpty && prev.get(SignatureKey).contains(signature))
     val points = replay.fold(profile(spark, dir, table, files, sampleFraction, cfg))(decode)
-    points.foreach { case (k, v) => v.fold(sink.log(k, _), sink.logString(k, _)) }
+    emit(sink, points)
     val recordCount = points.collectFirst {
       case (k, Left(d)) if k == s"$table.record_count" => d.toLong }.get
     val columns = points.collect {
@@ -150,35 +166,51 @@ object Monitors {
   /** Storage monitor (S3 key/prefix/bucket-monitor parity:
     * `s3_key_monitor.py:56-138`, `s3_bucket_monitor.py:42-103`): per-object
     * metadata metrics, per-prefix aggregates, and the cross-prefix argmax
-    * fan-in (`s3_key_monitor.py:167-220`).
+    * fan-in (`s3_key_monitor.py:167-220`). The inventory is collected
+    * once, its listing being the phase's one Spark job, and each root's
+    * aggregates fold from its rows on the driver, as the reference folds
+    * its one listing (`s3_key_monitor.py:111-123`).
     */
   def storageMonitor(spark: SparkSession, roots: Seq[String], sink: MetricSink): Unit = {
-    val mb = 1048576.0 // s3_key_monitor.py:29
-    val inv = StorageMonitor.inventory(spark, roots).cache()
-    inv.collect().foreach { r =>
+    val inv = StorageMonitor.inventory(spark, roots).collect()
+    inv.foreach { r =>
       val key = r.getAs[String]("file_name")
-      sink.log(s"key.$key.size_mb",
-        math.rint(r.getAs[Long]("size_bytes") / mb * 100) / 100)
+      sink.log(s"key.$key.size_mb", sizeMb(r.getAs[Long]("size_bytes")))
       sink.logString(s"key.$key.content_type", r.getAs[String]("content_type"))
       sink.logString(s"key.$key.storage_class", r.getAs[String]("storage_class"))
       sink.logString(s"key.$key.last_modified",
         new java.sql.Timestamp(r.getAs[Long]("modification_ms")).toString)
     }
-    val summaries = StorageMonitor.prefixSummary(inv).cache()
-    summaries.collect().foreach { r =>
-      val root = r.getAs[String]("root")
-      sink.log(s"prefix.$root.num_objects", r.getAs[Long]("num_objects").toDouble)
-      sink.log(s"prefix.$root.total_size_mb",
-        math.rint(r.getAs[Long]("total_bytes") / mb * 100) / 100)
-      sink.log(s"prefix.$root.max_size_mb",
-        math.rint(r.getAs[Long]("max_bytes") / mb * 100) / 100)
-      sink.logString(s"prefix.$root.largest_key", r.getAs[String]("largest_file"))
-    }
-    summaries.orderBy(col("num_objects").desc, col("root")).collect().headOption
-      .foreach(r => sink.logString("largest_prefix_by_count", r.getAs[String]("root")))
-    summaries.orderBy(col("total_bytes").desc, col("root")).collect().headOption
-      .foreach(r => sink.logString("largest_prefix_by_size", r.getAs[String]("root")))
-    summaries.unpersist(); inv.unpersist()
+    emit(sink, prefixPoints(inv.toSeq.map(r => (r.getAs[String]("root"),
+      r.getAs[String]("file_name"), r.getAs[Long]("size_bytes")))))
+  }
+
+  private def sizeMb(bytes: Long): Double =
+    math.rint(bytes / 1048576.0 * 100) / 100 // MB: s3_key_monitor.py:29
+
+  /** Per-root points and the cross-root argmaxes over (root, file_name,
+    * size_bytes) objects, with [[StorageMonitor.prefixSummary]]'s values:
+    * a root's largest key is its greatest (size, name), and the argmaxes
+    * break ties to the least root.
+    */
+  private[graft] def prefixPoints(objects: Seq[(String, String, Long)]): Seq[Point] = {
+    val name = CatalogMonitor.nameOrder
+    // (root, objects, total bytes, max bytes, largest key), by root
+    val prefixes = objects.groupBy(_._1).toSeq.map { case (root, os) =>
+      val sizes = os.map(_._3)
+      (root, os.size.toLong, sizes.sum, sizes.max,
+        os.map(o => (o._3, o._2)).max(Ordering.Tuple2(Ordering.Long, name))._2)
+    }.sortBy(_._1)(name)
+    val byDesc = Ordering.Tuple2(Ordering.Long.reverse, name)
+    prefixes.flatMap { case (root, n, total, maxBytes, largest) =>
+      Seq[Point](s"prefix.$root.num_objects" -> Left(n.toDouble),
+        s"prefix.$root.total_size_mb" -> Left(sizeMb(total)),
+        s"prefix.$root.max_size_mb" -> Left(sizeMb(maxBytes)),
+        s"prefix.$root.largest_key" -> Right(largest))
+    } ++ prefixes.minByOption(p => (p._2, p._1))(byDesc)
+      .map(p => "largest_prefix_by_count" -> Right(p._1)) ++
+      prefixes.minByOption(p => (p._3, p._1))(byDesc)
+        .map(p => "largest_prefix_by_size" -> Right(p._1))
   }
 
   /** DataFrame-tracking template parity
@@ -200,12 +232,17 @@ object MonitorRunner {
     * Snowflake DAG computes from XCom pulls (mean record count / mean
     * delta — `snowflake_table_monitor.py:133-157`). Returns the full
     * metrics DataFrame for this run.
+    * A target that throws (a missing or corrupt table) fails alone, as
+    * each reference target is its own task: it logs `run.<target>.error`
+    * (class and message) and counts in `all_tables.targets_failed`; the
+    * means cover the targets that succeeded, and the flush always runs.
     */
   def run(spark: SparkSession, dir: String, targets: Seq[String],
       statePath: String, metricsPath: Option[String] = None,
       parallelism: Int = 8): DataFrame = {
     val sink = MetricSink()
     val state = new StateStore(statePath)
+    def monitor(t: String) = Try(Monitors.tableMonitor(spark, dir, t, sink, state))
     // Concurrent fan-out, like the reference's parallel Airflow tasks
     // (`snowflake_table_monitor.py:162-178`): each monitor is mostly
     // blocking on its own Spark jobs (about a dozen small ones per
@@ -216,26 +253,33 @@ object MonitorRunner {
     // jobs are small enough that 4 threads left the scheduler underfed.
     // MetricSink is synchronized; the StateStore answers reads from its
     // in-memory snapshot and serializes only its one-job snapshot writes.
-    val profiled = if (parallelism <= 1 || targets.size <= 1)
-      targets.map(t => Monitors.tableMonitor(spark, dir, t, sink, state))
+    val outcomes = if (parallelism <= 1 || targets.size <= 1) targets.map(monitor)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(parallelism, targets.size))
       try {
         import scala.jdk.CollectionConverters._
         val tasks = targets.map { t =>
-          (() => Monitors.tableMonitor(spark, dir, t, sink, state)): java.util.concurrent.Callable[Boolean]
+          (() => monitor(t)): java.util.concurrent.Callable[Try[Boolean]]
         }
-        pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get()) // propagate failures
+        pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
       } finally pool.shutdown()
     }
-    sink.log("all_tables.tables_profiled", profiled.count(identity).toDouble)
-    sink.log("all_tables.tables_unchanged", profiled.count(!_).toDouble)
-    val counts = targets.flatMap(t => sink.get(s"$t.record_count").flatMap(_.valueDouble))
+    val done = targets.zip(outcomes).flatMap {
+      case (t, Success(profiled)) => Some(t -> profiled)
+      case (t, Failure(e)) =>
+        sink.logString(s"run.$t.error", s"${e.getClass.getName}: ${e.getMessage}")
+        None
+    }
+    sink.log("all_tables.tables_profiled", done.count(_._2).toDouble)
+    sink.log("all_tables.tables_unchanged", done.count(!_._2).toDouble)
+    sink.log("all_tables.targets_failed", (targets.size - done.size).toDouble)
+    val ok = done.map(_._1)
+    val counts = ok.flatMap(t => sink.get(s"$t.record_count").flatMap(_.valueDouble))
     if (counts.nonEmpty)
       sink.log("all_tables.mean_record_count",
         math.rint(counts.sum / counts.size * 100) / 100)
-    val deltas = targets.flatMap(t => sink.get(s"$t.record_delta").flatMap(_.valueDouble))
+    val deltas = ok.flatMap(t => sink.get(s"$t.record_delta").flatMap(_.valueDouble))
     if (deltas.nonEmpty)
       sink.log("all_tables.mean_record_delta",
         math.rint(deltas.sum / deltas.size * 100) / 100)

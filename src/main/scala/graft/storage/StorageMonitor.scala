@@ -19,7 +19,10 @@ import org.apache.spark.util.SerializableConfiguration
   * file://, hdfs://, s3a://). A 100M-object bucket splits into prefixes so
   * no single task lists more than one subtree, and every downstream
   * aggregate is a partial+final agg — the reference's manual streaming max
-  * and driver-side dict transposition collapse into one `groupBy`.
+  * and driver-side dict transposition collapse into one `groupBy` (q28).
+  * The monitor path (`Monitors.storageMonitor`) needs every row for its
+  * per-key metrics anyway, so it collects the inventory once and computes
+  * its aggregates on the driver; q27 and q28 keep the distributed relation.
   */
 object StorageMonitor {
 
@@ -91,18 +94,17 @@ object StorageMonitor {
   /** Filesystem capacity stats (SURVEY S8): the `stv_partitions`
     * capacity/used/free-GB block
     * (`/root/reference/AWS_Redshift/redshift_database_monitor.py:50-57,111-116`)
-    * re-expressed over the Hadoop FileSystem status API.
+    * re-expressed over the Hadoop FileSystem status API, as (name, value)
+    * pairs: capacity_gb, used_gb, free_gb, used_pct.
     */
-  def diskStats(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
+  def diskStats(spark: SparkSession, root: String): Seq[(String, Double)] = {
     val p = new Path(root)
     val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getStatus(p)
     val gb = 1024.0 * 1024 * 1024
     val (cap, used, free) = (st.getCapacity / gb, st.getUsed / gb, st.getRemaining / gb)
-    Seq((math.rint(cap * 100) / 100, math.rint(used * 100) / 100,
-      math.rint(free * 100) / 100,
-      if (cap == 0) 0.0 else math.rint(used / cap * 10000) / 100))
-      .toDF("capacity_gb", "used_gb", "free_gb", "used_pct")
+    Seq("capacity_gb" -> cap, "used_gb" -> used, "free_gb" -> free)
+      .map { case (k, v) => k -> math.rint(v * 100) / 100 } :+
+      ("used_pct" -> (if (cap == 0) 0.0 else math.rint(used / cap * 10000) / 100))
   }
 
   /** Small-files COMPACTION PLAN over an inventory relation

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -403,3 +404,190 @@ class MonitorEdgeSpec extends AnyFunSuite {
     }
   }
 }
+
+/** The database and storage monitors compute their statistics on the
+  * driver. Each value must equal, bit for bit, the Spark expression it
+  * replaces, evaluated over the same rows: the fixture's, and synthetic
+  * rows that reach interpolation, ties and rounding boundaries.
+  */
+class MonitorParitySpec extends AnyFunSuite {
+  import spark.implicits._
+  import graft.run.Monitors
+
+  private type Value = Either[Long, String] // a double's raw bits, or a string
+  private def bits(d: Double): Value = Left(java.lang.Double.doubleToRawLongBits(d))
+
+  private val statKeys = for (d <- Seq("row", "column");
+    s <- Seq("max", "min", "mean", "median")) yield s"db.${s}_${d}_count"
+
+  /** The eight statistics and the largest table as Spark computes them
+    * from a (table_name, row_count, column_count) relation.
+    */
+  private def sparkDb(shapes: DataFrame): Map[String, Value] = {
+    val st = shapes.agg(
+      max("row_count"), min("row_count"), round(avg("row_count"), 2),
+      round(median(col("row_count").cast("double")), 2),
+      max("column_count"), min("column_count"), round(avg("column_count"), 2),
+      round(median(col("column_count").cast("double")), 2)).collect().head
+    statKeys.zipWithIndex.map { case (k, i) =>
+      k -> bits(Option(st.get(i)).map(_.toString.toDouble).getOrElse(0.0))
+    }.toMap ++ CatalogMonitor.largestTable(shapes.select("table_name", "row_count"))
+      .collect().headOption.map(r => "db.largest_table" -> Right(r.getString(0)))
+  }
+
+  private def values(points: Seq[(String, Either[Double, String])]): Map[String, Value] =
+    points.map { case (k, v) => k -> v.fold(bits, Right(_)) }.toMap
+
+  private def sinkValues(sink: MetricSink): Map[String, Value] =
+    values(sink.keys.map(k => k -> sink.get(k).get)
+      .map { case (k, r) => k -> r.valueDouble.toLeft(r.valueString.get) })
+
+  private def driverDb(shapes: Seq[(String, Long, Long)]): Map[String, Value] =
+    values(Monitors.databasePoints(shapes))
+      .filter { case (k, _) => statKeys.contains(k) || k == "db.largest_table" }
+
+  test("fixture: tableShapes equals the row-count and column-count join, " +
+    "and databaseMonitor's statistics equal Spark's over it") {
+    val colCounts = CatalogMonitor.tableColumns(spark, sf, Tables.warehouse)
+      .groupBy("table_name").agg(count_distinct(col("column_name")).as("column_count"))
+    val joined = CatalogMonitor.tableRowCounts(spark, sf, Tables.warehouse)
+      .join(broadcast(colCounts), Seq("table_name"), "left")
+      .na.fill(0, Seq("column_count")).orderBy("table_name")
+    def rows(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows(CatalogMonitor.tableShapes(spark, sf, Tables.warehouse)) === rows(joined))
+    val sink = MetricSink()
+    Monitors.databaseMonitor(spark, sf, sink)
+    val expected = sparkDb(joined)
+    assert(sinkValues(sink).filter { case (k, _) => expected.contains(k) } === expected)
+  }
+
+  test("synthetic shapes: even counts, ties, HALF_UP boundaries, one table") {
+    val cases: Seq[(String, Seq[(String, Long, Long)])] = Seq(
+      "even count" -> Seq(("a", 1L, 2L), ("b", 4L, 3L), ("c", 10L, 5L), ("d", 7L, 7L)),
+      "six tables" -> Seq(("t1", 3L, 1L), ("t2", 1L, 1L), ("t3", 100L, 9L),
+        ("t4", 8L, 2L), ("t5", 8L, 4L), ("t6", 123456789012L, 4L)),
+      "tie on row count" -> Seq(("zeta", 9L, 1L), ("alpha", 9L, 2L), ("mid", 3L, 3L)),
+      // 9 / 8 = 1.125 exactly: HALF_UP reads 1.13 where half-even reads 1.12
+      "mean on 1.125" -> (Seq.tabulate(7)(i => (s"r$i", 1L, 3L)) :+ (("r7", 2L, 4L))),
+      // 201 / 200 is the double nearest 1.005, just below it; Spark rounds
+      // its decimal form, 1.005, up to 1.01
+      "mean on 1.005" -> (Seq.tabulate(199)(i => (f"s$i%03d", 1L, 1L)) :+ (("s199", 2L, 2L))),
+      "one table" -> Seq(("only", 42L, 6L)),
+      "equal middle values" -> Seq(("p", 5L, 5L), ("q", 5L, 5L), ("r", 1L, 9L), ("s", 9L, 1L)))
+    cases.foreach { case (label, shapes) =>
+      val expected = sparkDb(shapes.toDF("table_name", "row_count", "column_count"))
+      assert(driverDb(shapes) === expected, label)
+    }
+    assert(driverDb(Seq(("x", 1L, 1L), ("y", 2L, 1L), ("z", 2L, 1L)))("db.largest_table")
+      === Right("y"))
+  }
+
+  /** Each root's points and the two argmaxes as the Spark path computes
+    * them: prefixSummary, MB rounding, and an orderBy per argmax.
+    */
+  private def sparkPrefix(objects: DataFrame): Map[String, Value] = {
+    def mb(b: Long) = bits(math.rint(b / 1048576.0 * 100) / 100)
+    val summaries = StorageMonitor.prefixSummary(objects)
+    val perRoot = summaries.collect().flatMap { r =>
+      val root = r.getAs[String]("root")
+      Seq(s"prefix.$root.num_objects" -> bits(r.getAs[Long]("num_objects").toDouble),
+        s"prefix.$root.total_size_mb" -> mb(r.getAs[Long]("total_bytes")),
+        s"prefix.$root.max_size_mb" -> mb(r.getAs[Long]("max_bytes")),
+        s"prefix.$root.largest_key" -> Right(r.getAs[String]("largest_file")))
+    }
+    def argmax(key: String, by: String) =
+      summaries.orderBy(col(by).desc, col("root")).collect().headOption
+        .map(r => key -> Right(r.getAs[String]("root")))
+    perRoot.toMap ++ argmax("largest_prefix_by_count", "num_objects") ++
+      argmax("largest_prefix_by_size", "total_bytes")
+  }
+
+  private def isPrefixKey(k: String) = k.startsWith("prefix.") || k.startsWith("largest_prefix_")
+
+  test("fixture: storageMonitor's prefix points equal prefixSummary's") {
+    val roots = Tables.all.map(Tables.path(sf, _)) :+ sf
+    val sink = MetricSink()
+    Monitors.storageMonitor(spark, roots, sink)
+    val expected = sparkPrefix(StorageMonitor.inventory(spark, roots))
+    assert(sinkValues(sink).filter { case (k, _) => isPrefixKey(k) } === expected)
+  }
+
+  test("synthetic objects: equal sizes, roots tied on count and bytes, " +
+    "non-ASCII names in Spark's byte order") {
+    // U+FF21 sorts after a surrogate pair in UTF-16 but before it in UTF-8
+    val (wide, emoji) = ("Ａ", "😀")
+    val cases: Seq[(String, Seq[(String, String, Long)])] = Seq(
+      "equal sizes" -> Seq(("r1", "a", 10L), ("r1", "c", 10L), ("r1", "b", 5L),
+        ("r2", "x", 7L), ("r2", "y", 8L), ("r3", "p", 15L), ("r3", "q", 0L)),
+      "tied roots" -> Seq(("r3", "p", 15L), ("r3", "q", 0L), ("r2", "x", 7L), ("r2", "y", 8L)),
+      "non-ASCII" -> Seq((emoji, wide, 3L), (emoji, emoji, 3L), (wide, "k", 6L),
+        (wide, "l", 0L)),
+      "one object" -> Seq(("solo", "f", 3145728L)),
+      "sizes across MB" -> Seq(("m", "big", 5767168L), ("m", "odd", 1572863L),
+        ("n", "n1", 1048576L), ("n", "n2", 1048576L), ("n", "n3", 1L)))
+    cases.foreach { case (label, objects) =>
+      val expected = sparkPrefix(objects.toDF("root", "file_name", "size_bytes"))
+      assert(values(Monitors.prefixPoints(objects)) === expected, label)
+    }
+  }
+}
+
+/** The database monitor reads metadata the driver already holds, and the
+  * storage monitor's one Spark job is its listing.
+  */
+class MonitorJobBudgetSpec extends AnyFunSuite {
+  import graft.run.Monitors
+
+  test("databaseMonitor runs no Spark job over the sf0.001 fixture") {
+    Monitors.databaseMonitor(spark, sf, MetricSink()) // memoizes the schemas
+    assert(jobsDuring(Monitors.databaseMonitor(spark, sf, MetricSink())) === 0)
+  }
+
+  test("storageMonitor runs exactly one Spark job: the listing") {
+    val roots = Tables.warehouse.map(Tables.path(sf, _))
+    assert(jobsDuring(Monitors.storageMonitor(spark, roots, MetricSink())) === 1)
+  }
+}
+
+/** A target that throws is recorded, and the run goes on without it. */
+class MonitorFailureSpec extends AnyFunSuite {
+  import graft.run.MonitorRunner
+
+  private def points(m: DataFrame): Map[String, MetricRowView] =
+    m.collect().map(r => r.getAs[String]("key") ->
+      MetricRowView(Option(r.getAs[Any]("valueDouble")).map(_.asInstanceOf[Double]),
+        Option(r.getAs[String]("valueString")))).toMap
+
+  test("a missing table fails alone: the other targets keep their metrics " +
+    "and state, targets_failed is 1 and the metrics are flushed") {
+    Seq(8, 1).foreach { parallelism =>
+      withTempDir("graft-runner-fail") { tmp =>
+        val m = MonitorRunner.run(spark, sf, Seq("region", "nation", "no_such_table"),
+          s"$tmp/state", Some(s"$tmp/metrics"), parallelism)
+        val p = points(m)
+        assert(p("region.record_count").d === Some(5.0), parallelism)
+        assert(p("nation.record_count").d === Some(25.0), parallelism)
+        assert(p("all_tables.mean_record_count").d === Some(15.0), parallelism)
+        assert(p("all_tables.tables_profiled").d === Some(2.0), parallelism)
+        assert(p("all_tables.targets_failed").d === Some(1.0), parallelism)
+        val err = p("run.no_such_table.error").s.get
+        assert(err.startsWith("org.apache.spark.sql.AnalysisException: "), err)
+        assert(!p.keys.exists(_.startsWith("no_such_table.")), parallelism)
+        val state = new StateStore(s"$tmp/state")
+        Seq("region" -> "5", "nation" -> "25").foreach { case (t, n) =>
+          assert(state.get(spark, t, "record_count") === Some(n), t) }
+        assert(spark.read.parquet(s"$tmp/metrics").count() === m.count())
+      }
+    }
+  }
+
+  test("a clean run reports targets_failed = 0 and no error keys") {
+    withTempDir("graft-runner-clean") { tmp =>
+      val p = points(MonitorRunner.run(spark, sf, Seq("region", "nation"), s"$tmp/state"))
+      assert(p("all_tables.targets_failed").d === Some(0.0))
+      assert(!p.keys.exists(_.startsWith("run.")))
+    }
+  }
+}
+
+private case class MetricRowView(d: Option[Double], s: Option[String])

@@ -48,8 +48,8 @@ object Monitors {
   }
 
   /** Table count, per-table shapes, the eight statistics (0.0 without
-    * tables) and the largest table (ties to the least name) of
-    * (table, row_count, column_count) shapes.
+    * tables) and the largest table of (table, row_count, column_count)
+    * shapes.
     */
   private[graft] def databasePoints(shapes: Seq[(String, Long, Long)]): Seq[Point] = {
     def num(k: String, v: Double): Point = k -> Left(v)
@@ -59,13 +59,17 @@ object Monitors {
         "mean" -> Option.when(xs.nonEmpty)(xs.sum / xs.size).map(round2),
         "median" -> median(xs).map(round2)))
       yield num(s"db.${stat}_${dim}_count", v.getOrElse(0.0))
-    (num("db.table_count", shapes.size.toDouble) +: shapes.flatMap { case (t, rows, cols) =>
+    val perTable = shapes.flatMap { case (t, rows, cols) =>
       Seq(num(s"db.$t.row_count", rows.toDouble), num(s"db.$t.column_count", cols.toDouble))
-    }) ++
-      stats ++ shapes.minByOption(s => (s._2, s._1))(
-        Ordering.Tuple2(Ordering.Long.reverse, CatalogMonitor.nameOrder))
-        .map(s => "db.largest_table" -> Right(s._1))
+    }
+    val largest = shapes.minByOption(s => (s._2, s._1))(largestFirst)
+      .map(s => "db.largest_table" -> Right(s._1))
+    (num("db.table_count", shapes.size.toDouble) +: perTable) ++ stats ++ largest
   }
+
+  // argmax order of (count, name): the greatest count, then the least
+  // name in Spark's string order, as `orderBy(count.desc, name)` picks
+  private val largestFirst = Ordering.Tuple2(Ordering.Long.reverse, CatalogMonitor.nameOrder)
 
   /** Spark's `round(x, 2)` on a double: HALF_UP on its decimal form. */
   private def round2(x: Double): Double =
@@ -190,8 +194,7 @@ object Monitors {
 
   /** Per-root points and the cross-root argmaxes over (root, file_name,
     * size_bytes) objects, with [[StorageMonitor.prefixSummary]]'s values:
-    * a root's largest key is its greatest (size, name), and the argmaxes
-    * break ties to the least root.
+    * a root's largest key is its greatest (size, name).
     */
   private[graft] def prefixPoints(objects: Seq[(String, String, Long)]): Seq[Point] = {
     val name = CatalogMonitor.nameOrder
@@ -201,15 +204,14 @@ object Monitors {
       (root, os.size.toLong, sizes.sum, sizes.max,
         os.map(o => (o._3, o._2)).max(Ordering.Tuple2(Ordering.Long, name))._2)
     }.sortBy(_._1)(name)
-    val byDesc = Ordering.Tuple2(Ordering.Long.reverse, name)
     prefixes.flatMap { case (root, n, total, maxBytes, largest) =>
       Seq[Point](s"prefix.$root.num_objects" -> Left(n.toDouble),
         s"prefix.$root.total_size_mb" -> Left(sizeMb(total)),
         s"prefix.$root.max_size_mb" -> Left(sizeMb(maxBytes)),
         s"prefix.$root.largest_key" -> Right(largest))
-    } ++ prefixes.minByOption(p => (p._2, p._1))(byDesc)
+    } ++ prefixes.minByOption(p => (p._2, p._1))(largestFirst)
       .map(p => "largest_prefix_by_count" -> Right(p._1)) ++
-      prefixes.minByOption(p => (p._3, p._1))(byDesc)
+      prefixes.minByOption(p => (p._3, p._1))(largestFirst)
         .map(p => "largest_prefix_by_size" -> Right(p._1))
   }
 

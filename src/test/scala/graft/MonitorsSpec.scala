@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.CatalogMonitor
-import graft.core.{MetricSink, Profiler}
+import graft.core.{MetricRow, MetricSink, Profiler}
 import graft.operators.Multimodal
 import graft.state.{ChangeDetection, StateStore}
 import graft.storage.StorageMonitor
@@ -439,8 +439,8 @@ class MonitorParitySpec extends AnyFunSuite {
     points.map { case (k, v) => k -> v.fold(bits, Right(_)) }.toMap
 
   private def sinkValues(sink: MetricSink): Map[String, Value] =
-    values(sink.keys.map(k => k -> sink.get(k).get)
-      .map { case (k, r) => k -> r.valueDouble.toLeft(r.valueString.get) })
+    values(sink.toDf(spark).as[MetricRow].collect().toSeq
+      .map(r => r.key -> r.valueDouble.toLeft(r.valueString.get)))
 
   private def driverDb(shapes: Seq[(String, Long, Long)]): Map[String, Value] =
     values(Monitors.databasePoints(shapes))
@@ -551,12 +551,12 @@ class MonitorJobBudgetSpec extends AnyFunSuite {
 
 /** A target that throws is recorded, and the run goes on without it. */
 class MonitorFailureSpec extends AnyFunSuite {
+  import java.nio.file.{Files, Paths}
+  import spark.implicits._
   import graft.run.MonitorRunner
 
-  private def points(m: DataFrame): Map[String, MetricRowView] =
-    m.collect().map(r => r.getAs[String]("key") ->
-      MetricRowView(Option(r.getAs[Any]("valueDouble")).map(_.asInstanceOf[Double]),
-        Option(r.getAs[String]("valueString")))).toMap
+  private def points(m: DataFrame): Map[String, MetricRow] =
+    m.as[MetricRow].collect().map(r => r.key -> r).toMap
 
   test("a missing table fails alone: the other targets keep their metrics " +
     "and state, targets_failed is 1 and the metrics are flushed") {
@@ -565,12 +565,12 @@ class MonitorFailureSpec extends AnyFunSuite {
         val m = MonitorRunner.run(spark, sf, Seq("region", "nation", "no_such_table"),
           s"$tmp/state", Some(s"$tmp/metrics"), parallelism)
         val p = points(m)
-        assert(p("region.record_count").d === Some(5.0), parallelism)
-        assert(p("nation.record_count").d === Some(25.0), parallelism)
-        assert(p("all_tables.mean_record_count").d === Some(15.0), parallelism)
-        assert(p("all_tables.tables_profiled").d === Some(2.0), parallelism)
-        assert(p("all_tables.targets_failed").d === Some(1.0), parallelism)
-        val err = p("run.no_such_table.error").s.get
+        assert(p("region.record_count").valueDouble === Some(5.0), parallelism)
+        assert(p("nation.record_count").valueDouble === Some(25.0), parallelism)
+        assert(p("all_tables.mean_record_count").valueDouble === Some(15.0), parallelism)
+        assert(p("all_tables.tables_profiled").valueDouble === Some(2.0), parallelism)
+        assert(p("all_tables.targets_failed").valueDouble === Some(1.0), parallelism)
+        val err = p("run.no_such_table.error").valueString.get
         assert(err.startsWith("org.apache.spark.sql.AnalysisException: "), err)
         assert(!p.keys.exists(_.startsWith("no_such_table.")), parallelism)
         val state = new StateStore(s"$tmp/state")
@@ -581,13 +581,25 @@ class MonitorFailureSpec extends AnyFunSuite {
     }
   }
 
+  test("a corrupt parquet file fails its table alone") {
+    withTempDir("graft-runner-corrupt") { tmp =>
+      Seq("region", "nation").foreach(t =>
+        Files.copy(Paths.get(Tables.path(sf, t)), Paths.get(Tables.path(tmp, t))))
+      Files.write(Paths.get(Tables.path(tmp, "broken")), "not a parquet file".getBytes)
+      val p = points(MonitorRunner.run(spark, tmp, Seq("region", "broken", "nation"),
+        s"$tmp/state", Some(s"$tmp/metrics")))
+      assert(p("all_tables.targets_failed").valueDouble === Some(1.0))
+      assert(p("all_tables.mean_record_count").valueDouble === Some(15.0))
+      assert(p("run.broken.error").valueString.exists(_.nonEmpty))
+      assert(spark.read.parquet(s"$tmp/metrics").count() === p.size.toLong)
+    }
+  }
+
   test("a clean run reports targets_failed = 0 and no error keys") {
     withTempDir("graft-runner-clean") { tmp =>
       val p = points(MonitorRunner.run(spark, sf, Seq("region", "nation"), s"$tmp/state"))
-      assert(p("all_tables.targets_failed").d === Some(0.0))
+      assert(p("all_tables.targets_failed").valueDouble === Some(0.0))
       assert(!p.keys.exists(_.startsWith("run.")))
     }
   }
 }
-
-private case class MetricRowView(d: Option[Double], s: Option[String])

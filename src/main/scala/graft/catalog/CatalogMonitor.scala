@@ -265,7 +265,7 @@ object CatalogMonitor {
 
   /** (table_name, row_count, column_count) per table, sorted by name: the
     * Redshift monitor's row counts mapped onto per-table column counts
-    * (`/root/reference/AWS_Redshift/redshift_database_monitor.py:85-91`),
+    * (`AWS_Redshift/redshift_database_monitor.py:85-91`),
     * from [[tableRowCounts]]'s counts and the distinct column names of
     * each table's memoized schema.
     */

@@ -1120,3 +1120,185 @@ class NearDupJobBudgetSpec extends AnyFunSuite {
     }
   }
 }
+
+/** The near-dup drop law at id grain, pinned where rows and ids disagree.
+  * The DuckDB statement of the law pairs ids: `cand` is a DISTINCT over
+  * doc ids, and `j` joins the per-row shingle relation on `doc_id`. So an
+  * id delivered in several rows drops when ONE of its rows band-collides
+  * with a partner and ANOTHER of its rows verifies against it. The
+  * hot-bucket cap counts bands at row grain (the `hot` CTE counts the
+  * per-row `bands` relation), so a repeated id's rows count separately.
+  *
+  * Each case's texts come from a seeded search over word-substitution
+  * variants of a base text, and each is compared with a driver-side
+  * reference of the law; a case also checks that a per-row law (or an
+  * id-grain cap count) would decide it differently, so it cannot pass
+  * vacuously.
+  */
+class NearDupIdLawSpec extends AnyFunSuite {
+  import spark.implicits._
+
+  private val Threshold = 0.5
+
+  /** A text's hashed shingle set and its LSH bands (`idx:key`). */
+  private final case class Feat(hs: Set[Long], bands: Set[String])
+
+  private def features(texts: Seq[String]): Map[String, Feat] = {
+    import graft.operators.{Dedup, TextOps}
+    texts.distinct.toDF("text")
+      .select(col("text"), TextOps.hashedNgrams(col("text")).as("hs"))
+      .select(col("text"), col("hs"), Dedup.minhashSig(col("hs")).as("sig"))
+      .as[(String, Seq[Long], Seq[Long])].collect()
+      .map { case (t, hs, sig) =>
+        t -> Feat(hs.toSet, sig.grouped(4).zipWithIndex
+          .map { case (g, i) => s"$i:${g.mkString(",")}" }.toSet)
+      }.toMap
+  }
+
+  private def jaccard(a: Set[Long], b: Set[Long]): Double =
+    if (a.isEmpty && b.isEmpty) 0.0
+    else (a & b).size.toDouble / (a | b).size
+
+  /** Seeded base texts of 24 words and, per base, variants with 1 to 10
+    * word positions replaced — pairs across the whole Jaccard range.
+    */
+  private def pool(seed: Long): Seq[(String, Seq[String])] = {
+    val rnd = new scala.util.Random(seed)
+    def word() = Seq.fill(4 + rnd.nextInt(4))(('a' + rnd.nextInt(26)).toChar).mkString
+    val vocab = Vector.fill(600)(word())
+    Seq.fill(6) {
+      val base = Vector.fill(24)(vocab(rnd.nextInt(vocab.size)))
+      val variants = Seq.fill(150) {
+        val m = 1 + rnd.nextInt(10)
+        val pos = rnd.shuffle((0 until base.size).toVector).take(m)
+        pos.foldLeft(base)((w, p) => w.updated(p, vocab(rnd.nextInt(vocab.size))))
+          .mkString(" ")
+      }
+      base.mkString(" ") -> variants.distinct
+    }
+  }
+
+  /** The first base, with two variants, where `pick` finds them. */
+  private def search(seed: Long)(pick: (Feat, Seq[(String, Feat)]) =>
+      Option[Seq[String]]): (String, Seq[String], Map[String, Feat]) = {
+    val p = pool(seed)
+    val f = features(p.flatMap { case (b, vs) => b +: vs })
+    p.iterator.flatMap { case (b, vs) =>
+      pick(f(b), vs.map(v => v -> f(v))).map(found => (b, found, f))
+    }.nextOption().getOrElse(fail(s"no texts found for seed $seed"))
+  }
+
+  /** r1 band-collides with the base without verifying; r2 verifies
+    * against it without colliding.
+    */
+  private def collideAndVerify(seed: Long) = search(seed) { (b, vs) =>
+    for {
+      (r1, _) <- vs.find { case (_, v) =>
+        (v.bands & b.bands).nonEmpty && jaccard(v.hs, b.hs) < Threshold }
+      (r2, _) <- vs.find { case (_, v) =>
+        (v.bands & b.bands).isEmpty && jaccard(v.hs, b.hs) >= Threshold }
+    } yield Seq(r1, r2)
+  }
+
+  /** The law over successive deliveries of (doc_id, text) rows: per
+    * delivery, (ids dropped against the store, ids dropped within the
+    * batch only). `idGrain = false` is the per-row law the engine must
+    * NOT follow (a collision and a verification on the same row pair);
+    * `rowGrainCap = false` counts a hot bucket's ids, not its rows.
+    */
+  private def reference(deliveries: Seq[Seq[(Long, String)]],
+      f: Map[String, Feat], cap: Option[Long] = None, idGrain: Boolean = true,
+      rowGrainCap: Boolean = true): Seq[(Set[Long], Set[Long])] = {
+    var store = Map.empty[Long, Seq[Feat]]
+    deliveries.map { rows =>
+      val byId = rows.groupBy(_._1).map { case (id, rs) => id -> rs.map(r => f(r._2)) }
+      val hot = cap.fold(Set.empty[String]) { c =>
+        val counted =
+          if (rowGrainCap) rows.flatMap(r => f(r._2).bands)
+          else byId.values.toSeq.flatMap(_.flatMap(_.bands).distinct)
+        counted.groupBy(identity).collect { case (k, ks) if ks.size > c => k }.toSet
+      }
+      def pair(x: Seq[Feat], y: Seq[Feat]): Boolean =
+        if (idGrain)
+          (x.flatMap(_.bands).toSet -- hot).intersect(y.flatMap(_.bands).toSet).nonEmpty &&
+            x.exists(a => y.exists(b => jaccard(a.hs, b.hs) >= Threshold))
+        else x.exists(a => y.exists(b =>
+          ((a.bands -- hot) & b.bands).nonEmpty && jaccard(a.hs, b.hs) >= Threshold))
+      val st = byId.collect { case (id, x) if store.values.exists(pair(x, _)) => id }.toSet
+      val within = byId.collect { case (id, x)
+        if byId.exists { case (a, y) => a < id && pair(y, x) } => id }.toSet -- st
+      rows.filterNot(r => st(r._1) || within(r._1)).groupBy(_._1).foreach {
+        case (id, rs) => store += id -> (store.getOrElse(id, Nil) ++ rs.map(r => f(r._2)))
+      }
+      (st, within)
+    }
+  }
+
+  /** Runs the deliveries and checks each report and corpus partition
+    * against the reference.
+    */
+  private def check(dir: String, deliveries: Seq[Seq[(Long, String)]],
+      f: Map[String, Feat], cap: Option[Long] = None): Unit = {
+    val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+    val expected = reference(deliveries, f, cap)
+    deliveries.zip(expected).zipWithIndex.foreach {
+      case ((rows, (st, within)), k) =>
+        val report = StreamingIngest.processBatchNearDup(
+          rows.toDF("doc_id", "text")
+            .withColumn("_corrupt_record", lit(null).cast("string")),
+          k.toLong, paths, threshold = Threshold, maxBucketSize = cap)
+          .collect().head.toSeq
+        def n(p: Long => Boolean) = rows.count(r => p(r._1)).toLong
+        assert(report === Seq(k.toLong, rows.size.toLong, 0L, n(st), n(within),
+          n(id => !st(id) && !within(id))), s"delivery $k")
+        val corpus = StreamingIngest.corpus(spark, paths)
+          .filter(col("ingest_batch") === k)
+          .select("doc_id", "text").as[(Long, String)].collect().sorted.toSeq
+        assert(corpus === rows.filterNot(r => st(r._1) || within(r._1)).sorted,
+          s"delivery $k")
+    }
+    StreamingIngest.dropStoreTables(spark, paths)
+  }
+
+  test("(a) a repeated id drops against the store when one of its rows " +
+    "collides and another verifies") {
+    val (base, Seq(r1, r2), f) = collideAndVerify(9101L)
+    val deliveries = Seq(Seq(1L -> base), Seq(7L -> r1, 7L -> r2))
+    assert(reference(deliveries, f)(1) === (Set(7L), Set.empty[Long]))
+    assert(reference(deliveries, f, idGrain = false)(1) ===
+      (Set.empty[Long], Set.empty[Long]))
+    withTempDir("graft-idlaw-a")(check(_, deliveries, f))
+  }
+
+  test("(b) a repeated id decides a within-batch drop, as the retired " +
+    "higher id and as the lower partner") {
+    val (base, Seq(r1, r2), f) = collideAndVerify(9202L)
+    val higher = Seq(Seq(1L -> base, 2L -> r1, 2L -> r2))
+    val lower = Seq(Seq(1L -> r1, 1L -> r2, 2L -> base))
+    Seq(higher, lower).foreach { d =>
+      assert(reference(d, f) === Seq((Set.empty[Long], Set(2L))))
+      assert(reference(d, f, idGrain = false) ===
+        Seq((Set.empty[Long], Set.empty[Long])))
+    }
+    withTempDir("graft-idlaw-b") { dir =>
+      check(s"$dir/h", higher, f)
+      check(s"$dir/l", lower, f)
+    }
+  }
+
+  test("(c) the hot-bucket cap counts a repeated id's rows separately") {
+    // the variant shares exactly one band with the base and verifies;
+    // the base's id is delivered twice, so that band holds 3 rows of 2 ids
+    val (base, Seq(v), f) = search(9303L) { (b, vs) =>
+      vs.collectFirst { case (t, x)
+        if (x.bands & b.bands).size == 1 && jaccard(x.hs, b.hs) >= Threshold =>
+        Seq(t) }
+    }
+    val deliveries = Seq(Seq(1L -> base, 1L -> base, 2L -> v))
+    val cap = Some(2L)
+    assert(reference(deliveries, f, cap) === Seq((Set.empty[Long], Set.empty[Long])))
+    assert(reference(deliveries, f, cap, rowGrainCap = false) ===
+      Seq((Set.empty[Long], Set(2L))))
+    withTempDir("graft-idlaw-c")(check(_, deliveries, f, cap))
+  }
+}

@@ -47,17 +47,12 @@ object CatalogMonitor {
     val rootStr = qualifiedRoot.toUri.getPath.stripSuffix("/")
     val rootStatus = fs.getFileStatus(qualifiedRoot)
     if (rootStatus.isDirectory) {
-      val it = fs.listFiles(qualifiedRoot, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
+      Some(graft.util.Listing.files(fs, qualifiedRoot).filter { st =>
         val rel = st.getPath.toUri.getPath
           .stripPrefix(rootStr).stripPrefix("/")
-        val hidden = rel.split("/").exists(isHiddenSegment)
-        if (st.isFile && !hidden &&
-          st.getPath.getName.endsWith(".parquet")) buf += st
-      }
-      Some(buf.toSeq)
+        !rel.split("/").exists(isHiddenSegment) &&
+          st.getPath.getName.endsWith(".parquet")
+      }.toSeq)
     } else Some(Seq(rootStatus))
   } catch { case NonFatal(_) => None }
 

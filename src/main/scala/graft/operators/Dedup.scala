@@ -326,11 +326,16 @@ object Dedup {
     * and the cross-corpus join ([[incrementalNearDups]]) are built on.
     */
   def bandExplode(signatures: DataFrame, rowsPerBand: Int = 4): DataFrame =
-    signatures.select(col("doc_id"),
-      posexplode(transform(
-        sequence(lit(0), (size(col("sig")) / rowsPerBand).cast("int") - 1),
-        bIdx => array_join(slice(col("sig"), bIdx * rowsPerBand + 1, lit(rowsPerBand)), ","))))
+    signatures.select(col("doc_id"), posexplode(bandKeys(col("sig"), rowsPerBand)))
       .toDF("doc_id", "band_idx", "band_key")
+
+  /** The band keys of one signature, as a column: element i joins slots
+    * [i·rowsPerBand, (i+1)·rowsPerBand) with ",", so its position is the
+    * band index [[bandExplode]] emits.
+    */
+  def bandKeys(sig: Column, rowsPerBand: Int = 4): Column =
+    transform(sequence(lit(0), (size(sig) / rowsPerBand).cast("int") - 1),
+      bIdx => array_join(slice(sig, bIdx * rowsPerBand + 1, lit(rowsPerBand)), ","))
 
   /** LSH candidate pairs: docs sharing at least one band of the signature.
     * Bands of `rowsPerBand` signature slots are hashed to a band key; the

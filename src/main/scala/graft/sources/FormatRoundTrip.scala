@@ -223,29 +223,20 @@ object FormatRoundTrip {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return 0L
-    var n = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
+    graft.util.Listing.files(fs, p).count { f =>
       val name = f.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") &&
-        !name.startsWith(".")) n += 1
-    }
-    n
+      name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+    }.toLong
   }
 
   /** Data bytes under `path` (hidden/_ files skipped). */
   def dirBytes(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var bytes = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
+    graft.util.Listing.files(fs, p).filter { f =>
       val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) bytes += f.getLen
-    }
-    bytes
+      !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getLen).sum
   }
 
   /** The codec grading relation: one row per [[CodecMatrix]] cell —

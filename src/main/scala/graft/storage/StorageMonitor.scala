@@ -53,15 +53,10 @@ object StorageMonitor {
       .flatMap { root =>
         val rootPath = new Path(root)
         val fs = rootPath.getFileSystem(serConf.value)
-        val it = fs.listFiles(rootPath, true)
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(String, String, String, Long, Long)]
-        while (it.hasNext) {
-          val st = it.next()
+        graft.util.Listing.files(fs, rootPath).map { st =>
           val p = st.getPath
-          buf += ((root, p.toString, p.getName, st.getLen, st.getModificationTime))
+          (root, p.toString, p.getName, st.getLen, st.getModificationTime)
         }
-        buf
       }
       .toDF("root", "path", "file_name", "size_bytes", "modification_ms")
     inv.withColumn("extension",

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -114,14 +114,12 @@ object StreamingIngest {
         // of disjoint targets, both reading the checkpointed survivors
         // — overlapped (round-15, same order-free replay argument as
         // writeSinksInParallel's scaladoc)
-        val fpTable = ensureStoreTable(spark, "fps", paths.store,
-          "fingerprint STRING", "fingerprint")
+        val fpTable = ensureStoreTable(spark, FpsStore, paths.store)
         writeSinksInParallel(Seq(
           () => survivors.drop("__fp").write.mode("overwrite")
             .parquet(s"${paths.corpus}/ingest_batch=$batchId"),
-          () => insertBatchPartition(spark, fpTable, batchId,
-            survivors.select(col("__fp").as("fingerprint"))
-              .repartition(StoreBuckets, col("fingerprint")))))
+          () => insertBatchPartition(spark, fpTable, FpsStore, batchId,
+            survivors.select(col("__fp").as("fingerprint")))))
       } finally {
         // checkpoint blocks are not cache entries: release them
         // explicitly or a long-running stream accumulates them until
@@ -176,20 +174,22 @@ object StreamingIngest {
     *
     * Shape: ONE per-row relation of the delivery — every line, its
     * hashed bigrams `hs` and its MinHash signature `sig`
-    * ([[graft.operators.Dedup.minhashSig]], row-local, no shuffle) —
-    * feeds the drop computation, and the drop sets join back onto it as
-    * one fate per row (kept, dropped against the store, dropped within
-    * the batch, corrupt). That fated relation is checkpointed once; all
-    * five report counts come from one aggregate over it, and each sink
-    * is a filter and projection of it: the quarantine (corrupt lines),
-    * the corpus and the ngram store (kept rows), the band store (the
-    * kept rows' `sig` through `bandExplode`). No sink joins back to a
-    * survivor set.
+    * ([[graft.operators.Dedup.minhashSig]], row-local) — feeds the drop
+    * computation, and the drop sets join back onto it as one fate per
+    * row (kept, dropped against the store, dropped within the batch,
+    * corrupt). That fated relation is checkpointed once, and the four
+    * report counts ride that checkpoint job as observed metrics
+    * (`Dataset.observe`), so no separate aggregate runs. Each sink is a
+    * filter and projection of it: the quarantine (corrupt lines), the
+    * corpus and the ngram store (kept rows), the band store (the kept
+    * rows' `sig` through `bandExplode`). No sink joins back to a
+    * survivor set, and all four start together.
     *
-    * Rows are the unit: a `doc_id` delivered twice in one batch keeps
-    * one signature per row (the oracle's per-row `sig`), not one merged
-    * over both texts. The drop sets are ids, so every row of a dropped
-    * id drops, and the report counts rows.
+    * Rows are the unit of the store and the report: a `doc_id`
+    * delivered twice in one batch keeps one signature per row (the
+    * oracle's per-row `sig`), not one merged over both texts. The drop
+    * law pairs ids (see [[droppedIds]]), so every row of a dropped id
+    * drops, and the report counts rows.
     *
     * Replay safety: identical to [[processBatch]] — all four writes
     * (quarantine, corpus, band store, ngram store) are batch-partitioned
@@ -208,21 +208,21 @@ object StreamingIngest {
       maxBucketSize: Option[Long] = None): DataFrame = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    val bandsTable = ensureStoreTable(spark, "bands",
-      s"${paths.store}/bands",
-      "doc_id BIGINT, band_idx INT, band_key STRING",
-      "band_idx, band_key")
-    val ngramsTable = ensureStoreTable(spark, "ngrams",
-      s"${paths.store}/ngrams",
-      "doc_id BIGINT, hs ARRAY<BIGINT>", "doc_id")
+    val bandsTable = ensureStoreTable(spark, BandsStore, s"${paths.store}/bands")
+    val ngramsTable = ensureStoreTable(spark, NgramsStore, s"${paths.store}/ngrams")
     // the per-row relation, cached for the checkpoint job: the drop
-    // computation reads it several times and the fate join once more.
-    // `__hs` is its own projection, so the k signature slots share one
-    // shingle pass
-    val rows = graft.util.Parallelism.ensure(batch)
+    // computation and the fate join both read it. Hash-partitioned by id,
+    // which spreads the shingle and signature work over the cores and
+    // lets the drop computation's per-id collapse run without a shuffle
+    // of its own. `__hs` is its own projection, so the k signature slots
+    // share one shingle pass
+    val rows = batch
+      .repartition(spark.sparkContext.defaultParallelism, col(idCol))
       .withColumn("__hs", TextOps.hashedNgrams(col(textCol)))
       .withColumn("__sig", Dedup.minhashSig(col("__hs"), k))
       .cache()
+    def n(fate: Int) = sum(when(col("__fate") === fate, 1L).otherwise(0L))
+    val counts = new org.apache.spark.sql.Observation()
     // one fate per row. EAGER localCheckpoint, not cache: the fates'
     // lineage reads the store tables, and the store INSERT OVERWRITEs
     // below may not read from the table they overwrite — the checkpoint
@@ -238,48 +238,46 @@ object StreamingIngest {
             .when(!col("__st"), lit(FateDroppedWithin))
             .otherwise(lit(FateKept)))
         .drop("__drop_id", "__st")
+        .observe(counts, n(FateCorrupt).as("corrupt"),
+          n(FateDroppedStore).as("store"), n(FateDroppedWithin).as("within"),
+          n(FateKept).as("kept"))
         .localCheckpoint()
     } finally { rows.unpersist(); () }
 
     try {
+      // the checkpoint job has ended, so its observed counts are final
+      val observed = counts.get
+      def c(name: String) = Option(observed(name)).fold(0L)(_.asInstanceOf[Long])
+      val (nCorrupt, nStore, nWithin, nKept) =
+        (c("corrupt"), c("store"), c("within"), c("kept"))
       val kept = fated.filter(col("__fate") === FateKept)
-      def n(fate: Int) = sum(when(col("__fate") === fate, 1L).otherwise(0L))
-      var counts: org.apache.spark.sql.Row = null
       // the store keeps survivors' FULL band sets (the cap thins the
       // candidate join, never the persisted signatures); static
       // partition INSERT OVERWRITE = the replay-safe batch-partitioned
       // overwrite, through the bucketed tables. Every task reads the
       // checkpoint and the sinks overwrite disjoint paths, so they run
       // overlapped from a driver pool (round-15, guide §2.6; see
-      // writeSinksInParallel for the order-free replay argument)
-      writeSinksInParallel(Seq(
-        // the report counts, then the quarantine partition if the
-        // delivery has corrupt lines (none is written otherwise)
-        () => {
-          counts = fated.agg(n(FateCorrupt), n(FateDroppedStore),
-            n(FateDroppedWithin), n(FateKept)).collect()(0)
-          if (!counts.isNullAt(0) && counts.getLong(0) > 0)
-            fated.filter(col("__fate") === FateCorrupt)
-              .select(col("_corrupt_record").as("raw_line"))
-              .write.mode("overwrite")
-              .parquet(s"${paths.quarantine}/ingest_batch=$batchId")
-        },
+      // writeSinksInParallel for the order-free replay argument). The
+      // quarantine partition is written only when the delivery has
+      // corrupt lines
+      val quarantine = if (nCorrupt == 0) Nil else Seq(() =>
+        fated.filter(col("__fate") === FateCorrupt)
+          .select(col("_corrupt_record").as("raw_line"))
+          .write.mode("overwrite")
+          .parquet(s"${paths.quarantine}/ingest_batch=$batchId"))
+      writeSinksInParallel(quarantine ++ Seq(
         () => kept.select(batch.columns.toSeq.filter(_ != "_corrupt_record").map(col): _*)
           .write.mode("overwrite")
           .parquet(s"${paths.corpus}/ingest_batch=$batchId"),
-        () => insertBatchPartition(spark, bandsTable, batchId,
+        () => insertBatchPartition(spark, bandsTable, BandsStore, batchId,
           Dedup.bandExplode(
             kept.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
             rowsPerBand)
             .select(col("doc_id").cast("long"), col("band_idx").cast("int"),
-              col("band_key").cast("string"))
-            .repartition(StoreBuckets, col("band_idx"), col("band_key"))),
-        () => insertBatchPartition(spark, ngramsTable, batchId,
-          kept.select(col(idCol).cast("long").as("doc_id"), col("__hs").as("hs"))
-            .repartition(StoreBuckets, col("doc_id")))))
+              col("band_key").cast("string"))),
+        () => insertBatchPartition(spark, ngramsTable, NgramsStore, batchId,
+          kept.select(col(idCol).cast("long").as("doc_id"), col("__hs").as("hs")))))
 
-      def c(i: Int) = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-      val (nCorrupt, nStore, nWithin, nKept) = (c(0), c(1), c(2), c(3))
       spark.createDataFrame(java.util.Collections.singletonList(
         org.apache.spark.sql.Row(batchId, nStore + nWithin + nKept, nCorrupt,
           nStore, nWithin, nKept)), NearDupReportSchema)
@@ -295,16 +293,36 @@ object StreamingIngest {
     * id verifies against an earlier-batch survivor (an id dropped on both
     * counts is a store drop) and false when only a lower-id doc of its
     * own batch retires it. `clean` is the per-row relation without its
-    * corrupt lines.
+    * corrupt lines, hash-partitioned by `idCol`.
+    *
+    * The law pairs IDS, as the DuckDB statement of it does (`cand` is a
+    * DISTINCT over doc ids; `j` joins the per-row shingle sets on
+    * `doc_id`): an id delivered in several rows pairs with a partner when
+    * any of its rows band-collides with the partner and any of its rows
+    * verifies against any of the partner's. So the probe runs at id
+    * grain: one row per id carrying the list of its rows' shingle sets
+    * and the distinct bands of its rows' signatures; both probes carry
+    * the shingle lists through their band joins and verify with
+    * `exists(…, jaccard ≥ threshold)`, so no pair set is deduplicated
+    * and nothing joins back to the shingles. The hot-bucket cap counts
+    * bands at ROW grain, as the oracle's `hot` CTE does.
     */
   private def droppedIds(clean: DataFrame, batchId: Long, bandsTable: String,
       ngramsTable: String, idCol: String, rowsPerBand: Int,
       threshold: Double, maxBucketSize: Option[Long]): DataFrame = {
     import graft.operators.Dedup
+    import graft.functions.SortedLongJaccard.sortedLongJaccard
     val spark = clean.sparkSession
-    val bandsAll = Dedup.bandExplode(
-      clean.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
-      rowsPerBand)
+    val rowBands = transform(Dedup.bandKeys(col("__sig"), rowsPerBand),
+      (key, i) => struct(i.as("band_idx"), key.as("band_key")))
+    val narrow = clean.select(col(idCol).as("doc_id"), col("__hs").as("hs"),
+      rowBands.as("bands"))
+    // one row per id; `collect_list` skips a null-text row's null set,
+    // which verifies against nothing anyway
+    val perId = narrow.groupBy("doc_id").agg(
+      collect_list(col("hs")).as("hss"),
+      array_distinct(flatten(collect_list(col("bands")))).as("bands"))
+    val bandsAll = perId.select(col("doc_id"), col("hss"), inline(col("bands")))
     // hot-bucket cap, the q34/q61 skew guard transposed to ingest: a
     // band key shared by d store docs × m delivery docs fans the
     // candidate join out d·m rows, so one boilerplate bucket can
@@ -317,14 +335,14 @@ object StreamingIngest {
     val bandsNew = maxBucketSize match {
       case None => bandsAll
       case Some(cap) =>
-        val hot = bandsAll.groupBy("band_idx", "band_key")
+        val hot = narrow.select(inline(col("bands")))
+          .groupBy("band_idx", "band_key")
           .agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
           .select("band_idx", "band_key")
         bandsAll.join(broadcast(hot), Seq("band_idx", "band_key"), "left_anti")
     }
-    val ngramsNew = clean.select(col(idCol).as("doc_id"), col("__hs").as("hs"))
-    val jac = graft.functions.SortedLongJaccard
-      .sortedLongJaccard(col("ha"), col("hb"))
+    def verifies(hss: Column, hb: Column): Column =
+      exists(hss, ha => sortedLongJaccard(ha, hb) >= threshold)
 
     // (i) verified collision with an earlier-batch survivor. Both
     // store reads come off the bucketed tables: the band probe and
@@ -336,28 +354,20 @@ object StreamingIngest {
       .filter(col("ingest_batch") < batchId)
       .select(col("doc_id").as("store_id"), col("band_idx"),
         col("band_key"))
-    val cands = bandsNew.join(storeBands, Seq("band_idx", "band_key"))
-      .select("doc_id", "store_id").distinct()
     val storeNg = spark.table(ngramsTable)
       .filter(col("ingest_batch") < batchId)
       .select(col("doc_id").as("store_id"), col("hs").as("hb"))
-    val droppedStore = cands
-      .join(ngramsNew.withColumnRenamed("hs", "ha"), "doc_id")
+    val droppedStore = bandsNew.join(storeBands, Seq("band_idx", "band_key"))
       .join(storeNg, "store_id")
-      .filter(jac >= threshold)
-      .select("doc_id").distinct()
+      .filter(verifies(col("hss"), col("hb")))
+      .select("doc_id")
     // (ii) verified collision with a lower-id doc of the same batch
-    val within = bandsNew.as("a").join(bandsNew.as("b"),
+    val droppedWithin = bandsNew.as("a").join(bandsNew.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
         col("a.band_key") === col("b.band_key") &&
         col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("doc_id"))
-      .distinct()
-    val droppedWithin = within
-      .join(ngramsNew.select(col("doc_id").as("id_a"), col("hs").as("ha")), "id_a")
-      .join(ngramsNew.select(col("doc_id"), col("hs").as("hb")), "doc_id")
-      .filter(jac >= threshold)
-      .select("doc_id").distinct()
+      .filter(exists(col("b.hss"), hb => verifies(col("a.hss"), hb)))
+      .select(col("b.doc_id").as("doc_id"))
     droppedStore.withColumn("__st", lit(true))
       .unionByName(droppedWithin.withColumn("__st", lit(false)))
       .groupBy(col("doc_id").as("__drop_id")).agg(max(col("__st")).as("__st"))
@@ -375,6 +385,24 @@ object StreamingIngest {
     * parallelism without an Exchange.
     */
   val StoreBuckets: Int = 16
+
+  /** One kind of store table: the catalog-name prefix, the column DDL
+    * and the bucket columns (CLUSTERED BY and SORTED BY).
+    */
+  private final case class StoreKind(kind: String, columnsDdl: String,
+      bucketCols: Seq[String])
+
+  private val FpsStore = StoreKind("fps", "fingerprint STRING", Seq("fingerprint"))
+  private val BandsStore = StoreKind("bands",
+    "doc_id BIGINT, band_idx INT, band_key STRING", Seq("band_idx", "band_key"))
+  private val NgramsStore = StoreKind("ngrams",
+    "doc_id BIGINT, hs ARRAY<BIGINT>", Seq("doc_id"))
+
+  /** Every store table with its location under the store root. */
+  private def stores(paths: IngestPaths): Seq[(StoreKind, String)] = Seq(
+    FpsStore -> paths.store,
+    BandsStore -> s"${paths.store}/bands",
+    NgramsStore -> s"${paths.store}/ngrams")
 
   /** BOOTSTRAP the near-dup store from an EXISTING corpus — the
     * operational day-zero of near-dedup-on-ingest: a pipeline rarely
@@ -404,20 +432,15 @@ object StreamingIngest {
     val bands = Dedup.bandExplode(
       ngrams.select(col("doc_id"), Dedup.minhashSig(col("hs"), k).as("sig")),
       rowsPerBand)
-    val bandsTable = ensureStoreTable(spark, "bands",
-      s"${paths.store}/bands",
-      "doc_id BIGINT, band_idx INT, band_key STRING",
-      "band_idx, band_key")
-    val ngramsTable = ensureStoreTable(spark, "ngrams",
-      s"${paths.store}/ngrams",
-      "doc_id BIGINT, hs ARRAY<BIGINT>", "doc_id")
-    insertBatchPartition(spark, bandsTable, batchId,
+    insertBatchPartition(spark,
+      ensureStoreTable(spark, BandsStore, s"${paths.store}/bands"),
+      BandsStore, batchId,
       bands.select(col("doc_id").cast("long"), col("band_idx").cast("int"),
-        col("band_key").cast("string"))
-        .repartition(StoreBuckets, col("band_idx"), col("band_key")))
-    insertBatchPartition(spark, ngramsTable, batchId,
-      ngrams.select(col("doc_id").cast("long"), col("hs"))
-        .repartition(StoreBuckets, col("doc_id")))
+        col("band_key").cast("string")))
+    insertBatchPartition(spark,
+      ensureStoreTable(spark, NgramsStore, s"${paths.store}/ngrams"),
+      NgramsStore, batchId,
+      ngrams.select(col("doc_id").cast("long"), col("hs")))
   }
 
   private def md5hex(s: String): String =
@@ -459,19 +482,20 @@ object StreamingIngest {
         _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
     }
 
-  private def ensureStoreTable(spark: SparkSession, kind: String,
-      location: String, columnsDdl: String, bucketCols: String): String = {
-    val name = storeTableName(kind, location)
+  private def ensureStoreTable(spark: SparkSession, store: StoreKind,
+      location: String): String = {
+    val name = storeTableName(store.kind, location)
     if (ensuredSet(spark).contains(name)) return name
     // first delivery: the external location must exist before RECOVER
     // PARTITIONS walks it
     val loc = new org.apache.hadoop.fs.Path(location)
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(loc)
     spark.sql(
-      s"""CREATE TABLE IF NOT EXISTS $name ($columnsDdl,
+      s"""CREATE TABLE IF NOT EXISTS $name (${store.columnsDdl},
          |  ingest_batch BIGINT)
          |USING parquet PARTITIONED BY (ingest_batch)
-         |CLUSTERED BY ($bucketCols) SORTED BY ($bucketCols)
+         |CLUSTERED BY (${store.bucketCols.mkString(", ")})
+         |SORTED BY (${store.bucketCols.mkString(", ")})
          |INTO $StoreBuckets BUCKETS
          |LOCATION '$location'""".stripMargin)
     spark.sql(s"ALTER TABLE $name RECOVER PARTITIONS")
@@ -482,15 +506,27 @@ object StreamingIngest {
   /** Replay-safe store append: STATIC partition INSERT OVERWRITE —
     * only `ingest_batch=$batchId` is replaced, whatever the session's
     * partitionOverwriteMode, and the write lands bucketed+sorted per
-    * the table spec. The input is pre-partitioned to one task per
-    * bucket so each insert adds exactly [[StoreBuckets]] files.
+    * the table spec. The input must carry the table's column types.
+    *
+    * The input is hash-partitioned by the bucket columns into the
+    * largest divisor of [[StoreBuckets]] that does not exceed the
+    * session's parallelism. Spark's bucket id is
+    * `pmod(murmur3(bucket cols), StoreBuckets)` and the partition id
+    * `pmod(murmur3(bucket cols), n)`, which for n dividing
+    * [[StoreBuckets]] is the bucket id mod n: every bucket's rows land
+    * in exactly one write task, so an insert writes one file per bucket
+    * present, in no more write tasks than the session has cores.
     */
   private def insertBatchPartition(spark: SparkSession, table: String,
-      batchId: Long, df: DataFrame): Unit = {
+      store: StoreKind, batchId: Long, df: DataFrame): Unit = {
+    val cores = spark.sparkContext.defaultParallelism
+    val tasks = (StoreBuckets to 1 by -1)
+      .find(n => StoreBuckets % n == 0 && n <= cores).getOrElse(1)
     // identifier-safe for the base partition's negative id
     val view = s"__graft_insert_${table}_" +
       (if (batchId < 0) s"m${-batchId}" else batchId.toString)
-    df.createOrReplaceTempView(view)
+    df.repartition(tasks, store.bucketCols.map(col): _*)
+      .createOrReplaceTempView(view)
     spark.sql(s"INSERT OVERWRITE TABLE $table " +
       s"PARTITION (ingest_batch=$batchId) SELECT * FROM $view")
     spark.catalog.dropTempView(view)
@@ -530,24 +566,16 @@ object StreamingIngest {
       beforeBatch: Long): DataFrame = {
     require(beforeBatch >= 0, "beforeBatch must be >= 0")
     import spark.implicits._
-    val stores = Seq(
-      ("fps", paths.store, "fingerprint STRING", "fingerprint"),
-      ("bands", s"${paths.store}/bands",
-        "doc_id BIGINT, band_idx INT, band_key STRING",
-        "band_idx, band_key"),
-      ("ngrams", s"${paths.store}/ngrams",
-        "doc_id BIGINT, hs ARRAY<BIGINT>", "doc_id"))
-    val report = stores.flatMap { case (kind, loc, ddl, bucketCols) =>
+    val report = stores(paths).flatMap { case (store, loc) =>
       if (!hasBatchDirs(spark, loc)) None
-      else compactStoreTable(spark, kind, loc, ddl, bucketCols, beforeBatch)
+      else compactStoreTable(spark, store, loc, beforeBatch)
     }
     report.toDF("store", "n_partitions_merged", "n_rows")
   }
 
-  private def compactStoreTable(spark: SparkSession, kind: String,
-      location: String, columnsDdl: String, bucketCols: String,
-      beforeBatch: Long): Option[(String, Long, Long)] = {
-    val t = ensureStoreTable(spark, kind, location, columnsDdl, bucketCols)
+  private def compactStoreTable(spark: SparkSession, store: StoreKind,
+      location: String, beforeBatch: Long): Option[(String, Long, Long)] = {
+    val t = ensureStoreTable(spark, store, location)
     val parts = spark.sql(s"SHOW PARTITIONS $t").collect()
       .map(_.getString(0).stripPrefix("ingest_batch=").toLong)
     val mergeable = parts.filter(b => b >= 0 && b < beforeBatch)
@@ -563,10 +591,7 @@ object StreamingIngest {
       .filter(col("ingest_batch") < beforeBatch)
       .select(dataCols.map(col): _*).distinct()
     merged.write.mode("overwrite").parquet(stage)
-    val bucketColList = bucketCols.split(",").map(c => col(c.trim))
-    insertBatchPartition(spark, t, -1L,
-      spark.read.parquet(stage)
-        .repartition(StoreBuckets, bucketColList: _*))
+    insertBatchPartition(spark, t, store, -1L, spark.read.parquet(stage))
     val nRows = spark.table(t).filter(col("ingest_batch") === -1L).count()
     val fs = new org.apache.hadoop.fs.Path(location)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -576,7 +601,7 @@ object StreamingIngest {
         true)
     }
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    Some((kind, mergeable.length.toLong + (if (hasBase) 1L else 0L), nRows))
+    Some((store.kind, mergeable.length.toLong + (if (hasBase) 1L else 0L), nRows))
   }
 
   /** Drop the near-dup store tables' catalog entries (external — files
@@ -585,10 +610,8 @@ object StreamingIngest {
     * catalog entries.
     */
   def dropStoreTables(spark: SparkSession, paths: IngestPaths): Unit = {
-    Seq("fps" -> paths.store,
-      "bands" -> s"${paths.store}/bands",
-      "ngrams" -> s"${paths.store}/ngrams").foreach { case (kind, loc) =>
-      val name = storeTableName(kind, loc)
+    stores(paths).foreach { case (store, loc) =>
+      val name = storeTableName(store.kind, loc)
       spark.sql(s"DROP TABLE IF EXISTS $name")
       ensuredSet(spark).remove(name)
     }
@@ -624,8 +647,7 @@ object StreamingIngest {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         new StructType().add("fingerprint", StringType))
     else {
-      val t = ensureStoreTable(spark, "fps", store,
-        "fingerprint STRING", "fingerprint")
+      val t = ensureStoreTable(spark, FpsStore, store)
       spark.table(t).filter(col("ingest_batch") < beforeBatch)
         .select("fingerprint").distinct()
     }
@@ -645,15 +667,9 @@ object StreamingIngest {
   private def readPartitioned(spark: SparkSession, root: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        val seg = f.getPath.getName
-        found = seg.endsWith(".parquet") && !seg.startsWith("_") && !seg.startsWith(".")
-      }
-      found
+    val hasData = fs.exists(p) && graft.util.Listing.files(fs, p).exists { f =>
+      val seg = f.getPath.getName
+      seg.endsWith(".parquet") && !seg.startsWith("_") && !seg.startsWith(".")
     }
     if (hasData)
       Some(spark.read.option("basePath", root).parquet(root))

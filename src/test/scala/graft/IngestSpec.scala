@@ -1084,12 +1084,15 @@ class NearDupEdgeSpec extends AnyFunSuite {
 
 /** The Spark-job cost of one near-dup delivery. A delivery's fixed cost is
   * its job count (each job pays scheduling and a driver round trip), so a
-  * change that adds an action to the delivery path fails here.
+  * change that adds an action to the delivery path fails here. The store
+  * inserts run fewer write tasks than buckets, so the spec also pins the
+  * bucket layout they must keep: one file per bucket present in every
+  * store partition.
   */
 class NearDupJobBudgetSpec extends AnyFunSuite {
 
   test("a warm near-dup delivery into an existing store runs at most " +
-    "27 Spark jobs") {
+    "17 Spark jobs and writes one store file per bucket") {
     withTempDir("graft-neardup-jobs") { dir =>
       import spark.implicits._
       val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
@@ -1115,7 +1118,19 @@ class NearDupJobBudgetSpec extends AnyFunSuite {
       // within (it repeats 201), 201 and the null-text 204 are kept; and
       // 1 corrupt line
       assert(report === Seq(2L, 4L, 1L, 1L, 1L, 2L))
-      assert(jobs <= 27, s"jobs: $jobs")
+      assert(jobs <= 17, s"jobs: $jobs")
+
+      // bucketed file names end `_<bucket id>.c<n>…`: no bucket id may
+      // repeat within a partition
+      val bucketOf = """.*_(\d{5})\.c\d+.*\.parquet""".r
+      for (store <- Seq("bands", "ngrams"); k <- 0 to 2) {
+        val part = new java.io.File(s"${paths.store}/$store/ingest_batch=$k")
+        val buckets = part.list().toSeq.collect { case bucketOf(b) => b }
+        assert(buckets.nonEmpty, part)
+        assert(buckets.distinct.size === buckets.size, s"$part: $buckets")
+        assert(buckets.size === part.list().count(_.endsWith(".parquet")), part)
+        if (store == "bands") assert(buckets.size > 1, s"$part: $buckets")
+      }
       StreamingIngest.dropStoreTables(spark, paths)
     }
   }

@@ -603,3 +603,73 @@ class MonitorFailureSpec extends AnyFunSuite {
     }
   }
 }
+
+/** The listing every monitor, the ingest corpus read and the codec
+  * matrix share: `graft.util.Listing.files` returns what
+  * `FileSystem.listFiles(root, true)` does, file for file and in the same
+  * order, without building a `LocatedFileStatus` per file.
+  */
+class ListingSpec extends AnyFunSuite {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+
+  private def triple(st: FileStatus) =
+    (st.getPath.toString, st.getLen, st.getModificationTime)
+
+  test("the walk and listFiles list the same files in the same order " +
+    "under hidden segments, checksum files and an empty directory") {
+    withTempDir("graft-listing") { dir =>
+      val root = new Path(dir, "lake")
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // the local checksum file system writes a `.<name>.crc` beside each
+      Seq("t/part-0.parquet", "t/k=1/part-1.parquet", "t/_stage/part-2.parquet",
+        "t/.tmp/part-3.parquet", "t/k=1/_SUCCESS", "t/notes.crc", "u/a.json",
+        "top.parquet").zipWithIndex.foreach { case (rel, i) =>
+        val out = fs.create(new Path(root, rel))
+        out.write(Array.fill(i + 1)(i.toByte))
+        out.close()
+      }
+      fs.mkdirs(new Path(root, "t/empty"))
+      def viaListFiles(p: Path) = {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).map(triple).toList
+      }
+      val walked = graft.util.Listing.files(fs, root).map(triple).toList
+      assert(walked === viaListFiles(root))
+      assert(walked.size === 8)
+      assert(walked.exists(_._1.endsWith("/t/.tmp/part-3.parquet")))
+      assert(!walked.exists(_._1.endsWith(".parquet.crc")))
+      assert(new java.io.File(s"$dir/lake/t/.part-0.parquet.crc").exists)
+      // a file root lists itself
+      val file = new Path(root, "top.parquet")
+      assert(graft.util.Listing.files(fs, file).map(triple).toList ===
+        viaListFiles(file))
+      // the catalog's visible parquet set: hidden segments skipped
+      val visible = CatalogMonitor.parquetFiles(spark, s"$dir/lake/t").get
+        .map(_.getPath.getName).toSet
+      assert(visible === Set("part-0.parquet", "part-1.parquet"))
+    }
+  }
+}
+
+/** The listing guard: a recursive `listFiles` builds a
+  * `LocatedFileStatus` per file, which on the local file system forks a
+  * process per file, so the program lists only through
+  * `graft.util.Listing`.
+  */
+class ListingGuardSpec extends AnyFunSuite {
+
+  test("no program source outside graft.util.Listing calls listFiles(") {
+    val main = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(main), main.toAbsolutePath)
+    val helper = main.resolve("scala/graft/util/Listing.scala")
+    val stream = java.nio.file.Files.walk(main)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) && p != helper)
+        .filter(p => java.nio.file.Files.readString(p).contains("listFiles("))
+        .map(main.relativize(_).toString).toList
+    } finally stream.close()
+    assert(offenders.isEmpty, s"listFiles( outside the walk helper: $offenders")
+  }
+}

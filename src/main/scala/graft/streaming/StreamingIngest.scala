@@ -221,7 +221,7 @@ object StreamingIngest {
       .withColumn("__hs", TextOps.hashedNgrams(col(textCol)))
       .withColumn("__sig", Dedup.minhashSig(col("__hs"), k))
       .cache()
-    def n(fate: Int) = sum(when(col("__fate") === fate, 1L).otherwise(0L))
+    def n(fate: Int) = count_if(col("__fate") === fate)
     val counts = new org.apache.spark.sql.Observation()
     // one fate per row. EAGER localCheckpoint, not cache: the fates'
     // lineage reads the store tables, and the store INSERT OVERWRITEs
@@ -247,7 +247,7 @@ object StreamingIngest {
     try {
       // the checkpoint job has ended, so its observed counts are final
       val observed = counts.get
-      def c(name: String) = Option(observed(name)).fold(0L)(_.asInstanceOf[Long])
+      def c(name: String) = observed(name).asInstanceOf[Long]
       val (nCorrupt, nStore, nWithin, nKept) =
         (c("corrupt"), c("store"), c("within"), c("kept"))
       val kept = fated.filter(col("__fate") === FateKept)
@@ -535,10 +535,11 @@ object StreamingIngest {
 
   /** Compact every store partition of batches in [0, beforeBatch) into
     * the single BASE partition `ingest_batch = -1` — the maintenance
-    * job a long-running ingest needs: each delivery adds
-    * [[StoreBuckets]] files per store, so at 10⁵ deliveries the
-    * per-delivery store scan pays millions of file opens; compaction
-    * collapses them to one bucketed file set while keeping layout,
+    * job a long-running ingest needs: each delivery adds up to
+    * [[StoreBuckets]] files per store (one per bucket present), so at
+    * 10⁵ deliveries the per-delivery store scan pays millions of file
+    * opens; compaction collapses them to one bucketed file set while
+    * keeping layout,
     * bucketing, and read semantics IDENTICAL (every reader filters
     * `ingest_batch < N`, and −1 < N always, so base rows keep
     * participating in dedup exactly as before).

@@ -335,3 +335,86 @@ class TablesLoadSpec extends AnyFunSuite {
     }
   }
 }
+
+/** `Monitors.tableMonitor`'s `duplicate_count` is the row count minus the
+  * number of distinct rows, Spark's `groupBy` over every column
+  * (`Profiler.duplicateStats`): −0.0 equals 0.0 and every NaN equals every
+  * other NaN, also inside arrays; NULLs equal each other; the count covers
+  * the whole table at any `sampleFraction`. Each case pins both the
+  * standalone count and a hand count of its data.
+  */
+class DuplicateCountSpec extends AnyFunSuite {
+  private def table(dir: String, schema: StructType, data: Seq[Row]): Unit =
+    spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+      .repartition(2).write.parquet(Tables.path(dir, "t"))
+
+  /** `tableMonitor`'s and `duplicateStats`'s duplicate counts of table `t`. */
+  private def counts(dir: String, sampleFraction: Double): (Double, Double) =
+    withTempDir("graft-dup-state") { tmp =>
+      val sink = MetricSink("dup")
+      Monitors.tableMonitor(spark, dir, "t", sink, new StateStore(tmp + "/s"),
+        sampleFraction = sampleFraction)
+      val df = Tables.load(spark, dir, "t")
+      val r = Profiler.duplicateStats(df, df.columns.toSeq).collect().head
+      // duplicateStats is NULL over an empty table
+      val standalone = Option(r.get(r.fieldIndex("duplicate_count")))
+        .fold(0L)(_.asInstanceOf[Long]).toDouble
+      (sink.get("t.duplicate_count").flatMap(_.valueDouble).get, standalone)
+    }
+
+  private def check(schema: StructType, data: Seq[Row], byHand: Double,
+      fractions: Seq[Double] = Seq(1.0)): Unit =
+    withTempDir("graft-dup-lake") { dir =>
+      table(dir, schema, data)
+      fractions.foreach { f =>
+        assert(counts(dir, f) == (byHand, byHand), s"sampleFraction $f")
+      }
+    }
+
+  test("-0.0 equals 0.0 and NaN payloads equal NaN, in double, float and array columns") {
+    val nanD = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    val nanF = java.lang.Float.intBitsToFloat(0x7fc00123)
+    assert(nanD.isNaN && nanF.isNaN)
+    val schema = StructType.fromDDL("d double, f float, a array<double>, k int")
+    def row(d: Double, f: Float, k: Int) = Row(d, f, Seq(d, f.toDouble), k)
+    check(schema, Seq(
+      row(0.0, 0.0f, 1), row(-0.0, -0.0f, 1),
+      row(Double.NaN, Float.NaN, 2), row(nanD, nanF, 2),
+      row(1.5, 1.5f, 3), row(1.5, 1.5f, 3),
+      row(Double.NaN, 1.0f, 4)), byHand = 3)
+  }
+
+  test("repeated all-null rows are duplicates of each other") {
+    val schema = StructType.fromDDL("a int, b string, c double")
+    check(schema, Seq(Row(null, null, null), Row(null, null, null), Row(null, null, null),
+      Row(1, "x", 2.0), Row(1, "x", 2.0), Row(1, null, 2.0)), byHand = 3)
+  }
+
+  test("decimal, timestamp and string columns") {
+    val schema = StructType.fromDDL("dec decimal(12,3), ts timestamp, s string")
+    def dec(s: String) = new java.math.BigDecimal(s)
+    val (t1, t2) = (ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00.000001"))
+    check(schema, Seq(
+      Row(dec("1.500"), t1, "a"), Row(dec("1.5"), t1, "a"), Row(dec("1.500"), t1, "A"),
+      Row(dec("1.500"), t2, "a"), Row(null, t1, ""), Row(null, t1, ""),
+      Row(null, t1, null)), byHand = 2)
+  }
+
+  test("a table of more than 64 columns, at sampleFraction 1.0 and 0.5") {
+    val schema = StructType((0 until 70).map(j => StructField(s"c$j", IntegerType)))
+    // row i is (i % 7, …, i % 7, i % 3): 21 distinct rows of 50
+    val data = (0 until 50).map(i => Row((0 until 70).map(j => if (j == 69) i % 3 else i % 7): _*))
+    check(schema, data, byHand = 29, fractions = Seq(1.0, 0.5))
+  }
+
+  test("the count covers the whole table at sampleFraction 0.5") {
+    val schema = StructType.fromDDL("k long, v double, s string")
+    val data = (0 until 400).map(i => Row((i % 150).toLong, (i % 150) * 0.5, s"s${i % 150}"))
+    check(schema, data, byHand = 250, fractions = Seq(1.0, 0.5))
+  }
+
+  test("an empty table has no duplicates") {
+    check(StructType.fromDDL("a int, b double, s string"), Nil, byHand = 0,
+      fractions = Seq(1.0, 0.5))
+  }
+}

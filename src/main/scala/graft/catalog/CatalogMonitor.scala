@@ -83,16 +83,28 @@ object CatalogMonitor {
   /** [[footerRowCount]] over a listing the caller already holds. */
   private[graft] def footerRowCount(spark: SparkSession,
       statuses: Seq[FileStatus]): Option[Long] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     try {
-      val conf = spark.sessionState.newHadoopConf()
+      val open = footerReader(spark)
       if (statuses.isEmpty) None
       else Some(statuses.map { s =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        val r = open(s)
         try r.getRecordCount finally r.close()
       }.sum)
     } catch { case NonFatal(_) => None }
+  }
+
+  /** Opens a file's footer with read options from the session's Hadoop
+    * conf. `ParquetFileReader`'s one-argument `open` builds them from a
+    * fresh `Configuration`, parsing the default resources, once per file.
+    */
+  private def footerReader(spark: SparkSession)
+      : FileStatus => org.apache.parquet.hadoop.ParquetFileReader = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val options = HadoopReadOptions.builder(conf).build()
+    s => ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf), options)
   }
 
   /** Parquet-FOOTER exact (min, max) per requested numeric column — the
@@ -127,8 +139,6 @@ object CatalogMonitor {
   private[graft] def footerNumericBounds(spark: SparkSession,
       tablePath: String, cols: Seq[(String, org.apache.spark.sql.types.DataType)])
       : Option[Map[String, (Option[Double], Option[Double])]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.spark.sql.types._
@@ -145,11 +155,11 @@ object CatalogMonitor {
       case _ => None
     }
     try {
-      val conf = spark.sessionState.newHadoopConf()
+      val open = footerReader(spark)
       val statuses = parquetFiles(spark, tablePath).getOrElse(Nil)
       if (statuses.isEmpty) return None
       statuses.foreach { s =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        val r = open(s)
         try {
           // every requested column must exist in every file's schema —
           // a name absent from all chunks would otherwise masquerade

@@ -338,35 +338,44 @@ object Profiler {
   }
 
   /** What the table monitor reports of one table: the NULL-or-NaN count of
-    * every column, in column order, and the non-NULL [[monitorMetrics]] of
+    * every column, in column order, the non-NULL [[monitorMetrics]] of
     * every numeric column as (column, metric, value), sorted by column and
-    * metric.
+    * metric, and [[duplicateStats]]'s `duplicate_count` over every column.
     */
   final case class MonitorProfile(nullCounts: Seq[(String, Long)],
-      stats: Seq[(String, String, Double)])
+      stats: Seq[(String, String, Double)], duplicateCount: Long)
 
   /** The statistics the table monitor reports per numeric column. */
   val monitorMetrics: Seq[String] = Seq("max", "mean", "median", "min", "stddev")
 
-  /** The table monitor's profile in two aggregate queries:
+  /** The table monitor's profile in one scan-fused aggregate and a median
+    * census, run alongside each other:
     *
     *  - ONE wide aggregate (per `statColumnsPerJob` columns) holds every
     *    column's null count, as [[nullCounts]] computes it, next to the
-    *    [[momentExprs]] of every numeric column. It reads the scan as it
-    *    is, without [[graft.util.Parallelism.ensure]]: its partial phase
-    *    is a codegen'd sum in the scan stage, cheaper than the round-robin
-    *    shuffle of every column that ensure would add as one more job;
+    *    [[momentExprs]] of every numeric column. The first batch's also
+    *    holds `count(*)` and `count(DISTINCT struct(<every column>))`,
+    *    whose difference is [[duplicateStats]]'s `duplicate_count`: Spark
+    *    plans the distinct struct with `groupBy`'s key semantics (NaN and
+    *    -0.0 normalized in every floating field, array elements included;
+    *    NULLs equal). It reads the scan as it is, without
+    *    [[graft.util.Parallelism.ensure]]: its partial phase runs in the
+    *    scan stage, cheaper than the round-robin shuffle of every column
+    *    that ensure would add as one more job;
     *  - the median comes from the melted [[census]] alone (approx mode:
     *    [[numericProfile]]'s `percentile_approx` sketch), with no metric
-    *    grid join and no sort.
+    *    grid join and no sort. It is submitted before the aggregate is
+    *    collected (see [[alongside]]), so a table's chain of jobs is the
+    *    longer of the two queries, not their sum.
     *
-    * Its values are those of [[nullCounts]] over `df0` and of
-    * [[numericProfile]] over `df0.sample(false, sampleFraction, 42)` (all of
-    * `df0` at 1.0). Below 1.0 the null counts still cover the whole table,
-    * and the moments see the sampled rows through a `rand(42) <
-    * sampleFraction` flag set on the scan's own partitions: `df.sample`
-    * draws from the same generator with the same per-partition seed, once
-    * per row, so the flag keeps exactly the rows the sample keeps.
+    * Its values are those of [[nullCounts]] and [[duplicateStats]] over
+    * `df0` and of [[numericProfile]] over `df0.sample(false,
+    * sampleFraction, 42)` (all of `df0` at 1.0). Below 1.0 the null and
+    * duplicate counts still cover the whole table, and the moments see the
+    * sampled rows through a `rand(42) < sampleFraction` flag set on the
+    * scan's own partitions: `df.sample` draws from the same generator with
+    * the same per-partition seed, once per row, so the flag keeps exactly
+    * the rows the sample keeps.
     */
   def monitorProfile(df0: DataFrame, sampleFraction: Double = 1.0,
       cfg: ProfileConfig = ProfileConfig()): MonitorProfile = {
@@ -375,26 +384,8 @@ object Profiler {
     val flag = "__graft_in_sample"
     val df = if (sampled) df0.withColumn(flag, rand(seed) < sampleFraction) else df0
     val fields = df0.schema.fields.toSeq
-    val perBatch = fields.grouped(cfg.statColumnsPerJob).toSeq.map { batch =>
-      val numeric = batch.filter(isNumeric).map(_.name)
-      val moments = numeric.flatMap { c =>
-        val v = cleaned(df, c).cast(DoubleType)
-        momentExprs(if (sampled) when(col(flag), v) else v, c)
-      }
-      val exprs = batch.map(nullCountExpr) ++ moments
-      val r = df.agg(exprs.head, exprs.tail: _*).collect().head
-      val nulls = batch.indices.map(i =>
-        batch(i).name -> (if (r.isNullAt(i)) 0L else r.getLong(i)))
-      val stats = for {
-        (c, j) <- numeric.zipWithIndex
-        (m, k) <- momentMetrics.zipWithIndex
-        i = batch.size + j * momentMetrics.size + k
-        if monitorMetrics.contains(m) && !r.isNullAt(i)
-      } yield (c, m, r.getDouble(i))
-      (nulls, stats)
-    }
     val numeric = numericColumns(df0)
-    val medians = if (numeric.isEmpty) Nil else {
+    def medians = if (numeric.isEmpty) Nil else {
       val melted = melt(graft.util.Parallelism.ensure(
         if (sampled) df0.sample(withReplacement = false, sampleFraction, seed) else df0),
         numeric)
@@ -406,8 +397,52 @@ object Profiler {
         case r if !r.isNullAt(1) => (r.getString(0), "median", r.getDouble(1))
       }
     }
-    MonitorProfile(perBatch.flatMap(_._1),
-      (perBatch.flatMap(_._2) ++ medians).sortBy(s => (s._1, s._2)))
+    // every row and its distinct count, in the first batch only
+    val rows = Seq(count(lit(1)), count_distinct(struct(fields.map(f => col(f.name)): _*)))
+    def perBatch = fields.grouped(cfg.statColumnsPerJob).toSeq.zipWithIndex.map {
+      case (batch, b) =>
+        val numeric = batch.filter(isNumeric).map(_.name)
+        val moments = numeric.flatMap { c =>
+          val v = cleaned(df, c).cast(DoubleType)
+          momentExprs(if (sampled) when(col(flag), v) else v, c)
+        }
+        val exprs = batch.map(nullCountExpr) ++ moments ++ (if (b == 0) rows else Nil)
+        val r = df.agg(exprs.head, exprs.tail: _*).collect().head
+        val nulls = batch.indices.map(i =>
+          batch(i).name -> (if (r.isNullAt(i)) 0L else r.getLong(i)))
+        val stats = for {
+          (c, j) <- numeric.zipWithIndex
+          (m, k) <- momentMetrics.zipWithIndex
+          i = batch.size + j * momentMetrics.size + k
+          if monitorMetrics.contains(m) && !r.isNullAt(i)
+        } yield (c, m, r.getDouble(i))
+        val duplicates = if (b == 0) r.getLong(exprs.size - 2) - r.getLong(exprs.size - 1) else 0L
+        (nulls, stats, duplicates)
+    }
+    val (median, batches) = alongside(medians)(perBatch)
+    MonitorProfile(batches.flatMap(_._1),
+      (batches.flatMap(_._2) ++ median).sortBy(s => (s._1, s._2)),
+      batches.map(_._3).sum)
+  }
+
+  /** `a` on a thread of its own while `b` runs on the caller's, both
+    * results once both have ended. A failure is rethrown only after both
+    * end (`b`'s first), so no job of the call outlives it. The thread is
+    * new per call: it cannot starve, as a bounded pool shared with
+    * blocking callers can, and it inherits the caller's Spark local
+    * properties (job group, scheduler pool) as they are at the call.
+    */
+  private def alongside[A, B](a: => A)(b: => B): (A, B) = {
+    val task = new java.util.concurrent.FutureTask[A](() => a)
+    val thread = new Thread(task, "graft-profile-alongside")
+    thread.setDaemon(true)
+    thread.start()
+    val rb = scala.util.Try(b)
+    val ra = try scala.util.Success(task.get()) catch {
+      case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
+    }
+    val vb = rb.get
+    (ra.get, vb)
   }
 
   /** Per-column null counts over ALL columns in one pass (SURVEY A6).

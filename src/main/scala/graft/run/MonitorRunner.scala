@@ -118,6 +118,21 @@ object Monitors {
   def tableMonitor(spark: SparkSession, dir: String, table: String,
       sink: MetricSink, state: StateStore, sampleFraction: Double = 1.0,
       cfg: ProfileConfig = ProfileConfig()): Boolean = {
+    val (profiled, changed) = monitorTarget(spark, dir, table, sink, state, sampleFraction, cfg)
+    if (changed.nonEmpty) state.putAll(spark, changed)
+    profiled
+  }
+
+  // (entity, key, value) state rows
+  private[graft] type StateRows = Seq[(String, String, String)]
+
+  /** [[tableMonitor]] without its state write: emits the table's points
+    * and returns whether it was profiled, with the state rows whose value
+    * changed, for the caller to write.
+    */
+  private[graft] def monitorTarget(spark: SparkSession, dir: String, table: String,
+      sink: MetricSink, state: StateStore, sampleFraction: Double = 1.0,
+      cfg: ProfileConfig = ProfileConfig()): (Boolean, StateRows) = {
     val files = CatalogMonitor.parquetFiles(spark, Tables.path(dir, table))
     val signature = files.filter(_.nonEmpty)
       .fold("")(fs => s"$sampleFraction $cfg\n${CatalogMonitor.signature(fs)}")
@@ -139,14 +154,11 @@ object Monitors {
       sink.log(s"$table.columns_changed", if (drift.nonEmpty) 1.0 else 0.0)
       drift.foreach { case (change, c) => sink.logString(s"$table.column_$change", c) }
     }
-    // one snapshot write (serialized store-wide) at most, none if unchanged
     val changed = Seq("record_count" -> recordCount.toString,
       "columns" -> columns.mkString(","), SignatureKey -> signature,
       MetricsKey -> replay.getOrElse(encode(points)))
       .filterNot { case (k, v) => prev.get(k).contains(v) }
-    if (changed.nonEmpty)
-      state.putAll(spark, changed.map { case (k, v) => (table, k, v) })
-    replay.isEmpty
+    (replay.isEmpty, changed.map { case (k, v) => (table, k, v) })
   }
 
   /** The intrinsic points of one table, computed from its data. */
@@ -158,10 +170,9 @@ object Monitors {
     // (q18): exact by the parquet format contract, and no full-scan job
     val recordCount = files.flatMap(CatalogMonitor.footerRowCount(spark, _))
       .getOrElse(df.count())
-    val duplicates = Profiler.duplicateStats(df, df.columns.toSeq).collect().head
     val profile = Profiler.monitorProfile(df, sampleFraction, cfg)
-    Seq[Point](s"$table.record_count" -> Left(recordCount.toDouble), s"$table.duplicate_count" ->
-      Left(duplicates.getAs[Long]("duplicate_count").toDouble)) ++
+    Seq[Point](s"$table.record_count" -> Left(recordCount.toDouble),
+      s"$table.duplicate_count" -> Left(profile.duplicateCount.toDouble)) ++
       Profiler.schemaReport(df).map { case (c, t, _) => s"$table.schema.$c" -> Right(t) } ++
       profile.nullCounts.map { case (c, n) => s"$table.null_count.$c" -> Left(n.toDouble) } ++
       profile.stats.map { case (c, m, v) => s"$table.$c.$m" -> Left(v) }
@@ -238,23 +249,27 @@ object MonitorRunner {
     * each reference target is its own task: it logs `run.<target>.error`
     * (class and message) and counts in `all_tables.targets_failed`; the
     * means cover the targets that succeeded, and the flush always runs.
+    * The changed state rows of every target that succeeded are written
+    * in one snapshot write after the fan-out; a failing target writes
+    * none, and a failing write logs `run.state.error`.
     */
   def run(spark: SparkSession, dir: String, targets: Seq[String],
       statePath: String, metricsPath: Option[String] = None,
       parallelism: Int = 8): DataFrame = {
     val sink = MetricSink()
     val state = new StateStore(statePath)
-    def monitor(t: String) = Try(Monitors.tableMonitor(spark, dir, t, sink, state))
+    def monitor(t: String) = Try(Monitors.monitorTarget(spark, dir, t, sink, state))
     // Concurrent fan-out, like the reference's parallel Airflow tasks
     // (`snowflake_table_monitor.py:162-178`): each monitor is mostly
-    // blocking on its own Spark jobs (about a dozen small ones per
-    // changed table, none for an unchanged one), so driver threads keep
-    // the cluster saturated across targets (FAIR-friendly). Default 8 =
-    // one thread per warehouse table; the A/B at sf0.1 measured the full
-    // fan-out (q276) at ~0.55× the 4-thread wall time — the per-table
-    // jobs are small enough that 4 threads left the scheduler underfed.
-    // MetricSink is synchronized; the StateStore answers reads from its
-    // in-memory snapshot and serializes only its one-job snapshot writes.
+    // blocking on its own Spark jobs (a fused aggregate and a median
+    // census side by side per changed table, none for an unchanged one),
+    // so driver threads keep the cluster saturated across targets
+    // (FAIR-friendly). Default 8 = one thread per warehouse table; the A/B
+    // at sf0.1 measured the full fan-out (q276) at ~0.55× the 4-thread
+    // wall time — the per-table jobs are small enough that 4 threads left
+    // the scheduler underfed. MetricSink is synchronized; the StateStore
+    // answers reads from its in-memory snapshot, and the one write comes
+    // after the fan-out.
     val outcomes = if (parallelism <= 1 || targets.size <= 1) targets.map(monitor)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -262,17 +277,20 @@ object MonitorRunner {
       try {
         import scala.jdk.CollectionConverters._
         val tasks = targets.map { t =>
-          (() => monitor(t)): java.util.concurrent.Callable[Try[Boolean]]
+          (() => monitor(t)): java.util.concurrent.Callable[Try[(Boolean, Monitors.StateRows)]]
         }
         pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
       } finally pool.shutdown()
     }
     val done = targets.zip(outcomes).flatMap {
-      case (t, Success(profiled)) => Some(t -> profiled)
+      case (t, Success((profiled, changed))) => Some((t, profiled, changed))
       case (t, Failure(e)) =>
         sink.logString(s"run.$t.error", s"${e.getClass.getName}: ${e.getMessage}")
         None
     }
+    val changed = done.flatMap(_._3)
+    if (changed.nonEmpty) Try(state.putAll(spark, changed)).failed.foreach(e =>
+      sink.logString("run.state.error", s"${e.getClass.getName}: ${e.getMessage}"))
     sink.log("all_tables.tables_profiled", done.count(_._2).toDouble)
     sink.log("all_tables.tables_unchanged", done.count(!_._2).toDouble)
     sink.log("all_tables.targets_failed", (targets.size - done.size).toDouble)

@@ -29,11 +29,18 @@ import org.apache.spark.sql.types.StructType
   *    instance on the same path, another process, a store reopened later —
   *    shows as a mismatch, and the store reloads the snapshot (one job)
   *    before answering or merging.
+  *  - The reload is skipped when the listing matches the snapshot this
+  *    process last read or wrote at the path, through any store: a new
+  *    store on an unchanged snapshot (one per `MonitorRunner.run`) answers
+  *    with no Spark job. The same stamp comparison guards it, so another
+  *    process's write still forces the one read job.
   *
   * `Monitors.tableMonitor` keeps here, per table, the reference's record
   * count and columns plus the listing signature and the metrics it last
   * emitted; a call that finds the same signature replays those metrics
   * with no Spark job, and writes only when a value changed.
+  * `MonitorRunner.run` writes the changed rows of all its targets in one
+  * [[putAll]] after its fan-out.
   *
   * A process that dies between the delete and the rename leaves only a
   * complete `path.tmp` (one with `_SUCCESS`); [[read]] and the reload
@@ -46,12 +53,11 @@ class StateStore(path: String) {
   private val dst = new Path(path)
   private val tmp = new Path(path + ".tmp")
 
-  // (name, length, modification time) of every file in a snapshot directory
-  private type Stamp = Seq[(String, Long, Long)]
+  import StateStore.{Snapshot, Stamp}
 
   // the snapshot this instance last read or wrote, and its listing
   // (None until the first load; an empty stamp means "no snapshot on disk")
-  private var snapshot: Map[(String, String), Row] = Map.empty
+  private var snapshot: Snapshot = Map.empty
   private var stamp: Option[Stamp] = None
 
   private def fs(spark: SparkSession): FileSystem =
@@ -81,14 +87,22 @@ class StateStore(path: String) {
     }
 
   /** Brings the map up to the snapshot on disk: a listing, plus one read
-    * job only when the snapshot is not the one this instance holds.
+    * job only when the snapshot is neither the one this instance holds nor
+    * the one this process last read or wrote at the path.
     */
   private def refresh(spark: SparkSession, fs: FileSystem): Unit = {
     val cur = current(fs)
     val curStamp = cur.fold(Seq.empty: Stamp)(_._2)
     if (!stamp.contains(curStamp)) {
-      snapshot = cur.fold(Map.empty[(String, String), Row]) { case (dir, _) =>
-        load(spark, dir).collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
+      val key = fs.makeQualified(dst).toString
+      snapshot = cur.fold(Map.empty: Snapshot) { case (dir, _) =>
+        Option(StateStore.latest.get(key)).collect { case (s, m) if s == curStamp => m }
+          .getOrElse {
+            val loaded = load(spark, dir).collect()
+              .map(r => (r.getString(0), r.getString(1)) -> r).toMap
+            StateStore.latest.put(key, (curStamp, loaded))
+            loaded
+          }
       }
       stamp = Some(curStamp)
     }
@@ -120,6 +134,7 @@ class StateStore(path: String) {
     fs0.rename(tmp, dst)
     snapshot = merged
     stamp = Some(written)
+    StateStore.latest.put(fs0.makeQualified(dst).toString, (written, merged))
   }
 
   def get(spark: SparkSession, entity: String, key: String): Option[String] =
@@ -140,6 +155,21 @@ class StateStore(path: String) {
     val ts = new java.sql.Timestamp(System.currentTimeMillis())
     merge(spark, rows.map { case (e, k, v) => Row(e, k, v, ts) })
   }
+}
+
+object StateStore {
+
+  // (name, length, modification time) of every file in a snapshot directory
+  private type Stamp = Seq[(String, Long, Long)]
+  // the snapshot's rows by (entity, key)
+  private type Snapshot = Map[(String, String), Row]
+
+  /** Per qualified snapshot path, the (stamp, snapshot) this process last
+    * read or wrote there. A store whose listing matches the stamp adopts
+    * the snapshot instead of reloading it; any other writer changes the
+    * listing. One metric-sized map per path the process has used.
+    */
+  private val latest = new java.util.concurrent.ConcurrentHashMap[String, (Stamp, Snapshot)]()
 }
 
 /** Change-detection operators over current vs previous snapshots

@@ -595,6 +595,71 @@ class MonitorFailureSpec extends AnyFunSuite {
     }
   }
 
+  /** Snapshot writes into directory `dir` while `body` runs. */
+  private def writesInto(dir: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val target = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qe.logical.foreach {
+        case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toUri.getPath == target =>
+          writes.incrementAndGet()
+        case _ =>
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    drainListenerBus()
+    spark.listenerManager.register(listener)
+    try { body; drainListenerBus() } finally spark.listenerManager.unregister(listener)
+    writes.get()
+  }
+
+  test("a run over three changed targets, one of them failing, writes the state " +
+    "snapshot once, with both good targets' state") {
+    withTempDir("graft-runner-once") { tmp =>
+      Seq("region", "nation").foreach(t =>
+        Files.copy(Paths.get(Tables.path(sf, t)), Paths.get(Tables.path(tmp, t))))
+      Files.write(Paths.get(Tables.path(tmp, "broken")), "not a parquet file".getBytes)
+      val state = s"$tmp/state"
+      def run(): Map[String, MetricRow] =
+        points(MonitorRunner.run(spark, tmp, Seq("region", "broken", "nation"), state))
+      val first = writesInto(state + ".tmp") {
+        val p = run()
+        assert(p("all_tables.tables_profiled").valueDouble === Some(2.0))
+        assert(p("all_tables.targets_failed").valueDouble === Some(1.0))
+      }
+      assert(first === 1)
+      val reopened = new StateStore(state)
+      Seq("region" -> "5", "nation" -> "25").foreach { case (t, n) =>
+        assert(reopened.get(spark, t, "record_count") === Some(n), t)
+        assert(reopened.entries(spark, t).keySet ===
+          Set("record_count", "columns", "listing_signature", "metrics"), t)
+      }
+      assert(reopened.entries(spark, "broken").isEmpty)
+      assert(reopened.read(spark).count() === 8)
+      // nothing changed: the replaying run writes no snapshot
+      assert(writesInto(state + ".tmp") {
+        assert(run()("all_tables.tables_unchanged").valueDouble === Some(2.0))
+      } === 0)
+    }
+  }
+
+  test("a failing state write is recorded, and the targets' metrics are still " +
+    "computed and flushed") {
+    withTempDir("graft-runner-state-fail") { tmp =>
+      // the state path lies under a regular file, so no snapshot can be written
+      Files.write(Paths.get(s"$tmp/file"), "x".getBytes)
+      val p = points(MonitorRunner.run(spark, sf, Seq("region", "nation"),
+        s"$tmp/file/state", Some(s"$tmp/metrics")))
+      assert(p("run.state.error").valueString.exists(_.nonEmpty))
+      assert(p("all_tables.targets_failed").valueDouble === Some(0.0))
+      assert(p("all_tables.mean_record_count").valueDouble === Some(15.0))
+      assert(spark.read.parquet(s"$tmp/metrics").count() === p.size.toLong)
+    }
+  }
+
   test("a clean run reports targets_failed = 0 and no error keys") {
     withTempDir("graft-runner-clean") { tmp =>
       val p = points(MonitorRunner.run(spark, sf, Seq("region", "nation"), s"$tmp/state"))
@@ -648,6 +713,59 @@ class ListingSpec extends AnyFunSuite {
         .map(_.getPath.getName).toSet
       assert(visible === Set("part-0.parquet", "part-1.parquet"))
     }
+  }
+}
+
+/** The footer guard: the one-argument `ParquetFileReader.open(InputFile)`
+  * builds its read options from a fresh Hadoop `Configuration`, parsing
+  * the default resources once per file, so the program passes read
+  * options built from the caller's conf.
+  */
+class FooterReaderGuardSpec extends AnyFunSuite {
+
+  /** The argument lists of every `ParquetFileReader.open(` call in `src`. */
+  private def openCalls(src: String): Seq[String] = {
+    val call = "ParquetFileReader.open("
+    Iterator.iterate(src.indexOf(call))(i => src.indexOf(call, i + 1)).takeWhile(_ >= 0)
+      .map { i =>
+        val start = i + call.length
+        var (depth, j) = (1, start)
+        while (depth > 0 && j < src.length) {
+          src(j) match { case '(' => depth += 1 case ')' => depth -= 1 case _ => }
+          j += 1
+        }
+        src.substring(start, j - 1)
+      }.toSeq
+  }
+
+  /** Whether an argument list has a comma outside nested parentheses. */
+  private def severalArgs(args: String): Boolean =
+    args.foldLeft((0, false)) { case ((depth, seen), ch) => ch match {
+      case '(' => (depth + 1, seen)
+      case ')' => (depth - 1, seen)
+      case ',' => (depth, seen || depth == 0)
+      case _ => (depth, seen)
+    } }._2
+
+  test("the guard tells one-argument calls from calls with read options") {
+    assert(openCalls("ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))")
+      .map(severalArgs) === Seq(false))
+    assert(openCalls("x; ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf), options)")
+      .map(severalArgs) === Seq(true))
+  }
+
+  test("no program source calls the one-argument ParquetFileReader.open(") {
+    val main = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(main), main.toAbsolutePath)
+    val stream = java.nio.file.Files.walk(main)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p))
+        .filter(p => openCalls(java.nio.file.Files.readString(p)).exists(!severalArgs(_)))
+        .map(main.relativize(_).toString).toList
+    } finally stream.close()
+    assert(offenders.isEmpty, s"one-argument ParquetFileReader.open( in: $offenders")
   }
 }
 

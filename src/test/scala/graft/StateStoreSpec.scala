@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.types.StructType
+
 import graft.state.StateStore
 import graft.util.TempDirs.withTempDir
 
@@ -57,6 +59,33 @@ class StateStoreSpec extends AnyFunSuite {
         (1 to 5).foreach(_ => assert(store.get(spark, "t", "record_count") == Some("10")))
       } == 0)
       assert(TestSpark.jobsDuring(store.putAll(spark, Seq(("t", "columns", "x")))) == 1)
+    }
+  }
+
+  test("a fresh store on an unchanged snapshot runs no read job; another writer " +
+    "still forces a reload") {
+    withTempDir("graft-state") { tmp =>
+      val path = tmp + "/state"
+      new StateStore(path).putAll(spark, Seq(("t", "record_count", "10"), ("t", "columns", "x")))
+      // the process's last write is reused by a new store on the path
+      val fresh = new StateStore(path)
+      assert(TestSpark.jobsDuring {
+        assert(fresh.entries(spark, "t") == Map("record_count" -> "10", "columns" -> "x"))
+      } == 0)
+      val reader = new StateStore(path)
+      assert(TestSpark.jobsDuring(assert(reader.get(spark, "t", "columns") == Some("x"))) == 0)
+      // another writer (another process, say) replaces the files under the
+      // path: the first store to look reloads, and the others reuse that read
+      val other = spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row("t", "record_count", "12", ts("2024-01-01 00:00:00"))),
+        StructType.fromDDL("entity string, key string, value string, updated_ts timestamp"))
+      other.coalesce(1).write.mode("overwrite").parquet(path)
+      assert(TestSpark.jobsDuring(
+        assert(fresh.entries(spark, "t") == Map("record_count" -> "12"))) == 1)
+      assert(TestSpark.jobsDuring(
+        assert(new StateStore(path).get(spark, "t", "record_count") == Some("12"))) == 0)
+      assert(TestSpark.jobsDuring(
+        assert(reader.get(spark, "t", "record_count") == Some("12"))) == 0)
     }
   }
 

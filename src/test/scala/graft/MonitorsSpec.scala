@@ -755,16 +755,8 @@ class FooterReaderGuardSpec extends AnyFunSuite {
   }
 
   test("no program source calls the one-argument ParquetFileReader.open(") {
-    val main = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(main), main.toAbsolutePath)
-    val stream = java.nio.file.Files.walk(main)
-    val offenders = try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p))
-        .filter(p => openCalls(java.nio.file.Files.readString(p)).exists(!severalArgs(_)))
-        .map(main.relativize(_).toString).toList
-    } finally stream.close()
+    val offenders = ListingGuardSpec.mainSources(_ => true)(src =>
+      openCalls(src).exists(!severalArgs(_)))
     assert(offenders.isEmpty, s"one-argument ParquetFileReader.open( in: $offenders")
   }
 }
@@ -777,17 +769,26 @@ class FooterReaderGuardSpec extends AnyFunSuite {
 class ListingGuardSpec extends AnyFunSuite {
 
   test("no program source outside graft.util.Listing calls listFiles(") {
+    val offenders = ListingGuardSpec.mainSources(
+      _ != "scala/graft/util/Listing.scala")(_.contains("listFiles("))
+    assert(offenders.isEmpty, s"listFiles( outside the walk helper: $offenders")
+  }
+}
+
+object ListingGuardSpec {
+
+  /** The `src/main` files, relative to it, that `include` admits and
+    * whose text `offends`. */
+  def mainSources(include: String => Boolean)(offends: String => Boolean): List[String] = {
     val main = java.nio.file.Paths.get("src/main")
     assert(java.nio.file.Files.isDirectory(main), main.toAbsolutePath)
-    val helper = main.resolve("scala/graft/util/Listing.scala")
     val stream = java.nio.file.Files.walk(main)
-    val offenders = try {
+    try {
       import scala.jdk.CollectionConverters._
       stream.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) && p != helper)
-        .filter(p => java.nio.file.Files.readString(p).contains("listFiles("))
+        .filter(p => java.nio.file.Files.isRegularFile(p) && include(main.relativize(p).toString))
+        .filter(p => offends(java.nio.file.Files.readString(p)))
         .map(main.relativize(_).toString).toList
     } finally stream.close()
-    assert(offenders.isEmpty, s"listFiles( outside the walk helper: $offenders")
   }
 }

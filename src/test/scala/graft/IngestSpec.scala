@@ -1136,6 +1136,154 @@ class NearDupJobBudgetSpec extends AnyFunSuite {
   }
 }
 
+/** The exact tier at the edges the fixtures never reach, pinned row for
+  * row: null, empty and reordered texts, a `doc_id` delivered twice,
+  * malformed lines beside a clean null text, malformed-only and empty
+  * deliveries, and a replayed delivery. The tier decides at ROW grain: a
+  * row drops when its fingerprint is in the store or a lower-id row of
+  * its delivery has the same fingerprint. A null text fingerprints to
+  * null, which never equals a stored one, so null texts dedup within a
+  * delivery only.
+  */
+class ExactEdgeSpec extends AnyFunSuite {
+
+  private val schema = new StructType()
+    .add("doc_id", LongType).add("text", StringType).add("lang", StringType)
+
+  private def jsonl(path: String, lines: String*): Unit = {
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(path).getParent)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      lines.map(_ + "\n").mkString)
+    ()
+  }
+
+  private def doc(id: Long, text: String): String =
+    s"""{"doc_id": $id, "text": ${Option(text).fold("null")(t => s""""$t"""")}, "lang": "en"}"""
+
+  private val bad = Seq("""{"doc_id": 90, "text": unquoted}""", "not json at all")
+
+  /** The deliveries, one per batch id, and the reason each is here. */
+  private val deliveries = Seq(
+    Seq(doc(2, null), doc(1, null)),          // two null texts: the min id stays
+    Seq(doc(3, null)),                        // a null never equals the stored null
+    Seq(doc(5, ""), doc(4, "")),              // "" dedups within a delivery
+    Seq(doc(6, "")),                          // and against the store
+    Seq(doc(7, "a b")),
+    Seq(doc(8, "b a")),                       // the same token set as 7
+    Seq(doc(10, "same words"), doc(10, "same words"),
+      doc(11, "one text"), doc(11, "other text")),
+    bad :+ doc(12, null),                     // malformed lines beside a null text
+    bad,                                      // malformed lines only
+    Nil)                                      // an empty delivery
+
+  private def deliver(dir: String, paths: IngestPaths, k: Int) =
+    StreamingIngest.processBatch(
+      Sources.readValidated(spark, s"$dir/in$k", schema, "json"), k.toLong, paths)
+
+  private def corpusRows(paths: IngestPaths): Seq[(Long, Option[String], Long)] =
+    StreamingIngest.corpus(spark, paths)
+      .select(col("doc_id"), col("text"), col("ingest_batch").cast("long"))
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2)))
+      .toSeq.sortBy(_.toString)
+
+  private def storeRows(paths: IngestPaths): Seq[(Option[String], Long)] =
+    spark.table(StreamingIngest.storeTableName("fps", paths.store))
+      .collect().map(r => (Option(r.getString(0)), r.getLong(1)))
+      .toSeq.sortBy(_.toString)
+
+  private def quarantineRows(paths: IngestPaths): Seq[(String, Long)] =
+    StreamingIngest.quarantined(spark, paths).get
+      .select(col("raw_line"), col("ingest_batch").cast("long")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_.toString)
+
+  /** The `ingest_batch=` directories under `root`, as batch ids. */
+  private def batchDirs(root: String): Set[Long] =
+    Option(new java.io.File(root).list()).toSeq.flatten
+      .collect { case s if s.startsWith("ingest_batch=") =>
+        s.stripPrefix("ingest_batch=").toLong }.toSet
+
+  private def ingestAll(dir: String, paths: IngestPaths): Unit =
+    deliveries.indices.foreach { k =>
+      jsonl(s"$dir/in$k/d.json", deliveries(k): _*)
+      deliver(dir, paths, k)
+    }
+
+  test("null, empty and reordered texts, a repeated doc_id, malformed " +
+    "lines, and malformed-only and empty deliveries") {
+    withTempDir("graft-exact-edge") { dir =>
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      ingestAll(dir, paths)
+      assert(corpusRows(paths) === Seq(
+        (1L, None, 0L), (3L, None, 1L), (4L, Some(""), 2L),
+        (7L, Some("a b"), 4L), (10L, Some("same words"), 6L),
+        (11L, Some("one text"), 6L), (11L, Some("other text"), 6L),
+        (12L, None, 7L)).sortBy(_.toString))
+      assert(quarantineRows(paths) ===
+        (bad.map(_ -> 7L) ++ bad.map(_ -> 8L)).sortBy(_.toString))
+
+      // one store row per kept row: its fingerprint, null for a null text
+      import spark.implicits._
+      val expectStore = StreamingIngest.corpus(spark, paths)
+        .select(graft.operators.TextOps.fingerprint(col("text")),
+          col("ingest_batch").cast("long"))
+        .as[(Option[String], Long)].collect().toSeq.sortBy(_.toString)
+      assert(storeRows(paths) === expectStore)
+      assert(storeRows(paths).count(_._1.isEmpty) === 3)
+
+      // every delivery writes its corpus and store partitions; only the
+      // deliveries with malformed lines write a quarantine partition
+      assert(batchDirs(paths.corpus) === deliveries.indices.map(_.toLong).toSet)
+      assert(batchDirs(paths.store) === deliveries.indices.map(_.toLong).toSet)
+      assert(batchDirs(paths.quarantine) === Set(7L, 8L))
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+
+  test("replaying a delivery leaves the corpus, store and quarantine identical") {
+    withTempDir("graft-exact-replay") { dir =>
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      ingestAll(dir, paths)
+      val before = (corpusRows(paths), storeRows(paths), quarantineRows(paths))
+      Seq(6, 7, 3, 0).foreach(deliver(dir, paths, _))
+      assert((corpusRows(paths), storeRows(paths), quarantineRows(paths)) === before)
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+}
+
+/** The Spark-job cost of one exact-tier delivery, as
+  * [[NearDupJobBudgetSpec]] pins the near-dup tier's.
+  */
+class ExactJobBudgetSpec extends AnyFunSuite {
+
+  test("a warm exact delivery with a malformed line runs at most 8 Spark jobs") {
+    withTempDir("graft-exact-jobs") { dir =>
+      import spark.implicits._
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      val base = "the quick brown fox jumps over the lazy dog"
+      def batch(k: Long): DataFrame = Seq(
+        (100L * k + 1, s"wholly distinct content number $k alpha$k beta$k"),
+        (100L * k + 2, base),
+        (100L * k + 3, s"wholly distinct content number $k alpha$k beta$k"),
+        (100L * k + 4, null))
+        .toDF("doc_id", "text")
+        .withColumn("_corrupt_record", lit(null).cast("string"))
+        .union(Seq((-1L, null: String, "{broken")).toDF("doc_id", "text",
+          "_corrupt_record"))
+      (0L until 2L).foreach(k => StreamingIngest.processBatch(batch(k), k, paths))
+      val jobs = jobsDuring { StreamingIngest.processBatch(batch(2L), 2L, paths); () }
+      // 202 drops against the store (its text is batch 0's 2), 203 within
+      // (it repeats 201); 201 and the null-text 204 are kept
+      val kept = StreamingIngest.corpus(spark, paths)
+        .filter(col("ingest_batch") === 2).select("doc_id").as[Long].collect().toSet
+      assert(kept === Set(201L, 204L))
+      assert(jobs <= 8, s"jobs: $jobs")
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
+}
+
 /** The near-dup drop law at id grain, pinned where rows and ids disagree.
   * The DuckDB statement of the law pairs ids: `cand` is a DISTINCT over
   * doc ids, and `j` joins the per-row shingle relation on `doc_id`. So an

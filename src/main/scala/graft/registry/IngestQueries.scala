@@ -210,7 +210,7 @@ object IngestQueries extends QueryModule {
       s.createDataFrame(
         s.sparkContext.parallelize(rows, 1),
         org.apache.spark.sql.types.StructType(
-          StreamingIngest.NearDupReportSchema.fields :+
+          StreamingIngest.DeliveryReportSchema.fields :+
             org.apache.spark.sql.types.StructField("replay_ok",
               org.apache.spark.sql.types.BooleanType, nullable = false)))
         .orderBy("ingest_batch")

@@ -89,22 +89,6 @@ object ContinuousMonitor {
       }
       .start()
 
-  /** Production variant: periodic poll, bounded lifetime, caller restarts —
-    * mirrors CHECK_INTERVAL/AUTO_RESTART_TIMEOUT
-    * (`databand_airflow_monitor.py:13-18`).
-    */
-  def runPolling(spark: SparkSession, streaming: DataFrame, tableName: String,
-      intervalSeconds: Int = 10, lifetimeMs: Long = 30L * 60 * 1000): Unit = {
-    val q = streaming.writeStream
-      .trigger(Trigger.ProcessingTime(s"$intervalSeconds seconds"))
-      .format("memory")
-      .queryName(tableName)
-      .outputMode("complete")
-      .start()
-    q.awaitTermination(lifetimeMs)
-    q.stop()
-  }
-
   /** Outcome of a [[runSupervised]] loop: restart cycles completed, failed
     * starts absorbed by the retry budget, queries that needed the force
     * path after ignoring the polite stop.

@@ -9,36 +9,43 @@ import graft.operators.TextOps
 
 /** Continuous corpus ingest — the daily operation of a training-data
   * pipeline: JSONL deliveries land in a directory; each micro-batch is
-  * parsed under an explicit schema with PERMISSIVE corrupt capture,
-  * quarantined, exact-deduplicated against the PERSISTENT fingerprint
-  * store (and within itself), and appended to the clean corpus; the
-  * survivors' fingerprints extend the store. (The reference's monitors
-  * observe tables that some such ingest produced; this is the
-  * Spark-native producer, composed from the engine's own pieces:
-  * `Sources.readValidated`'s corrupt posture, `Dedup.incrementalNewDocs`'
-  * anti-join shape, the file-stream source of `ContinuousMonitor`.)
+  * parsed under an explicit schema with PERMISSIVE corrupt capture, its
+  * malformed lines are quarantined, its documents are deduplicated
+  * against a PERSISTENT store of earlier survivors (and within the
+  * delivery), and the survivors append to the clean corpus and extend
+  * the store. (The reference's monitors observe tables that some such
+  * ingest produced; this is the Spark-native producer, composed from the
+  * engine's own pieces: `Sources.readValidated`'s corrupt posture, the
+  * drop laws of `Dedup`, the file-stream source of `ContinuousMonitor`.)
+  *
+  * Two tiers share one delivery skeleton, [[deliver]]. The exact tier
+  * ([[processBatch]], q280) drops a row whose token-set fingerprint is
+  * stored or repeats a lower-id row's; the near-dup tier
+  * ([[processBatchNearDup]], q281) drops on verified MinHash band
+  * collisions. A tier supplies only its per-row drop marker and its store
+  * sinks. The skeleton gives every row one fate, checkpoints the fated
+  * rows once with the report counts observed on that job, and writes
+  * every sink as a filter of the checkpoint.
   *
   * Effectively-exactly-once WITHOUT a transactional sink: foreachBatch
-  * writes two outputs (corpus + store), and a crash between them must
-  * not lose or duplicate documents on replay. Both writes are
-  * batch-id-partitioned overwrites (`.../ingest_batch=N` replaces
-  * itself), and the dedup decision is REPLAY-STABLE because the store
-  * read excludes the replaying batch's own partition
+  * writes several outputs (quarantine, corpus, store), and a crash
+  * between them must not lose or duplicate documents on replay. Every
+  * write is a batch-id-partitioned overwrite (`.../ingest_batch=N`
+  * replaces itself), and the dedup decision is REPLAY-STABLE because the
+  * store read excludes the replaying batch's own partition
   * (`ingest_batch < N`) — so a half-written batch N re-derives the
-  * same survivor set and overwrites both partitions to the same
+  * same survivor set and overwrites every partition to the same
   * state. Without the exclusion, replaying batch N would anti-join
-  * against its own first-attempt fingerprints and drop every survivor
+  * against its own first-attempt store rows and drop every survivor
   * as a "duplicate" — the classic two-sink replay loss.
   *
-  * Scale shape per batch: cost ~ |delivery| + |store fingerprints|
-  * (32-byte keys, no text), never |corpus| × deliveries; the only
-  * document-body shuffle is the delivery itself (fingerprint-grain
-  * window, gate-safe). The store read prunes to earlier partitions;
-  * long-running loops pass `compactEvery` to [[ingestAvailable]] /
-  * [[ingestAvailableNearDup]] so every n-th delivery folds the
-  * committed batch partitions into the base partition via
-  * [[compactStores]] — same layout, fewer files (round-13: wired
-  * in-loop, no longer a maintenance job the caller must remember).
+  * Scale shape per batch: cost ~ |delivery| + |store| (fingerprints,
+  * band keys and shingle hashes, no text), never |corpus| × deliveries;
+  * the only document-body shuffle is the delivery itself. The store read
+  * prunes to earlier partitions; long-running loops pass `compactEvery`
+  * to [[ingestAvailable]] / [[ingestAvailableNearDup]] so every n-th
+  * delivery folds the committed batch partitions into the base partition
+  * via [[compactStores]] — same layout, fewer files.
   */
 object StreamingIngest {
 
@@ -77,60 +84,11 @@ object StreamingIngest {
       } finally { pool.shutdown(); () }
     }
 
-  /** One delivery through parse→quarantine→dedup→append, replay-safe.
-    * `batch` must carry the document columns plus `_corrupt_record`
-    * (the [[graft.sources.Sources.readValidated]] posture); `batchId`
-    * is the foreachBatch epoch (or the caller's delivery number).
+  /** Delivery-report schema of both tiers: the batch id, the clean rows
+    * in, the malformed lines, and the clean rows dropped against the
+    * store, dropped within the delivery and kept.
     */
-  def processBatch(batch: DataFrame, batchId: Long, paths: IngestPaths,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
-    val cached = batch.cache()
-    try {
-      val corrupt = cached.filter(col("_corrupt_record").isNotNull)
-        .select(col("_corrupt_record").as("raw_line"))
-      if (!corrupt.isEmpty)
-        corrupt.write.mode("overwrite")
-          .parquet(s"${paths.quarantine}/ingest_batch=$batchId")
-
-      val clean = cached.filter(col("_corrupt_record").isNull)
-        .drop("_corrupt_record")
-      val known = storeFingerprints(spark, paths.store, beforeBatch = batchId)
-      val fresh = clean
-        .withColumn("__fp", TextOps.fingerprint(col(textCol)))
-        .join(known, col("__fp") === col("fingerprint"), "left_anti")
-      // min-id survivor within the delivery, keyed by the
-      // high-cardinality fingerprint (partitioned window, gate-safe).
-      // EAGER localCheckpoint, not cache: the survivor lineage reads
-      // the fingerprint table the INSERT OVERWRITE below replaces, and
-      // a write may not read from its own target — the checkpoint cuts
-      // the plan at the materialized delivery-grain rows.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("__fp").orderBy(col(idCol).asc)
-      val survivors = fresh.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn").localCheckpoint()
-      try {
-        // corpus + fingerprint-store sinks are independent overwrites
-        // of disjoint targets, both reading the checkpointed survivors
-        // — overlapped (round-15, same order-free replay argument as
-        // writeSinksInParallel's scaladoc)
-        val fpTable = ensureStoreTable(spark, FpsStore, paths.store)
-        writeSinksInParallel(Seq(
-          () => survivors.drop("__fp").write.mode("overwrite")
-            .parquet(s"${paths.corpus}/ingest_batch=$batchId"),
-          () => insertBatchPartition(spark, fpTable, FpsStore, batchId,
-            survivors.select(col("__fp").as("fingerprint")))))
-      } finally {
-        // checkpoint blocks are not cache entries: release them
-        // explicitly or a long-running stream accumulates them until
-        // the ContextCleaner eventually notices (round-12 ADVICE)
-        graft.util.Caches.releaseCheckpoint(survivors)
-      }
-    } finally { cached.unpersist(); () }
-  }
-
-  /** Delivery-report schema of [[processBatchNearDup]]. */
-  val NearDupReportSchema: StructType = new StructType()
+  val DeliveryReportSchema: StructType = new StructType()
     .add("ingest_batch", LongType, nullable = false)
     .add("n_in", LongType, nullable = false)
     .add("n_corrupt", LongType, nullable = false)
@@ -138,7 +96,116 @@ object StreamingIngest {
     .add("n_dropped_within", LongType, nullable = false)
     .add("n_kept", LongType, nullable = false)
 
-  /** NEAR-dup ingest, the fuzzy tier of [[processBatch]]: the
+  /** The delivery skeleton of both tiers. `marked` is the delivery's
+    * per-row relation — every line of `batch`, `_corrupt_record`
+    * included, plus the tier's own columns — with the tier's drop marker
+    * `__st`: true for a row dropped against the store, false for one
+    * dropped within the delivery, null for a row the tier keeps.
+    *
+    * Each row gets one fate: corrupt first, whatever its marker, then
+    * dropped against the store, dropped within the batch, or kept. The
+    * fated relation is checkpointed once, and the four report counts
+    * ride that checkpoint job as observed metrics (`Dataset.observe`), so
+    * no separate aggregate runs. EAGER checkpoint, not cache: the
+    * marker's lineage reads the store tables, and a store INSERT
+    * OVERWRITE may not read from the table it overwrites — the
+    * checkpoint cuts the plan at the materialized rows. `cached`, a cache
+    * the tier's relation reads, is released once the checkpoint holds
+    * the rows.
+    *
+    * Every sink is a filter of the checkpoint: the quarantine (the
+    * corrupt lines, written only when there are any), the corpus (the
+    * kept rows' document columns) and the tier's `storeSinks` of the
+    * kept rows. No sink joins back to a survivor set, and all start
+    * together: each overwrites its own batch partition, so they run
+    * overlapped ([[writeSinksInParallel]], whose scaladoc gives the
+    * order-free replay argument).
+    *
+    * Returns the one-row delivery report ([[DeliveryReportSchema]]) as a
+    * local relation (collecting it runs no Spark job).
+    */
+  private def deliver(batch: DataFrame, batchId: Long, paths: IngestPaths,
+      marked: => DataFrame, cached: Option[DataFrame] = None)(
+      storeSinks: DataFrame => Seq[() => Unit]): DataFrame = {
+    def n(fate: Int) = count_if(col("__fate") === fate)
+    val counts = new org.apache.spark.sql.Observation()
+    val fated = try {
+      marked.withColumn("__fate",
+          when(col("_corrupt_record").isNotNull, lit(FateCorrupt))
+            .when(col("__st"), lit(FateDroppedStore))
+            .when(!col("__st"), lit(FateDroppedWithin))
+            .otherwise(lit(FateKept)))
+        .drop("__st")
+        .observe(counts, n(FateCorrupt).as("corrupt"),
+          n(FateDroppedStore).as("store"), n(FateDroppedWithin).as("within"),
+          n(FateKept).as("kept"))
+        .localCheckpoint()
+    } finally cached.foreach(_.unpersist())
+
+    try {
+      // the checkpoint job has ended, so its observed counts are final
+      val observed = counts.get
+      def c(name: String) = observed(name).asInstanceOf[Long]
+      val (nCorrupt, nStore, nWithin, nKept) =
+        (c("corrupt"), c("store"), c("within"), c("kept"))
+      val kept = fated.filter(col("__fate") === FateKept)
+      val quarantine = if (nCorrupt == 0) Nil else Seq(() =>
+        fated.filter(col("__fate") === FateCorrupt)
+          .select(col("_corrupt_record").as("raw_line"))
+          .write.mode("overwrite")
+          .parquet(s"${paths.quarantine}/ingest_batch=$batchId"))
+      writeSinksInParallel(quarantine ++ Seq(() =>
+        kept.select(batch.columns.toSeq.filter(_ != "_corrupt_record").map(col): _*)
+          .write.mode("overwrite")
+          .parquet(s"${paths.corpus}/ingest_batch=$batchId")) ++ storeSinks(kept))
+
+      batch.sparkSession.createDataFrame(java.util.Collections.singletonList(
+        org.apache.spark.sql.Row(batchId, nStore + nWithin + nKept, nCorrupt,
+          nStore, nWithin, nKept)), DeliveryReportSchema)
+    } finally {
+      // checkpoint blocks are not cache entries: release them explicitly
+      // (round-12 ADVICE)
+      graft.util.Caches.releaseCheckpoint(fated)
+    }
+  }
+
+  /** EXACT-dup ingest (q280), a tier of [[deliver]]: a row drops when its
+    * fingerprint ([[TextOps.fingerprint]], md5 over the sorted distinct
+    * token set) is in the store — a left join against the earlier
+    * batches' [[storeFingerprints]], distinct so that it adds no row — or
+    * when a lower-id clean row of its own delivery has the same
+    * fingerprint (`row_number` over the fingerprint; the window also keys
+    * on cleanliness, so a malformed line never retires a clean row). The
+    * law is at ROW grain: a `doc_id` delivered twice with one text keeps
+    * one row, with two texts both. A null text fingerprints to null,
+    * which equals no stored fingerprint, so null texts dedup within a
+    * delivery only. The store sink appends the kept rows' fingerprints.
+    *
+    * `batch` must carry the document columns plus `_corrupt_record`
+    * (the [[graft.sources.Sources.readValidated]] posture); `batchId`
+    * is the foreachBatch epoch (or the caller's delivery number).
+    * Returns the delivery report.
+    */
+  def processBatch(batch: DataFrame, batchId: Long, paths: IngestPaths,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val spark = batch.sparkSession
+    val known = storeFingerprints(spark, paths.store, beforeBatch = batchId)
+    val fpTable = ensureStoreTable(spark, FpsStore, paths.store)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("__fp"), col("_corrupt_record").isNull)
+      .orderBy(col(idCol).asc)
+    deliver(batch, batchId, paths, batch
+      .withColumn("__fp", TextOps.fingerprint(col(textCol)))
+      .join(known, col("__fp") === col("fingerprint"), "left")
+      .withColumn("__st", when(col("fingerprint").isNotNull, lit(true))
+        .when(row_number().over(w) > 1, lit(false)))
+      .drop("fingerprint")) { kept =>
+      Seq(() => insertBatchPartition(spark, fpTable, FpsStore, batchId,
+        kept.select(col("__fp").as("fingerprint"))))
+    }
+  }
+
+  /** NEAR-dup ingest (q281), the fuzzy tier of [[deliver]]: the
     * persistent store holds the SURVIVORS' MinHash band keys (blocking)
     * and hashed-bigram sets (verification) — the production layout for
     * near-dedup-on-ingest: deliveries never join document text against
@@ -175,15 +242,9 @@ object StreamingIngest {
     * Shape: ONE per-row relation of the delivery — every line, its
     * hashed bigrams `hs` and its MinHash signature `sig`
     * ([[graft.operators.Dedup.minhashSig]], row-local) — feeds the drop
-    * computation, and the drop sets join back onto it as one fate per
-    * row (kept, dropped against the store, dropped within the batch,
-    * corrupt). That fated relation is checkpointed once, and the four
-    * report counts ride that checkpoint job as observed metrics
-    * (`Dataset.observe`), so no separate aggregate runs. Each sink is a
-    * filter and projection of it: the quarantine (corrupt lines), the
-    * corpus and the ngram store (kept rows), the band store (the kept
-    * rows' `sig` through `bandExplode`). No sink joins back to a
-    * survivor set, and all four start together.
+    * computation, and the dropped ids join back onto it as the drop
+    * marker. The store sinks are the kept rows' `hs` (ngram store) and
+    * their `sig` through `bandExplode` (band store).
     *
     * Rows are the unit of the store and the report: a `doc_id`
     * delivered twice in one batch keeps one signature per row (the
@@ -191,16 +252,7 @@ object StreamingIngest {
     * law pairs ids (see [[droppedIds]]), so every row of a dropped id
     * drops, and the report counts rows.
     *
-    * Replay safety: identical to [[processBatch]] — all four writes
-    * (quarantine, corpus, band store, ngram store) are batch-partitioned
-    * overwrites, and both store reads exclude the replaying batch's
-    * own partitions, so a crash between sinks replays to the
-    * identical state.
-    *
-    * Returns the one-row delivery report
-    * (ingest_batch, n_in, n_corrupt, n_dropped_store,
-    * n_dropped_within, n_kept) as a local relation (collecting it runs
-    * no Spark job).
+    * Returns the delivery report.
     */
   def processBatchNearDup(batch: DataFrame, batchId: Long, paths: IngestPaths,
       idCol: String = "doc_id", textCol: String = "text",
@@ -211,8 +263,8 @@ object StreamingIngest {
     val bandsTable = ensureStoreTable(spark, BandsStore, s"${paths.store}/bands")
     val ngramsTable = ensureStoreTable(spark, NgramsStore, s"${paths.store}/ngrams")
     // the per-row relation, cached for the checkpoint job: the drop
-    // computation and the fate join both read it. Hash-partitioned by id,
-    // which spreads the shingle and signature work over the cores and
+    // computation and the marker join both read it. Hash-partitioned by
+    // id, which spreads the shingle and signature work over the cores and
     // lets the drop computation's per-id collapse run without a shuffle
     // of its own. `__hs` is its own projection, so the k signature slots
     // share one shingle pass
@@ -221,54 +273,16 @@ object StreamingIngest {
       .withColumn("__hs", TextOps.hashedNgrams(col(textCol)))
       .withColumn("__sig", Dedup.minhashSig(col("__hs"), k))
       .cache()
-    def n(fate: Int) = count_if(col("__fate") === fate)
-    val counts = new org.apache.spark.sql.Observation()
-    // one fate per row. EAGER localCheckpoint, not cache: the fates'
-    // lineage reads the store tables, and the store INSERT OVERWRITEs
-    // below may not read from the table they overwrite — the checkpoint
-    // cuts the plan at the materialized rows
-    val fated = try {
-      val dropped = droppedIds(rows.filter(col("_corrupt_record").isNull),
+    deliver(batch, batchId, paths, cached = Some(rows), marked = rows
+      .join(broadcast(droppedIds(rows.filter(col("_corrupt_record").isNull),
         batchId, bandsTable, ngramsTable, idCol, rowsPerBand, threshold,
-        maxBucketSize)
-      rows.join(broadcast(dropped), col(idCol) === col("__drop_id"), "left")
-        .withColumn("__fate",
-          when(col("_corrupt_record").isNotNull, lit(FateCorrupt))
-            .when(col("__st"), lit(FateDroppedStore))
-            .when(!col("__st"), lit(FateDroppedWithin))
-            .otherwise(lit(FateKept)))
-        .drop("__drop_id", "__st")
-        .observe(counts, n(FateCorrupt).as("corrupt"),
-          n(FateDroppedStore).as("store"), n(FateDroppedWithin).as("within"),
-          n(FateKept).as("kept"))
-        .localCheckpoint()
-    } finally { rows.unpersist(); () }
-
-    try {
-      // the checkpoint job has ended, so its observed counts are final
-      val observed = counts.get
-      def c(name: String) = observed(name).asInstanceOf[Long]
-      val (nCorrupt, nStore, nWithin, nKept) =
-        (c("corrupt"), c("store"), c("within"), c("kept"))
-      val kept = fated.filter(col("__fate") === FateKept)
+        maxBucketSize)), col(idCol) === col("__drop_id"), "left")
+      .drop("__drop_id")) { kept =>
       // the store keeps survivors' FULL band sets (the cap thins the
       // candidate join, never the persisted signatures); static
       // partition INSERT OVERWRITE = the replay-safe batch-partitioned
-      // overwrite, through the bucketed tables. Every task reads the
-      // checkpoint and the sinks overwrite disjoint paths, so they run
-      // overlapped from a driver pool (round-15, guide §2.6; see
-      // writeSinksInParallel for the order-free replay argument). The
-      // quarantine partition is written only when the delivery has
-      // corrupt lines
-      val quarantine = if (nCorrupt == 0) Nil else Seq(() =>
-        fated.filter(col("__fate") === FateCorrupt)
-          .select(col("_corrupt_record").as("raw_line"))
-          .write.mode("overwrite")
-          .parquet(s"${paths.quarantine}/ingest_batch=$batchId"))
-      writeSinksInParallel(quarantine ++ Seq(
-        () => kept.select(batch.columns.toSeq.filter(_ != "_corrupt_record").map(col): _*)
-          .write.mode("overwrite")
-          .parquet(s"${paths.corpus}/ingest_batch=$batchId"),
+      // overwrite, through the bucketed tables
+      Seq(
         () => insertBatchPartition(spark, bandsTable, BandsStore, batchId,
           Dedup.bandExplode(
             kept.select(col(idCol).as("doc_id"), col("__sig").as("sig")),
@@ -276,15 +290,7 @@ object StreamingIngest {
             .select(col("doc_id").cast("long"), col("band_idx").cast("int"),
               col("band_key").cast("string"))),
         () => insertBatchPartition(spark, ngramsTable, NgramsStore, batchId,
-          kept.select(col(idCol).cast("long").as("doc_id"), col("__hs").as("hs")))))
-
-      spark.createDataFrame(java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(batchId, nStore + nWithin + nKept, nCorrupt,
-          nStore, nWithin, nKept)), NearDupReportSchema)
-    } finally {
-      // checkpoint blocks are not cache entries: release them explicitly
-      // (round-12 ADVICE)
-      graft.util.Caches.releaseCheckpoint(fated)
+          kept.select(col(idCol).cast("long").as("doc_id"), col("__hs").as("hs"))))
     }
   }
 
@@ -373,7 +379,7 @@ object StreamingIngest {
       .groupBy(col("doc_id").as("__drop_id")).agg(max(col("__st")).as("__st"))
   }
 
-  /** Row fates of [[processBatchNearDup]]'s per-row relation. */
+  /** Row fates of [[deliver]]'s per-row relation. */
   private final val FateKept = 0
   private final val FateDroppedStore = 1
   private final val FateDroppedWithin = 2
@@ -581,7 +587,7 @@ object StreamingIngest {
       .map(_.getString(0).stripPrefix("ingest_batch=").toLong)
     val mergeable = parts.filter(b => b >= 0 && b < beforeBatch)
     val hasBase = parts.contains(-1L)
-    if (mergeable.isEmpty) return None
+    if (mergeable.length == 0) return None
     val dataCols = spark.table(t).columns.filter(_ != "ingest_batch")
     val stage = s"$location/_compact_stage"
     // full-row distinct: all three stores are SET-semantics relations,
@@ -677,76 +683,69 @@ object StreamingIngest {
     else None
   }
 
-  /** Drain every pending delivery file through [[processBatch]] with
-    * AvailableNow semantics: the checkpoint tracks consumed source
-    * files, so a restart resumes at the first unprocessed (or
-    * uncommitted — then replayed, safely) batch. `maxFilesPerTrigger`
-    * bounds a micro-batch to a delivery's files.
+  /** Drain every pending delivery file through [[processBatch]]; see
+    * [[drain]] for the checkpoint, replay and compaction contract.
     */
   def ingestAvailable(spark: SparkSession, inPath: String, schema: StructType,
       paths: IngestPaths, checkpoint: String,
       maxFilesPerTrigger: Int = 1,
       compactEvery: Option[Int] = None): StreamingQuery =
-    validatedFileStream(spark, inPath, schema, maxFilesPerTrigger)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, paths)
-        maybeCompact(b.sparkSession, paths, id, compactEvery)
-      }
-      .start()
+    drain(spark, inPath, schema, paths, checkpoint, maxFilesPerTrigger,
+      compactEvery)(processBatch(_, _, paths))
 
   /** [[ingestAvailable]]'s fuzzy sibling: drains pending deliveries
-    * through [[processBatchNearDup]] under the same checkpoint/replay
-    * contract. `maxBucketSize` carries the production hot-bucket cap;
-    * `compactEvery = Some(n)` runs [[compactStores]] after every n-th
-    * delivery (the maintenance loop the round-12 scaladoc promised).
+    * through [[processBatchNearDup]]. `maxBucketSize` carries the
+    * production hot-bucket cap.
     */
   def ingestAvailableNearDup(spark: SparkSession, inPath: String,
       schema: StructType, paths: IngestPaths, checkpoint: String,
       maxFilesPerTrigger: Int = 1, threshold: Double = 0.5,
       maxBucketSize: Option[Long] = None,
       compactEvery: Option[Int] = None): StreamingQuery =
-    validatedFileStream(spark, inPath, schema, maxFilesPerTrigger)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatchNearDup(b, id, paths, threshold = threshold,
-          maxBucketSize = maxBucketSize)
-        maybeCompact(b.sparkSession, paths, id, compactEvery)
-      }
-      .start()
+    drain(spark, inPath, schema, paths, checkpoint, maxFilesPerTrigger,
+      compactEvery)(processBatchNearDup(_, _, paths, threshold = threshold,
+        maxBucketSize = maxBucketSize))
 
-  /** IN-LOOP compaction (round-13 verdict task 6): after every
-    * `every`-th delivery, merge the fully-committed batch partitions
-    * into the base partition. The watermark is the CURRENT batch id —
-    * batch `id` itself is not yet committed when foreachBatch runs (the
-    * checkpoint commits after we return), so it can still replay and
-    * must keep its own partition; every batch strictly below `id` IS
-    * committed (AvailableNow processes batches in order), satisfying
-    * [[compactStores]]' caller contract. A crash DURING compaction
-    * replays batch `id`, which re-runs processBatch* (replay-safe) and,
-    * on the next trigger boundary, re-runs the compaction — which is
-    * idempotent and duplicate-tolerant by construction.
+  /** Drain every pending delivery file through `deliverBatch` with
+    * AvailableNow semantics, parsed under `schema` with PERMISSIVE
+    * corrupt capture: the checkpoint tracks consumed source files, so a
+    * restart resumes at the first unprocessed (or uncommitted — then
+    * replayed, safely) batch. `maxFilesPerTrigger` bounds a micro-batch
+    * to a delivery's files.
+    *
+    * IN-LOOP compaction (round-13): `compactEvery = Some(n)`, checked
+    * before the stream starts, merges the fully-committed batch
+    * partitions into the base partition after every n-th delivery. The
+    * watermark is the CURRENT batch id — batch `id` itself is not yet
+    * committed when foreachBatch runs (the checkpoint commits after it
+    * returns), so it can still replay and must keep its own partition;
+    * every batch strictly below `id` IS committed (AvailableNow
+    * processes batches in order), satisfying [[compactStores]]' caller
+    * contract. A crash DURING compaction replays batch `id`, which
+    * re-delivers it (replay-safe) and, on the next trigger boundary,
+    * re-runs the compaction — idempotent and duplicate-tolerant by
+    * construction.
     */
-  private def maybeCompact(spark: SparkSession, paths: IngestPaths,
-      batchId: Long, every: Option[Int]): Unit =
-    every.foreach { n =>
-      require(n >= 1, "compactEvery must be >= 1")
-      if (batchId > 0 && batchId % n == 0) {
-        compactStores(spark, paths, beforeBatch = batchId).collect()
-        ()
-      }
-    }
-
-  private def validatedFileStream(spark: SparkSession, inPath: String,
-      schema: StructType, maxFilesPerTrigger: Int): DataFrame =
+  private def drain(spark: SparkSession, inPath: String, schema: StructType,
+      paths: IngestPaths, checkpoint: String, maxFilesPerTrigger: Int,
+      compactEvery: Option[Int])(
+      deliverBatch: (DataFrame, Long) => DataFrame): StreamingQuery = {
+    compactEvery.foreach(n => require(n >= 1, "compactEvery must be >= 1"))
     spark.readStream
       .schema(schema.add("_corrupt_record", StringType))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .json(inPath)
+      .writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        deliverBatch(b, id)
+        compactEvery.filter(n => id > 0 && id % n == 0).foreach { _ =>
+          compactStores(b.sparkSession, paths, beforeBatch = id).collect()
+        }
+      }
+      .start()
+  }
 }

@@ -920,6 +920,24 @@ class Round13IngestLoopSpec extends AnyFunSuite {
     }
   }
 
+  test("compactEvery = Some(0) is refused before the stream starts, so " +
+    "no delivery is written") {
+    withTempDir("graft-compact-every") { tmp =>
+      val in = s"$tmp/in"
+      val paths = IngestPaths(s"$tmp/c", s"$tmp/s", s"$tmp/q")
+      jsonl(s"$in/d0.json", doc(1L, base))
+      intercept[IllegalArgumentException] {
+        StreamingIngest.ingestAvailable(spark, in, schema, paths, s"$tmp/ck1",
+          compactEvery = Some(0))
+      }
+      intercept[IllegalArgumentException] {
+        StreamingIngest.ingestAvailableNearDup(spark, in, schema, paths,
+          s"$tmp/ck2", compactEvery = Some(0))
+      }
+      assert(!new java.io.File(paths.corpus).exists())
+    }
+  }
+
   test("localCheckpoint blocks release after each batch (ADVICE: no " +
     "persistent-RDD accumulation in a long-running loop)") {
     withTempDir("graft-r13-ckpt") { tmp =>
@@ -1203,10 +1221,11 @@ class ExactEdgeSpec extends AnyFunSuite {
       .collect { case s if s.startsWith("ingest_batch=") =>
         s.stripPrefix("ingest_batch=").toLong }.toSet
 
-  private def ingestAll(dir: String, paths: IngestPaths): Unit =
-    deliveries.indices.foreach { k =>
+  /** Delivers every delivery in order and returns their reports. */
+  private def ingestAll(dir: String, paths: IngestPaths): Seq[Seq[Any]] =
+    deliveries.indices.map { k =>
       jsonl(s"$dir/in$k/d.json", deliveries(k): _*)
-      deliver(dir, paths, k)
+      deliver(dir, paths, k).collect().head.toSeq
     }
 
   test("null, empty and reordered texts, a repeated doc_id, malformed " +
@@ -1250,6 +1269,30 @@ class ExactEdgeSpec extends AnyFunSuite {
       StreamingIngest.dropStoreTables(spark, paths)
     }
   }
+
+  test("each delivery reports its rows' fates, and a replay reports the same") {
+    withTempDir("graft-exact-report") { dir =>
+      val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
+      val reports = ingestAll(dir, paths)
+      // (ingest_batch, n_in, n_corrupt, n_dropped_store, n_dropped_within,
+      // n_kept); n_in counts the clean rows
+      assert(reports === Seq(
+        Seq(0L, 2L, 0L, 0L, 1L, 1L),
+        Seq(1L, 1L, 0L, 0L, 0L, 1L),
+        Seq(2L, 2L, 0L, 0L, 1L, 1L),
+        Seq(3L, 1L, 0L, 1L, 0L, 0L),
+        Seq(4L, 1L, 0L, 0L, 0L, 1L),
+        Seq(5L, 1L, 0L, 1L, 0L, 0L),
+        Seq(6L, 4L, 0L, 0L, 1L, 3L),
+        Seq(7L, 1L, 2L, 0L, 0L, 1L),
+        Seq(8L, 0L, 2L, 0L, 0L, 0L),
+        Seq(9L, 0L, 0L, 0L, 0L, 0L)))
+      Seq(6, 7, 3, 0).foreach { k =>
+        assert(deliver(dir, paths, k).collect().head.toSeq === reports(k), s"replay of $k")
+      }
+      StreamingIngest.dropStoreTables(spark, paths)
+    }
+  }
 }
 
 /** The Spark-job cost of one exact-tier delivery, as
@@ -1257,7 +1300,7 @@ class ExactEdgeSpec extends AnyFunSuite {
   */
 class ExactJobBudgetSpec extends AnyFunSuite {
 
-  test("a warm exact delivery with a malformed line runs at most 8 Spark jobs") {
+  test("a warm exact delivery with a malformed line runs at most 7 Spark jobs") {
     withTempDir("graft-exact-jobs") { dir =>
       import spark.implicits._
       val paths = IngestPaths(s"$dir/c", s"$dir/s", s"$dir/q")
@@ -1278,9 +1321,25 @@ class ExactJobBudgetSpec extends AnyFunSuite {
       val kept = StreamingIngest.corpus(spark, paths)
         .filter(col("ingest_batch") === 2).select("doc_id").as[Long].collect().toSet
       assert(kept === Set(201L, 204L))
-      assert(jobs <= 8, s"jobs: $jobs")
+      assert(jobs <= 7, s"jobs: $jobs")
       StreamingIngest.dropStoreTables(spark, paths)
     }
+  }
+}
+
+/** Both ingest tiers run through one delivery skeleton, guarded at the
+  * source: one eager checkpoint in the ingest module, and no Dataset
+  * `isEmpty` job ahead of it (a text guard, so no `.isEmpty` at all).
+  */
+class IngestSkeletonGuardSpec extends AnyFunSuite {
+
+  test("StreamingIngest.scala holds exactly one localCheckpoint( call and no .isEmpty") {
+    val file = "scala/graft/streaming/StreamingIngest.scala"
+    val found = ListingGuardSpec.mainSources(_ == file) _
+    assert(found(_ => true) === List(file))
+    assert(found("localCheckpoint\\(".r.findAllMatchIn(_).size != 1).isEmpty,
+      "one localCheckpoint( call expected")
+    assert(found(_.contains(".isEmpty")).isEmpty, ".isEmpty found")
   }
 }
 

@@ -416,6 +416,8 @@ class DuplicateCountSpec extends AnyFunSuite {
 
   test("monitorProfile counts NaN payloads and signed zeros as groupBy does, " +
     "in memory where the payloads survive") {
+    // parquet writes every NaN in its canonical form, so only an
+    // in-memory relation can carry a NaN payload to the count
     val nanD = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
     val df = spark.createDataFrame(java.util.Arrays.asList(
       Row(0.0, Seq(0.0)), Row(-0.0, Seq(-0.0)), Row(Double.NaN, Seq(nanD)),
